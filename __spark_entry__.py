@@ -15,6 +15,7 @@ Conventions that keep the hash gate deterministic:
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,6 +28,19 @@ from iconic_data_science_spark import magmap
 from iconic_data_science_spark.functions import dec_sum, dec_avg
 from iconic_data_science_spark.operators.coauthor import coauthor_edges
 from iconic_data_science_spark.operators.personal_net import personal_net
+
+# Literal parameter tables shared with the Spark side, embedded in the
+# oracles so both engines hash identically.
+from iconic_data_science_spark.operators.dedup import perm_table_sql as _perm_table_sql
+from iconic_data_science_spark.operators.similarity import (
+    RP_LSH_TABLE as _RP_LSH_TABLE,
+    SQ8_LSH_TABLE as _SQ8_LSH_TABLE,
+    plane_table_sql as _plane_table_sql,
+)
+from iconic_data_science_spark.operators.text import (
+    stopword_array_sql as _stopword_array_sql,
+    stopword_table_sql as _stopword_table_sql,
+)
 
 SF_SMOKE_DIR = "/root/testdata/sf0.001"
 
@@ -1730,111 +1744,6 @@ def q_j_full_outer_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "g1_coauthor_edges": q_g1_coauthor_edges,
-    "g3_personal_net": q_g3_personal_net,
-    "g3_personal_net_flatmap": q_g3_personal_net_flatmap,
-    "a1_papers_per_author": q_a1_papers_per_author,
-    "q1_pricing_summary": q_q1_pricing_summary,
-    "p_projection_filter": q_p_projection_filter,
-    "w1_cumulative_papers": q_w1_cumulative_papers,
-    "pr_citation_edges": q_pr_citation_edges,
-    "a8_zero_filled_citations": q_a8_zero_filled_citations,
-    "w1_cumulative_citations": q_w1_cumulative_citations,
-    "w_moving_3yr_citations": q_w_moving_3yr_citations,
-    "profile_conversion": q_profile_conversion,
-    "g7_ego_indicators": q_g7_ego_indicators,
-    "g7_alter_rollups": q_g7_alter_rollups,
-    "a2_approx_distinct": q_a2_approx_distinct,
-    "g5_hierarchy_roots": q_g5_hierarchy_roots,
-    "g5_hierarchy_roots_sql": q_g5_hierarchy_roots_sql,
-    "g4_bfs": q_g4_bfs,
-    "g_triangle_count": q_g_triangle_count,
-    "g_pagerank_int": q_g_pagerank_int,
-    "g_kcore": q_g_kcore,
-    "u3_except_authors": q_u3_except_authors,
-    "u4_intersect_authors": q_u4_intersect_authors,
-    "j7_or_join": q_j7_or_join,
-    "j12_dwarf_lineitem": q_j12_dwarf_lineitem,
-    "f7_json_extract": q_f7_json_extract,
-    "f3_f4_scalar_funcs": q_f3_f4_scalar_funcs,
-    "g8_gexf": q_g8_gexf,
-    "dedup_exact": q_dedup_exact,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_simhash_pairs": q_dedup_simhash_pairs,
-    "dedup_embedding_cosine": q_dedup_embedding_cosine,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_ngram_capped": q_dedup_ngram_capped,
-    "dedup_edit_distance": q_dedup_edit_distance,
-    "a1_salted": q_a1_salted,
-    "ann_brute_topk": q_ann_brute_topk,
-    "ann_matryoshka_topk": q_ann_matryoshka_topk,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_ivf_nprobe2": q_ann_ivf_nprobe2,
-    "text_language_id": q_text_language_id,
-    "text_quality_score": q_text_quality_score,
-    "text_token_counts": q_text_token_counts,
-    "text_fingerprint": q_text_fingerprint,
-    "text_train_split": q_text_train_split,
-    "text_repetition": q_text_repetition,
-    "text_top_terms": q_text_top_terms,
-    "text_pii_redact": q_text_pii_redact,
-    "text_vocab_oov": q_text_vocab_oov,
-    "decontaminate_ngram": q_decontaminate_ngram,
-    "decontaminate_bloom": q_decontaminate_bloom,
-    "curation_pipeline": q_curation_pipeline,
-    "curation_pipeline_v2": q_curation_pipeline_v2,
-    "curation_pipeline_v3": q_curation_pipeline_v3,
-    "inc_rollup_daily": q_inc_rollup_daily,
-    "ev_funnel": q_ev_funnel,
-    "ev_retention": q_ev_retention,
-    "mm_byte_histogram": q_mm_byte_histogram,
-    "mm_media_stats": q_mm_media_stats,
-    "mm_decode_stats": q_mm_decode_stats,
-    "mm_frame_sample": q_mm_frame_sample,
-    "a_rollup_orders": q_a_rollup_orders,
-    "a_cube_orders": q_a_cube_orders,
-    "a_pivot_returnflag": q_a_pivot_returnflag,
-    "a_median_papers": q_a_median_papers,
-    "g6_edge_citation_series": q_g6_edge_citation_series,
-    "g6_citation_map": q_g6_citation_map,
-    "g9_year_keyed_network": q_g9_year_keyed_network,
-    "a6_flatten_distinct": q_a6_flatten_distinct,
-    "q5_nation_revenue": q_q5_nation_revenue,
-    "q3_shipping_priority": q_q3_shipping_priority,
-    "o2_topk_authors": q_o2_topk_authors,
-    "a5_coauthor_list": q_a5_coauthor_list,
-    "j8_element_join": q_j8_element_join,
-    "p5_p6_filters": q_p5_p6_filters,
-    "w_top_supplier_per_nation": q_w_top_supplier_per_nation,
-    "w_ntile_balance_quartiles": q_w_ntile_balance_quartiles,
-    "w_lag_citation_delta": q_w_lag_citation_delta,
-    "w_sessionize_lag": q_w_sessionize_lag,
-    "asof_signup_value": q_asof_signup_value,
-    "j_interval_overlap": q_j_interval_overlap,
-    "text_line_dedup": q_text_line_dedup,
-    "text_leakage_safe_split": q_text_leakage_safe_split,
-    "dedup_dup_spans": q_dedup_dup_spans,
-    "st_tumbling_hour": q_st_tumbling_hour,
-    "st_sliding_hour_15m": q_st_sliding_hour_15m,
-    "st_session_5m": q_st_session_5m,
-    "st_stream_stream_join": q_st_stream_stream_join,
-    "range_join_price_tiers": q_range_join_price_tiers,
-    "ts_multi_grain_counts": q_ts_multi_grain_counts,
-    "sample_stratified": q_sample_stratified,
-    "lh_merge_upsert": q_lh_merge_upsert,
-    "lh_scd2_priority": q_lh_scd2_priority,
-    "q16_part_supplier_counts": q_q16_part_supplier_counts,
-    "q20_top_part_suppliers": q_q20_top_part_suppliers,
-    "q17_small_quantity_revenue": q_q17_small_quantity_revenue,
-    "q18_large_volume_orders": q_q18_large_volume_orders,
-    "q22_idle_customers": q_q22_idle_customers,
-    "j_full_outer_halves": q_j_full_outer_halves,
-}
-
 # DuckDB oracle SQL. Views pre-registered: region nation customer supplier
 # part orders lineitem events documents embeddings.
 ORACLES: dict[str, str] = {
@@ -2348,7 +2257,7 @@ ORACLES: dict[str, str] = {
             JOIN sz z1 ON z1.doc_id = c.id1
             JOIN sz z2 ON z2.doc_id = c.id2
         ) WHERE jaccard >= 0.5
-    """,
+    """.replace("{PERMS}", _perm_table_sql(16)),
     "dedup_simhash": """
         WITH tok AS (
             SELECT DISTINCT doc_id, t AS tok
@@ -2644,7 +2553,7 @@ ORACLES: dict[str, str] = {
             FROM pairs
         )
         SELECT query_id, neighbor_id, cosine, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 5
-    """,
+    """.replace("{PLANES}", _plane_table_sql()),
     "ann_ivf_topk": """
         WITH e AS (
             SELECT vec_id, embedding,
@@ -2753,7 +2662,7 @@ ORACLES: dict[str, str] = {
                CAST(COALESCE(r.hits, 0) AS BIGINT) AS hits
         FROM documents d
         LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r USING (doc_id)
-    """,
+    """.replace("{STOPWORDS}", _stopword_table_sql()),
     "text_quality_score": """
         SELECT doc_id,
                CAST(length(text) AS BIGINT) AS n_chars,
@@ -2769,7 +2678,7 @@ ORACLES: dict[str, str] = {
                    * (CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT)
                       / CAST(length(text) AS BIGINT)) AS score
         FROM documents
-    """,
+    """.replace("{SW_ARRAY}", _stopword_array_sql()),
     "text_token_counts": """
         SELECT doc_id,
                CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS ws_tokens,
@@ -3288,7 +3197,7 @@ ORACLES: dict[str, str] = {
         WHERE q.score >= 0.3
           AND q.doc_id % 10 <> 0
           AND q.doc_id NOT IN (SELECT doc_id FROM contaminated)
-    """,
+    """.replace("{STOPWORDS}", _stopword_table_sql()),
     "inc_rollup_daily": """
         SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
                CAST(COUNT(*) AS BIGINT) AS n_events
@@ -3391,7 +3300,7 @@ ORACLES: dict[str, str] = {
         JOIN canon USING (doc_id)
         JOIN sp USING (doc_id)
         WHERE q.score >= 0.3
-    """,
+    """.replace("{STOPWORDS}", _stopword_table_sql()),
     "st_tumbling_hour": """
         SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us,
                event_type,
@@ -3638,18 +3547,6 @@ ORACLES: dict[str, str] = {
     """,
 }
 
-# Oracles that embed literal parameter tables shared with the Spark side,
-# so both engines hash identically.
-from iconic_data_science_spark.operators.dedup import perm_table_sql as _perm_table_sql  # noqa: E402
-from iconic_data_science_spark.operators.similarity import plane_table_sql as _plane_table_sql  # noqa: E402
-from iconic_data_science_spark.operators.text import stopword_table_sql as _stopword_table_sql  # noqa: E402
-
-ORACLES["dedup_minhash_lsh"] = ORACLES["dedup_minhash_lsh"].replace("{PERMS}", _perm_table_sql(16))
-ORACLES["ann_lsh_topk"] = ORACLES["ann_lsh_topk"].replace("{PLANES}", _plane_table_sql())
-ORACLES["text_language_id"] = ORACLES["text_language_id"].replace("{STOPWORDS}", _stopword_table_sql())
-ORACLES["curation_pipeline"] = ORACLES["curation_pipeline"].replace("{STOPWORDS}", _stopword_table_sql())
-ORACLES["curation_pipeline_v2"] = ORACLES["curation_pipeline_v2"].replace("{STOPWORDS}", _stopword_table_sql())
-
 from iconic_data_science_spark.operators.dedup import bloom_oracle_sql as _bloom_oracle_sql  # noqa: E402
 
 ORACLES["decontaminate_bloom"] = _bloom_oracle_sql()
@@ -3734,12 +3631,6 @@ def _pii_oracle_sql() -> str:
 
 
 ORACLES["text_pii_redact"] = _pii_oracle_sql()
-
-from iconic_data_science_spark.operators.text import stopword_array_sql as _stopword_array_sql  # noqa: E402
-
-ORACLES["text_quality_score"] = ORACLES["text_quality_score"].replace(
-    "{SW_ARRAY}", _stopword_array_sql()
-)
 
 
 def q_ann_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4127,24 +4018,6 @@ def q_q2_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES.update({
-    "ann_lsh_multitable": q_ann_lsh_multitable,
-    "q6_forecast_revenue": q_q6_forecast_revenue,
-    "q4_order_priority": q_q4_order_priority,
-    "q7_volume_shipping": q_q7_volume_shipping,
-    "q8_market_share": q_q8_market_share,
-    "q9_product_profit": q_q9_product_profit,
-    "q10_returned_items": q_q10_returned_items,
-    "q11_important_parts": q_q11_important_parts,
-    "q12_late_lines": q_q12_late_lines,
-    "q13_order_distribution": q_q13_order_distribution,
-    "q14_promo_revenue": q_q14_promo_revenue,
-    "q15_top_supplier": q_q15_top_supplier,
-    "q19_disjunctive_revenue": q_q19_disjunctive_revenue,
-    "q21_waiting_suppliers": q_q21_waiting_suppliers,
-    "q2_min_balance_supplier": q_q2_min_balance_supplier,
-})
-
 ORACLES.update({
     "ann_lsh_multitable": """
         WITH e AS (
@@ -4211,7 +4084,9 @@ ORACLES.update({
             FROM pairs
         )
         SELECT query_id, neighbor_id, cosine, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 5
-    """,
+    """.replace("{P0}", _plane_table_sql(table=0))
+    .replace("{P1}", _plane_table_sql(table=1))
+    .replace("{P2}", _plane_table_sql(table=2)),
     "q6_forecast_revenue": """
         SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(28,4))) AS DOUBLE) AS revenue
         FROM lineitem
@@ -4395,12 +4270,6 @@ ORACLES.update({
           ON c.p_partkey = m.p_partkey AND c.s_acctbal = m.min_bal
     """,
 })
-
-
-for _t in range(3):
-    ORACLES["ann_lsh_multitable"] = ORACLES["ann_lsh_multitable"].replace(
-        "{P" + str(_t) + "}", _plane_table_sql(table=_t)
-    )
 
 # F6 map contract: wrap the g6 series oracle; the ordered string_agg
 # rebuilds exactly Spark's compact to_json(map) serialization.
@@ -4632,21 +4501,6 @@ def q_pack_bins_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_bins_nextfit(cat.documents, capacity=512, shards=8)
 
 
-QUERIES.update({
-    "pack_sequences": q_pack_sequences,
-    "dedup_passage": q_dedup_passage,
-    "mix_epochs": q_mix_epochs,
-    "disambig_candidates": q_disambig_candidates,
-    "pack_bins_nextfit": q_pack_bins_nextfit,
-    "pack_manifest": q_pack_manifest,
-    "text_chunk_sliding": q_text_chunk_sliding,
-    "text_bpe_encode": q_text_bpe_encode,
-    "text_bpe_vocab": q_text_bpe_vocab,
-    "curation_quality_gate": q_curation_quality_gate,
-    "ev_attribution": q_ev_attribution,
-    "ev_quota_sample": q_ev_quota_sample,
-})
-
 ORACLES["ev_quota_sample"] = """
     WITH r AS (
         SELECT event_type AS key, event_id,
@@ -4766,18 +4620,6 @@ ORACLES["text_chunk_sliding"] = """
     FROM x
 """
 
-ORACLES["pack_manifest"] = f"""
-    WITH ps AS ({{PS}}),
-    x AS (
-        SELECT shard, doc_id, tok_start, tok_start + n_tokens AS tok_end,
-               unnest(generate_series(first_seq, last_seq)) AS s
-        FROM ps
-    )
-    SELECT shard, CAST(s AS BIGINT) AS seq, doc_id,
-           CAST(GREATEST(0, tok_start - s * 512) AS BIGINT) AS start_in_seq,
-           CAST(LEAST(512, tok_end - s * 512) AS BIGINT) AS end_in_seq
-    FROM x
-"""
 # per-source quantile gate: compose the proven quality-score oracle with
 # a percent_rank window (ties share ranks in both engines; the score is
 # already bit-identical across engines per the text_quality_score row)
@@ -4954,9 +4796,18 @@ ORACLES.update({
     """,
 })
 
-ORACLES["pack_manifest"] = ORACLES["pack_manifest"].replace(
-    "{PS}", ORACLES["pack_sequences"]
-)
+ORACLES["pack_manifest"] = f"""
+    WITH ps AS ({ORACLES["pack_sequences"]}),
+    x AS (
+        SELECT shard, doc_id, tok_start, tok_start + n_tokens AS tok_end,
+               unnest(generate_series(first_seq, last_seq)) AS s
+        FROM ps
+    )
+    SELECT shard, CAST(s AS BIGINT) AS seq, doc_id,
+           CAST(GREATEST(0, tok_start - s * 512) AS BIGINT) AS start_in_seq,
+           CAST(LEAST(512, tok_end - s * 512) AS BIGINT) AS end_in_seq
+    FROM x
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -5177,24 +5028,6 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES.update({
-    "text_bm25_topk": q_text_bm25_topk,
-    "semdedup_prune": q_semdedup_prune,
-    "corpus_shuffle": q_corpus_shuffle,
-    "select_token_budget": q_select_token_budget,
-    "text_inverted_index": q_text_inverted_index,
-    "ann_pq_topk": q_ann_pq_topk,
-    "dedup_incremental": q_dedup_incremental,
-    "ts_anomaly_hours": q_ts_anomaly_hours,
-    "lh_snapshot_diff": q_lh_snapshot_diff,
-    "text_lang_confusion": q_text_lang_confusion,
-    "text_bm25_rerank": q_text_bm25_rerank,
-    "g_sssp": q_g_sssp,
-    "g_label_propagation": q_g_label_propagation,
-    "corpus_datacard": q_corpus_datacard,
-})
-
-
 def q_lh_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files compaction planning — the OPTIMIZE step every table
     format runs: a per-(year, month) file inventory derived from orders
@@ -5403,22 +5236,6 @@ def q_mm_lossless_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_conf(spark)
     return decode_media(synth_media_lossless(spark, 256), require_codecs=True)
 
-
-QUERIES.update({
-    "ev_cms_heavy_hitters": q_ev_cms_heavy_hitters,
-    "ev_value_quantiles": q_ev_value_quantiles,
-    "mm_probe": q_mm_probe,
-    "mm_phash_neardup": q_mm_phash_neardup,
-    "mm_lossless_decode_stats": q_mm_lossless_decode_stats,
-    "text_bpe_fertility": q_text_bpe_fertility,
-    "ev_kmv_distinct": q_ev_kmv_distinct,
-    "ev_kmv_overlap": q_ev_kmv_overlap,
-    "ann_ivfpq_topk": q_ann_ivfpq_topk,
-    "lh_zorder_stats": q_lh_zorder_stats,
-    "lh_hilbert_stats": q_lh_hilbert_stats,
-    "lh_compaction_plan": q_lh_compaction_plan,
-    "text_cdc_chunks": q_text_cdc_chunks,
-})
 
 from iconic_data_science_spark.operators.lakehouse import compaction_oracle_sql as _compaction_oracle_sql  # noqa: E402
 
@@ -6155,272 +5972,6 @@ ORACLES["text_inverted_index"] = """
 """
 
 
-# ---------------------------------------------------------------------------
-# Registration order = driver verification order.
-#
-# Round-1 evidence (CORRECTNESS_r01.json): the driver verified exactly the
-# first 50 entries of queries(), in registration order, and never reached
-# the rest.  Registration order therefore IS the hard-signal budget.
-# Round 3 front-loads the exact set VERDICT.md flagged as "40 of 139
-# catalog queries have never had a driver CORRECTNESS row": the 33 oracled
-# never-verified queries first (hash rows = strongest signal), then
-# g8_gexf (its byte-exact string_agg oracle was built mid-round-2 but the
-# only driver row so far is r1's no_oracle), then the 7 rows-only queries
-# (weakest signal last).  Union r1∪r2∪r3 = the whole catalog.
-# Cross-round ledger: COVERAGE.md.
-
-_ROUND3_FRONT = [
-    # --- 33 oracled queries with no driver row in r1 or r2 ---
-    # SURVEY §2 operators whose own query never got a row (A5/O2/J-full-outer)
-    "o2_topk_authors",
-    "a5_coauthor_list",
-    "j_full_outer_halves",
-    # windows / time series / sampling
-    "w_sessionize_lag",
-    "w_ntile_balance_quartiles",
-    "inc_rollup_daily",
-    "ts_multi_grain_counts",
-    "ts_anomaly_hours",
-    "sample_stratified",
-    # training-batch assembly (packing block)
-    "pack_sequences",
-    "dedup_passage",
-    "mix_epochs",
-    "pack_bins_nextfit",
-    "pack_manifest",
-    "text_chunk_sliding",
-    "corpus_shuffle",
-    "select_token_budget",
-    # retrieval / semantic dedup / ANN
-    "text_bm25_topk",
-    "text_bm25_rerank",
-    "text_inverted_index",
-    "semdedup_prune",
-    "ann_pq_topk",
-    "dedup_incremental",
-    # text / BPE / curation
-    "text_bpe_encode",
-    "text_lang_confusion",
-    "curation_quality_gate",
-    "corpus_datacard",
-    # events / sketches / graph / CDC / disambiguation
-    "ev_attribution",
-    "ev_cms_heavy_hitters",
-    "ev_value_quantiles",
-    "g_sssp",
-    "lh_snapshot_diff",
-    "disambig_candidates",
-    # --- byte-exact GEXF oracle, driver row still r1 no_oracle ---
-    "g8_gexf",
-    # --- rows-only (no SQL-expressible oracle), never had any driver row ---
-    "mm_probe",
-    "mm_byte_histogram",
-    "mm_media_stats",
-    "mm_decode_stats",
-    "mm_frame_sample",
-    "text_bpe_vocab",
-    "ann_ivf_kmeans",
-    # --- oracle changed in round 3 (mega-paper cap mirrored on both
-    # sides): re-verify under the new contract ---
-    "g3_personal_net",
-    "g3_personal_net_flatmap",
-    # --- new in round 3: the engine-exact approximate-distinct sketch,
-    # the Z-order layout/skipping stats, and content-defined chunking ---
-    "ev_kmv_distinct",
-    "lh_zorder_stats",
-    "lh_hilbert_stats",
-    "lh_compaction_plan",
-    "text_cdc_chunks",
-    "g_label_propagation",
-]
-
-_ROUND2_FRONT = [
-    # TPC-H suite q2-q22 (q1 was driver-green in r1)
-    "q2_min_balance_supplier",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_late_lines",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_part_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_orders",
-    "q19_disjunctive_revenue",
-    "q20_top_part_suppliers",
-    "q21_waiting_suppliers",
-    "q22_idle_customers",
-    # streaming window family (batch-twin oracles)
-    "st_tumbling_hour",
-    "st_sliding_hour_15m",
-    "st_session_5m",
-    "st_stream_stream_join",
-    # temporal joins
-    "asof_signup_value",
-    "range_join_price_tiers",
-    # lakehouse emulation
-    "lh_merge_upsert",
-    "lh_scd2_priority",
-    # LLM curation pipeline family
-    "curation_pipeline",
-    "curation_pipeline_v2",
-    "decontaminate_ngram",
-    "text_vocab_oov",
-    "ann_lsh_multitable",
-    # grouping sets / pivot / median
-    "a_rollup_orders",
-    "a_cube_orders",
-    "a_pivot_returnflag",
-    "a_median_papers",
-    # dynamic network series (DynamicNet parity)
-    "g6_edge_citation_series",
-    "g9_year_keyed_network",
-    # remaining SURVEY §2 coverage holes
-    "a6_flatten_distinct",
-    "j8_element_join",
-    "p5_p6_filters",
-    "w_top_supplier_per_nation",
-    "w_lag_citation_delta",
-    # event analytics
-    "ev_funnel",
-    "ev_retention",
-    # round-2 oracle upgrades: k-core (was rows-only in r1) and the
-    # integer-lattice PageRank twin
-    "g_kcore",
-    "g_pagerank_int",
-    # F6 map-type contract query (round-2 addition)
-    "g6_citation_map",
-    # operators already driver-passed via sibling queries
-    "o2_topk_authors",
-    "a5_coauthor_list",
-    "w_sessionize_lag",
-    "inc_rollup_daily",
-    "ts_multi_grain_counts",
-    "sample_stratified",
-    "j_full_outer_halves",
-    # round-2 continuation additions (oracled, never driver-verified):
-    # training-batch assembly, BPE, event analytics, disambiguation
-    "pack_sequences",
-    "dedup_passage",
-    "mix_epochs",
-    "pack_bins_nextfit",
-    "pack_manifest",
-    "text_chunk_sliding",
-    "text_bpe_encode",
-    "curation_quality_gate",
-    "ev_attribution",
-    "disambig_candidates",
-    "w_ntile_balance_quartiles",
-    # session-3 additions (oracled): retrieval, semantic dedup,
-    # deterministic ordering, incremental dedup, CDC diff
-    "text_bm25_topk",
-    "text_bm25_rerank",
-    "semdedup_prune",
-    "ann_pq_topk",
-    "corpus_shuffle",
-    "select_token_budget",
-    "text_inverted_index",
-    "dedup_incremental",
-    "ts_anomaly_hours",
-    "lh_snapshot_diff",
-    "text_lang_confusion",
-    "g_sssp",
-    "corpus_datacard",
-    "ev_cms_heavy_hitters",
-    "ev_value_quantiles",
-    # rows-only (weakest signal) at the tail of the front block
-    "mm_byte_histogram",
-    "mm_media_stats",
-    "mm_decode_stats",
-    "mm_frame_sample",
-    "text_bpe_vocab",
-    "ann_ivf_kmeans",
-]
-
-
-# Round-4 registration front — evidence-age refresh (VERDICT r3 item 2).
-# r1∪r2∪r3 covers the whole catalog, but 46 queries' newest driver row is
-# still round 1 and several of their operators were refactored since
-# (minhash array-native rewrite, simhash zero-shuffle fold, g7 years-agg
-# fuse, g5 unpersist fix).  Order: (a) the 7 queries whose CONTRACT or
-# plan changed THIS round (new mm oracles, KMV partial+overflow fix,
-# compaction-oracle guard, BM25 passthrough, Hilbert pandas walk) — their
-# old rows no longer describe the shipped code; (b) the r1-stale queries,
-# refactored-since-r1 operators first; (c) the two rows-only-by-nature
-# r1 rows last (weakest signal).  After this round no driver row should
-# be older than round 2.
-_ROUND4_FRONT = [
-    # --- (a) changed in round 4: re-verify under the new contract ---
-    "mm_byte_histogram",   # exploded integer rows + md5-hex oracle (was the r3 defect)
-    "mm_media_stats",      # arithmetic oracle (was rows-only)
-    "mm_probe",            # arithmetic oracle (was rows-only)
-    "ev_kmv_distinct",     # bounded partial + overflow-safe LCG (hash unchanged)
-    "lh_compaction_plan",  # oracle fill>0 guard aligned
-    "text_bm25_rerank",    # all-missing passthrough + rank tiebreak (both engines)
-    "lh_hilbert_stats",    # vectorized pandas walk (hash unchanged)
-    "curation_pipeline_v3",  # NEW r4: exact -> gates -> fuzzy ordering
-    "decontaminate_bloom",   # NEW r4: fixed-memory membership sketch
-    "ev_kmv_overlap",        # NEW r4: sketch-union overlap estimates
-    "ann_ivfpq_topk",        # NEW r4: FAISS IVFADC composition
-    # --- (b) newest driver row is round 1; operator files touched in r2/r3 first ---
-    "dedup_minhash_lsh",   # array-native rewrite landed r2, hash row predates it
-    "dedup_simhash",       # zero-shuffle bit-vote rewrite landed r2
-    "dedup_simhash_pairs",
-    "g7_ego_indicators",   # years-agg fuse r3
-    "g7_alter_rollups",
-    "g5_hierarchy_roots",  # r2 unpersist fix
-    # --- remaining r1-stale queries in catalog order ---
-    "g1_coauthor_edges",
-    "a1_papers_per_author",
-    "q1_pricing_summary",
-    "p_projection_filter",
-    "w1_cumulative_papers",
-    "pr_citation_edges",
-    "a8_zero_filled_citations",
-    "w1_cumulative_citations",
-    "w_moving_3yr_citations",
-    "profile_conversion",
-    "g4_bfs",
-    "g_triangle_count",
-    "u3_except_authors",
-    "u4_intersect_authors",
-    "j7_or_join",
-    "j12_dwarf_lineitem",
-    "f7_json_extract",
-    "f3_f4_scalar_funcs",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_clusters",
-    "dedup_ngram_capped",
-    "dedup_edit_distance",
-    "a1_salted",
-    "ann_brute_topk",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "ann_ivf_nprobe2",
-    "text_language_id",
-    "text_quality_score",
-    "text_token_counts",
-    "text_fingerprint",
-    "text_train_split",
-    "text_repetition",
-    "text_top_terms",
-    "text_pii_redact",
-    # --- twin + rows-only tail (drop out first if the window is tight) ---
-    "g5_hierarchy_roots_sql",  # recursive-CTE twin of the covered g5
-    "a2_approx_distinct",      # HLL bytes engine-internal: rows-only by nature
-    "g_pagerank",              # float pagerank: rows-only by nature
-]
-
-
 def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-proportional reproducible sampling (DCLM/FineWeb-style
     quality- or size-weighted subset): each document kept by an exact
@@ -6490,13 +6041,6 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_decontaminate(corpus, bench, threshold=0.35)
 
 
-QUERIES.update({
-    "sample_weighted": q_sample_weighted,
-    "text_rare_bigram": q_text_rare_bigram,
-    "text_html_extract": q_text_html_extract,
-    "decontaminate_semantic": q_decontaminate_semantic,
-})
-
 def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs Jaccard with prefix filtering (Bayardo et al.
     WWW'07) — the LOSSLESS scale path for the similarity join: index
@@ -6539,8 +6083,6 @@ def q_sample_group_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES.update({"sample_group_k": q_sample_group_k})
-
 ORACLES["sample_group_k"] = """
     WITH h AS (
         SELECT doc_id, source, lang,
@@ -6575,10 +6117,6 @@ def q_decontaminate_bloom_inrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.filter(F.col("doc_id") % 10 != 0)
     return bloom_decontaminate_inrow(train, bench, n=5)
 
-
-QUERIES.update({"dedup_jaccard_prefix": q_dedup_jaccard_prefix,
-                "ann_hard_negatives": q_ann_hard_negatives,
-                "decontaminate_bloom_inrow": q_decontaminate_bloom_inrow})
 
 ORACLES["ann_hard_negatives"] = """
     WITH e AS (
@@ -6662,8 +6200,6 @@ def q_mm_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id", "format", "width", "height", "sum_abs", "peak"
     )
 
-
-QUERIES.update({"mm_resize_stats": q_mm_resize_stats})
 
 # Arithmetic replay of the nearest-neighbor resample: resized pixel
 # (j,i,c) samples the generator pattern at (j*h//16, i*w//16, c).
@@ -6870,16 +6406,6 @@ def q_ev_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winsorize_values(cat.events)
 
 
-QUERIES.update({
-    "mix_temperature": q_mix_temperature,
-    "mix_temperature_sample": q_mix_temperature_sample,
-    "text_hashed_tfidf": q_text_hashed_tfidf,
-    "text_topic_tags": q_text_topic_tags,
-    "mm_audio_frames": q_mm_audio_frames,
-    "text_intra_dedup": q_text_intra_dedup,
-    "ev_winsorize": q_ev_winsorize,
-})  # web_link_graph / web_pagerank register below their definitions
-
 ORACLES["text_intra_dedup"] = """
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
     ch AS (
@@ -7002,14 +6528,6 @@ def q_curation_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated = survivors.join(kept_ids, "doc_id", "left_semi")
     return temperature_sample(gated, budget_tokens=500_000)
 
-
-QUERIES.update({
-    "web_link_graph": q_web_link_graph,
-    "web_pagerank": q_web_pagerank,
-    "ev_kmv_sliding": q_ev_kmv_sliding,
-    "text_classifier_gate": q_text_classifier_gate,
-    "curation_pipeline_v4": q_curation_pipeline_v4,
-})
 
 def q_ev_decayed_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recency-weighted value rollup on an exact integer lattice:
@@ -7136,17 +6654,6 @@ def q_ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return mad_anomaly_hours(cat.events, k=3)
 
-
-QUERIES.update({
-    "ev_decayed_value": q_ev_decayed_value,
-    "mm_video_cuts": q_mm_video_cuts,
-    "text_cooccurrence": q_text_cooccurrence,
-    "mm_audio_resample": q_mm_audio_resample,
-    "lh_vacuum_plan": q_lh_vacuum_plan,
-    "ev_transition_matrix": q_ev_transition_matrix,
-    "dedup_containment": q_dedup_containment,
-    "ts_anomaly_mad": q_ts_anomaly_mad,
-})
 
 ORACLES["ts_anomaly_mad"] = """
     WITH c AS (
@@ -7847,19 +7354,6 @@ def q_mix_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     return domain_reweight(losses, rounds=5, eta_milli=500)
 
 
-QUERIES.update({
-    "text_classifier_train": q_text_classifier_train,
-    "curation_pipeline_v5": q_curation_pipeline_v5,
-    "ann_ivf_kmeans_int": q_ann_ivf_kmeans_int,
-    "g3_personal_net_salted": q_g3_personal_net_salted,
-    "text_classifier_eval": q_text_classifier_eval,
-    "dedup_minhash_eval": q_dedup_minhash_eval,
-    "dedup_span_strip": q_dedup_span_strip,
-    "text_quality_deciles": q_text_quality_deciles,
-    "mix_domain_reweight": q_mix_domain_reweight,
-})
-
-
 def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style normalization (text.normalize_text): lowercase →
     strip URLs → strip non-alphanumerics → collapse whitespace → trim,
@@ -7882,10 +7376,6 @@ def q_text_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = _cat(spark, sf_dir)
     return langid_confusion(cat.documents)
-
-
-QUERIES["text_normalize"] = q_text_normalize
-QUERIES["text_langid_eval"] = q_text_langid_eval
 
 
 def q_dedup_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7918,9 +7408,6 @@ def q_dedup_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["dedup_index_upsert"] = q_dedup_index_upsert
-
-
 def q_curation_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-6 capstone composition, in the order a web pipeline
     actually runs: NORMALIZE (byte noise must not defeat the hash) →
@@ -7947,9 +7434,6 @@ def q_curation_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temperature_sample(gated, budget_tokens=500_000)
 
 
-QUERIES["curation_pipeline_v6"] = q_curation_pipeline_v6
-
-
 def q_text_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decile gate in its streaming-compatible form
     (text.quality_gate_against_cutoff): cutoff learned once on the
@@ -7962,7 +7446,6 @@ def q_text_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_gate_against_cutoff(cat.documents, cat.documents, min_decile=5)
 
 
-QUERIES["text_quality_gate"] = q_text_quality_gate
 # (oracle assigned after ORACLES["text_quality_deciles"] below)
 
 
@@ -7976,9 +7459,6 @@ def q_ann_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = _cat(spark, sf_dir)
     return kmeans_cluster_eval(cat.embeddings, n_cells=8, n_iters=3)
-
-
-QUERIES["ann_cluster_eval"] = q_ann_cluster_eval
 
 
 def q_web_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8007,9 +7487,6 @@ def q_web_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return dedup_clusters(edges)
-
-
-QUERIES["web_components"] = q_web_components
 
 
 def q_sample_global_n(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8117,11 +7594,6 @@ def q_curation_pipeline_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temperature_sample(gated, budget_tokens=500_000)
 
 
-QUERIES["sample_global_n"] = q_sample_global_n
-QUERIES["text_length_quantiles"] = q_text_length_quantiles
-QUERIES["text_gopher_flags"] = q_text_gopher_flags
-QUERIES["curation_pipeline_v7"] = q_curation_pipeline_v7
-
 ORACLES["text_gopher_flags"] = """
     WITH base AS (
         SELECT doc_id,
@@ -8162,10 +7634,7 @@ ORACLES["text_gopher_flags"] = """
            CAST(f_word_count + f_mean_word_len + f_symbol_ratio
                 + f_alpha_words + f_stopwords = 0 AS BIGINT) AS keep
     FROM f
-"""
-ORACLES["text_gopher_flags"] = ORACLES["text_gopher_flags"].replace(
-    "{SW_ARRAY}", _stopword_array_sql()
-)
+""".replace("{SW_ARRAY}", _stopword_array_sql())
 
 
 ORACLES["sample_global_n"] = """
@@ -8425,10 +7894,7 @@ ORACLES["curation_pipeline_v7"] = f"""
     FROM d JOIN w USING (lang), tot
     WHERE CAST(u AS HUGEINT) * lang_toks * w_sum
           < CAST(500000 AS HUGEINT) * 1000000 * weight
-"""
-ORACLES["curation_pipeline_v7"] = ORACLES["curation_pipeline_v7"].replace(
-    "{SW_ARRAY}", _stopword_array_sql()
-)
+""".replace("{SW_ARRAY}", _stopword_array_sql())
 
 ORACLES["dedup_index_upsert"] = """
     WITH shA AS MATERIALIZED (
@@ -8483,10 +7949,7 @@ ORACLES["dedup_index_upsert"] = """
     UNION ALL
     SELECT doc_id, CAST(band AS BIGINT) AS band, band_sig, 'new'
     FROM bsO WHERE doc_id NOT IN (SELECT doc_id FROM dup)
-"""
-ORACLES["dedup_index_upsert"] = ORACLES["dedup_index_upsert"].replace(
-    "{PERMS}", _perm_table_sql(16)
-)
+""".replace("{PERMS}", _perm_table_sql(16))
 
 ORACLES["text_normalize"] = """
     SELECT doc_id,
@@ -8527,10 +7990,7 @@ ORACLES["text_langid_eval"] = """
     )
     SELECT true_lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n
     FROM preds GROUP BY 1, 2
-"""
-ORACLES["text_langid_eval"] = ORACLES["text_langid_eval"].replace(
-    "{STOPWORDS}", _stopword_table_sql()
-)
+""".replace("{STOPWORDS}", _stopword_table_sql())
 
 ORACLES["text_quality_deciles"] = """
     WITH base AS (
@@ -8583,8 +8043,6 @@ def q_corpus_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return curriculum_order(cat.documents, seed=42)
 
-
-QUERIES["corpus_curriculum"] = q_corpus_curriculum
 
 ORACLES["corpus_curriculum"] = f"""
     WITH dec AS MATERIALIZED ({ORACLES["text_quality_deciles"]})
@@ -8730,10 +8188,7 @@ ORACLES["dedup_minhash_eval"] = """
            CAST(CASE WHEN n_candidates = 0 THEN -1
                 ELSE (n_found_pairs * 1000000) // n_candidates END AS BIGINT) AS cand_precision_ppm
     FROM agg
-"""
-ORACLES["dedup_minhash_eval"] = ORACLES["dedup_minhash_eval"].replace(
-    "{PERMS}", _perm_table_sql(16)
-)
+""".replace("{PERMS}", _perm_table_sql(16))
 
 ORACLES["text_classifier_eval"] = f"""
     WITH tk AS (
@@ -8883,8 +8338,6 @@ ORACLES["curation_pipeline_v5"] = f"""
 """
 
 
-
-
 def _c4_pages(documents: DataFrame) -> DataFrame:
     """Deterministic paging of the flat token corpus for the C4 family
     (shared by text_c4_line_filter and curation_pipeline_v8 so query
@@ -8970,8 +8423,6 @@ def q_text_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("clean_text").alias("clean_fp"),
     )
 
-
-QUERIES["text_c4_line_filter"] = q_text_c4_line_filter
 
 # Shared SQL prefix for the C4 family: page synthesis + per-line
 # verdicts + per-page stats/flags (the WITH body ends open so callers
@@ -9080,8 +8531,6 @@ def q_mix_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["mix_dsir_select"] = q_mix_dsir_select
-
 ORACLES["mix_dsir_select"] = """
     WITH toks AS (
         SELECT doc_id, lang,
@@ -9174,8 +8623,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_best_per_cluster(scored, clusters)
 
 
-QUERIES["dedup_keep_best"] = q_dedup_keep_best
-
 ORACLES["dedup_keep_best"] = f"""
     WITH cl AS MATERIALIZED ({ORACLES["dedup_clusters"]}),
     qbase AS (
@@ -9244,8 +8691,6 @@ def q_curation_pipeline_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
         cleaned, target=F.col("lang") == "en", n_keep=100, dim=256, seed=42
     )
 
-
-QUERIES["curation_pipeline_v8"] = q_curation_pipeline_v8
 
 ORACLES["curation_pipeline_v8"] = f"""
     WITH {_C4_STATS_SQL},
@@ -9364,8 +8809,6 @@ def q_curation_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
         gated, target=F.col("lang") == "en", n_keep=50, dim=256, seed=42
     )
 
-
-QUERIES["curation_pipeline_v9"] = q_curation_pipeline_v9
 
 # v8's C4 block, then the pruned-LM gate over `cleaned`, then v8's DSIR
 # chain re-rooted at the gate survivors.
@@ -9495,8 +8938,6 @@ def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_trained_codes(cat.embeddings, m=4, n_codes=8, n_iters=2)
 
 
-QUERIES["ann_pq_trained"] = q_ann_pq_trained
-
 from iconic_data_science_spark.operators.similarity import pq_trained_oracle_sql as _pq_trained_oracle_sql  # noqa: E402
 
 ORACLES["ann_pq_trained"] = _pq_trained_oracle_sql(m=4, n_codes=8, n_iters=2)
@@ -9519,8 +8960,6 @@ def q_ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ann_pq_trained_topk"] = q_ann_pq_trained_topk
-
 from iconic_data_science_spark.operators.similarity import pq_trained_topk_oracle_sql as _pq_trained_topk_oracle_sql  # noqa: E402
 
 ORACLES["ann_pq_trained_topk"] = _pq_trained_topk_oracle_sql(
@@ -9539,8 +8978,6 @@ def q_ann_embedding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return embedding_audit(cat.embeddings, dim=64, clip=4.0)
 
-
-QUERIES["ann_embedding_audit"] = q_ann_embedding_audit
 
 ORACLES["ann_embedding_audit"] = """
     WITH q AS (
@@ -9592,8 +9029,6 @@ def q_ann_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = lambda df: random_projection(df, out_dim=16, in_dim=64, seed=0)  # noqa: E731
     return brute_force_topk(proj(cat.embeddings), proj(_ann_queries(cat)), k=5)
 
-
-QUERIES["ann_rp_topk"] = q_ann_rp_topk
 
 ORACLES["ann_rp_topk"] = """
     WITH sgn AS MATERIALIZED (
@@ -9679,8 +9114,6 @@ def q_ann_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rp_lsh_topk(cat.embeddings, _ann_queries(cat), k=5)
 
 
-QUERIES["ann_rp_lsh_topk"] = q_ann_rp_lsh_topk
-
 # Shares the ann_rp_topk projection CTEs (same md5 sign matrix); adds
 # the projected-space lattice + plane-dot bucket and restricts pairs to
 # bucket equality. Bucket dots are PURE INTEGER lattice×coeff sums (the
@@ -9765,15 +9198,7 @@ ORACLES["ann_rp_lsh_topk"] = """
     )
     SELECT query_id, neighbor_id, cosine, CAST(rnk AS BIGINT) AS rank
     FROM r WHERE rnk <= 5
-"""
-
-from iconic_data_science_spark.operators.similarity import (  # noqa: E402
-    RP_LSH_TABLE as _RP_LSH_TABLE,
-)
-
-ORACLES["ann_rp_lsh_topk"] = ORACLES["ann_rp_lsh_topk"].replace(
-    "{RP_PLANES}", _plane_table_sql(8, 16, table=_RP_LSH_TABLE)
-)
+""".replace("{RP_PLANES}", _plane_table_sql(8, 16, table=_RP_LSH_TABLE))
 
 
 def q_text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9791,9 +9216,6 @@ def q_text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = _cat(spark, sf_dir)
     return bigram_surprisal(cat.documents)
-
-
-QUERIES["text_bigram_surprisal"] = q_text_bigram_surprisal
 
 
 def q_text_surprisal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9819,8 +9241,6 @@ def q_text_surprisal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.documents, lm, default_s=10, cutoff_milli=7900
     )
 
-
-QUERIES["text_surprisal_gate"] = q_text_surprisal_gate
 
 ORACLES["text_surprisal_gate"] = """
     WITH tk AS MATERIALIZED (
@@ -9958,8 +9378,6 @@ def q_mix_unimax_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unimax_allocation(cat.documents, budget_tokens=500_000, max_epochs=2)
 
 
-QUERIES["mix_unimax_alloc"] = q_mix_unimax_alloc
-
 ORACLES["mix_unimax_alloc"] = f"""
     WITH {_UNIMAX_ALLOC_SQL}
     SELECT lang, n_docs, n_tokens, cap_tokens, alloc_tokens FROM alloc
@@ -9978,8 +9396,6 @@ def q_mix_unimax_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return unimax_sample(cat.documents, budget_tokens=500_000, max_epochs=2)
 
-
-QUERIES["mix_unimax_sample"] = q_mix_unimax_sample
 
 ORACLES["mix_unimax_sample"] = f"""
     WITH {_UNIMAX_ALLOC_SQL},
@@ -10022,8 +9438,6 @@ def q_text_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("targets_text").alias("targets_fp"),
     )
 
-
-QUERIES["text_span_corruption"] = q_text_span_corruption
 
 ORACLES["text_span_corruption"] = """
     WITH base AS (
@@ -10115,8 +9529,6 @@ def q_ann_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return maxsim_topk(docs, docs.filter(F.col("tdoc") % 10 == 0), k=5)
 
 
-QUERIES["ann_maxsim_topk"] = q_ann_maxsim_topk
-
 _MAXSIM_DOCS_SQL = """e AS (
         SELECT vec_id, embedding,
                vec_id // 4 AS tdoc, vec_id % 4 AS tok,
@@ -10203,8 +9615,6 @@ def q_ann_maxsim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return maxsim_topk(docs, docs.filter(F.col("tdoc") % 10 == 0), k=5, candidates=cand)
 
 
-QUERIES["ann_maxsim_rerank"] = q_ann_maxsim_rerank
-
 ORACLES["ann_maxsim_rerank"] = f"""
     WITH pl10 AS (SELECT * FROM {{MAXSIM_PLANES}}),
     bsel AS (
@@ -10253,11 +9663,7 @@ ORACLES["ann_maxsim_rerank"] = f"""
     )
     SELECT query_id, neighbor_id, maxsim, CAST(rnk AS BIGINT) AS rank
     FROM r WHERE rnk <= 5
-"""
-
-ORACLES["ann_maxsim_rerank"] = ORACLES["ann_maxsim_rerank"].replace(
-    "{MAXSIM_PLANES}", _plane_table_sql(10, 64, table=11)
-)
+""".replace("{MAXSIM_PLANES}", _plane_table_sql(10, 64, table=11))
 
 
 def q_text_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10274,8 +9680,6 @@ def q_text_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return surprisal_buckets(cat.documents)
 
-
-QUERIES["text_ppl_buckets"] = q_text_ppl_buckets
 
 ORACLES["text_ppl_buckets"] = """
     WITH tk AS MATERIALIZED (
@@ -10399,8 +9803,6 @@ def q_web_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return url_domain_stats(synth_urls(cat.documents))
 
 
-QUERIES["web_domain_stats"] = q_web_domain_stats
-
 ORACLES["web_domain_stats"] = f"""
     WITH {_SYNTH_URLS_SQL},
     {_URL_PARTS_SQL}
@@ -10427,8 +9829,6 @@ def q_web_url_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return url_gate(synth_urls(cat.documents))
 
-
-QUERIES["web_url_gate"] = q_web_url_gate
 
 ORACLES["web_url_gate"] = f"""
     WITH {_SYNTH_URLS_SQL},
@@ -10471,8 +9871,6 @@ def q_web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits_int(edges, iterations=5)
 
 
-QUERIES["web_hits"] = q_web_hits
-
 from iconic_data_science_spark.operators.graph import hits_int_oracle_ctes as _hits_oracle  # noqa: E402
 
 ORACLES["web_hits"] = _hits_oracle(
@@ -10497,8 +9895,6 @@ def q_ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return gap_fill(cat.events)
 
-
-QUERIES["ts_gap_fill"] = q_ts_gap_fill
 
 ORACLES["ts_gap_fill"] = """
     WITH hourly AS (
@@ -10560,8 +9956,6 @@ def q_web_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return url_dedup(synth_urls_noisy(cat.documents))
 
-
-QUERIES["web_url_dedup"] = q_web_url_dedup
 
 _URL_DEDUP_CTES = """hb AS (
         SELECT doc_id, source,
@@ -10640,8 +10034,6 @@ def q_text_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wordpiece_encode(cat.documents, vocab)
 
 
-QUERIES["text_wordpiece_encode"] = q_text_wordpiece_encode
-
 from iconic_data_science_spark.operators.text import wordpiece_oracle_sql as _wp_oracle  # noqa: E402
 
 ORACLES["text_wordpiece_encode"] = _wp_oracle(n_words=12)
@@ -10694,8 +10086,6 @@ def q_curation_pipeline_v10(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm = bigram_lm_topk(cleaned, k=256)
     return bigram_surprisal_gate(cleaned, lm, default_s=10, cutoff_milli=8240)
 
-
-QUERIES["curation_pipeline_v10"] = q_curation_pipeline_v10
 
 _C4_STATS_KEPT_SQL = _C4_STATS_SQL.replace(
     "AS t FROM documents", "AS t FROM documents JOIN keepers USING (doc_id)"
@@ -10775,8 +10165,6 @@ def q_text_wordpiece_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wordpiece_encode_batch(cat.documents, vocab)
 
 
-QUERIES["text_wordpiece_batch"] = q_text_wordpiece_batch
-
 ORACLES["text_wordpiece_batch"] = ORACLES["text_wordpiece_encode"]
 
 
@@ -10840,8 +10228,6 @@ def q_text_wordpiece_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_wordpiece_fertility"] = q_text_wordpiece_fertility
-
 ORACLES["text_wordpiece_fertility"] = f"""
     WITH enc AS ({ORACLES["text_wordpiece_encode"]}),
     ch AS (
@@ -10892,8 +10278,6 @@ def q_text_chat_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return chat_render(synth_chat_turns(cat.documents))
 
-
-QUERIES["text_chat_render"] = q_text_chat_render
 
 ORACLES["text_chat_render"] = """
     WITH tk AS MATERIALIZED (
@@ -10962,8 +10346,6 @@ def q_text_fim(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.col("rendered_spm").cast("binary")).alias("spm_fp"),
     )
 
-
-QUERIES["text_fim"] = q_text_fim
 
 _FIM_H12 = """list_reduce(
                    [CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)
@@ -11035,8 +10417,6 @@ def q_dpo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dpo_pairs(synth_preference_responses(cat.documents))
 
 
-QUERIES["dpo_pairs"] = q_dpo_pairs
-
 ORACLES["dpo_pairs"] = """
     WITH base AS (
         SELECT doc_id AS prompt_id,
@@ -11103,9 +10483,6 @@ def q_text_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_unigram_vocab"] = q_text_unigram_vocab
-
-
 def q_text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM Viterbi ENCODING under the vocabulary trained by
     q_text_unigram_vocab (operators/unigram.unigram_encode): per
@@ -11125,8 +10502,6 @@ def q_text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = unigram_train(cat.documents, vocab_size=32, seed_size=48, em_rounds=2)
     return unigram_encode(cat.documents, [(p, c) for p, c, _ in v])
 
-
-QUERIES["text_unigram_encode"] = q_text_unigram_encode
 
 from iconic_data_science_spark.operators.unigram import (  # noqa: E402
     unigram_oracle_sql as _unigram_oracle_sql,
@@ -11158,7 +10533,6 @@ def q_text_unigram_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_encode_batch(cat.documents, [(p, c) for p, c, _ in v])
 
 
-QUERIES["text_unigram_batch"] = q_text_unigram_batch
 ORACLES["text_unigram_batch"] = ORACLES["text_unigram_encode"]
 
 
@@ -11222,8 +10596,6 @@ def q_text_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-QUERIES["text_unigram_fertility"] = q_text_unigram_fertility
 
 ORACLES["text_unigram_fertility"] = f"""
     WITH enc AS ({ORACLES["text_unigram_encode"]}),
@@ -11293,8 +10665,6 @@ def q_sft_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-
-QUERIES["sft_pack"] = q_sft_pack
 
 ORACLES["sft_pack"] = f"""
     WITH tk AS MATERIALIZED (
@@ -11379,8 +10749,6 @@ def q_ann_sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["ann_sq8_codes"] = q_ann_sq8_codes
-
 _SQ8_CORE = """
     qv AS MATERIALIZED (
         SELECT vec_id,
@@ -11439,8 +10807,6 @@ def q_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sq8_topk(cat.embeddings, _ann_queries(cat), k=5)
 
 
-QUERIES["ann_sq8_topk"] = q_ann_sq8_topk
-
 ORACLES["ann_sq8_topk"] = f"""
     WITH{_SQ8_CORE},
     pl AS (SELECT * FROM {{SQ8_PLANES}}),
@@ -11474,15 +10840,7 @@ ORACLES["ann_sq8_topk"] = f"""
     )
     SELECT query_id, neighbor_id, approx_d, CAST(rnk AS BIGINT) AS rank
     FROM r WHERE rnk <= 5
-"""
-
-from iconic_data_science_spark.operators.similarity import (  # noqa: E402
-    SQ8_LSH_TABLE as _SQ8_LSH_TABLE,
-)
-
-ORACLES["ann_sq8_topk"] = ORACLES["ann_sq8_topk"].replace(
-    "{SQ8_PLANES}", _plane_table_sql(8, 64, table=_SQ8_LSH_TABLE)
-)
+""".replace("{SQ8_PLANES}", _plane_table_sql(8, 64, table=_SQ8_LSH_TABLE))
 
 
 def q_ann_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11502,8 +10860,6 @@ def q_ann_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return bq_topk(cat.embeddings, _ann_queries(cat), k=5)
 
-
-QUERIES["ann_bq_topk"] = q_ann_bq_topk
 
 _BQ_BAND_TERMS = ", ".join(
     "(" + " + ".join(f"bits[{b * 8 + j + 1}] * {1 << j}" for j in range(8)) + ")"
@@ -11609,8 +10965,6 @@ def q_eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pass_at_k(synth_eval_samples(cat.documents, 10), ks=(1, 5, 10))
 
 
-QUERIES["eval_pass_at_k"] = q_eval_pass_at_k
-
 ORACLES["eval_pass_at_k"] = f"""
     WITH d AS (
         SELECT doc_id AS task_id,
@@ -11669,8 +11023,6 @@ def q_eval_em_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return em_f1(synth_predictions(cat.documents, span=8))
 
-
-QUERIES["eval_em_f1"] = q_eval_em_f1
 
 ORACLES["eval_em_f1"] = f"""
     WITH tk AS (
@@ -11741,8 +11093,6 @@ def q_rl_group_advantage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["rl_group_advantage"] = q_rl_group_advantage
-
 ORACLES["rl_group_advantage"] = """
     WITH base AS (
         SELECT doc_id AS prompt_id,
@@ -11792,8 +11142,6 @@ def q_eval_winrate_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_preference_responses(cat.documents, n_responses=4)
     )
 
-
-QUERIES["eval_winrate_matrix"] = q_eval_winrate_matrix
 
 ORACLES["eval_winrate_matrix"] = """
     WITH base AS (
@@ -11847,8 +11195,6 @@ def q_eval_judge_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     return judge_agreement(synth_judge_verdicts(cat.documents, agree_pct=70))
 
-
-QUERIES["eval_judge_agreement"] = q_eval_judge_agreement
 
 ORACLES["eval_judge_agreement"] = f"""
     WITH v AS (
@@ -11925,8 +11271,6 @@ def q_ann_sq8_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_overshoot",
     )
 
-
-QUERIES["ann_sq8_drift"] = q_ann_sq8_drift
 
 ORACLES["ann_sq8_drift"] = """
     WITH qv AS MATERIALIZED (
@@ -12012,8 +11356,6 @@ def q_pii_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["pii_k_anonymity"] = q_pii_k_anonymity
-
 ORACLES["pii_k_anonymity"] = """
     WITH a AS (
         SELECT c_nationkey, c_mktsegment,
@@ -12065,8 +11407,6 @@ def q_pii_anonymity_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return anonymity_summary(audit, ["c_nationkey", "c_mktsegment"])
 
-
-QUERIES["pii_anonymity_summary"] = q_pii_anonymity_summary
 
 ORACLES["pii_anonymity_summary"] = """
     WITH a AS (
@@ -12129,8 +11469,6 @@ def q_pii_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust, ["c_nationkey", "c_mktsegment"], "bal_bucket", t_milli=200
     )
 
-
-QUERIES["pii_t_closeness"] = q_pii_t_closeness
 
 ORACLES["pii_t_closeness"] = """
     WITH a AS (
@@ -12202,8 +11540,6 @@ def q_pii_release_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["pii_release_report"] = q_pii_release_report
-
 ORACLES["pii_release_report"] = f"""
     WITH audit AS ({ORACLES["pii_t_closeness"]})
     SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
@@ -12231,595 +11567,17 @@ ORACLES["pii_release_report"] = f"""
 """
 
 
-# Round-6 registration front (VERDICT r5 item 1): flush the ENTIRE
-# r1/r2-stale cohort. Union evidence after r5: 45 queries whose newest
-# driver row is r2 (43 oracled, mostly the TPC-H shapes) or r1 (the two
-# rows-only). This round adds 4 queries — 4 + 45 = 49, so for the first
-# time the whole remaining debt fits one ~50-row window. Order:
-# (a) the 4 new round-6 queries (never driver-attempted);
-# (b) stale queries whose operator files churned THIS round (events.py
-#     retention fix, similarity.py kmeans additions) — highest
-#     re-verification value;
-# (c) the rest of the stale cohort, non-TPC-H first;
-# (d) the two r1 rows-only queries (weaker check, cheap);
-# (e) the TPC-H tail (operator files untouched since r2 — safest to
-#     drop if the window is tighter than 50);
-# (f) slot ~50: g7_ego_indicators — fresh r4/r5 rows but its plan
-#     changed this round (country joins moved after the dedup).
-_ROUND6_FRONT = [
-    # --- (a) new in round 6, verdict-item deliverables: exactly 7 so
-    # that 7 + the 43 oracled stale = one 50-row window (the r5 verdict
-    # bar is flushing the stale cohort; the round's other 6 new queries
-    # ride after the TPC-H tail and are covered this round by the
-    # parity artifact + pytest hash gates) ---
-    "text_classifier_train",
-    "curation_pipeline_v5",
-    "ann_ivf_kmeans_int",
-    "g3_personal_net_salted",
-    "text_classifier_eval",
-    "dedup_minhash_eval",
-    "dedup_span_strip",
-    # --- (b) stale + this-round operator churn ---
-    "ev_retention",
-    "ev_funnel",
-    "ann_lsh_multitable",
-    # --- (c) stale, non-TPC-H ---
-    "asof_signup_value",
-    "range_join_price_tiers",
-    "st_tumbling_hour",
-    "st_sliding_hour_15m",
-    "st_session_5m",
-    "st_stream_stream_join",
-    "lh_merge_upsert",
-    "lh_scd2_priority",
-    "text_vocab_oov",
-    "g6_edge_citation_series",
-    "g9_year_keyed_network",
-    "a_rollup_orders",
-    "a_cube_orders",
-    "a_pivot_returnflag",
-    "a_median_papers",
-    "a6_flatten_distinct",
-    "j8_element_join",
-    "p5_p6_filters",
-    "w_top_supplier_per_nation",
-    "w_lag_citation_delta",
-    # --- (e) TPC-H tail ---
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_late_lines",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_part_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_orders",
-    "q19_disjunctive_revenue",
-    "q20_top_part_suppliers",
-    "q21_waiting_suppliers",
-    "q22_idle_customers",
-    # --- (d) round-6 additions past the window (driver-gated next
-    # round; hash-green this round in parity_timing_r6 + pytest) ---
-    "text_quality_deciles",
-    "mix_domain_reweight",
-    "text_normalize",
-    "text_langid_eval",
-    "dedup_index_upsert",
-    "curation_pipeline_v6",
-    "text_quality_gate",
-    "ann_cluster_eval",
-    "web_components",
-    "sample_global_n",
-    "text_length_quantiles",
-    "text_gopher_flags",
-    "curation_pipeline_v7",
-    # --- r1 rows-only (weak check) ---
-    "a2_approx_distinct",
-    "g_pagerank",
-    # --- (f) plan changed this round, fresh r4/r5 rows ---
-    "g7_ego_indicators",
-    "ev_kmv_sliding",
-    "mix_temperature_sample",
-    "sample_weighted",
-    "ev_quota_sample",
-]
-
-
-# Round-5 registration front — evidence-age refresh (VERDICT r4 items 2,
-# 5, 7).  r4 came back 50/50 green, leaving: 5 oracled queries whose only
-# hash row is r1 (three rounds stale, text.py refactored since), 49 whose
-# newest row is r2, and two NEW hash-oracled queries this round (the
-# wired pHash near-dup gate and the lossless-decode arithmetic replay).
-# Order: (a) the new queries — never driver-verified; (b) the r1-stale
-# five; (c) the 49 r2-latest, ordered by operator-file churn since r2
-# (dedup/pipelines/graph/asof/streaming/lakehouse first, untouched TPC-H
-# last, so the queries that drop out of a 50-row window are the ones
-# whose code hasn't moved in three rounds); (d) the four queries whose
-# oracle or plan was touched THIS round (fresh r4 rows, so they ride in
-# any remaining slots).
-_ROUND5_FRONT = [
-    # --- (a) new in round 5 ---
-    "mix_temperature",
-    "mix_temperature_sample",
-    "text_hashed_tfidf",
-    "text_topic_tags",
-    "mm_audio_frames",
-    "text_intra_dedup",
-    "ev_winsorize",
-    "web_link_graph",
-    "web_pagerank",
-    "ev_kmv_sliding",
-    "text_classifier_gate",
-    "curation_pipeline_v4",
-    "ev_decayed_value",
-    "mm_video_cuts",
-    "text_cooccurrence",
-    "mm_audio_resample",
-    "lh_vacuum_plan",
-    "ev_transition_matrix",
-    "dedup_containment",
-    "ts_anomaly_mad",
-    "sample_weighted",
-    "text_rare_bigram",
-    "text_html_extract",
-    "decontaminate_semantic",
-    "mm_resize_stats",
-    "dedup_jaccard_prefix",
-    "ann_hard_negatives",
-    "decontaminate_bloom_inrow",
-    "sample_group_k",
-    "mm_phash_neardup",
-    "mm_lossless_decode_stats",
-    "j_interval_overlap",
-    "text_line_dedup",
-    "text_leakage_safe_split",
-    "dedup_dup_spans",
-    "text_bpe_fertility",
-    "ann_matryoshka_topk",
-    "ev_quota_sample",
-    "mm_frame_sample",  # rows-only -> arithmetic-replay oracled this round
-    # --- (b) only driver hash row is r1 ---
-    "text_train_split",
-    "text_repetition",
-    "text_top_terms",
-    "text_pii_redact",
-    "g5_hierarchy_roots_sql",
-    # --- (c) newest row is r2, churned operator files first ---
-    "curation_pipeline",
-    "curation_pipeline_v2",
-    "decontaminate_ngram",
-    "g_kcore",
-    "g_pagerank_int",
-    "g6_citation_map",
-    "g6_edge_citation_series",
-    "g9_year_keyed_network",
-    "asof_signup_value",
-    "range_join_price_tiers",
-    "st_tumbling_hour",
-    "st_sliding_hour_15m",
-    "st_session_5m",
-    "st_stream_stream_join",
-    "ev_funnel",
-    "ev_retention",
-    "lh_merge_upsert",
-    "lh_scd2_priority",
-    "text_vocab_oov",
-    "ann_lsh_multitable",
-    "a_rollup_orders",
-    "a_cube_orders",
-    "a_pivot_returnflag",
-    "a_median_papers",
-    "a6_flatten_distinct",
-    "j8_element_join",
-    "p5_p6_filters",
-    "w_top_supplier_per_nation",
-    "w_lag_citation_delta",
-    # TPC-H (operator files untouched since r2 — safest to defer if the
-    # window is tight)
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_late_lines",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_part_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_orders",
-    "q19_disjunctive_revenue",
-    "q20_top_part_suppliers",
-    "q21_waiting_suppliers",
-    "q22_idle_customers",
-    # --- (d) oracle/plan touched in round 5, hash re-verified locally;
-    # fresh r4 rows so these only need slots if the window allows ---
-    "ev_kmv_distinct",
-    "ev_kmv_overlap",
-    "text_bm25_rerank",
-    "lh_hilbert_stats",
-]
-
-
-# Registry entries retired in round 7 (r6 verdict item 6): the float
-# rows-only twins whose exact integer counterparts carry the hash gate.
-# The operators (graph.pagerank, similarity.kmeans_centroids/ivf_topk)
-# remain, tested directly; older rounds' front lists still name the
-# retired entries, so the reorder filters them instead of asserting.
-_RETIRED = frozenset({"ann_ivf_kmeans", "g_pagerank"})
-
-
-def _reordered(front: list[str], d: dict) -> dict:
-    front = [k for k in front if k not in _RETIRED]
-    unknown = [k for k in front if k not in d]
-    assert not unknown, f"front list names unknown queries: {unknown}"
-    rest = [k for k in d if k not in set(front)]
-    return {k: d[k] for k in [*front, *rest]}
-
-
-# Round-7 registration front — the r6 verdict's evidence-debt flush
-# (item 1): slots 1–13 are the 13 queries that have NEVER had a driver
-# CORRECTNESS row (hash-green in the full parity artifact + pytest, but
-# zero hard driver evidence); slots 14–50 are 37 of the 42 whose newest
-# driver row is r3 (three rounds stale), ordered flagship-first, then
-# the pack/mix/ts + churned dedup/text/ann families, then events/graph/
-# lakehouse, TPC-H q2 last. The cut leaves exactly 5 queries with
-# pre-r4 latest evidence: j_full_outer_halves and
-# w_ntile_balance_quartiles (operator files untouched since r3,
-# pytest-parity green every round) and the three documented rows-only
-# entries (mm_decode_stats, text_bpe_vocab — golden-pinned twins — and
-# a2_approx_distinct, r1, whose exact twin grain rides in
-# g7_ego_indicators) — trading an oracled-hash window slot for a
-# rows-only refresh is the worse use of the 50-row window.
-_ROUND7_FRONT = [
-    # --- (a) never driver-verified (r6 verdict "What's missing" #1) ---
-    "ann_cluster_eval",
-    "curation_pipeline_v6",
-    "curation_pipeline_v7",
-    "dedup_index_upsert",
-    "mix_domain_reweight",
-    "sample_global_n",
-    "text_gopher_flags",
-    "text_langid_eval",
-    "text_length_quantiles",
-    "text_normalize",
-    "text_quality_deciles",
-    "text_quality_gate",
-    "web_components",
-    # --- (b) r3-stale: flagship + its own evidence first ---
-    "g3_personal_net",
-    "g3_personal_net_flatmap",
-    "g8_gexf",
-    "a5_coauthor_list",
-    "o2_topk_authors",
-    # --- (c) r3-stale: pack/mix/sample/ts family ---
-    "pack_sequences",
-    "pack_bins_nextfit",
-    "pack_manifest",
-    "mix_epochs",
-    "corpus_shuffle",
-    "select_token_budget",
-    "sample_stratified",
-    "ts_multi_grain_counts",
-    "ts_anomaly_hours",
-    "inc_rollup_daily",
-    # --- (d) r3-stale: dedup/text/ann (operator files churned since) ---
-    "dedup_passage",
-    "dedup_incremental",
-    "semdedup_prune",
-    "text_chunk_sliding",
-    "text_bm25_topk",
-    "text_inverted_index",
-    "text_bpe_encode",
-    "text_lang_confusion",
-    "text_cdc_chunks",
-    "curation_quality_gate",
-    "corpus_datacard",
-    "ann_pq_topk",
-    # --- (e) r3-stale: events/graph/lakehouse/misc ---
-    "ev_attribution",
-    "ev_cms_heavy_hitters",
-    "ev_value_quantiles",
-    "g_sssp",
-    "g_label_propagation",
-    "lh_snapshot_diff",
-    "lh_zorder_stats",
-    "disambig_candidates",
-    "w_sessionize_lag",
-    "q2_min_balance_supplier",
-    # --- past the 50-row window: the consciously deferred tail (the
-    # k-means family's changed training plan is hash-proven by the
-    # committed subset probe parity_kmeans_fix_r7.json + pytest parity;
-    # ann_ivf_kmeans_int keeps its fresh r6 hash row) ---
-    "ann_ivf_kmeans_int",
-    "j_full_outer_halves",
-    "w_ntile_balance_quartiles",
-    "mm_decode_stats",
-    "text_bpe_vocab",
-]
-
-# _ROUND8_FRONT: GENERATED by tools/build_front.py (VERDICT r7 item 6
-# — slot assignment is reproducible, never hand-ordered; regenerated
-# mid-round after the continuation registered maxsim/ppl/url). Tiering:
-# never-driver-attempted first (the round-7 continuation's 12 debt
-# queries + round-8's ann_rp_lsh_topk, surprisal family, v9, maxsim
-# pair, ppl terciles, url pair), then oldest-evidence-first;
-# --boost promotes plan-changed queries whose old rows no longer
-# evidence the shipped plan (g7 pair: r7 single-exchange regime) and
-# the r7 watch item q1_pricing_summary. Regenerate with:
-#   python tools/build_front.py --boost curation_pipeline_v8,\
-#     g7_ego_indicators,g7_alter_rollups,g1_coauthor_edges,\
-#     profile_conversion,g4_bfs,q1_pricing_summary
-_ROUND8_FRONT = [
-    "curation_pipeline_v8",  # never driver-attempted; boosted (plan changed since last row)
-    "corpus_curriculum",  # never driver-attempted
-    "text_c4_line_filter",  # never driver-attempted
-    "mix_dsir_select",  # never driver-attempted
-    "dedup_keep_best",  # never driver-attempted
-    "ann_pq_trained",  # never driver-attempted
-    "ann_pq_trained_topk",  # never driver-attempted
-    "ann_embedding_audit",  # never driver-attempted
-    "ann_rp_topk",  # never driver-attempted
-    "ann_rp_lsh_topk",  # never driver-attempted
-    "mix_unimax_alloc",  # never driver-attempted
-    "mix_unimax_sample",  # never driver-attempted
-    "text_span_corruption",  # never driver-attempted
-    "text_bigram_surprisal",  # never driver-attempted
-    "text_surprisal_gate",  # never driver-attempted
-    "curation_pipeline_v9",  # never driver-attempted
-    "ann_maxsim_topk",  # never driver-attempted
-    "ann_maxsim_rerank",  # never driver-attempted
-    "text_ppl_buckets",  # never driver-attempted
-    "web_domain_stats",  # never driver-attempted
-    "web_url_gate",  # never driver-attempted
-    "web_hits",  # never driver-attempted
-    "ts_gap_fill",  # never driver-attempted
-    "web_url_dedup",  # never driver-attempted
-    "text_wordpiece_encode",  # never driver-attempted
-    "curation_pipeline_v10",  # never driver-attempted
-    "text_wordpiece_batch",  # never driver-attempted
-    "text_chat_render",  # never driver-attempted
-    "a2_approx_distinct",  # latest evidence r1
-    "j_full_outer_halves",  # latest evidence r3
-    "w_ntile_balance_quartiles",  # latest evidence r3
-    "mm_decode_stats",  # latest evidence r3
-    "text_bpe_vocab",  # latest evidence r3
-    "g7_ego_indicators",  # latest evidence r4; boosted (plan changed since last row)
-    "g7_alter_rollups",  # latest evidence r4; boosted (plan changed since last row)
-    "g1_coauthor_edges",  # latest evidence r4; boosted (plan changed since last row)
-    "profile_conversion",  # latest evidence r4; boosted (plan changed since last row)
-    "g4_bfs",  # latest evidence r4; boosted (plan changed since last row)
-    "q1_pricing_summary",  # latest evidence r4; boosted (plan changed since last row)
-    "ev_kmv_distinct",  # latest evidence r4
-    "ev_kmv_overlap",  # latest evidence r4
-    "text_bm25_rerank",  # latest evidence r4
-    "lh_hilbert_stats",  # latest evidence r4
-    "mm_byte_histogram",  # latest evidence r4
-    "mm_media_stats",  # latest evidence r4
-    "mm_probe",  # latest evidence r4
-    "lh_compaction_plan",  # latest evidence r4
-    "curation_pipeline_v3",  # latest evidence r4
-    "decontaminate_bloom",  # latest evidence r4
-    "ann_ivfpq_topk",  # latest evidence r4
-]
-
-# _ROUND9_FRONT: GENERATED by tools/build_front.py (spliced verbatim;
-# VERDICT r8 item 1 — flush the r4-stale cohort, then the oldest r5
-# tier). The 6 round-9 queries head the window as never-attempted;
-# the --boost plan-changed names (maxsim policy, url-guard family,
-# wordpiece rewrite, pack refactor) hold r8-fresh evidence tiers that
-# sit behind the r4/r5 debt, so this round they are evidenced by the
-# committed per-query probes + the full-catalog r9 sweeps instead.
-# catalog 250 | ever-attempted 233 | ever-green 233 | never 17
-# generated by: python tools/build_front.py --window 50 --boost ann_maxsim_rerank,pack_sequences,web_domain_stats,web_url_gate,web_url_dedup,web_hits,text_wordpiece_encode,text_wordpiece_batch
-_ROUND9_FRONT = [
-    "text_fim",  # never driver-attempted
-    "dpo_pairs",  # never driver-attempted
-    "text_unigram_vocab",  # never driver-attempted
-    "text_unigram_encode",  # never driver-attempted
-    "text_unigram_batch",  # never driver-attempted
-    "sft_pack",  # never driver-attempted
-    "ann_sq8_codes",  # never driver-attempted
-    "ann_sq8_topk",  # never driver-attempted
-    "ann_bq_topk",  # never driver-attempted
-    "eval_pass_at_k",  # never driver-attempted
-    "eval_em_f1",  # never driver-attempted
-    "rl_group_advantage",  # never driver-attempted
-    "eval_winrate_matrix",  # never driver-attempted
-    "eval_judge_agreement",  # never driver-attempted
-    "ann_sq8_drift",  # never driver-attempted
-    "pii_k_anonymity",  # never driver-attempted
-    "pii_anonymity_summary",  # never driver-attempted
-    "dedup_minhash_lsh",  # latest evidence r4
-    "dedup_simhash",  # latest evidence r4
-    "dedup_simhash_pairs",  # latest evidence r4
-    "g5_hierarchy_roots",  # latest evidence r4
-    "a1_papers_per_author",  # latest evidence r4
-    "p_projection_filter",  # latest evidence r4
-    "w1_cumulative_papers",  # latest evidence r4
-    "pr_citation_edges",  # latest evidence r4
-    "a8_zero_filled_citations",  # latest evidence r4
-    "w1_cumulative_citations",  # latest evidence r4
-    "w_moving_3yr_citations",  # latest evidence r4
-    "g_triangle_count",  # latest evidence r4
-    "u3_except_authors",  # latest evidence r4
-    "u4_intersect_authors",  # latest evidence r4
-    "j7_or_join",  # latest evidence r4
-    "j12_dwarf_lineitem",  # latest evidence r4
-    "f7_json_extract",  # latest evidence r4
-    "f3_f4_scalar_funcs",  # latest evidence r4
-    "dedup_exact",  # latest evidence r4
-    "dedup_ngram_jaccard",  # latest evidence r4
-    "dedup_embedding_cosine",  # latest evidence r4
-    "dedup_clusters",  # latest evidence r4
-    "dedup_ngram_capped",  # latest evidence r4
-    "dedup_edit_distance",  # latest evidence r4
-    "a1_salted",  # latest evidence r4
-    "ann_brute_topk",  # latest evidence r4
-    "ann_lsh_topk",  # latest evidence r4
-    "ann_ivf_topk",  # latest evidence r4
-    "ann_ivf_nprobe2",  # latest evidence r4
-    "text_language_id",  # latest evidence r4
-    "text_quality_score",  # latest evidence r4
-    "text_token_counts",  # latest evidence r4
-    "text_fingerprint",  # latest evidence r4
-]
-
-# _ROUND10_FRONT: GENERATED by tools/build_front.py (spliced verbatim;
-# VERDICT r9 item 1 — flush the 50-query r5-stale cohort). The 4
-# round-10 queries head the window as never-attempted; 46 of the 50
-# r5-stale rows follow (the staleness threshold moved 4 -> 5 this
-# round — see test_driver_evidence_freshness's capacity math — so the
-# four displaced r5 rows, g_pagerank_int, g6_citation_map,
-# decontaminate_ngram, and g_kcore, rotate in round 11). The --boost plan-changed names (pass@k envelope/div
-# rewrite, the pii distinct-count rewrite, the sq8 constant-dim drift
-# fix) hold r9-fresh evidence that sits behind the r5 debt; this round
-# they are evidenced by the committed per-query probes + the
-# full-catalog r10 sweeps instead (the r9 discipline).
-# catalog 254 | ever-attempted 250 | ever-green 250 | never 4
-# generated by: python tools/build_front.py --window 50 --boost eval_pass_at_k,pii_k_anonymity,pii_anonymity_summary,ann_sq8_drift
-_ROUND10_FRONT = [
-    "text_unigram_fertility",  # never driver-attempted
-    "pii_t_closeness",  # never driver-attempted
-    "text_wordpiece_fertility",  # never driver-attempted
-    "pii_release_report",  # never driver-attempted
-    "ev_kmv_sliding",  # latest evidence r5
-    "mix_temperature_sample",  # latest evidence r5
-    "sample_weighted",  # latest evidence r5
-    "ev_quota_sample",  # latest evidence r5
-    "mix_temperature",  # latest evidence r5
-    "text_hashed_tfidf",  # latest evidence r5
-    "text_topic_tags",  # latest evidence r5
-    "mm_audio_frames",  # latest evidence r5
-    "text_intra_dedup",  # latest evidence r5
-    "ev_winsorize",  # latest evidence r5
-    "web_link_graph",  # latest evidence r5
-    "web_pagerank",  # latest evidence r5
-    "text_classifier_gate",  # latest evidence r5
-    "curation_pipeline_v4",  # latest evidence r5
-    "ev_decayed_value",  # latest evidence r5
-    "mm_video_cuts",  # latest evidence r5
-    "text_cooccurrence",  # latest evidence r5
-    "mm_audio_resample",  # latest evidence r5
-    "lh_vacuum_plan",  # latest evidence r5
-    "ev_transition_matrix",  # latest evidence r5
-    "dedup_containment",  # latest evidence r5
-    "ts_anomaly_mad",  # latest evidence r5
-    "text_rare_bigram",  # latest evidence r5
-    "text_html_extract",  # latest evidence r5
-    "decontaminate_semantic",  # latest evidence r5
-    "mm_resize_stats",  # latest evidence r5
-    "dedup_jaccard_prefix",  # latest evidence r5
-    "ann_hard_negatives",  # latest evidence r5
-    "decontaminate_bloom_inrow",  # latest evidence r5
-    "sample_group_k",  # latest evidence r5
-    "mm_phash_neardup",  # latest evidence r5
-    "mm_lossless_decode_stats",  # latest evidence r5
-    "j_interval_overlap",  # latest evidence r5
-    "text_line_dedup",  # latest evidence r5
-    "text_leakage_safe_split",  # latest evidence r5
-    "dedup_dup_spans",  # latest evidence r5
-    "text_bpe_fertility",  # latest evidence r5
-    "ann_matryoshka_topk",  # latest evidence r5
-    "mm_frame_sample",  # latest evidence r5
-    "text_train_split",  # latest evidence r5
-    "text_repetition",  # latest evidence r5
-    "text_top_terms",  # latest evidence r5
-    "text_pii_redact",  # latest evidence r5
-    "g5_hierarchy_roots_sql",  # latest evidence r5
-    "curation_pipeline",  # latest evidence r5
-    "curation_pipeline_v2",  # latest evidence r5
-]
-
-# _ROUND11_FRONT: GENERATED by tools/build_front.py (spliced verbatim;
-# the four r5 rows displaced by the round-10 window rotate in first,
-# then the oldest r6 tier). Regenerated at round-11 close with --boost
-# for any plan-changed names.
-# catalog 254 | ever-attempted 254 | ever-green 254 | never 0
-# generated by: python tools/build_front.py --window 50
-_ROUND11_FRONT = [
-    "decontaminate_ngram",  # latest evidence r5
-    "g_kcore",  # latest evidence r5
-    "g_pagerank_int",  # latest evidence r5
-    "g6_citation_map",  # latest evidence r5
-    "ann_ivf_kmeans_int",  # latest evidence r6
-    "text_classifier_train",  # latest evidence r6
-    "curation_pipeline_v5",  # latest evidence r6
-    "g3_personal_net_salted",  # latest evidence r6
-    "text_classifier_eval",  # latest evidence r6
-    "dedup_minhash_eval",  # latest evidence r6
-    "dedup_span_strip",  # latest evidence r6
-    "ev_retention",  # latest evidence r6
-    "ev_funnel",  # latest evidence r6
-    "ann_lsh_multitable",  # latest evidence r6
-    "asof_signup_value",  # latest evidence r6
-    "range_join_price_tiers",  # latest evidence r6
-    "st_tumbling_hour",  # latest evidence r6
-    "st_sliding_hour_15m",  # latest evidence r6
-    "st_session_5m",  # latest evidence r6
-    "st_stream_stream_join",  # latest evidence r6
-    "lh_merge_upsert",  # latest evidence r6
-    "lh_scd2_priority",  # latest evidence r6
-    "text_vocab_oov",  # latest evidence r6
-    "g6_edge_citation_series",  # latest evidence r6
-    "g9_year_keyed_network",  # latest evidence r6
-    "a_rollup_orders",  # latest evidence r6
-    "a_cube_orders",  # latest evidence r6
-    "a_pivot_returnflag",  # latest evidence r6
-    "a_median_papers",  # latest evidence r6
-    "a6_flatten_distinct",  # latest evidence r6
-    "j8_element_join",  # latest evidence r6
-    "p5_p6_filters",  # latest evidence r6
-    "w_top_supplier_per_nation",  # latest evidence r6
-    "w_lag_citation_delta",  # latest evidence r6
-    "q3_shipping_priority",  # latest evidence r6
-    "q4_order_priority",  # latest evidence r6
-    "q5_nation_revenue",  # latest evidence r6
-    "q6_forecast_revenue",  # latest evidence r6
-    "q7_volume_shipping",  # latest evidence r6
-    "q8_market_share",  # latest evidence r6
-    "q9_product_profit",  # latest evidence r6
-    "q10_returned_items",  # latest evidence r6
-    "q11_important_parts",  # latest evidence r6
-    "q12_late_lines",  # latest evidence r6
-    "q13_order_distribution",  # latest evidence r6
-    "q14_promo_revenue",  # latest evidence r6
-    "q15_top_supplier",  # latest evidence r6
-    "q16_part_supplier_counts",  # latest evidence r6
-    "q17_small_quantity_revenue",  # latest evidence r6
-    "q18_large_volume_orders",  # latest evidence r6
-]
-
-# Each round's front wins the head slots over the one before it
-# (applied oldest-first so the newest front ends up at the head);
-# everything not named keeps its original relative order.
-for _front in (
-    _ROUND2_FRONT,
-    _ROUND3_FRONT,
-    _ROUND4_FRONT,
-    _ROUND5_FRONT,
-    _ROUND6_FRONT,
-    _ROUND7_FRONT,
-    _ROUND8_FRONT,
-    _ROUND9_FRONT,
-    _ROUND10_FRONT,
-    _ROUND11_FRONT,
-):
-    QUERIES = _reordered(_front, QUERIES)
-
 # ---------------------------------------------------------------------------
 # driver contract
+
+# Every module-level ``q_<name>`` function is the query ``<name>``, in
+# definition order.
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    name[2:]: fn
+    for name, fn in list(globals().items())
+    if name.startswith("q_") and inspect.isfunction(fn)
+}
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (G3 personal net) on /root/testdata/sf0.001."""

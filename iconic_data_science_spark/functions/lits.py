@@ -4,11 +4,13 @@ Building a K-element literal array as ``F.array(*[F.lit(v) for v in vs])``
 costs one py4j round trip per element (~1 ms each on this driver): a
 2048-element literal costs about a second of serial driver time before
 Spark ever sees the query, and the cost recurs on every query
-construction (measured in tools/profile_bench.py: construction was ~half
-the bench).  Rendering the same literal as ONE SQL string parsed
-server-side costs ~2 ms for the same expression (a CreateArray /
-CreateMap of foldable literals), so the optimized plan, the results, and
-the oracle hashes are unchanged — only the driver-side build time drops.
+construction (a construction/execution profile of the legacy headline
+benchmark found construction was ~half its wall time; perfbench's
+``entry.construct_s`` tracks this split).  Rendering the same literal as
+ONE SQL string parsed server-side costs ~2 ms for the same expression (a
+CreateArray / CreateMap of foldable literals), so the optimized plan, the
+results, and the oracle hashes are unchanged — only the driver-side build
+time drops.
 This is guide §1.2/§7.3 territory: planning and expression construction
 are single-threaded driver work and bound how fast the driver can issue
 rounds of an iterative operator at any scale.

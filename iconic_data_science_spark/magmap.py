@@ -25,8 +25,9 @@ from .catalog import Catalog
 
 # Bucketed-layout fast path (SURVEY §4 partitioned-layout row, the
 # 100 TB answer to the paa self-join): when SPARK_GRAFT_BUCKETED=1 and
-# the session's warehouse holds the pre-bucketed tables (bench.py writes
-# them once per run; prepare_bucketed_tables below), paa/paper_years
+# the session's warehouse holds the pre-bucketed tables (perfbench's
+# mag_bibliometrics setup writes them once per run, see
+# perfbench/workloads.py; prepare_bucketed_tables below), paa/paper_years
 # read the bucketed layout — same rows, but hash-partitioned by paper on
 # disk, so the pairing self-join, the distinct, and the year join all
 # plan without an exchange. Queries are otherwise byte-identical.

@@ -370,6 +370,13 @@ def ngram_jaccard_pairs(
     string-shingle ``shingle_table`` is kept for callers needing
     human-readable shingles; the fixture test proves both key types
     produce the same pair set.
+
+    Eager jobs: with a df cap (the default) the call runs Spark jobs
+    while it builds the frame, before any action on the result. It
+    ``localCheckpoint``s the per-doc shingle arrays (one corpus
+    tokenize) and runs ``hot_df.limit(513).collect()`` to pick the tier.
+    A caller that builds the frame and never executes it still pays
+    both. ``max_shingle_freq=None`` stays fully lazy.
     """
     base = _token_hash_base(documents, "doc_id", "text").filter(F.col("_nt") >= n)
     arr = base.select(

@@ -111,19 +111,27 @@ def configure_object_store(spark: SparkSession, conf: dict[str, str]) -> SparkSe
     return spark
 
 
+# Keys the oracle hashes depend on (timestamp semantics, parquet nanos).
+CORRECTNESS_CONF = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+)
+
+
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     """Pin runtime-settable conf on an externally created session.
 
     The driver harness hands us its own SparkSession; timestamp semantics
     (session timezone) and AQE must still hold for oracle parity, so set
-    every runtime-mutable key defensively.
+    every runtime-mutable key defensively.  The performance keys are
+    best-effort; a ``CORRECTNESS_CONF`` key that does not read back as
+    set raises ``RuntimeError``.
     """
     for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
+        *CORRECTNESS_CONF,
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
         ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.shuffle.partitions", str(default_parallelism())),
         # reset the compute-dense floor a previous query may have opted
         # into (mark_compute_dense)
@@ -136,4 +144,8 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # static or restricted conf on this session — keep going
+    for k, v in CORRECTNESS_CONF:
+        got = spark.conf.get(k, None)
+        if got != v:
+            raise RuntimeError(f"ensure_engine_conf: {k} is {got!r}, need {v!r}")
     return spark

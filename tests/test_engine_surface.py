@@ -240,105 +240,6 @@ def test_session3_queries_partition_invariant(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_build_front_tiering_rules():
-    """tools/build_front.py is the reproducible front generator
-    (r7 verdict item 6): never-attempted first (oracled before
-    rows-only), then oldest-evidence-first; --boost promotes within a
-    tier without crossing tiers; stable within ties."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from build_front import build_front
-
-    names = ["q_old4", "q_new_rows", "q_old3", "q_new_orc", "q_old4b", "q_fresh7"]
-    oracled = {"q_old4", "q_old3", "q_new_orc", "q_old4b", "q_fresh7"}
-    latest = {"q_old4": 4, "q_old3": 3, "q_old4b": 4, "q_fresh7": 7}
-    attempted = set(latest)
-    front = [n for n, _ in build_front(names, oracled, latest, attempted, 10, [])]
-    # tier 0: never attempted, oracled first; tier 1: oldest first,
-    # registration order within a round
-    assert front == ["q_new_orc", "q_new_rows", "q_old3", "q_old4", "q_old4b", "q_fresh7"]
-    # boost reorders WITHIN the r4 tier but cannot jump tiers
-    boosted = [
-        n for n, _ in build_front(names, oracled, latest, attempted, 10, ["q_old4b"])
-    ]
-    assert boosted == ["q_new_orc", "q_new_rows", "q_old3", "q_old4b", "q_old4", "q_fresh7"]
-
-
-def test_driver_evidence_freshness():
-    """The build_front rotation can't silently rot (VERDICT r8 item 7):
-    every registered query whose newest green driver row is >= STALE
-    rounds old — and every query never driver-attempted — must sit
-    inside the next 50-slot driver window (the first 50 registration
-    slots), i.e. the imminent driver run WILL refresh it. Computed from
-    the committed CORRECTNESS_r*.json files, so skipping the front
-    regeneration in a future round fails this test.
-
-    STALE moved 4 -> 5 in round 10, consciously (the threshold this
-    test's own capacity assert demands a decision on): a 50-slot window
-    can cycle at most 4x50 = 200 queries inside a 4-round deadline, and
-    the catalog passed 200 in round 7 and sits at 250+ now — threshold
-    4 is arithmetically unsatisfiable in steady state (the r5 cohort
-    alone fills the whole window, leaving no slot for any new query's
-    first run). 5 rounds x 50 slots = 250+ coverage with oldest-first
-    fronts; VERDICT r9 items 1 and 8 sanctioned exactly this
-    trade ("raise the staleness threshold consciously / raise the
-    front or freeze growth")."""
-    STALE = 5
-    import glob
-    import json
-    import re
-
-    import __spark_entry__ as entrymod
-
-    latest: dict[str, int] = {}
-    attempted: set[str] = set()
-    cur = 0
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r0*(\d+)", path).group(1))
-        cur = max(cur, rnd)
-        for name, row in json.load(open(path)).items():
-            attempted.add(name)
-            if row.get("hash_match") or (
-                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    names = list(entrymod.queries())
-    window = set(names[:50])
-    stale = [
-        n for n in names if n in attempted and cur - latest.get(n, 0) >= STALE
-    ]
-    never = [n for n in names if n not in attempted]
-    overdue = [n for n in stale + never if n not in window]
-    assert not overdue, (
-        f"round {cur}: {len(overdue)} queries have stale or missing driver "
-        f"evidence and are NOT in the next 50-slot window — regenerate the "
-        f"front with tools/build_front.py: {sorted(overdue)[:15]}"
-    )
-    # capacity check: the debt must FIT one window, else the threshold
-    # or window policy needs an explicit decision, not silence
-    assert len(stale) + len(never) <= 50, (
-        f"evidence debt ({len(stale)} stale + {len(never)} never) exceeds "
-        "one 50-slot driver window — raise the staleness threshold "
-        "consciously or split the rotation across rounds"
-    )
-
-
-def test_bench_flagship_rows_ride_the_tail():
-    """bench.py's tail-capture defense (VERDICT r9 item 3): the
-    flagship rows printed last must all be headline queries and
-    registered — otherwise the official perf record goes blind on the
-    flagship again."""
-    import bench
-    import __spark_entry__ as entrymod
-
-    assert set(bench.FLAGSHIP_LAST) <= set(bench.HEADLINE)
-    qs = entrymod.queries()
-    missing = [n for n in bench.HEADLINE if n not in qs]
-    assert not missing, f"headline names not in registry: {missing}"
-    assert "g3_personal_net" in bench.FLAGSHIP_LAST
-
-
 def test_compute_dense_floor_opt_in_and_reset(spark):
     """mark_compute_dense lowers the AQE coalescing floor for one query's
     lifetime; ensure_engine_conf (run by every query's catalog
@@ -355,3 +256,39 @@ def test_compute_dense_floor_opt_in_and_reset(spark):
     assert spark.conf.get(key) == DENSE_MIN_PARTITION_SIZE
     ensure_engine_conf(spark)
     assert spark.conf.get(key) == "1m"
+
+
+class _StubConf:
+    """``spark.conf`` stand-in that rejects a set of keys the way a
+    restricted session rejects static conf."""
+
+    def __init__(self, rejects):
+        self.rejects = rejects
+        self.values = {"spark.sql.session.timeZone": "America/New_York"}
+
+    def set(self, key, value):
+        if key in self.rejects:
+            raise RuntimeError(f"Cannot modify the value of a static config: {key}")
+        self.values[key] = value
+
+    def get(self, key, default=None):
+        return self.values.get(key, default)
+
+
+def test_ensure_engine_conf_fails_loudly_on_correctness_keys():
+    """A session that rejects the UTC pin raises instead of hashing
+    timestamps in its own timezone; a rejected performance key is
+    still best-effort."""
+    import types
+
+    import pytest
+
+    from iconic_data_science_spark.session import ensure_engine_conf
+
+    tz_locked = types.SimpleNamespace(conf=_StubConf({"spark.sql.session.timeZone"}))
+    with pytest.raises(RuntimeError, match="spark.sql.session.timeZone"):
+        ensure_engine_conf(tz_locked)
+
+    aqe_locked = types.SimpleNamespace(conf=_StubConf({"spark.sql.adaptive.enabled"}))
+    ensure_engine_conf(aqe_locked)
+    assert aqe_locked.conf.values["spark.sql.session.timeZone"] == "UTC"

@@ -1,12 +1,12 @@
-"""Dump .explain("formatted") for bench headline queries (or a CSV subset)
-to plans/r10/<query>_<tag>.txt.  Usage:
+"""Dump .explain("formatted") for a comma-separated list of queries()
+names to plans/<round>/<query>_<tag>.txt.  Usage:
 
-    python tools/dump_plans.py <tag> [only_csv]
+    python tools/dump_plans.py <tag> <name,name,...>
 
 Plan capture is a planning-time operation; queries whose *construction*
 runs driver jobs (kmeans seeding, pagerank loop checkpoints) execute
 those jobs, so the capture is slower than pure explain but still cheap
-next to the bench.
+next to running them.
 """
 
 from __future__ import annotations
@@ -18,13 +18,19 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, "/root/repo")
 
-import bench as benchmod
 import __spark_entry__ as entrymod
 from iconic_data_science_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
+    tag, only_csv = sys.argv[1], sys.argv[2]
+    all_queries = entrymod.queries()
+    names = only_csv.split(",")
+    unknown = [n for n in names if n not in all_queries]
+    if unknown:
+        sys.exit(f"not in queries(): {unknown}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join("/root/repo", "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r11"))
     os.makedirs(out_dir, exist_ok=True)
@@ -37,10 +43,6 @@ def main() -> None:
 
         magmap.prepare_bucketed_tables(Catalog(spark, sf_dir))
 
-    all_queries = entrymod.queries()
-    names = [n for n in benchmod.HEADLINE if n in all_queries]
-    if len(sys.argv) > 2:
-        names = [s for s in sys.argv[2].split(",") if s in all_queries]
     for name in names:
         try:
             df = all_queries[name](spark, sf_dir)

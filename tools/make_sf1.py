@@ -11,8 +11,8 @@ near-duplicates (same interior shingles, different boundary shingles) —
 the 10-crawls-of-the-same-sites shape, which is the honest dedup
 workload at scale, not 10 exact copies of every doc.
 
-Output: /tmp/sf1/*.parquet (same layout as the driver's sf dirs; the
-bench reads the SF off the dir name). Writes nothing outside /tmp.
+Output: /tmp/sf1/*.parquet (same layout as the driver's sf dirs, so it
+works as any query's sf_dir). Writes nothing outside /tmp.
 
 Usage: python tools/make_sf1.py [replicas] [out_dir]
 """

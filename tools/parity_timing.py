@@ -10,9 +10,9 @@ the 206/206 artifact with a 28-query partial).
 
 This is a builder-side diagnostic (the real gate is the driver's
 CORRECTNESS_r{N}.json); it exists to (a) pre-validate all queries at the
-driver's sf0.01 before the round closes and (b) measure per-query cost so
-the registration order keeps the driver's budget covering as many queries
-as possible.
+driver's sf0.01 before the round closes and (b) measure per-query cost.
+End-to-end performance is measured by ``python3 perfbench/run.py
+--workload ... --seed N --seconds 10 --trace {0,1}``, not here.
 """
 
 from __future__ import annotations
