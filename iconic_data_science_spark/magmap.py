@@ -39,11 +39,9 @@ BUCKETED_N = 32
 def _bucketed_table(cat: Catalog, table: str) -> DataFrame | None:
     if os.environ.get("SPARK_GRAFT_BUCKETED") != "1":
         return None
-    try:
-        if cat.spark.catalog.tableExists(table):
-            return cat.spark.table(table)
-    except Exception:
-        return None
+    # a missing table is False; any other catalog failure propagates
+    if cat.spark.catalog.tableExists(table):
+        return cat.spark.table(table)
     return None
 
 

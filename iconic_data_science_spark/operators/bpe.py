@@ -10,9 +10,9 @@ training corpora, and both halves map cleanly onto Spark:
   — and training is 3-tiered like the other iterative operators
   (graph.py:60, dedup.py:478):
 
-  * tier 1/2 (the common case): if the vocabulary fits under
-    ``local_vocab_limit``, collect the (word, count) table ONCE and run
-    the classical sequential greedy trainer driver-locally with an
+  * tier 1/2 (the common case): if the vocabulary fits the local
+    budget (``tiers.LOCAL_ROWS``), collect the (word, count) table ONCE
+    and run the classical sequential greedy trainer driver-locally with an
     incremental pair index (the Sennrich et al. 2016 subword-nmt
     algorithm — every published BPE trainer holds exactly this table in
     memory). ONE Spark job total, regardless of ``num_merges``; a 32k-
@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import tiers
 from .dedup import words
 
 
@@ -74,9 +75,6 @@ def word_frequencies(
         .groupBy("word")
         .agg(F.count("*").alias("count"))
     )
-
-
-DEFAULT_LOCAL_VOCAB_LIMIT = 1_000_000
 
 
 def _train_local(wf: dict[str, int], num_merges: int) -> list[tuple[str, str]]:
@@ -128,7 +126,6 @@ def bpe_train(
     documents: DataFrame,
     num_merges: int = 10,
     text_col: str = "text",
-    local_vocab_limit: int = DEFAULT_LOCAL_VOCAB_LIMIT,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merges from the corpus; returns the
     rank-ordered merge list [(left, right), ...].
@@ -137,20 +134,19 @@ def bpe_train(
     right asc), so the learned table is a pure function of the corpus
     in EITHER tier (see module docstring for the 3-tier shape).
 
-    ``local_vocab_limit``: if the distinct-word vocabulary fits under
-    this bound, the (word, count) table collects once and training runs
-    driver-locally (one Spark job total); set 0 to force the
-    distributed per-round loop.
+    If the distinct-word vocabulary fits the local budget
+    (``tiers.LOCAL_ROWS``), the (word, count) table collects once and
+    training runs driver-locally (one Spark job total); a larger or
+    empty vocabulary runs the distributed per-round loop.
     """
     wf_table = word_frequencies(documents, text_col=text_col)
-    if local_vocab_limit:
-        # limit(n+1) probe: <= n rows back means we hold the WHOLE
-        # vocabulary and can train locally; n+1 rows means over
-        # threshold — fall through to the distributed loop.  One job,
-        # no separate count().
-        rows = wf_table.limit(local_vocab_limit + 1).collect()
-        if len(rows) <= local_vocab_limit:
-            return _train_local({r["word"]: r["count"] for r in rows}, num_merges)
+    # limit(n+1) probe: <= n rows back means we hold the WHOLE
+    # vocabulary and can train locally; n+1 rows means over budget —
+    # fall through to the distributed loop.  One job, no separate
+    # count().
+    rows = wf_table.limit(tiers.LOCAL_ROWS + 1).collect()
+    if tiers.solve_locally(len(rows)):
+        return _train_local({r["word"]: r["count"] for r in rows}, num_merges)
     wf = wf_table.select(_spaced(F.col("word")).alias("sym"), "count")
     wf = wf.localCheckpoint()
     merges: list[tuple[str, str]] = []

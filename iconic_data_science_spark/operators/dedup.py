@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from . import tiers
+
 MERSENNE31 = 2_147_483_647  # 2^31 - 1
 # Dot products quantize each double product to an integer lattice
 # (×1e12, round, sum as BIGINT): sums are exact and order-independent,
@@ -631,8 +633,6 @@ def _union_find_rows(rows, spark, id_type: str) -> DataFrame:
 def dedup_clusters(
     pairs: DataFrame,
     max_iters: int = 20,
-    broadcast_threshold_rows: int = 5_000_000,
-    local_solve_rows: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id).
 
@@ -648,10 +648,11 @@ def dedup_clusters(
     diameter) convergence. Near-dup components are tiny (pairs/triples:
     2-3 rounds); the loop caps at ``max_iters`` regardless.
 
-    Three-tier strategy: a pair table ≤ ``local_solve_rows`` is solved
-    on the driver with path-compressed union-find; larger sets run the
-    distributed fixpoint, broadcast-hash per round under
-    ``broadcast_threshold_rows`` and shuffle joins at web scale.
+    Three-tier strategy (budgets in ``operators/tiers.py``): a pair
+    table within the local budget is solved on the driver with
+    path-compressed union-find; larger (or empty) sets run the
+    distributed fixpoint, broadcast-hash per round within the broadcast
+    budget and shuffle joins at web scale.
 
     The pair subtree — usually an expensive similarity join — is
     ``localCheckpoint``ed ONCE up front: the tier gate's count, the
@@ -662,7 +663,7 @@ def dedup_clusters(
     serial incremental partition rounds when the limit is never hit).
     """
     p2 = pairs.select("id1", "id2").localCheckpoint()
-    if p2.count() <= local_solve_rows:
+    if tiers.solve_locally(p2.count()):
         return _union_find_rows(
             p2.collect(), pairs.sparkSession, pairs.schema["id1"].dataType.simpleString()
         )
@@ -678,7 +679,7 @@ def dedup_clusters(
         .withColumn("label", F.col("node"))
         .persist()
     )
-    small = labels.count() <= broadcast_threshold_rows
+    small = tiers.broadcastable(labels.count())
     for _ in range(max_iters):
         lab = F.broadcast(labels) if small else labels
         neighbor_min = (

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import tiers
+
 
 def _local_root_closure(m: DataFrame) -> DataFrame:
     """Driver-side root resolution for dimension-sized hierarchies:
@@ -60,9 +62,7 @@ def _local_root_closure(m: DataFrame) -> DataFrame:
 def hierarchy_roots(
     parent_child: DataFrame,
     max_iters: int = 20,
-    broadcast_threshold_rows: int = 5_000_000,
     children_unique: bool = False,
-    local_solve_rows: int = 2_000_000,
 ) -> DataFrame:
     """G5: resolve every node to its root ancestor by pointer jumping.
 
@@ -74,11 +74,11 @@ def hierarchy_roots(
     every non-root child.
 
     Three-tier strategy by exact node count (from the materializing
-    count): ≤ ``local_solve_rows`` → driver-side path-compressed closure
-    (one collect + one parallelize, no loop at all — see
-    ``_local_root_closure``); else the distributed pointer-jumping loop,
-    where under ``broadcast_threshold_rows`` every round runs as a
-    broadcast-hash join — no shuffle in the loop. Real
+    count, decided by ``operators/tiers.py``): within the local budget →
+    driver-side path-compressed closure (one collect + one parallelize,
+    no loop at all — see ``_local_root_closure``); else the distributed
+    pointer-jumping loop, where within the broadcast budget every round
+    runs as a broadcast-hash join — no shuffle in the loop. Real
     hierarchies are dimension-sized (MAG fos ≈ 6×10^5 nodes,
     models.scala:16), so the broadcast path is the common case; a
     billion-node mapping falls back to shuffle joins automatically.
@@ -97,9 +97,9 @@ def hierarchy_roots(
     # deep hierarchies before any data is touched.
     m = edges.select("child", F.col("parent").alias("anc")).localCheckpoint()
     n_nodes = m.count()
-    if n_nodes <= local_solve_rows:
+    if tiers.solve_locally(n_nodes):
         return _local_root_closure(m).select("child", F.col("anc").alias("root"))
-    small = n_nodes <= broadcast_threshold_rows
+    small = tiers.broadcastable(n_nodes)
     for _ in range(max_iters):
         hop = m.select(F.col("child").alias("h_child"), F.col("anc").alias("h_anc"))
         if small:
@@ -262,8 +262,6 @@ def pagerank_int(
     edges: DataFrame,
     damping_pct: int = 85,
     iterations: int = 10,
-    broadcast_threshold_rows: int = 5_000_000,
-    local_solve_rows: int | None = 2_000_000,
 ) -> DataFrame:
     """Integer-lattice PageRank: the power iteration defined *as* integer
     arithmetic so the result hashes identically across engines (the
@@ -287,29 +285,22 @@ def pagerank_int(
     lesson); loop-invariant inputs materialize ONCE before the loop —
     since optimization round 10 the out-degree is FOLDED INTO the edge
     table up front (8 bytes/row buys back one join per round at every
-    scale), and while the node count stays under
-    ``broadcast_threshold_rows`` (known exactly from one pre-loop count,
-    the bfs/dedup_clusters three-tier discipline) the rank table
+    scale), and while the node count stays within the broadcast budget
+    (known exactly from one pre-loop count, the bfs/dedup_clusters
+    three-tier discipline) the rank table
     broadcasts into both per-round joins, so the edge table is never
     shuffled inside the loop and the only per-round exchange is the
     contribution groupBy. Above the threshold the loop falls back to
     shuffle joins unchanged. Measured 6.9 → 3.1-3.9 s (bench medians) on
     the sf0.1 web graph (10 rounds), hash-identical.
 
-    Three-tier (optimization round 10): edge tables under
-    ``local_solve_rows`` solve on the driver via the exact int64
-    recurrence (:func:`_pagerank_int_local`; pass ``None`` to skip the
-    gate's count for a huge lazy edge table — the bfs/kcore contract).
+    Three-tier (optimization round 10): edge tables within the local
+    budget solve on the driver via the exact int64 recurrence
+    (:func:`_pagerank_int_local`).
     """
-    if local_solve_rows is not None:
-        e2 = edges.select("src", "dst").localCheckpoint()
-        # 0 <: empty edge tables keep the distributed path (its joins
-        # yield the empty result with the right schema; the local tier's
-        # schema-less createDataFrame cannot represent an empty frame) —
-        # the same guard sssp/label_propagation/hits_int carry
-        if 0 < e2.count() <= local_solve_rows:
-            return _pagerank_int_local(e2, damping_pct, iterations)
-        edges = e2  # reuse the materialized narrow table above threshold
+    edges = edges.select("src", "dst").localCheckpoint()
+    if tiers.solve_locally(edges.count()):
+        return _pagerank_int_local(edges, damping_pct, iterations)
     ed = edges.repartition("src")
     deg = ed.groupBy("src").agg(F.count("*").alias("deg"))
     edges_deg = ed.join(deg, "src").localCheckpoint()
@@ -319,7 +310,7 @@ def pagerank_int(
         .distinct()
         .localCheckpoint()
     )
-    small = nodes.count() <= broadcast_threshold_rows
+    small = tiers.broadcastable(nodes.count())
     base = (100 - damping_pct) * PAGERANK_INT_SCALE // 100
     ranks = nodes.withColumn("rank_i", F.lit(PAGERANK_INT_SCALE).cast("long")).localCheckpoint()
     for _ in range(iterations):
@@ -406,8 +397,6 @@ def bfs(
     edges: DataFrame,
     sources: DataFrame,
     max_depth: int = 6,
-    broadcast_threshold_rows: int = 5_000_000,
-    local_solve_rows: int | None = 2_000_000,
 ) -> DataFrame:
     """G4: k-hop breadth-first expansion (StaticNet.scala:303-420 rewrite).
 
@@ -419,7 +408,7 @@ def bfs(
     Join strategy: personal-net frontiers are tiny relative to the edge
     table (the whole point of BFS truncation, StaticNet.scala:313-314),
     so while the running visited count — known exactly from the per-round
-    counts — stays under ``broadcast_threshold_rows``, the frontier⋈edges
+    counts — stays within the broadcast budget, the frontier⋈edges
     probe and the visited anti-join both run broadcast-hash: the edge
     table is never shuffled. A frontier that outgrows the threshold
     (dense-graph explosion) falls back to shuffle joins mid-loop.
@@ -427,10 +416,8 @@ def bfs(
     e = edges.select(F.col("src"), F.col("dst"))
     # three-tier, like hierarchy_roots/dedup_clusters: tiny edge tables
     # solve on the driver (the gate's count() is one cheap job when the
-    # caller has materialized edges — pass local_solve_rows=None to skip
-    # the gate entirely for a huge lazy edge table, where counting would
-    # be a full scan)
-    if local_solve_rows is not None and e.count() <= local_solve_rows:
+    # caller has materialized edges)
+    if tiers.solve_locally(e.count()):
         return _local_bfs(e, sources, max_depth)
     visited = sources.select("author").distinct().withColumn("depth", F.lit(0).cast("long"))
     visited = visited.persist()
@@ -440,7 +427,7 @@ def bfs(
     # visited set stays a lazy union over the persisted frontiers, so no
     # per-round re-materialization of the whole set is needed.
     for d in range(1, max_depth + 1):
-        small = n_visited <= broadcast_threshold_rows
+        small = tiers.broadcastable(n_visited)
         probe = F.broadcast(frontier) if small else frontier
         seen = visited.select("author")
         if small:
@@ -553,8 +540,6 @@ def kcore(
     edges: DataFrame,
     k: int = 3,
     max_iters: int = 100,
-    broadcast_threshold_rows: int = 5_000_000,
-    local_solve_rows: int | None = 2_000_000,
 ) -> DataFrame:
     """k-core decomposition: the maximal subgraph in which every vertex
     has degree ≥ k → (author, core_degree) for surviving vertices.
@@ -570,15 +555,15 @@ def kcore(
     tables solve on the driver with the worklist algorithm (one collect,
     no loop); at scale, a driver loop of distributed rounds — degree
     groupBy, filter, then two semi-joins restricting the edge table to
-    surviving vertices (broadcast-hash while the survivor set is under
-    ``broadcast_threshold_rows``). Each round ``localCheckpoint``s the
+    surviving vertices (broadcast-hash while the survivor set is within
+    the broadcast budget). Each round ``localCheckpoint``s the
     shrunk edge table: the loop re-references it three times per round,
     so carrying lineage would grow the plan exponentially (the PageRank
     lesson). Rounds are bounded by the peel depth, typically ≪ V; the
     edge table only ever shrinks.
     """
     e = edges.select("src", "dst").distinct()
-    if local_solve_rows is not None and e.count() <= local_solve_rows:
+    if tiers.solve_locally(e.count()):
         return _local_kcore(e, k)
     e = e.localCheckpoint()
     n_prev = -1
@@ -598,7 +583,7 @@ def kcore(
             return out
         n_prev = n
         ks = keep.select("src")
-        if n <= broadcast_threshold_rows:
+        if tiers.broadcastable(n):
             ks = F.broadcast(ks)
         e = (
             e.join(ks, "src", "left_semi")
@@ -659,8 +644,6 @@ def sssp(
     edges: DataFrame,
     rounds: int = 6,
     source: int | None = None,
-    broadcast_threshold_rows: int = 5_000_000,
-    local_solve_rows: int | None = 2_000_000,
 ) -> DataFrame:
     """Bounded single-source shortest paths (Bellman-Ford): (author,
     dist) — minimum total edge cost over paths of at most ``rounds``
@@ -686,7 +669,7 @@ def sssp(
     # on the driver with the identical int64 relaxation (empty tables
     # keep the distributed path — its null-source degenerate semantics
     # are not worth replicating)
-    if local_solve_rows is not None and 0 < e.count() <= local_solve_rows:
+    if tiers.solve_locally(e.count()):
         return _sssp_local(e, rounds, source)
     if source is None:
         dist = e.agg(F.min("src").alias("author")).withColumn("dist", F.lit(0).cast("long"))
@@ -702,7 +685,7 @@ def sssp(
     n_dist = 1
     for _ in range(rounds):
         d = dist.alias("d")
-        if n_dist <= broadcast_threshold_rows:
+        if tiers.broadcastable(n_dist):
             d = F.broadcast(d)
         relaxed = d.join(e.alias("e"), F.col("d.author") == F.col("e.src")).select(
             F.col("e.dst").alias("author"),
@@ -773,8 +756,6 @@ def _label_propagation_local(edges: DataFrame, rounds: int) -> DataFrame:
 def label_propagation(
     edges: DataFrame,
     rounds: int = 5,
-    broadcast_threshold_rows: int = 5_000_000,
-    local_solve_rows: int | None = 2_000_000,
 ) -> DataFrame:
     """Synchronous label-propagation communities (Raghavan et al. 2007,
     "Near linear time algorithm to detect community structures in
@@ -806,18 +787,16 @@ def label_propagation(
     # three-tier (optimization round 10): K rounds × 2 fixed-overhead
     # distributed jobs on a sub-2M-edge table is pure scheduling latency
     # — solve on the driver with the identical integer vote/argmax
-    if local_solve_rows is not None:
-        e2 = edges.select("src", "dst").localCheckpoint()
-        if 0 < e2.count() <= local_solve_rows:
-            return _label_propagation_local(e2, rounds)
-        edges = e2
+    edges = edges.select("src", "dst").localCheckpoint()
+    if tiers.solve_locally(edges.count()):
+        return _label_propagation_local(edges, rounds)
     edges = edges.repartition("dst").localCheckpoint()
     nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
     # broadcast the node-grain label frame into the per-round joins
     # while the node count (one pre-loop job on the checkpointed set)
     # stays bounded — the pagerank_int/bfs three-tier discipline; the
     # edge table is then never shuffled inside the loop
-    small = nodes.count() <= broadcast_threshold_rows
+    small = tiers.broadcastable(nodes.count())
     labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
     for _ in range(rounds):
         lb = labels.withColumnRenamed("node", "dst")
@@ -888,7 +867,6 @@ def hits_int(
     edges: DataFrame,
     iterations: int = 5,
     scale: int = HITS_INT_SCALE,
-    local_solve_rows: int | None = 2_000_000,
 ) -> DataFrame:
     """(node, hub_i, auth_i) — integer-lattice HITS (Kleinberg 1999,
     "Authoritative Sources in a Hyperlinked Environment"): the
@@ -923,15 +901,10 @@ def hits_int(
     # three-tier (optimization round 10): the 5-round loop runs 3 eager
     # checkpoint jobs per round; a sub-2M-edge graph solves on the driver
     # with the identical int64 recurrence (bench web_hits 3.4 → 0.9 s)
-    if local_solve_rows is not None:
-        e2 = edges.select("src", "dst").distinct().localCheckpoint()
-        if 0 < e2.count() <= local_solve_rows:
-            return _hits_int_local(e2, iterations, scale)
-        edges = e2.repartition("src").localCheckpoint()
-    else:
-        edges = (
-            edges.select("src", "dst").distinct().repartition("src").localCheckpoint()
-        )
+    edges = edges.select("src", "dst").distinct().localCheckpoint()
+    if tiers.solve_locally(edges.count()):
+        return _hits_int_local(edges, iterations, scale)
+    edges = edges.repartition("src").localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from . import tiers
 from .dedup import DOT_SCALE
 from ..functions.lits import (
     d2_fold_longs,
@@ -697,20 +698,19 @@ def pq_codes(
     return codebook, codes
 
 
-def _dtable_hint(dtable: DataFrame, queries: DataFrame, m: int, n_codes: int,
-                 threshold_rows: int) -> DataFrame:
+def _dtable_hint(dtable: DataFrame, queries: DataFrame, m: int, n_codes: int) -> DataFrame:
     """The ADC distance table is |queries|·m·n_codes rows. Broadcasting
     it is the right plan for bounded query sets (the common case: a
     search batch), but it GROWS WITH THE QUERY SET — at a million
     queries × 8 subs × 256 codes it is 2×10⁹ rows and would kill every
-    executor. Above ``threshold_rows`` the broadcast hint is withheld,
-    so the candidate⋈dtable join degrades to a shuffle on the
+    executor. Beyond ``tiers.BROADCAST_ROWS`` the broadcast hint is
+    withheld, so the candidate⋈dtable join degrades to a shuffle on the
     (query_id, sub, c_id) key — slower, unbounded-safe (gate-tested in
     tests/test_ann_recall.py). One count() job on the query table pays
     for the decision."""
-    if queries.count() * m * n_codes > threshold_rows:
-        return dtable
-    return F.broadcast(dtable)
+    if tiers.broadcastable(queries.count() * m * n_codes):
+        return F.broadcast(dtable)
+    return dtable
 
 
 def ivfpq_topk(
@@ -723,7 +723,6 @@ def ivfpq_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dtable_broadcast_threshold_rows: int = 8_000_000,
 ) -> DataFrame:
     """(query_id, neighbor_id, approx_d_scaled, rank) — IVF-PQ: the
     FAISS IVFADC composition (Jégou et al. 2011 §IV): the IVF stage
@@ -732,10 +731,10 @@ def ivfpq_topk(
 
     This is the production ANN memory/compute stack in one plan: cell
     assignment is an argmin over broadcast centroids (no corpus
-    shuffle), the distance table broadcasts under the
-    ``dtable_broadcast_threshold_rows`` gate (it is |queries|·m·n_codes
-    rows — bounded by the SEARCH BATCH, not the corpus; above the gate
-    it shuffle-joins instead, see ``_dtable_hint``), candidates carry
+    shuffle), the distance table broadcasts within the broadcast budget
+    (it is |queries|·m·n_codes rows — bounded by the SEARCH BATCH, not
+    the corpus; above the budget it shuffle-joins instead, see
+    ``_dtable_hint``), candidates carry
     m BIGINT codes instead of the raw vector, and the only shuffle is the
     (query, candidate) partial-sum — over the ~nprobe/n_cells fraction
     of the corpus the IVF stage kept, which is the multiplicative win
@@ -796,7 +795,7 @@ def ivfpq_topk(
     sums = (
         cand.join(codes, "id")
         .join(
-            _dtable_hint(dtable, queries, m, n_codes, dtable_broadcast_threshold_rows),
+            _dtable_hint(dtable, queries, m, n_codes),
             ["query_id", "sub", "c_id"],
         )
         .groupBy("query_id", "id")
@@ -823,7 +822,6 @@ def pq_topk(
     n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dtable_broadcast_threshold_rows: int = 8_000_000,
 ) -> DataFrame:
     """(query_id, neighbor_id, approx_d_scaled, rank) — asymmetric
     distance computation (ADC) top-k over PQ codes: each query builds a
@@ -835,7 +833,7 @@ def pq_topk(
     Scale shape: corpus vectors are touched only through their m codes
     (the memory-compression point of PQ — 8 bytes/vector here vs 256);
     the distance table (|queries|·m·n_codes rows) broadcasts while that
-    product stays under ``dtable_broadcast_threshold_rows`` and joins
+    product stays within the broadcast budget and joins
     by shuffle beyond it (see ``_dtable_hint`` — the table grows with
     the query set, so an unbounded query table must not broadcast);
     the only shuffle besides that gate is the (query_id, id)
@@ -872,7 +870,7 @@ def pq_topk(
     )
     sums = (
         codes.join(
-            _dtable_hint(dtable, queries, m, n_codes, dtable_broadcast_threshold_rows),
+            _dtable_hint(dtable, queries, m, n_codes),
             ["sub", "c_id"],
         )
         .filter(F.col("query_id") != F.col("id"))

@@ -152,12 +152,13 @@ def test_matryoshka_prefix_recall(spark, corpora):
     assert r16 >= r8 - 0.1, (r8, r16)
 
 
-def test_pq_dtable_broadcast_gate(spark, corpora):
+def test_pq_dtable_broadcast_gate(spark, corpora, monkeypatch):
     """The ADC distance table is |queries|·m·n_codes rows — bounded by
     the search batch, not the corpus — so it broadcasts by default but
     MUST degrade to a shuffle join above the gate (an unbounded query
     table would otherwise blow the broadcast). Results must be
     identical either side of the gate."""
+    from iconic_data_science_spark.operators import tiers
     from iconic_data_science_spark.operators.similarity import ivfpq_topk, pq_topk
     from iconic_data_science_spark.plans import inspect
 
@@ -170,7 +171,9 @@ def test_pq_dtable_broadcast_gate(spark, corpora):
 
     for op in (pq_topk, ivfpq_topk):
         bc = op(corpus, queries, k=K)
-        sh = op(corpus, queries, k=K, dtable_broadcast_threshold_rows=0)
+        with monkeypatch.context() as m:
+            m.setattr(tiers, "BROADCAST_ROWS", 0)
+            sh = op(corpus, queries, k=K)
         assert rows(bc) == rows(sh), op.__name__
         # plan-level: the gated form must not broadcast the dtable side
         # of the code join (the codebook broadcast inside dtable itself

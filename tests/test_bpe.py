@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+from iconic_data_science_spark.operators import tiers
 from iconic_data_science_spark.operators.bpe import (
     bpe_token_counts,
     bpe_train,
@@ -79,13 +80,14 @@ def test_bpe_train_matches_reference(spark):
     assert got == _ref_train(CORPUS, 8)
 
 
-def test_bpe_train_tiers_equivalent(spark):
+def test_bpe_train_tiers_equivalent(spark, monkeypatch):
     """The driver-local incremental trainer (tier 1/2) and the
-    distributed per-round loop (tier 3, local_vocab_limit=0) learn the
+    distributed per-round loop (tier 3, tiers.LOCAL_ROWS=0) learn the
     identical merge table."""
     df = _docs(spark, CORPUS)
     local = bpe_train(df, num_merges=8)
-    distributed = bpe_train(df, num_merges=8, local_vocab_limit=0)
+    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
+    distributed = bpe_train(df, num_merges=8)
     assert local == distributed == _ref_train(CORPUS, 8)
 
 
@@ -128,7 +130,7 @@ def test_word_frequencies(spark):
     assert wf["low"] == 6 and wf["newer"] == 4 and wf["newest"] == 4
 
 
-def test_bpe_random_corpora_match_reference(spark):
+def test_bpe_random_corpora_match_reference(spark, monkeypatch):
     """Property: BOTH trainer tiers == sequential reference on random
     small corpora (incl. runs of repeated characters, the greedy-merge
     edge case)."""
@@ -147,7 +149,9 @@ def test_bpe_random_corpora_match_reference(spark):
         df = _docs(spark, texts)
         k = 4
         assert bpe_train(df, num_merges=k) == _ref_train(texts, k)
-        assert bpe_train(df, num_merges=k, local_vocab_limit=0) == _ref_train(texts, k)
+        with monkeypatch.context() as m:
+            m.setattr(tiers, "LOCAL_ROWS", 0)
+            assert bpe_train(df, num_merges=k) == _ref_train(texts, k)
         merges = _ref_train(texts, k)
         out = bpe_token_counts(df, merges).collect()[0]
         assert out["n_bpe_tokens"] == sum(

@@ -4,7 +4,10 @@ repeated joins on the same key (SURVEY §4 partitioned-layout row)."""
 
 from __future__ import annotations
 
+import pytest
+
 from iconic_data_science_spark.catalog import Catalog
+from iconic_data_science_spark.operators import tiers
 from iconic_data_science_spark.operators.skew import write_bucketed
 from iconic_data_science_spark.plans import inspect
 
@@ -67,8 +70,8 @@ def test_ngram_jaccard_hashed_equals_string_shingles(spark):
     assert key(ngram_jaccard_pairs(docs, threshold=0.3)) == key(string_ref)
 
 
-def test_dedup_clusters_local_equals_distributed(spark):
-    """Union-find fast path vs min-label fixpoint (local_solve_rows=0
+def test_dedup_clusters_local_equals_distributed(spark, monkeypatch):
+    """Union-find fast path vs min-label fixpoint (tiers.LOCAL_ROWS=0
     forces the distributed loop): identical labels, including on a
     star, a long chain, and merged components."""
     from iconic_data_science_spark.operators.dedup import dedup_clusters
@@ -81,10 +84,8 @@ def test_dedup_clusters_local_equals_distributed(spark):
     )
     pairs = spark.createDataFrame(edges, "id1 long, id2 long")
     local = {(r.doc_id, r.cluster_id) for r in dedup_clusters(pairs).collect()}
-    dist = {
-        (r.doc_id, r.cluster_id)
-        for r in dedup_clusters(pairs, local_solve_rows=0).collect()
-    }
+    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
+    dist = {(r.doc_id, r.cluster_id) for r in dedup_clusters(pairs).collect()}
     assert local == dist
 
 
@@ -111,6 +112,25 @@ def test_bucketed_paa_layout_same_results_fewer_shuffles(spark, sf_dir, monkeypa
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {magmap.BUCKETED_PAA}")
         spark.sql(f"DROP TABLE IF EXISTS {magmap.BUCKETED_PY}")
+
+
+def test_bucketed_table_propagates_catalog_errors(monkeypatch):
+    """A missing bucketed table reads as False from tableExists; any
+    other catalog failure must surface instead of silently falling back
+    to the unbucketed layout."""
+    from types import SimpleNamespace
+
+    from iconic_data_science_spark import magmap
+
+    def table_exists(name):
+        raise RuntimeError("metastore unavailable")
+
+    cat = SimpleNamespace(
+        spark=SimpleNamespace(catalog=SimpleNamespace(tableExists=table_exists))
+    )
+    monkeypatch.setenv("SPARK_GRAFT_BUCKETED", "1")
+    with pytest.raises(RuntimeError, match="metastore unavailable"):
+        magmap._bucketed_table(cat, magmap.BUCKETED_PAA)
 
 
 def test_minhash_band_sigs_array_native_equals_postings_path(spark):

@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from iconic_data_science_spark import fixtures
 from iconic_data_science_spark.operators.coauthor import coauthor_edges
+from iconic_data_science_spark.operators import tiers
 from iconic_data_science_spark.operators.graph import bfs, hierarchy_roots
 from iconic_data_science_spark.sources import gexf
 
@@ -38,9 +40,9 @@ def test_hierarchy_roots_deep_chain(spark):
     assert all(roots[i] == 0 for i in range(1, n))
 
 
-def test_hierarchy_roots_local_equals_distributed(spark):
+def test_hierarchy_roots_local_equals_distributed(spark, monkeypatch):
     """The driver-side closure fast path and the pointer-jumping loop
-    must produce identical mappings (local_solve_rows=0 forces the
+    must produce identical mappings (tiers.LOCAL_ROWS=0 forces the
     distributed loop)."""
     fc = spark.createDataFrame(
         [(100, 10), (10, 1), (200, 20), (20, 2), (3, 3),
@@ -49,7 +51,8 @@ def test_hierarchy_roots_local_equals_distributed(spark):
         "child long, parent long",
     )
     local = {(r.child, r.root) for r in hierarchy_roots(fc).collect()}
-    dist = {(r.child, r.root) for r in hierarchy_roots(fc, local_solve_rows=0).collect()}
+    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
+    dist = {(r.child, r.root) for r in hierarchy_roots(fc).collect()}
     assert local == dist
 
 
@@ -111,7 +114,12 @@ def test_pagerank_int_agrees_with_float_ranking(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     rf = {x.node: x.rank for x in pagerank(df, iterations=10).collect()}
     rint = {x.node: x.rank_i for x in pagerank_int(df, iterations=10).collect()}
-    assert sorted(rf, key=rf.get) == sorted(rint, key=rint.get)
+    # nodes 3 and 4 have no in-edges, so their ranks tie exactly in both
+    # variants; order by (rank, node) so the tie never depends on the
+    # collect() row order
+    assert rint[3] == rint[4]
+    assert rf[3] == pytest.approx(rf[4])
+    assert sorted(rf, key=lambda n: (rf[n], n)) == sorted(rint, key=lambda n: (rint[n], n))
 
 
 def test_d3_json_export(spark):
@@ -193,21 +201,19 @@ def test_bfs_sql_equals_operator(spark):
     assert loop == sql
 
 
-def test_bfs_local_equals_distributed(spark):
+def test_bfs_local_equals_distributed(spark, monkeypatch):
     edges = (
         coauthor_edges(fixtures.paa_df(spark), fixtures.paper_years_df(spark))
         .select(F.col("ego").alias("src"), F.col("alter_id").alias("dst"))
     )
     sources = spark.createDataFrame([(1,)], "author long")
     local = {(r.author, r.depth) for r in bfs(edges, sources, max_depth=6).collect()}
-    dist = {
-        (r.author, r.depth)
-        for r in bfs(edges, sources, max_depth=6, local_solve_rows=0).collect()
-    }
+    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
+    dist = {(r.author, r.depth) for r in bfs(edges, sources, max_depth=6).collect()}
     assert local == dist
 
 
-def test_kcore_fixture_and_tier_equivalence(spark):
+def test_kcore_fixture_and_tier_equivalence(spark, monkeypatch):
     from iconic_data_science_spark.operators.graph import kcore
 
     # two triangles bridged by one edge, plus a pendant: both triangles
@@ -217,7 +223,9 @@ def test_kcore_fixture_and_tier_equivalence(spark):
         [(a, b) for a, b in und] + [(b, a) for a, b in und], "src long, dst long"
     )
     local = sorted(tuple(r) for r in kcore(edges, k=2).collect())
-    dist = sorted(tuple(r) for r in kcore(edges, k=2, local_solve_rows=None).collect())
+    with monkeypatch.context() as m:
+        m.setattr(tiers, "LOCAL_ROWS", 0)
+        dist = sorted(tuple(r) for r in kcore(edges, k=2).collect())
     assert local == dist
     assert [a for a, _ in local] == [1, 2, 3, 4, 5, 6]  # pendant 7 peeled
     # node 4 keeps the bridge to surviving node 3 (degree 3); node 6
@@ -230,10 +238,11 @@ def test_kcore_fixture_and_tier_equivalence(spark):
         [(a, b) for a, b in chain] + [(b, a) for a, b in chain], "src long, dst long"
     )
     assert kcore(cedges, k=2).count() == 0
-    assert kcore(cedges, k=2, local_solve_rows=None).count() == 0
+    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
+    assert kcore(cedges, k=2).count() == 0
 
 
-def test_kcore_on_testdata_tiers_agree(spark, sf_dir):
+def test_kcore_on_testdata_tiers_agree(spark, sf_dir, monkeypatch):
     import __spark_entry__ as entrymod
     from iconic_data_science_spark.operators.graph import kcore
     from iconic_data_science_spark import magmap
@@ -249,7 +258,8 @@ def test_kcore_on_testdata_tiers_agree(spark, sf_dir):
         .localCheckpoint()
     )
     local = sorted(tuple(r) for r in kcore(edges, k=3).collect())
-    dist = sorted(tuple(r) for r in kcore(edges, k=3, local_solve_rows=None).collect())
+    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
+    dist = sorted(tuple(r) for r in kcore(edges, k=3).collect())
     assert local == dist and len(local) > 0
 
 
@@ -291,15 +301,16 @@ def test_author_disambiguation_block_cap(spark):
     assert candidate_author_pairs(authors, max_block_size=None).count() == 50 * 49 // 2 + 1
 
 
-def test_kcore_empty_and_single_edge(spark):
+def test_kcore_empty_and_single_edge(spark, monkeypatch):
     from iconic_data_science_spark.operators.graph import kcore
 
     empty = spark.createDataFrame([], "src long, dst long")
     assert kcore(empty, k=2).count() == 0
-    assert kcore(empty, k=2, local_solve_rows=None).count() == 0
     one = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
     assert {tuple(r) for r in kcore(one, k=1).collect()} == {(1, 1), (2, 1)}
     assert kcore(one, k=2).count() == 0
+    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
+    assert {tuple(r) for r in kcore(one, k=1).collect()} == {(1, 1), (2, 1)}
 
 
 def test_pagerank_int_matches_local_integer_recurrence(spark):
@@ -483,10 +494,10 @@ def test_hits_int_matches_python_model(spark, edges):
     assert got == want
 
 
-def test_local_tier_matches_distributed_loops(spark):
+def test_local_tier_matches_distributed_loops(spark, monkeypatch):
     """The r10 driver-local tiers (pagerank_int / hits_int /
     label_propagation / sssp) must be row-identical to the distributed
-    loops (local_solve_rows=None) on a fixture with multi-edges, a
+    loops (tiers.LOCAL_ROWS=0) on a fixture with multi-edges, a
     dangling node, asymmetric direction, and an unreachable component —
     the exact-integer contract both tiers implement."""
     from iconic_data_science_spark.operators.graph import (
@@ -502,44 +513,63 @@ def test_local_tier_matches_distributed_loops(spark):
         (7, 8),  # component reachable only via 7
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
-
-    for op, kw in (
-        (pagerank_int, dict(damping_pct=85, iterations=4)),
-        (hits_int, dict(iterations=3)),
-        (label_propagation, dict(rounds=4)),
-    ):
-        local = sorted(map(tuple, op(df, **kw).collect()))
-        dist = sorted(map(tuple, op(df, **kw, local_solve_rows=None).collect()))
-        assert local == dist, op.__name__
-
     cdf = spark.createDataFrame(
         [(s, d, (s + d) % 3 + 1) for s, d in edges], "src long, dst long, cost long"
     )
-    for src_node in (1, 7, None):
-        local = sorted(map(tuple, sssp(cdf, rounds=5, source=src_node).collect()))
-        dist = sorted(
-            map(tuple, sssp(cdf, rounds=5, source=src_node, local_solve_rows=None).collect())
-        )
-        assert local == dist, f"sssp source={src_node}"
+    runs = [
+        (pagerank_int.__name__, lambda: pagerank_int(df, damping_pct=85, iterations=4)),
+        (hits_int.__name__, lambda: hits_int(df, iterations=3)),
+        (label_propagation.__name__, lambda: label_propagation(df, rounds=4)),
+    ] + [
+        (f"sssp source={s}", lambda s=s: sssp(cdf, rounds=5, source=s))
+        for s in (1, 7, None)
+    ]
+
+    local = [sorted(map(tuple, run().collect())) for _, run in runs]
+    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
+    for (name, run), want in zip(runs, local):
+        assert sorted(map(tuple, run().collect())) == want, name
 
 
-def test_iterative_loops_empty_edges_route_distributed(spark):
-    """An EMPTY edge table must route to the distributed path in every
-    local-tiered loop operator (the local tiers' schema-less
-    createDataFrame cannot represent an empty frame — found by the
-    graph fuzz gate: a fuzzed year filter left pagerank_int zero edges
-    and the local tier raised CANNOT_INFER_EMPTY_SCHEMA)."""
-    from iconic_data_science_spark.operators.graph import (
-        hits_int,
-        label_propagation,
-        pagerank_int,
-        sssp,
-    )
+def test_iterative_loops_empty_edges_route_distributed(spark, monkeypatch):
+    """An EMPTY input must route to the distributed path in every tiered
+    operator: ``tiers.solve_locally(0)`` is False (some local tiers'
+    schema-less createDataFrame cannot represent an empty frame — found
+    by the graph fuzz gate: a fuzzed year filter left pagerank_int zero
+    edges and the local tier raised CANNOT_INFER_EMPTY_SCHEMA). The
+    local solvers are replaced by a tripwire, so routing, not just the
+    result, is pinned."""
+    from iconic_data_science_spark.operators import bpe, dedup, graph
+
+    def tripwire(*args, **kwargs):
+        raise AssertionError("empty input took the driver-local tier")
+
+    for mod, name in (
+        (graph, "_local_root_closure"),
+        (graph, "_pagerank_int_local"),
+        (graph, "_local_bfs"),
+        (graph, "_local_kcore"),
+        (graph, "_sssp_local"),
+        (graph, "_label_propagation_local"),
+        (graph, "_hits_int_local"),
+        (dedup, "_union_find_rows"),
+        (bpe, "_train_local"),
+    ):
+        monkeypatch.setattr(mod, name, tripwire)
 
     empty = spark.createDataFrame([], "src bigint, dst bigint")
-    assert pagerank_int(empty, damping_pct=85, iterations=3).collect() == []
-    assert hits_int(empty, iterations=2).collect() == []
-    assert label_propagation(empty, rounds=2).collect() == []
+    assert graph.pagerank_int(empty, damping_pct=85, iterations=3).collect() == []
+    assert graph.hits_int(empty, iterations=2).collect() == []
+    assert graph.label_propagation(empty, rounds=2).collect() == []
+    assert graph.kcore(empty, k=2).collect() == []
+    sources = spark.createDataFrame([(1,)], "author bigint")
+    # the source itself is reachable at depth/distance 0 even with no edges
+    assert [tuple(r) for r in graph.bfs(empty, sources, max_depth=2).collect()] == [(1, 0)]
     empty_costed = spark.createDataFrame([], "src bigint, dst bigint, cost bigint")
-    # the source itself is reachable at distance 0 even with no edges
-    assert [tuple(r) for r in sssp(empty_costed, rounds=2, source=1).collect()] == [(1, 0)]
+    assert [tuple(r) for r in graph.sssp(empty_costed, rounds=2, source=1).collect()] == [(1, 0)]
+    empty_fc = spark.createDataFrame([], "child bigint, parent bigint")
+    assert graph.hierarchy_roots(empty_fc).collect() == []
+    empty_pairs = spark.createDataFrame([], "id1 bigint, id2 bigint")
+    assert dedup.dedup_clusters(empty_pairs).collect() == []
+    no_docs = spark.createDataFrame([], "doc_id bigint, text string")
+    assert bpe.bpe_train(no_docs, num_merges=3) == []

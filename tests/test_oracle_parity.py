@@ -3,7 +3,12 @@ t2 gate, replicated strictly). Runs at sf0.001 by default for speed;
 set SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 for the full-size check.
 
 The eight queries the perfbench workloads run form an always-on smoke
-subset. The full sweep is a long gate: skipped unless
+subset. The queries whose operators choose a tier (``operators/tiers.py``)
+also run, always, under each forced distributed tier: the broadcast loop
+(``LOCAL_ROWS=0``) and the shuffle loop (``LOCAL_ROWS=0,
+BROADCAST_ROWS=0``), so every tier is hash-gated on the same data. AQE
+may still broadcast on its own; the gate checks results, not plans.
+The full sweep is a long gate: skipped unless
 SPARK_GRAFT_FULL_GATES=1 (VERDICT r10 item 2 — the 254-query sweep
 pushed the default ``pytest tests/`` run past the verify window; the
 full-catalog evidence also lands in the committed parity_timing_r*.json
@@ -17,6 +22,7 @@ import os
 import pytest
 
 import __spark_entry__ as entrymod
+from iconic_data_science_spark.operators import tiers
 from .oracle_utils import run_parity
 
 NAMES = sorted(entrymod.queries().keys())
@@ -32,6 +38,30 @@ SMOKE = [
     "ann_lsh_topk",
 ]
 
+TIERED = [
+    "g5_hierarchy_roots",
+    "g4_bfs",
+    "g_kcore",
+    "g_pagerank_int",
+    "g_sssp",
+    "g_label_propagation",
+    "web_pagerank",
+    "web_hits",
+    "web_components",
+    "dedup_clusters",
+    "dedup_keep_best",
+    "text_leakage_safe_split",
+    "text_bpe_vocab",
+    "mix_epochs",
+    "ann_pq_topk",
+    "ann_ivfpq_topk",
+]
+
+FORCED_TIERS = {
+    "broadcast": {"LOCAL_ROWS": 0},
+    "shuffle": {"LOCAL_ROWS": 0, "BROADCAST_ROWS": 0},
+}
+
 full_gate = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_FULL_GATES"),
     reason="long gate suite; set SPARK_GRAFT_FULL_GATES=1 to run",
@@ -42,6 +72,15 @@ full_gate = pytest.mark.skipif(
 def test_smoke_query_matches_oracle(spark, sf_dir, name):
     problems = run_parity(spark, sf_dir, entrymod.queries()[name], entrymod.oracle_sql()[name])
     assert not problems, f"{name}: " + "; ".join(problems)
+
+
+@pytest.mark.parametrize("tier", sorted(FORCED_TIERS))
+@pytest.mark.parametrize("name", TIERED)
+def test_forced_tier_matches_oracle(spark, sf_dir, monkeypatch, name, tier):
+    for budget, rows in FORCED_TIERS[tier].items():
+        monkeypatch.setattr(tiers, budget, rows)
+    problems = run_parity(spark, sf_dir, entrymod.queries()[name], entrymod.oracle_sql()[name])
+    assert not problems, f"{name} [{tier}]: " + "; ".join(problems)
 
 
 @full_gate

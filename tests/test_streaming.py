@@ -337,31 +337,31 @@ def test_streaming_quality_gate_equals_batch(spark, sf_dir):
     pd.testing.assert_frame_equal(_sorted_pdf(got), _sorted_pdf(batch))
 
 
-def test_stream_dedup_fallback_path_equals_gated(spark, sf_dir):
-    """Above the index broadcast threshold the pipeline falls back to
+def test_stream_dedup_fallback_path_equals_gated(spark, sf_dir, monkeypatch):
+    """Above the driver-local budget the pipeline falls back to
     the shuffled join + stateful dedup; both paths must produce the
     same pairs (the gate changes the plan, never the answer)."""
     from pyspark.sql import functions as F
 
     from iconic_data_science_spark.catalog import Catalog
+    from iconic_data_science_spark.operators import tiers
     from iconic_data_science_spark.streaming import documents as sdoc
 
     docs = Catalog(spark, sf_dir).documents
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
 
-    def run(threshold_rows):
+    def run(label, local_rows):
+        monkeypatch.setattr(tiers, "LOCAL_ROWS", local_rows)
         stream = sdoc.read_document_stream(spark, sf_dir).filter(
             F.col("doc_id") % 2 == 1
         )
         df = sdoc.stream_dedup_against_index(
             stream, corpus, n=3, num_perm=16, rows_per_band=4, threshold=0.5,
-            index_broadcast_threshold_rows=threshold_rows,
         )
-        rows = []
         q = (
             df.writeStream.outputMode("append")
             .format("memory")
-            .queryName(f"dedup_gate_{threshold_rows}")
+            .queryName(f"dedup_gate_{label}")
             .trigger(availableNow=True)
             .start()
         )
@@ -369,11 +369,11 @@ def test_stream_dedup_fallback_path_equals_gated(spark, sf_dir):
             q.processAllAvailable()
         finally:
             q.stop()
-        out = spark.sql(f"SELECT * FROM dedup_gate_{threshold_rows}").collect()
+        out = spark.sql(f"SELECT * FROM dedup_gate_{label}").collect()
         return sorted((r.corpus_id, r.new_id, round(r.jaccard, 9)) for r in out)
 
-    gated = run(10**9)
-    fallback = run(0)
+    gated = run("gated", 10**9)
+    fallback = run("fallback", 0)
     assert gated == fallback
     assert gated
 
