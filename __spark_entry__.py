@@ -340,12 +340,10 @@ def q_g4_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = _cat(spark, sf_dir)
     years = magmap.paper_years(cat).filter(F.col("year") == 1995)
-    # materialize the edge table once — BFS references it every round,
-    # and re-deriving means re-running the paa self-join per depth
-    edges = (
-        coauthor_edges(magmap.paa(cat), years, min_papers_together=2)
-        .select(F.col("ego").alias("src"), F.col("alter_id").alias("dst"))
-        .localCheckpoint()
+    # no entry-level localCheckpoint: bfs materializes the edge table
+    # once itself (tiers.gather), and every tier reads that copy
+    edges = coauthor_edges(magmap.paa(cat), years, min_papers_together=2).select(
+        F.col("ego").alias("src"), F.col("alter_id").alias("dst")
     )
     sources = spark.range(1).select(F.lit(0).cast("long").alias("author"))
     return bfs(edges, sources, max_depth=3)
@@ -375,10 +373,8 @@ def q_g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = _cat(spark, sf_dir)
     years = magmap.paper_years(cat).filter(F.col("year") == 1995)
-    edges = (
-        coauthor_edges(magmap.paa(cat), years, min_papers_together=2)
-        .select(F.col("ego").alias("src"), F.col("alter_id").alias("dst"))
-        .localCheckpoint()
+    edges = coauthor_edges(magmap.paa(cat), years, min_papers_together=2).select(
+        F.col("ego").alias("src"), F.col("alter_id").alias("dst")
     )
     return kcore(edges, k=3)
 
@@ -4988,10 +4984,8 @@ def q_g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = _cat(spark, sf_dir)
     years = magmap.paper_years(cat).filter(F.col("year") == 1995)
-    edges = (
-        coauthor_edges(magmap.paa(cat), years, min_papers_together=2)
-        .select(F.col("ego").alias("src"), F.col("alter_id").alias("dst"))
-        .localCheckpoint()
+    edges = coauthor_edges(magmap.paa(cat), years, min_papers_together=2).select(
+        F.col("ego").alias("src"), F.col("alter_id").alias("dst")
     )
     return label_propagation(edges, rounds=5)
 

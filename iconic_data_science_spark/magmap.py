@@ -29,11 +29,16 @@ from .catalog import Catalog
 # mag_bibliometrics setup writes them once per run, see
 # perfbench/workloads.py; prepare_bucketed_tables below), paa/paper_years
 # read the bucketed layout — same rows, but hash-partitioned by paper on
-# disk, so the pairing self-join, the distinct, and the year join all
-# plan without an exchange. Queries are otherwise byte-identical.
+# disk, so the pairing self-join, the distinct and the aggregates on
+# paper plan without an exchange (the small year side is broadcast
+# either way). Both tables take one bucket count, sized from the paa
+# frame by bucket_count: the split count a plain scan of it would take.
+# A bridge under one file split (sf0.01) is one bucket, so each bucketed
+# stage runs one task instead of one per bucket; at scale the count
+# grows with the data and the joins stay co-located bucket to bucket.
+# Queries are otherwise byte-identical.
 BUCKETED_PAA = "ids_b_paa"
 BUCKETED_PY = "ids_b_py"
-BUCKETED_N = 32
 
 
 def _bucketed_table(cat: Catalog, table: str) -> DataFrame | None:
@@ -45,10 +50,36 @@ def _bucketed_table(cat: Catalog, table: str) -> DataFrame | None:
     return None
 
 
-def prepare_bucketed_tables(cat: Catalog, num_buckets: int = BUCKETED_N) -> None:
-    """Write the paa bridge and paper-year dim bucketed by paper (same
-    bucket count → co-located joins). One-time layout cost, exactly what
-    a production deployment would pay at ingest."""
+def split_count(
+    size: int, max_partition_bytes: int, open_cost: int, parallelism: int, max_buckets: int
+) -> int:
+    """The number of splits a plain file scan of ``size`` bytes takes
+    (Spark's ``FilePartition.maxSplitBytes``), clamped to [1,
+    ``max_buckets``]."""
+    split = min(max_partition_bytes, max(open_cost, size // parallelism))
+    return max(1, min(max_buckets, -(-size // split)))
+
+
+def bucket_count(df: DataFrame) -> int:
+    """Buckets for a bucketed copy of ``df``: as many as a plain scan of
+    it would split into, so the layout adds no task the data does not
+    ask for. ``size`` is Catalyst's estimate, so no job runs."""
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    return split_count(
+        int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()),
+        int(conf.filesMaxPartitionBytes()),
+        int(conf.filesOpenCostInBytes()),
+        spark.sparkContext.defaultParallelism,
+        int(conf.bucketingMaxBuckets()),
+    )
+
+
+def prepare_bucketed_tables(cat: Catalog) -> None:
+    """Write the paa bridge and paper-year dim bucketed by paper, both
+    with the bucket count of the paa frame (one count → co-located
+    joins). One-time layout cost, exactly what a production deployment
+    would pay at ingest."""
     import shutil
     from urllib.parse import urlparse
 
@@ -61,8 +92,10 @@ def prepare_bucketed_tables(cat: Catalog, num_buckets: int = BUCKETED_N) -> None
     for t in (BUCKETED_PAA, BUCKETED_PY):
         cat.spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    write_bucketed(paa_raw(cat), BUCKETED_PAA, ["paper"], num_buckets=num_buckets)
-    write_bucketed(paper_years_raw(cat), BUCKETED_PY, ["paper"], num_buckets=num_buckets)
+    paa_df = paa_raw(cat)
+    n = bucket_count(paa_df)
+    write_bucketed(paa_df, BUCKETED_PAA, ["paper"], num_buckets=n)
+    write_bucketed(paper_years_raw(cat), BUCKETED_PY, ["paper"], num_buckets=n)
 
 
 def paa_raw(cat: Catalog) -> DataFrame:

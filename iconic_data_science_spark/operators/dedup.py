@@ -591,24 +591,18 @@ def minhash_lsh_pairs(
     return _pair_jaccard(sh, pairs=cands).filter(F.col("jaccard") >= threshold)
 
 
-def _local_union_find(pairs: DataFrame) -> DataFrame:
-    """Driver-side connected components for small edge sets: collected
-    union-find with path compression, min-id canonical labels.
+def _union_find_rows(pdf):
+    """Driver-side connected components for small edge sets: union-find
+    with path compression over the collected (id1, id2) pairs, min-id
+    canonical labels → (doc_id, cluster_id).
 
     Near-dup edge sets are orders of magnitude smaller than the corpus
     (only docs that matched something appear); when the pair table fits
     on the driver — the broadcast-join decision — one collect beats a
     multi-round distributed fixpoint of fixed per-job overhead.
     """
-    rows = pairs.select("id1", "id2").collect()
-    return _union_find_rows(
-        rows, pairs.sparkSession, pairs.schema["id1"].dataType.simpleString()
-    )
+    import pandas as pd
 
-
-def _union_find_rows(rows, spark, id_type: str) -> DataFrame:
-    """Union-find over already-collected (id1, id2) rows (shared by the
-    direct entry point and dedup_clusters' single-collect probe)."""
     up: dict = {}
 
     def find(x):
@@ -620,14 +614,14 @@ def _union_find_rows(rows, spark, id_type: str) -> DataFrame:
         return r
 
     nodes = set()
-    for a, b in rows:
+    for a, b in zip(pdf["id1"].tolist(), pdf["id2"].tolist()):
         nodes.add(a)
         nodes.add(b)
         ra, rb = find(a), find(b)
         if ra != rb:
             up[max(ra, rb)] = min(ra, rb)
-    out = [(n, find(n)) for n in sorted(nodes)]
-    return spark.createDataFrame(out, f"doc_id {id_type}, cluster_id {id_type}")
+    doc_ids = sorted(nodes)
+    return pd.DataFrame({"doc_id": doc_ids, "cluster_id": [find(n) for n in doc_ids]})
 
 
 def dedup_clusters(
@@ -655,17 +649,19 @@ def dedup_clusters(
     budget and shuffle joins at web scale.
 
     The pair subtree — usually an expensive similarity join — is
-    ``localCheckpoint``ed ONCE up front: the tier gate's count, the
-    local tier's collect, and the distributed tier's both-directions
-    union all read the materialized table instead of re-evaluating the
+    materialized ONCE up front (``tiers.gather``): the tier gate's count,
+    the local tier's collect, and the distributed tier's both-directions
+    union all read the checkpointed table instead of re-evaluating the
     join (the old count()-then-collect shape paid the join twice; a
     limit(threshold+1) probe was tried and is worse — CollectLimit runs
     serial incremental partition rounds when the limit is never hit).
+    The local result comes back as one Arrow frame.
     """
-    p2 = pairs.select("id1", "id2").localCheckpoint()
-    if tiers.solve_locally(p2.count()):
-        return _union_find_rows(
-            p2.collect(), pairs.sparkSession, pairs.schema["id1"].dataType.simpleString()
+    pdf, p2 = tiers.gather(pairs.select("id1", "id2"))
+    if pdf is not None:
+        t = dict(p2.dtypes)["id1"]
+        return tiers.local_frame(
+            p2.sparkSession, _union_find_rows(pdf), f"doc_id {t}, cluster_id {t}"
         )
     edges = (
         p2.select(F.col("id1").alias("a"), F.col("id2").alias("b"))

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from . import tiers
 
 
-def _local_root_closure(m: DataFrame) -> DataFrame:
+def _local_root_closure(pdf):
     """Driver-side root resolution for dimension-sized hierarchies:
     path-compressed walk over a collected (child, anc) mapping.
 
@@ -39,9 +39,8 @@ def _local_root_closure(m: DataFrame) -> DataFrame:
     to be small is collected rather than shuffled. A fixpoint loop costs
     O(log depth) full Spark jobs of fixed overhead each; for a mapping
     that fits on the driver (MAG fos ≈ 6×10^5 rows, models.scala:16)
-    one collect + one parallelize beats any number of rounds.
+    one collect and one Arrow frame back beat any number of rounds.
     """
-    pdf = m.toPandas()
     parent = dict(zip(pdf["child"], pdf["anc"]))
     root: dict = {}
 
@@ -56,7 +55,7 @@ def _local_root_closure(m: DataFrame) -> DataFrame:
         return r
 
     pdf["anc"] = [find(c) for c in pdf["child"]]
-    return m.sparkSession.createDataFrame(pdf, schema=m.schema)
+    return pdf
 
 
 def hierarchy_roots(
@@ -75,9 +74,9 @@ def hierarchy_roots(
 
     Three-tier strategy by exact node count (from the materializing
     count, decided by ``operators/tiers.py``): within the local budget →
-    driver-side path-compressed closure (one collect + one parallelize,
-    no loop at all — see ``_local_root_closure``); else the distributed
-    pointer-jumping loop, where within the broadcast budget every round
+    driver-side path-compressed closure (one collect and one Arrow
+    frame back, no loop at all — see ``_local_root_closure``); else the
+    distributed pointer-jumping loop, where within the broadcast budget every round
     runs as a broadcast-hash join — no shuffle in the loop. Real
     hierarchies are dimension-sized (MAG fos ≈ 6×10^5 nodes,
     models.scala:16), so the broadcast path is the common case; a
@@ -95,11 +94,11 @@ def hierarchy_roots(
     # AND cuts lineage — the loop references m twice per round, so a
     # persist-only loop doubles the logical plan every round and dies on
     # deep hierarchies before any data is touched.
-    m = edges.select("child", F.col("parent").alias("anc")).localCheckpoint()
-    n_nodes = m.count()
-    if tiers.solve_locally(n_nodes):
-        return _local_root_closure(m).select("child", F.col("anc").alias("root"))
-    small = tiers.broadcastable(n_nodes)
+    pdf, m = tiers.gather(edges.select("child", F.col("parent").alias("anc")))
+    if pdf is not None:
+        out = tiers.local_frame(m.sparkSession, _local_root_closure(pdf), m.schema)
+        return out.select("child", F.col("anc").alias("root"))
+    small = tiers.broadcastable(m.count())
     for _ in range(max_iters):
         hop = m.select(F.col("child").alias("h_child"), F.col("anc").alias("h_anc"))
         if small:
@@ -222,18 +221,18 @@ def pagerank(
 PAGERANK_INT_SCALE = 1_000_000_000  # starting mass per node (10^9)
 
 
-def _pagerank_int_local(edges: DataFrame, damping_pct: int, iterations: int) -> DataFrame:
+def _pagerank_int_local(pdf, damping_pct: int, iterations: int):
     """Driver-side integer PageRank for edge tables under the local-solve
-    threshold (the bfs/kcore/kmeans_int tier discipline): one collect of
-    the materialized edge table, the IDENTICAL int64 recurrence in numpy
-    (floor divisions on non-negative longs — `//` == Spark `div` there;
-    `np.add.at` accumulates in exact int64, never float), one
-    createDataFrame back. A distributed round costs 1-2 fixed-overhead
-    jobs; 10 rounds of them on a sub-2M-edge graph is pure scheduling
-    latency (measured: web_pagerank 2.6 → 0.9 s at sf0.1)."""
+    threshold (the bfs/kcore/kmeans_int tier discipline): the collected
+    edge table in, the IDENTICAL int64 recurrence in numpy (floor
+    divisions on non-negative longs — `//` == Spark `div` there;
+    `np.add.at` accumulates in exact int64, never float), (node, rank_i)
+    out. A distributed round costs 1-2 fixed-overhead jobs; 10 rounds of
+    them on a sub-2M-edge graph is pure scheduling latency (measured:
+    web_pagerank 2.6 → 0.9 s at sf0.1)."""
     import numpy as np
+    import pandas as pd
 
-    pdf = edges.toPandas()
     src = pdf["src"].to_numpy(dtype=np.int64)
     dst = pdf["dst"].to_numpy(dtype=np.int64)
     node_ids = np.unique(np.concatenate([src, dst]))
@@ -249,13 +248,7 @@ def _pagerank_int_local(edges: DataFrame, damping_pct: int, iterations: int) -> 
         recv = np.zeros(n, dtype=np.int64)
         np.add.at(recv, di, c)
         r = base + (d * recv) // 100
-    import pandas as pd
-
-    t = dict(edges.dtypes)["src"]
-    out = edges.sparkSession.createDataFrame(
-        pd.DataFrame({"node": node_ids, "rank_i": r})
-    )
-    return out.select(F.col("node").cast(t), F.col("rank_i").cast("long"))
+    return pd.DataFrame({"node": node_ids, "rank_i": r})
 
 
 def pagerank_int(
@@ -298,9 +291,13 @@ def pagerank_int(
     budget solve on the driver via the exact int64 recurrence
     (:func:`_pagerank_int_local`).
     """
-    edges = edges.select("src", "dst").localCheckpoint()
-    if tiers.solve_locally(edges.count()):
-        return _pagerank_int_local(edges, damping_pct, iterations)
+    pdf, edges = tiers.gather(edges.select("src", "dst"))
+    if pdf is not None:
+        return tiers.local_frame(
+            edges.sparkSession,
+            _pagerank_int_local(pdf, damping_pct, iterations),
+            f"node {dict(edges.dtypes)['src']}, rank_i bigint",
+        )
     ed = edges.repartition("src")
     deg = ed.groupBy("src").agg(F.count("*").alias("deg"))
     edges_deg = ed.join(deg, "src").localCheckpoint()
@@ -365,17 +362,17 @@ def to_graphframe(vertices: DataFrame, edges: DataFrame):
     return GraphFrame(vertices, edges)
 
 
-def _local_bfs(edges: DataFrame, sources: DataFrame, max_depth: int) -> DataFrame:
+def _local_bfs(pdf, seeds, max_depth: int):
     """Driver-side BFS for edge tables under the local-solve threshold:
-    one collect of the (already materialized) edge table, adjacency-list
-    expansion, one parallelize back. A distributed round costs 2 fixed-
-    overhead jobs; a 50k-row personal-net graph never justifies 2×depth
-    of them."""
-    pdf = edges.toPandas()
+    the collected edge table in, adjacency-list expansion, (author,
+    depth) out. A distributed round costs 2 fixed-overhead jobs; a
+    50k-row personal-net graph never justifies 2×depth of them."""
+    import pandas as pd
+
     adj: dict = {}
-    for s, t in zip(pdf["src"], pdf["dst"]):
+    for s, t in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
         adj.setdefault(s, []).append(t)
-    depth = {r.author: 0 for r in sources.select("author").distinct().collect()}
+    depth = dict.fromkeys(seeds, 0)
     frontier = list(depth)
     for d in range(1, max_depth + 1):
         nxt = []
@@ -387,10 +384,7 @@ def _local_bfs(edges: DataFrame, sources: DataFrame, max_depth: int) -> DataFram
         if not nxt:
             break
         frontier = nxt
-    t = dict(edges.dtypes)["src"]
-    return edges.sparkSession.createDataFrame(
-        list(depth.items()), f"author {t}, depth bigint"
-    )
+    return pd.DataFrame({"author": list(depth), "depth": list(depth.values())})
 
 
 def bfs(
@@ -413,12 +407,17 @@ def bfs(
     table is never shuffled. A frontier that outgrows the threshold
     (dense-graph explosion) falls back to shuffle joins mid-loop.
     """
-    e = edges.select(F.col("src"), F.col("dst"))
     # three-tier, like hierarchy_roots/dedup_clusters: tiny edge tables
-    # solve on the driver (the gate's count() is one cheap job when the
-    # caller has materialized edges)
-    if tiers.solve_locally(e.count()):
-        return _local_bfs(e, sources, max_depth)
+    # solve on the driver; either tier reads the one materialization,
+    # which every round of the distributed loop references
+    pdf, e = tiers.gather(edges.select("src", "dst"))
+    if pdf is not None:
+        seeds = [r.author for r in sources.select("author").collect()]
+        return tiers.local_frame(
+            e.sparkSession,
+            _local_bfs(pdf, seeds, max_depth),
+            f"author {dict(e.dtypes)['src']}, depth bigint",
+        )
     visited = sources.select("author").distinct().withColumn("depth", F.lit(0).cast("long"))
     visited = visited.persist()
     n_visited = visited.count()
@@ -509,13 +508,14 @@ def bfs_sql(edges: DataFrame, sources: DataFrame, max_depth: int = 6) -> DataFra
     )
 
 
-def _local_kcore(edges: DataFrame, k: int) -> DataFrame:
+def _local_kcore(pdf, k: int):
     """Driver-side peeling for small edge tables: adjacency dict +
     worklist (each edge processed O(1) times — the textbook linear
     k-core algorithm)."""
-    pdf = edges.toPandas()
+    import pandas as pd
+
     adj: dict = {}
-    for a, b in zip(pdf["src"], pdf["dst"]):
+    for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
         adj.setdefault(a, set()).add(b)
     deg = {n: len(vs) for n, vs in adj.items()}
     queue = [n for n, d in deg.items() if d < k]
@@ -531,9 +531,8 @@ def _local_kcore(edges: DataFrame, k: int) -> DataFrame:
             deg[v] -= 1
             if deg[v] < k:
                 queue.append(v)
-    alive = [(n, deg[n]) for n in sorted(adj) if n not in dead]
-    t = dict(edges.dtypes)["src"]
-    return edges.sparkSession.createDataFrame(alive, f"author {t}, core_degree bigint")
+    alive = [n for n in sorted(adj) if n not in dead]
+    return pd.DataFrame({"author": alive, "core_degree": [deg[n] for n in alive]})
 
 
 def kcore(
@@ -551,10 +550,10 @@ def kcore(
     dense-subgraph extractor (collaboration-community mining over the
     coauthor graph; the reference's network notebooks stop at ego nets).
 
-    Three-tier strategy like :func:`bfs` / dedup_clusters: tiny edge
-    tables solve on the driver with the worklist algorithm (one collect,
-    no loop); at scale, a driver loop of distributed rounds — degree
-    groupBy, filter, then two semi-joins restricting the edge table to
+    Three-tier strategy like :func:`bfs` / dedup_clusters: the distinct
+    edge table materializes once, and within the local budget it solves
+    on the driver with the worklist algorithm (one collect, no loop); at
+    scale, a driver loop of distributed rounds — degree groupBy, filter, then two semi-joins restricting the edge table to
     surviving vertices (broadcast-hash while the survivor set is within
     the broadcast budget). Each round ``localCheckpoint``s the
     shrunk edge table: the loop re-references it three times per round,
@@ -562,10 +561,13 @@ def kcore(
     lesson). Rounds are bounded by the peel depth, typically ≪ V; the
     edge table only ever shrinks.
     """
-    e = edges.select("src", "dst").distinct()
-    if tiers.solve_locally(e.count()):
-        return _local_kcore(e, k)
-    e = e.localCheckpoint()
+    pdf, e = tiers.gather(edges.select("src", "dst").distinct())
+    if pdf is not None:
+        return tiers.local_frame(
+            e.sparkSession,
+            _local_kcore(pdf, k),
+            f"author {dict(e.dtypes)['src']}, core_degree bigint",
+        )
     n_prev = -1
     prev_keep = None
     for _ in range(max_iters):
@@ -596,16 +598,14 @@ def kcore(
     return deg.filter(F.col("core_degree") >= k).select(F.col("src").alias("author"), "core_degree")
 
 
-def _sssp_local(
-    edges: DataFrame, rounds: int, source: int | None
-) -> DataFrame:
+def _sssp_local(pdf, rounds: int, source: int | None):
     """Driver-side bounded Bellman-Ford for edge tables under the
     local-solve threshold: the identical relaxation (int64-exact) with
-    the identical convergence signature and early exit, one collect in,
-    one createDataFrame out."""
+    the identical convergence signature and early exit, the collected
+    edge table in, (author, dist) out."""
     import numpy as np
+    import pandas as pd
 
-    pdf = edges.toPandas()
     src = pdf["src"].to_numpy(dtype=np.int64)
     dst = pdf["dst"].to_numpy(dtype=np.int64)
     cost = pdf["cost"].to_numpy(dtype=np.int64)
@@ -630,14 +630,8 @@ def _sssp_local(
         if sig == prev_sig:
             break
         prev_sig = sig
-    import pandas as pd
-
     known = dist != INF
-    t = dict(edges.dtypes)["src"]
-    out = edges.sparkSession.createDataFrame(
-        pd.DataFrame({"author": node_ids[known], "dist": dist[known]})
-    )
-    return out.select(F.col("author").cast(t), F.col("dist").cast("long"))
+    return pd.DataFrame({"author": node_ids[known], "dist": dist[known]})
 
 
 def sssp(
@@ -663,14 +657,18 @@ def sssp(
     (count, sum) signature means a fixpoint — and extra rounds past the
     fixpoint are no-ops, keeping parity with the fixed-round oracle.
     """
-    e = edges.select("src", "dst", F.col("cost").cast("long").alias("cost")).localCheckpoint()
     # three-tier (optimization round 10): the per-round signature collect
     # + checkpoint are 2 fixed-overhead jobs; a sub-2M-edge graph solves
     # on the driver with the identical int64 relaxation (empty tables
     # keep the distributed path — its null-source degenerate semantics
     # are not worth replicating)
-    if tiers.solve_locally(e.count()):
-        return _sssp_local(e, rounds, source)
+    pdf, e = tiers.gather(edges.select("src", "dst", F.col("cost").cast("long").alias("cost")))
+    if pdf is not None:
+        return tiers.local_frame(
+            e.sparkSession,
+            _sssp_local(pdf, rounds, source),
+            f"author {dict(e.dtypes)['src']}, dist bigint",
+        )
     if source is None:
         dist = e.agg(F.min("src").alias("author")).withColumn("dist", F.lit(0).cast("long"))
     else:
@@ -705,16 +703,16 @@ def sssp(
     return dist
 
 
-def _label_propagation_local(edges: DataFrame, rounds: int) -> DataFrame:
+def _label_propagation_local(pdf, rounds: int):
     """Driver-side synchronous LPA for edge tables under the local-solve
     threshold: identical vote/argmax semantics — votes per edge row
     (multi-edges count), label domain fixed to the src-node set, edges
     whose dst carries no label never vote (the inner join's behavior),
     argmax = (max count, then smaller label), non-voted nodes keep their
-    label. All integer; one collect in, one createDataFrame out."""
+    label. All integer; the collected edge table in, (node, label) out."""
     import numpy as np
+    import pandas as pd
 
-    pdf = edges.toPandas()
     src = pdf["src"].to_numpy(dtype=np.int64)
     dst = pdf["dst"].to_numpy(dtype=np.int64)
     node_ids = np.unique(src)
@@ -744,13 +742,7 @@ def _label_propagation_local(edges: DataFrame, rounds: int) -> DataFrame:
         nl = lab.copy()
         nl[rs[first]] = rl[first]
         lab = nl
-    import pandas as pd
-
-    t = dict(edges.dtypes)["src"]
-    out = edges.sparkSession.createDataFrame(
-        pd.DataFrame({"node": node_ids, "label": lab})
-    )
-    return out.select(F.col("node").cast(t), F.col("label").cast(t))
+    return pd.DataFrame({"node": node_ids, "label": lab})
 
 
 def label_propagation(
@@ -787,9 +779,12 @@ def label_propagation(
     # three-tier (optimization round 10): K rounds × 2 fixed-overhead
     # distributed jobs on a sub-2M-edge table is pure scheduling latency
     # — solve on the driver with the identical integer vote/argmax
-    edges = edges.select("src", "dst").localCheckpoint()
-    if tiers.solve_locally(edges.count()):
-        return _label_propagation_local(edges, rounds)
+    pdf, edges = tiers.gather(edges.select("src", "dst"))
+    if pdf is not None:
+        t = dict(edges.dtypes)["src"]
+        return tiers.local_frame(
+            edges.sparkSession, _label_propagation_local(pdf, rounds), f"node {t}, label {t}"
+        )
     edges = edges.repartition("dst").localCheckpoint()
     nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
     # broadcast the node-grain label frame into the per-round joins
@@ -821,17 +816,17 @@ def label_propagation(
 HITS_INT_SCALE = 1_000_000  # post-normalization mass per round (10^6)
 
 
-def _hits_int_local(edges: DataFrame, iterations: int, scale: int) -> DataFrame:
+def _hits_int_local(pdf, iterations: int, scale: int):
     """Driver-side integer HITS for (already distinct) edge tables under
     the local-solve threshold: the identical normalize/floor recurrence
     in exact int64 (the same model the hypothesis mirror in
-    test_properties implements), one collect in, one createDataFrame
-    out. Nodes without in-edges (resp. out-edges) get authority (resp.
-    hub) 0 — numerically identical to the distributed left-join
-    coalesce because (0 · scale) div tot == 0."""
+    test_properties implements), the collected edge table in, (node,
+    hub_i, auth_i) out. Nodes without in-edges (resp. out-edges) get
+    authority (resp. hub) 0 — numerically identical to the distributed
+    left-join coalesce because (0 · scale) div tot == 0."""
     import numpy as np
+    import pandas as pd
 
-    pdf = edges.toPandas()
     src = pdf["src"].to_numpy(dtype=np.int64)
     dst = pdf["dst"].to_numpy(dtype=np.int64)
     node_ids = np.unique(np.concatenate([src, dst]))
@@ -850,17 +845,7 @@ def _hits_int_local(edges: DataFrame, iterations: int, scale: int) -> DataFrame:
         np.add.at(h_raw, si, a[di])
         tot = max(int(h_raw.sum()), 1)
         h = (h_raw * s) // tot
-    import pandas as pd
-
-    t = dict(edges.dtypes)["src"]
-    out = edges.sparkSession.createDataFrame(
-        pd.DataFrame({"node": node_ids, "hub_i": h, "auth_i": a})
-    )
-    return out.select(
-        F.col("node").cast(t),
-        F.col("hub_i").cast("long"),
-        F.col("auth_i").cast("long"),
-    )
+    return pd.DataFrame({"node": node_ids, "hub_i": h, "auth_i": a})
 
 
 def hits_int(
@@ -901,9 +886,13 @@ def hits_int(
     # three-tier (optimization round 10): the 5-round loop runs 3 eager
     # checkpoint jobs per round; a sub-2M-edge graph solves on the driver
     # with the identical int64 recurrence (bench web_hits 3.4 → 0.9 s)
-    edges = edges.select("src", "dst").distinct().localCheckpoint()
-    if tiers.solve_locally(edges.count()):
-        return _hits_int_local(edges, iterations, scale)
+    pdf, edges = tiers.gather(edges.select("src", "dst").distinct())
+    if pdf is not None:
+        return tiers.local_frame(
+            edges.sparkSession,
+            _hits_int_local(pdf, iterations, scale),
+            f"node {dict(edges.dtypes)['src']}, hub_i bigint, auth_i bigint",
+        )
     edges = edges.repartition("src").localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("node"))

@@ -82,7 +82,7 @@ def write_bucketed(
     df: DataFrame,
     table_name: str,
     bucket_cols: Sequence[str],
-    num_buckets: int = 32,
+    num_buckets: int,
     sort_cols: Sequence[str] | None = None,
     mode: str = "overwrite",
 ) -> None:

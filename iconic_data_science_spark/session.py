@@ -76,9 +76,7 @@ def get_spark(
 # stays scale-adaptive: once totalBytes/defaultParallelism exceeds it (every
 # large shuffle), the conf is a no-op.
 AQE_MIN_PARTITION_SIZE_DEFAULT = "1m"  # Spark's own default, restated
-DENSE_MIN_PARTITION_SIZE = os.environ.get(
-    "SPARK_GRAFT_DENSE_MIN_PARTITION_SIZE", "4k"
-)
+DENSE_MIN_PARTITION_SIZE = "4k"
 
 
 def mark_compute_dense(spark: SparkSession) -> SparkSession:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -28,3 +29,38 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def oracle_sf_dir():
     return SF_ORACLE_DIR
+
+
+@pytest.fixture
+def arrow_strict(spark):
+    """Arrow transfers (``toPandas``, ``createDataFrame`` from pandas)
+    raise instead of silently falling back to the pickled path, so a
+    driver-local tier that drops off Arrow fails its test."""
+    key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
+_JOB_GROUPS = itertools.count()  # job-group names must be unique per session
+
+
+@pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(fn)`` runs ``fn`` and returns how many Spark jobs
+    it launched (counted by job group through the status tracker, once
+    the listener bus has delivered every job event)."""
+    sc = spark.sparkContext
+
+    def run(fn) -> int:
+        group = f"jobs-launched-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -4,6 +4,8 @@ repeated joins on the same key (SURVEY §4 partitioned-layout row)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from iconic_data_science_spark.catalog import Catalog
@@ -70,6 +72,7 @@ def test_ngram_jaccard_hashed_equals_string_shingles(spark):
     assert key(ngram_jaccard_pairs(docs, threshold=0.3)) == key(string_ref)
 
 
+@pytest.mark.usefixtures("arrow_strict")
 def test_dedup_clusters_local_equals_distributed(spark, monkeypatch):
     """Union-find fast path vs min-label fixpoint (tiers.LOCAL_ROWS=0
     forces the distributed loop): identical labels, including on a
@@ -109,6 +112,92 @@ def test_bucketed_paa_layout_same_results_fewer_shuffles(spark, sf_dir, monkeypa
         assert bucketed == plain
         b_shuffles = inspect.shuffle_count(b_df)
         assert b_shuffles < plain_shuffles, (b_shuffles, plain_shuffles)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {magmap.BUCKETED_PAA}")
+        spark.sql(f"DROP TABLE IF EXISTS {magmap.BUCKETED_PY}")
+
+
+_MB = 1 << 20
+
+
+def test_bucket_rule_is_the_file_split_count():
+    """magmap.split_count is Spark's FilePartition.maxSplitBytes rule:
+    split = min(maxPartitionBytes, max(openCost, size / parallelism)),
+    n = ceil(size / split), clamped to [1, maxBuckets]."""
+    from iconic_data_science_spark.magmap import split_count
+
+    def rule(size, par, max_pb=128 * _MB, open_cost=4 * _MB, max_buckets=100_000):
+        split = min(max_pb, max(open_cost, size // par))
+        return max(1, min(max_buckets, -(-size // split)))
+
+    for size in (0, 1, 215_682, 4 * _MB, 10 * _MB, 1 << 30, 77 * (1 << 30) + 5):
+        for par in (1, 4, 64, 1000):
+            assert split_count(size, 128 * _MB, 4 * _MB, par, 100_000) == rule(size, par)
+    # Catalyst's size estimate of the sf0.01 paa frame
+    assert split_count(215_682, 128 * _MB, 4 * _MB, 4, 100_000) == 1
+    assert split_count(10 * _MB, 128 * _MB, 4 * _MB, 4, 100_000) == 3  # openCost floor
+    assert split_count(1 << 30, 128 * _MB, 4 * _MB, 64, 100_000) == 64  # size / cores
+    assert split_count(1 << 30, 128 * _MB, 4 * _MB, 4, 100_000) == 8  # maxPartitionBytes cap
+    assert split_count(100 << 40, 128 * _MB, 4 * _MB, 4, 100_000) == 100_000  # maxBuckets cap
+
+
+# 4 KB splits: the test-scale tables then span several splits
+_SMALL_SPLITS = {
+    "spark.sql.files.maxPartitionBytes": "4096",
+    "spark.sql.files.openCostInBytes": "1024",
+}
+
+
+@contextlib.contextmanager
+def _conf(spark, settings):
+    old = {k: spark.conf.get(k) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_bucket_count_reads_the_session_and_runs_no_job(spark, sf_dir, jobs_launched):
+    """At the test scale the paa bridge is under one split → 1 bucket,
+    estimated from Catalyst statistics without a job; the session's
+    split confs and maxBuckets feed the rule."""
+    from iconic_data_science_spark import magmap
+
+    paa = magmap.paa_raw(Catalog(spark, sf_dir))
+    counts = []
+    assert jobs_launched(lambda: counts.append(magmap.bucket_count(paa))) == 0
+    assert counts == [1]
+
+    size = int(paa._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    parallelism = spark.sparkContext.defaultParallelism
+    with _conf(spark, _SMALL_SPLITS):
+        n = magmap.bucket_count(paa)
+        assert n == magmap.split_count(size, 4096, 1024, parallelism, 100_000) > 1
+        with _conf(spark, {"spark.sql.sources.bucketing.maxBuckets": "2"}):
+            assert magmap.bucket_count(paa) == 2
+
+
+def test_bucketed_tables_share_the_paa_bucket_count(spark, sf_dir):
+    """Both bucketed tables take the count derived from the paa frame
+    (sized small here so the count is > 1 and the paper-year frame,
+    sized on its own, would get fewer)."""
+    from iconic_data_science_spark import magmap
+
+    def num_buckets(table):
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+        return [int(r.data_type) for r in rows if r.col_name == "Num Buckets"]
+
+    cat = Catalog(spark, sf_dir)
+    try:
+        with _conf(spark, _SMALL_SPLITS):
+            want = magmap.bucket_count(magmap.paa_raw(cat))
+            assert want > magmap.bucket_count(magmap.paper_years_raw(cat))
+            magmap.prepare_bucketed_tables(cat)
+        assert num_buckets(magmap.BUCKETED_PAA) == [want]
+        assert num_buckets(magmap.BUCKETED_PY) == [want]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {magmap.BUCKETED_PAA}")
         spark.sql(f"DROP TABLE IF EXISTS {magmap.BUCKETED_PY}")

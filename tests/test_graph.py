@@ -2,12 +2,13 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from iconic_data_science_spark import fixtures
 from iconic_data_science_spark.operators.coauthor import coauthor_edges
-from iconic_data_science_spark.operators import tiers
+from iconic_data_science_spark.operators import dedup, graph, tiers
 from iconic_data_science_spark.operators.graph import bfs, hierarchy_roots
 from iconic_data_science_spark.sources import gexf
 
@@ -40,6 +41,7 @@ def test_hierarchy_roots_deep_chain(spark):
     assert all(roots[i] == 0 for i in range(1, n))
 
 
+@pytest.mark.usefixtures("arrow_strict")
 def test_hierarchy_roots_local_equals_distributed(spark, monkeypatch):
     """The driver-side closure fast path and the pointer-jumping loop
     must produce identical mappings (tiers.LOCAL_ROWS=0 forces the
@@ -201,6 +203,7 @@ def test_bfs_sql_equals_operator(spark):
     assert loop == sql
 
 
+@pytest.mark.usefixtures("arrow_strict")
 def test_bfs_local_equals_distributed(spark, monkeypatch):
     edges = (
         coauthor_edges(fixtures.paa_df(spark), fixtures.paper_years_df(spark))
@@ -213,6 +216,7 @@ def test_bfs_local_equals_distributed(spark, monkeypatch):
     assert local == dist
 
 
+@pytest.mark.usefixtures("arrow_strict")
 def test_kcore_fixture_and_tier_equivalence(spark, monkeypatch):
     from iconic_data_science_spark.operators.graph import kcore
 
@@ -242,6 +246,7 @@ def test_kcore_fixture_and_tier_equivalence(spark, monkeypatch):
     assert kcore(cedges, k=2).count() == 0
 
 
+@pytest.mark.usefixtures("arrow_strict")
 def test_kcore_on_testdata_tiers_agree(spark, sf_dir, monkeypatch):
     import __spark_entry__ as entrymod
     from iconic_data_science_spark.operators.graph import kcore
@@ -301,6 +306,7 @@ def test_author_disambiguation_block_cap(spark):
     assert candidate_author_pairs(authors, max_block_size=None).count() == 50 * 49 // 2 + 1
 
 
+@pytest.mark.usefixtures("arrow_strict")
 def test_kcore_empty_and_single_edge(spark, monkeypatch):
     from iconic_data_science_spark.operators.graph import kcore
 
@@ -494,6 +500,7 @@ def test_hits_int_matches_python_model(spark, edges):
     assert got == want
 
 
+@pytest.mark.usefixtures("arrow_strict")
 def test_local_tier_matches_distributed_loops(spark, monkeypatch):
     """The r10 driver-local tiers (pagerank_int / hits_int /
     label_propagation / sssp) must be row-identical to the distributed
@@ -573,3 +580,59 @@ def test_iterative_loops_empty_edges_route_distributed(spark, monkeypatch):
     assert dedup.dedup_clusters(empty_pairs).collect() == []
     no_docs = spark.createDataFrame([], "doc_id bigint, text string")
     assert bpe.bpe_train(no_docs, num_merges=3) == []
+
+
+_EDGES = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 1), (4, 3), (5, 4), (2, 6), (7, 8), (3, 4)]
+_SYMMETRIC = sorted({(a, b) for a, b in _EDGES} | {(b, a) for a, b in _EDGES})
+_EDGE_SCHEMA = "src long, dst long"
+
+
+def _bfs_from_1(d):
+    # the seed frame is built through Arrow, so collecting it runs no
+    # job and the budget below stays the edge table's alone
+    seeds = d.sparkSession.createDataFrame(pd.DataFrame({"author": [1]}))
+    return graph.bfs(d, seeds, max_depth=3)
+
+
+# name → (local solve, input rows, input schema, distinct before gather?)
+_LOCAL_TIERS = {
+    "hierarchy_roots": (
+        lambda d: graph.hierarchy_roots(d, children_unique=True),
+        [(100, 10), (10, 1), (200, 20), (20, 2), (30, 3)],
+        "child long, parent long",
+        False,
+    ),
+    "pagerank_int": (lambda d: graph.pagerank_int(d, iterations=3), _EDGES, _EDGE_SCHEMA, False),
+    "bfs": (_bfs_from_1, _EDGES, _EDGE_SCHEMA, False),
+    "kcore": (lambda d: graph.kcore(d, k=2), _SYMMETRIC, _EDGE_SCHEMA, True),
+    "sssp": (
+        lambda d: graph.sssp(d, rounds=3),
+        [(s, t, (s + t) % 3 + 1) for s, t in _EDGES],
+        "src long, dst long, cost long",
+        False,
+    ),
+    "label_propagation": (lambda d: graph.label_propagation(d, rounds=3), _EDGES, _EDGE_SCHEMA, False),
+    "hits_int": (lambda d: graph.hits_int(d, iterations=2), _EDGES, _EDGE_SCHEMA, True),
+    "dedup_clusters": (dedup.dedup_clusters, _EDGES, "id1 long, id2 long", False),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_LOCAL_TIERS))
+def test_local_tier_materializes_input_once(spark, jobs_launched, name):
+    """A driver-local solve on a checkpointed input, result collected
+    included, launches no more jobs than checkpointing and collecting
+    the frame it gathers once (the row count rides the checkpoint's
+    job): a second evaluation of the input (kcore's old
+    count-then-toPandas on an unmaterialized distinct), a separate
+    count, or a result built from a pickled Python RDD (whose collect
+    is a job of its own) each break the bound."""
+    solve, rows, schema, distinct = _LOCAL_TIERS[name]
+    inp = spark.createDataFrame(rows, schema).localCheckpoint()
+    gathered = inp.distinct() if distinct else inp
+
+    def once():
+        gathered.localCheckpoint().toPandas()
+
+    budget = jobs_launched(once)
+    used = jobs_launched(lambda: solve(inp).collect())
+    assert used <= budget, (name, used, budget)
