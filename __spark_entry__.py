@@ -336,6 +336,9 @@ def q_g5_hierarchy_roots_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_g4_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G4: 3-hop BFS from author 0 over the thresholded 1995 coauthor
     graph (StaticNet BFS rewrite; oracle = recursive CTE)."""
+    import pandas as pd
+
+    from iconic_data_science_spark.operators import tiers
     from iconic_data_science_spark.operators.graph import bfs
 
     cat = _cat(spark, sf_dir)
@@ -345,7 +348,8 @@ def q_g4_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = coauthor_edges(magmap.paa(cat), years, min_papers_together=2).select(
         F.col("ego").alias("src"), F.col("alter_id").alias("dst")
     )
-    sources = spark.range(1).select(F.lit(0).cast("long").alias("author"))
+    # built through Arrow, so the local tier collects the seed without a job
+    sources = tiers.local_frame(spark, pd.DataFrame({"author": [0]}), "author long")
     return bfs(edges, sources, max_depth=3)
 
 
@@ -363,7 +367,7 @@ def q_g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core of the thresholded 1995 coauthor graph (iterative peeling,
-    three-tier strategy — operators/graph.kcore). Oracled since round 2:
+    three-tier strategy — operators/graph.kcore). Oracle:
     the peel is a round-stamped recursive CTE in DuckDB (edges re-emitted
     with r+1 while both endpoints keep degree ≥ k; the survivor set at
     the round cap is the k-core — integer output, exact hash). Round cap
@@ -383,9 +387,9 @@ def q_g_pagerank_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-lattice PageRank over the citation DAG — the power
     iteration defined AS integer arithmetic (floor divisions, fixed 10
     rounds) so ranks hash identically across engines. The float variant
-    (graph.pagerank, 0.85 damping) is rows-only by nature and was
-    RETIRED from the registry in round 7 (r6 verdict item 6) so every
-    registry entry is hash-oracled or golden-pinned; the float operator
+    (graph.pagerank, 0.85 damping) is rows-only by nature and is not
+    registered, so every registry entry is hash-oracled or
+    golden-pinned; the float operator
     itself remains, verified against analytic fixtures and
     ranking-agreement with this twin in tests/test_graph.py."""
     from iconic_data_science_spark.operators.graph import pagerank_int
@@ -478,7 +482,7 @@ def q_g8_gexf(spark: SparkSession, sf_dir: str) -> DataFrame:
     years = magmap.paper_years(cat).filter(F.col("year") == 1995)
     # materialize the pairing join once — the edge fragments and the
     # distinct node set are two consumers of the same expensive
-    # self-join subtree (the triangle_count r10 lesson)
+    # self-join subtree (as in graph.triangle_count)
     edges = coauthor_edges(magmap.paa(cat), years, min_papers_together=2).localCheckpoint()
     und = edges.filter(F.col("ego") < F.col("alter_id"))
     nodes = edges.select(F.col("ego").alias("id")).distinct()
@@ -599,7 +603,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = _cat(spark, sf_dir)
     # no entry-level localCheckpoint: dedup_clusters materializes the
-    # pair subtree itself (one eager job, not two — r11)
+    # pair subtree itself (one eager job, not two)
     pairs = ngram_jaccard_pairs(cat.documents, n=3, threshold=0.5).select("id1", "id2")
     return dedup_clusters(pairs)
 
@@ -730,7 +734,7 @@ def q_text_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iconic_data_science_spark.operators.text import leakage_safe_split
 
     cat = _cat(spark, sf_dir)
-    # dedup_clusters materializes the pair subtree itself (r11)
+    # dedup_clusters materializes the pair subtree itself
     pairs = ngram_jaccard_pairs(cat.documents, n=3, threshold=0.5).select("id1", "id2")
     return leakage_safe_split(cat.documents, dedup_clusters(pairs))
 
@@ -794,7 +798,7 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter decontamination (round 4) — the fixed-memory twin of
+    """Bloom-filter decontamination — the fixed-memory twin of
     decontaminate_ngram: the benchmark's 5-gram set compresses into a
     ~130 KiB broadcast bitset (2^20 bits, 4 seeded-LCG hashes, 63-bit
     word packing) and the train corpus probes it map-side. No false
@@ -928,7 +932,7 @@ def q_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning runs LAST over only the surviving canonical docs. The
     ordering is the point — on an exact-replica 10× corpus the composed
     exact→fuzzy pipeline returns to base-corpus-shaped cost (104.8 s →
-    3.6 s, SCALE.md round-4 probe) because byte-identical copies never
+    3.6 s, SCALE.md's exact-replica probe) because byte-identical copies never
     reach the shingle stage; near-dup-only corpora keep the documented
     banding/df-cap knobs. Keep rule: a survivor drops iff it is the
     HIGHER id of any verified near-dup pair (first occurrence wins,
@@ -938,7 +942,6 @@ def q_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v2 feeds TWO consumers (the survivor semi-join under the fuzzy
     # stage's eager shingle checkpoint, and the final anti-join) —
     # materialize it once instead of running the whole gate chain twice
-    # (the multi-consumer rule; r11, guide §1.2)
     v2 = q_curation_pipeline_v2(spark, sf_dir).localCheckpoint()
     cat = _cat(spark, sf_dir)
     survivors = cat.documents.join(v2.select("doc_id"), "doc_id", "left_semi")
@@ -1348,8 +1351,8 @@ def q_asof_signup_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     most recent prior-or-same signup value (DuckDB native ASOF JOIN is
     the oracle). Both sides are subsets of the SAME event log, so this
     uses the fused same-source form (one scan, one shuffle — 0.39 s vs
-    0.82 s for the general union+window asof_join at sf0.1, round-5
-    measurement); the general two-DataFrame operator stays available
+    0.82 s for the general union+window asof_join at sf0.1); the general
+    two-DataFrame operator stays available
     and equivalence is pinned in tests/test_asof.py."""
     from iconic_data_science_spark.operators.asof import asof_join_same_source
 
@@ -3931,8 +3934,7 @@ def q_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate"
     )
     base = cat.lineitem.join(fo, F.col("l_orderkey") == F.col("o_orderkey"))
-    # r10 restructure (guide §2.1/§2.4, oracle-proven equivalent): the
-    # EXISTS/NOT EXISTS pair used to be a semi + anti join of THREE
+    # The EXISTS/NOT EXISTS pair used to be a semi + anti join of THREE
     # distinct-pair aggregations of base — the lineitem⋈orders subtree
     # triplicated in the plan, 6 exchanges + 2 sort-merge joins.  At
     # pair grain the two predicates are order-level counts:
@@ -3943,7 +3945,8 @@ def q_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # l_orderkey satisfies the pair aggregate AND the window (hash(ok)
     # clusters (ok, sk)), so the whole middle runs on a single exchange;
     # per-order supplier fan-out is bounded (an order has few lineitems),
-    # so the coarser key adds no skew.
+    # so the coarser key adds no skew. The oracle keeps the EXISTS form
+    # and hash-matches this one.
     late = F.when(
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 365 DAYS"),
         F.lit(1),
@@ -4337,12 +4340,11 @@ def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE training (3-tier since round 3: the word-frequency table
-    collects once under a vocab threshold and the classical incremental
-    trainer runs driver-locally — ONE Spark job; the distributed
-    per-round weighted-pair-count loop is the exact over-threshold
-    fallback): the learned rank-ordered merge table. Hash-oracled
-    since round 8 (closing the r7 rows-only debt): num_merges is a
+    """BPE training (3-tier: the word-frequency table collects once
+    under a vocab threshold and the classical incremental trainer runs
+    driver-locally — ONE Spark job; the distributed per-round
+    weighted-pair-count loop is the exact over-threshold fallback): the
+    learned rank-ordered merge table. Hash-oracled: num_merges is a
     fixed literal, so the oracle UNROLLS the ten training rounds as
     chained CTEs — each round's argmax pair is a 1-row CTE and the
     next round's vocabulary applies it with a literal (non-regex)
@@ -4539,7 +4541,7 @@ ORACLES["text_bpe_encode"] = _bpe_oracle_sql(_BPE_MERGES)
 
 
 def _bpe_train_oracle_sql(num_merges: int = 10) -> str:
-    """Unrolled BPE TRAINING oracle (r7 verdict item 5). Round k:
+    """Unrolled BPE TRAINING oracle. Round k:
     weighted pair counts over vocabulary w{k}, argmax with the
     (count desc, left asc, right asc) tie-break as a 1-row CTE m{k},
     then w{k+1} applies the merge via plain (non-regex) replace whose
@@ -4807,7 +4809,7 @@ ORACLES["pack_manifest"] = f"""
 
 
 # ---------------------------------------------------------------------------
-# Round-2 continuation (session 3): lexical retrieval, semantic dedup
+# Lexical retrieval, semantic dedup
 # pruning, deterministic corpus shuffle, token-budget selection.
 
 _BM25_TERMS = ["customer", "merge", "spark", "window"]
@@ -5113,7 +5115,7 @@ def q_ev_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ approximate top-k (round 4) — the FAISS IVFADC
+    """IVF-PQ approximate top-k — the FAISS IVFADC
     composition: IVF prunes each query to its 2 nearest cells (of 8),
     PQ ADC scores only those candidates through their 8 BIGINT codes.
     Centroids and codebooks are the deterministic lowest-id seeds, ADC
@@ -5130,7 +5132,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ev_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise distinct-user overlap between event types, estimated
-    ENTIRELY from the per-type KMV sketches (round 4): union minima by
+    ENTIRELY from the per-type KMV sketches: union minima by
     the KMV merge rule, intersection by inclusion–exclusion, clamped
     at 0. After the one bounded-shuffle sketch build, every pairwise
     overlap touches ≤ k rows per type — the data is never rescanned,
@@ -5262,7 +5264,7 @@ from iconic_data_science_spark.operators.text import cdc_oracle_sql as _cdc_orac
 
 ORACLES["text_cdc_chunks"] = _cdc_oracle_sql()
 
-# mm oracles (round 4): synth_media / synth_media_mixed payloads are pure
+# mm oracles: synth_media / synth_media_mixed payloads are pure
 # arithmetic on media_id, so DuckDB regenerates the EXPECTED values from
 # range(0,256) while Spark measures the REAL bytes — encoder/parser drift
 # breaks the hash. byte histogram: payload = reps repeats of the 16-byte
@@ -5343,7 +5345,7 @@ ORACLES["mm_probe"] = """
     FROM m
 """
 
-# leakage-safe split (round 5): the dedup_clusters recursive-CTE replay
+# leakage-safe split: the dedup_clusters recursive-CTE replay
 # composed with the md5 bucket fold, keyed on the cluster representative.
 ORACLES["text_leakage_safe_split"] = f"""
     WITH cl AS ({ORACLES["dedup_clusters"]}),
@@ -5367,7 +5369,7 @@ ORACLES["text_leakage_safe_split"] = f"""
     FROM bk
 """
 
-# frame sampling (round 5): synth_media_real's AVI payloads are lossless,
+# frame sampling: synth_media_real's AVI payloads are lossless,
 # so every sampled frame's statistics replay as integer arithmetic:
 # tick k exists while 5k < 4·nf (0.25 s ticks at 5 fps), the sampled
 # frame is min(5k//4, nf-1) (t·fps is exact binary: 0.25·5·k = 1.25k),
@@ -5399,7 +5401,7 @@ ORACLES["mm_frame_sample"] = """
     FROM stats
 """
 
-# pHash near-dup pairs (round 5): the corpus is built so ground truth is
+# pHash near-dup pairs: the corpus is built so ground truth is
 # id arithmetic — media_id = group*4 + variant, and the measured hamming
 # margin (within ≤ 4, cross ≥ 22, pinned in tests) means the pipeline
 # must return EXACTLY the within-group pairs or the hash breaks.
@@ -5409,7 +5411,7 @@ ORACLES["mm_phash_neardup"] = """
     WHERE a.range < b.range AND a.range // 4 = b.range // 4
 """
 
-# lossless decode stats (round 5): BMP/PNG/WAV/AVI round-trip bit-exact,
+# lossless decode stats: BMP/PNG/WAV/AVI round-trip bit-exact,
 # so every decode statistic replays as integer arithmetic over range()
 # — the generator pattern value-for-value (see _real_media_row).
 ORACLES["mm_lossless_decode_stats"] = """
@@ -5850,7 +5852,7 @@ ORACLES["ann_pq_topk"] = f"""
     FROM r WHERE rnk <= 5
 """
 
-# IVF-PQ (round 4): the PQ CTE chain with the ADC sum restricted to the
+# IVF-PQ: the PQ CTE chain with the ADC sum restricted to the
 # IVF candidate set — corpus in its 1 nearest cell, queries probing
 # their 2 nearest (lowest-id pseudo-centroids, the ann_ivf discipline).
 ORACLES["ann_ivfpq_topk"] = f"""
@@ -7120,7 +7122,7 @@ ORACLES["mm_audio_frames"] = """
 
 
 # ---------------------------------------------------------------------------
-# round 6: distributed classifier TRAINING (VERDICT r5 item 2)
+# distributed classifier TRAINING
 
 # The heuristic label rule both trainer queries bootstrap from — the
 # standard curation move (DCLM/FineWeb-Edu train their quality models on
@@ -7152,8 +7154,8 @@ _TRAIN_LABEL_SQL = (
 def q_text_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTRIBUTED pocket-perceptron training of the quality gate —
     the half of the DCLM/FineWeb-Edu recipe `text_classifier_gate`'s
-    stand-in weights left open (r5 verdict item 2; the reference trains
-    nothing, magNets.scala:1-80). Full-batch all-integer recurrence
+    stand-in weights left open (the reference trains nothing,
+    magNets.scala:1-80). Full-batch all-integer recurrence
     (harmonic `div` steps + pocket argmin over epoch error counts), so
     the learned 257 weights hash-match DuckDB's unrolled-CTE replay of
     the same 12 epochs. Labels come from a keyword seed rule; the
@@ -7173,7 +7175,7 @@ def q_text_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_curation_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end TRAINED curation pipeline (v4 with the stand-in
-    model replaced by verdict item 2's real trainer): exact dedup →
+    model replaced by the real trainer, text_classifier_train): exact dedup →
     train the gate ON THE SURVIVORS against the keyword seed rule →
     score everything with the learned weights as a plan literal (the
     ≤257-row weight collect is the bounded driver tier — train small,
@@ -7211,9 +7213,9 @@ def q_curation_pipeline_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_ivf_kmeans_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means on the INTEGER lattice — the hash-oracled twin
-    of the float IVF-over-learned-centroids pipeline (r5 verdict item
-    3, the same float→int move as g_pagerank→g_pagerank_int; the float
-    registry entry was RETIRED in round 7 per r6 verdict item 6 — the
+    of the float IVF-over-learned-centroids pipeline (the same
+    float→int move as g_pagerank→g_pagerank_int; the float form is not
+    registered, since it could only be checked rows-only — the
     operators kmeans_centroids/ivf_topk remain, recall-tested): quantize
     components to round(x·1000) BIGINTs, then 3 exact Lloyd rounds
     (argmin Σ(q−c)², trunc-div centroid means, empty cells carry) and
@@ -7230,7 +7232,7 @@ def q_ann_ivf_kmeans_int(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_g3_personal_net_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship's SALTED pair build (r5 verdict item 5): the
+    """The flagship's SALTED pair build: the
     mega-ego O(k²) explosion spreads over buckets² reducer keys
     instead of one (personal_net.personal_net_salted). Row-identical
     to g3_personal_net for any bucket count — it shares the flagship's
@@ -7392,9 +7394,8 @@ def q_dedup_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the index once: the upsert reads it THREE times (the
     # candidate join, the id anti-join, the final union), and the
     # production shape IS a persisted table — the lazy form re-ran the
-    # even-half tokenize pipeline per consumer (r11, multi-consumer
-    # rule; the streaming bench's doc_dedup side already pins the same
-    # localCheckpoint shape)
+    # even-half tokenize pipeline per consumer (the streaming
+    # doc_dedup side pins the same localCheckpoint shape)
     index = minhash_index_build(docs.filter(F.col("doc_id") % 2 == 0)).localCheckpoint()
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     return minhash_index_upsert(index, batch).select(
@@ -7403,7 +7404,7 @@ def q_dedup_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_curation_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-6 capstone composition, in the order a web pipeline
+    """The capstone composition, in the order a web pipeline
     actually runs: NORMALIZE (byte noise must not defeat the hash) →
     exact dedup ON THE NORMALIZED text (mirror pages collapse; all-
     boilerplate pages normalize to '' and collapse to one canonical) →
@@ -8610,7 +8611,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iconic_data_science_spark.operators.text import quality_score_milli
 
     cat = _cat(spark, sf_dir)
-    # dedup_clusters materializes the pair subtree itself (r11)
+    # dedup_clusters materializes the pair subtree itself
     pairs = ngram_jaccard_pairs(cat.documents, n=3, threshold=0.5).select("id1", "id2")
     clusters = dedup_clusters(pairs)
     scored = quality_score_milli(cat.documents)
@@ -8653,7 +8654,7 @@ ORACLES["dedup_keep_best"] = f"""
 
 
 def q_curation_pipeline_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-7 composition: C4 line-level cleaning at ingest
+    """C4 line-level cleaning at ingest
     (pages synthesized by _c4_pages; dropped pages and struck lines
     gone) → DSIR importance selection over the CLEANED corpus (hashed-
     bigram weights learned on the survivors toward the lang='en'
@@ -8663,8 +8664,8 @@ def q_curation_pipeline_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the raw corpus would mis-weight). One hash covers paging, every
     C4 rule, the bucket histograms, the ratio weights, the scores and
     the cut. The cleaned frame localCheckpoints because it feeds BOTH
-    the weights job and the scoring plan (no cross-branch CSE — the
-    r7 structural rule)."""
+    the weights job and the scoring plan (Catalyst does not share a
+    subtree between branches)."""
     from iconic_data_science_spark.operators.featurize import dsir_pipeline
     from iconic_data_science_spark.operators.text import c4_line_filter
 
@@ -8762,7 +8763,7 @@ ORACLES["curation_pipeline_v8"] = f"""
 
 
 def q_curation_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-8 composition — the CCNet+DSIR hybrid: C4 line-level
+    """The CCNet+DSIR hybrid: C4 line-level
     cleaning at ingest → pruned-LM perplexity gate ON the cleaned
     corpus (the 256 hottest cleaned-corpus bigrams as driver-literal
     LM, keep at/below the median-ish 8240 milli cutoff — CCNet keeps
@@ -8772,8 +8773,8 @@ def q_curation_pipeline_v9(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-matters property one hash covers end to end: paging, every
     C4 rule, the LM tie-break, the fold with defaults, the histograms,
     the ratio weights, the scores and both cuts. The cleaned frame
-    localCheckpoints (feeds the LM job, the gate plan, and DSIR — the
-    r7 cross-branch rule)."""
+    localCheckpoints (it feeds the LM job, the gate plan, and DSIR, and
+    Catalyst does not share a subtree between branches)."""
     from iconic_data_science_spark.operators.featurize import dsir_pipeline
     from iconic_data_science_spark.operators.text import (
         bigram_lm_topk,
@@ -9090,8 +9091,8 @@ ORACLES["ann_rp_topk"] = """
 
 def q_ann_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JL projection composed UNDER a hyperplane candidate generator
-    (operators/similarity.rp_lsh_topk — the r7 verdict's one design
-    gap): 64 → 16 dims through the deterministic ±1 md5 sign matrix,
+    (operators/similarity.rp_lsh_topk): 64 → 16 dims through the
+    deterministic ±1 md5 sign matrix,
     then an 8-bit hyperplane bucket computed IN the projected space
     (in-row integer-lattice dots with the seeded table-7 plane set —
     no explode, no aggregation), candidates = bucket-equality join,
@@ -9589,7 +9590,7 @@ def q_ann_maxsim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a prefix). Subset property + recall vs ``ann_maxsim_topk``
     pinned in test_llm_ops.
 
-    Compute-dense (r10): the candidate-pair rescore runs ~1k FP ops
+    Compute-dense: the candidate-pair rescore runs ~1k FP ops
     per sub-KB row, so the AQE byte floor would coalesce it to 1-2
     serial tasks — opt into the dense floor (session.mark_compute_dense;
     sf0.1 execution 3.8 → 1.1 s)."""
@@ -10034,7 +10035,7 @@ ORACLES["text_wordpiece_encode"] = _wp_oracle(n_words=12)
 
 
 def q_curation_pipeline_v10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-8-continuation composition — the FULL crawl-to-corpus
+    """The FULL crawl-to-corpus
     front end: URL canonical dedup (the crawl layer — only each
     canonical URL's keeper doc enters; Penedo et al. 2024 run exactly
     this before any content work) → C4 line-level cleaning of the
@@ -10043,10 +10044,11 @@ def q_curation_pipeline_v10(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage consumes the previous stage's survivors, so one hash covers
     the URL synth, the canonicalization rules, the min-id keeper rule,
     the paging, every C4 rule, the LM tie-break, and the fold with
-    defaults. The cleaned frame localCheckpoints (feeds the LM job and
-    the gate plan — the r7 cross-branch rule).
+    defaults. The cleaned frame localCheckpoints (it feeds the LM job
+    and the gate plan, and Catalyst does not share a subtree between
+    branches).
 
-    Compute-dense (r10): the C4 rules + LM surprisal fold are heavy
+    Compute-dense: the C4 rules + LM surprisal fold are heavy
     per-row work over a byte-small frame, and the checkpoint freezes
     whatever partitioning AQE coalesced to — opt into the dense floor
     BEFORE the checkpoint materializes (session.mark_compute_dense;
@@ -10532,7 +10534,7 @@ ORACLES["text_unigram_batch"] = ORACLES["text_unigram_encode"]
 
 def q_text_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility/compression rollup per language for the
-    trained Unigram-LM tokenizer (VERDICT r9 item 6) — the same oracled
+    trained Unigram-LM tokenizer — the same oracled
     eval table text_bpe_fertility publishes for BPE (tokens-per-word,
     chars-per-token, both BIGINT milli-units via integer div), plus the
     [UNK] share per-mille (the coverage axis BPE doesn't have — BPE
@@ -11438,7 +11440,7 @@ ORACLES["pii_anonymity_summary"] = """
 
 def q_pii_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit (operators/privacy.t_closeness_audit — Li, Li
-    & Venkatasubramanian, ICDE 2007; VERDICT r9 item 5) completing the
+    & Venkatasubramanian, ICDE 2007) completing the
     release-audit family over the same quasi tuple as pii_k_anonymity:
     per (nation, market-segment) group, the exact variational distance
     between the group's balance-bucket distribution and the whole

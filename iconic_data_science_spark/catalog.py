@@ -22,7 +22,6 @@ import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # The driver's synthetic star schema (TESTDATA.md).
 TPCH_TABLES = (
@@ -45,8 +44,8 @@ TPCH_TABLES = (
 # ~50-200 ms per table that recurs on EVERY query construction (each
 # one builds a fresh Catalog).  DataFrames are immutable plans, so
 # reusing the relation changes nothing about execution — every action
-# still scans the parquet files; no rows or results are cached (guide
-# §1.2: construction is serial driver time).  Keyed weakly by session
+# still scans the parquet files; no rows or results are cached
+# (construction is serial driver time).  Keyed weakly by session
 # (a stopped session's entries vanish with it) and only for the named
 # base tables, whose files are immutable for a session's lifetime.
 _RELATIONS: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
@@ -174,10 +173,3 @@ class Catalog:
                 problems.append(f"{name}: missing columns {missing}")
         if problems:
             raise ValueError("catalog validation failed: " + "; ".join(problems))
-
-
-def load_catalog(spark: SparkSession, sf_dir: str, register: bool = False) -> Catalog:
-    cat = Catalog(spark, sf_dir)
-    if register:
-        cat.register_views()
-    return cat

@@ -19,28 +19,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def h_index_pandas_udaf():
-    """X2 surface: the same h-index as an Arrow-batched grouped-agg
-    pandas UDF (the shape the reference's Scala UDAF would take in
-    PySpark). The expression form (``h_index_from_counts``) stays in
-    whole-stage codegen and is the default; this exists for parity with
-    the UDF/UDAF operator family and as the template for aggregations
-    that genuinely need numpy."""
-    import numpy as np
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    def h_index(citations):
-        v = np.sort(citations.to_numpy())[::-1]
-        if v.size == 0:
-            return 0
-        ranks = np.arange(1, v.size + 1)
-        return int((v >= ranks).sum())
-
-    # explicit functionType: `from __future__ import annotations` turns
-    # type hints into strings, which the hint-inference path rejects
-    return F.pandas_udf(h_index, "long", PandasUDFType.GROUPED_AGG)
-
-
 def h_index_from_counts(arr: Column | str, alias: str | None = None) -> Column:
     """h-index of an array<numeric> column of per-paper citation counts."""
     c = F.col(arr) if isinstance(arr, str) else arr

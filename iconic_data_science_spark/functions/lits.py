@@ -11,8 +11,8 @@ ONE SQL string parsed server-side costs ~2 ms for the same expression (a
 CreateArray / CreateMap of foldable literals), so the optimized plan, the
 results, and the oracle hashes are unchanged — only the driver-side build
 time drops.
-This is guide §1.2/§7.3 territory: planning and expression construction
-are single-threaded driver work and bound how fast the driver can issue
+Planning and expression construction are single-threaded driver work and
+bound how fast the driver can issue
 rounds of an iterative operator at any scale.
 
 Value rendering is exact: integers print in full; doubles use Python's
@@ -26,17 +26,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_I32 = 2**31
-
 
 def _long_sql(v) -> str:
     return f"{int(v)}L"
-
-
-def _int_sql(v) -> str:
-    v = int(v)
-    # py4j promotes out-of-int32 python ints to java Long; mirror that
-    return str(v) if -_I32 <= v < _I32 else f"{v}L"
 
 
 def _double_sql(v) -> str:
@@ -57,23 +49,6 @@ def lit_longs(values) -> Column:
     if not vals:
         return F.expr("CAST(array() AS array<bigint>)")
     return F.expr("array(" + ",".join(_long_sql(v) for v in vals) + ")")
-
-
-def lit_ints(values) -> Column:
-    """array<int> literal column (elements out of int32 promote to long,
-    matching ``F.array(*[F.lit(int(v))...])``)."""
-    vals = list(values)
-    if not vals:
-        return F.expr("CAST(array() AS array<int>)")
-    return F.expr("array(" + ",".join(_int_sql(v) for v in vals) + ")")
-
-
-def lit_doubles(values) -> Column:
-    """array<double> literal column, bit-exact element round-trip."""
-    vals = list(values)
-    if not vals:
-        return F.expr("CAST(array() AS array<double>)")
-    return F.expr("array(" + ",".join(_double_sql(v) for v in vals) + ")")
 
 
 def lit_strings(values) -> Column:

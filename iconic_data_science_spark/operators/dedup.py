@@ -230,7 +230,7 @@ def exact_dedup(documents: DataFrame, id_col: str = "doc_id", text_col: str = "t
 def _pair_jaccard_arrays(witharr: DataFrame, threshold: float | None = None) -> DataFrame:
     """(id1, id2, jaccard) for id1<id2 pairs sharing ≥1 shingle, generated
     from the per-document DISTINCT shingle arrays ``(doc_id, _arr)`` —
-    the array-native twin of :func:`_pair_jaccard` (optimization r11).
+    the array-native twin of :func:`_pair_jaccard`.
 
     Shape: sizes ride IN-ROW (``sz = size(_arr)``, exact because the
     array is the distinct shingle set), the postings group ONCE by
@@ -354,7 +354,7 @@ def ngram_jaccard_pairs(
 
     Runs on the hashed shingles (md5-fold integers — the DuckDB oracle
     composes the identical hashes), in the array-native pair-generation
-    shape (optimization r11, :func:`_pair_jaccard_arrays`): per-doc
+    shape (:func:`_pair_jaccard_arrays`): per-doc
     distinct shingle arrays carry their own size, the postings group
     once by shingle and emit id1<id2 pairs in-row with both sizes
     attached — one postings exchange + one pair exchange, no posting
@@ -468,7 +468,7 @@ def minhash_band_sigs_from_arrays(
     Empty-shingle documents (fewer than n tokens) are dropped AFTER the
     stack, by ``band_sig != ''`` (their minima are all null, so
     concat_ws yields the empty string). Filtering ``size(shingles) > 0``
-    up front — the pre-round-4 form — let Catalyst substitute the WHOLE
+    up front — an earlier form — let Catalyst substitute the WHOLE
     shingle expression into a parquet DataFilter, where the interpreted
     per-row predicate re-ran tokenize→hash→Horner→distinct in the scan:
     measured 23–59 s vs 0.5 s at sf0.1 for the same result. A predicate
@@ -547,7 +547,7 @@ def minhash_lsh_pairs(
         # per-doc shingle array (checkpointed — the md5 work happens
         # exactly once), compute band signatures map-side with no
         # explode/groupBy. First exchange in the pipeline = the bucket
-        # join. The verify is array-native too (optimization round 10):
+        # join. The verify is array-native too:
         # the candidate pair joins its two DISTINCT shingle arrays and
         # computes |A∩B| in-row — same Jaccard as the exploded
         # self-join + three aggregate/join steps it replaces (the
@@ -1120,12 +1120,12 @@ def minhash_lsh_incremental(
     ns = minhash_band_sigs_from_arrays(na, num_perm=num_perm, rows_per_band=rows_per_band).select(
         F.col("doc_id").alias("new_id"), "band", "band_sig"
     )
-    # array-native verify (optimization round 10, same as
-    # minhash_lsh_pairs): each candidate pair joins its two DISTINCT
-    # shingle arrays and computes |A∩B| in-row — the exploded
-    # cross-side posting join + groupBy + semi-join + two size joins it
+    # array-native verify (same as minhash_lsh_pairs): each candidate
+    # pair joins its two DISTINCT shingle arrays and computes |A∩B|
+    # in-row — the exploded cross-side posting join + groupBy + semi-join +
+    # two size joins it
     # replaces shuffled the posting table per side. cands now has ONE
-    # consumer, so the r7 anti-CSE checkpoint is gone too.
+    # consumer, so it needs no checkpoint against recomputation.
     cands = cs.join(ns, ["band", "band_sig"]).select("corpus_id", "new_id").distinct()
     a1 = ca.select(F.col("doc_id").alias("corpus_id"), F.col("shingles").alias("_sh1"))
     a2 = na.select(F.col("doc_id").alias("new_id"), F.col("shingles").alias("_sh2"))
@@ -1496,7 +1496,7 @@ def minhash_recall_eval(
         .distinct()
         .localCheckpoint()
     )
-    # array-native verify (the minhash_lsh_pairs r10 form): each
+    # array-native verify (the minhash_lsh_pairs form): each
     # candidate pair joins its two DISTINCT shingle arrays and computes
     # |A∩B| in-row — same Jaccard as the posting-list verify, which
     # re-shuffled the exploded table per candidate side; zero-overlap

@@ -118,7 +118,7 @@ def pass_at_k(
     per-mille with floor division. Rows with k > n are dropped (the
     estimator is undefined there).
 
-    Exactness envelope (enforced, not assumed — ADVICE r9): the scaled
+    Exactness envelope (enforced, not assumed): the scaled
     numerator 1000·perm(n, k) <= 1000·n^k must stay inside int64 or
     Spark's long multiply wraps SILENTLY (DuckDB promotes to HUGEINT —
     a wrong-result AND cross-engine-divergence hazard). Rows with

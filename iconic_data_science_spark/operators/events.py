@@ -36,8 +36,9 @@ def funnel(
     over raw events, state bounded by users, not events. Each stage's
     entry table is checkpointed: it feeds BOTH its own count row and
     the next stage's join, and the lazy form re-executed every earlier
-    stage inside every later one (O(k²) stage scans across the union —
-    the cross-branch-CSE class, r7). ``checkpoint_stages=False`` keeps
+    stage inside every later one (O(k²) stage scans across the union:
+    Catalyst does not share a subtree between branches).
+    ``checkpoint_stages=False`` keeps
     the lazy form: it exposes the stage scans in the final plan (each
     scan must show the pushed event_type filter — pinned in
     test_plans), at the cost of the O(k²) re-execution.

@@ -74,7 +74,7 @@ def hashed_tfidf(
     )
     # values feeds BOTH the ≤dim-row df table and the scoring join —
     # checkpoint it or the corpus (doc, feature) shuffle runs twice in
-    # the one plan (no cross-branch CSE, the trainer-margins lesson r7)
+    # the one plan (Catalyst does not share a subtree between branches)
     values = pairs.groupBy("doc_id", "feature").agg(
         F.sum("sign").cast("long").alias("value")
     ).localCheckpoint()
@@ -379,8 +379,8 @@ def train_linear_classifier(
         .repartition("doc_id")
         .localCheckpoint(eager=True)
     )
-    # Driver-local tier (optimization round 10 — the kmeans_int/unigram/
-    # graph-loop discipline): the whole training state is the checkpointed
+    # Driver-local tier (as in kmeans_int, unigram and the graph
+    # loops): the whole training state is the checkpointed
     # (doc, feature, x) table; when it fits under ``local_train_pairs``
     # (one cheap count on the materialized blocks), the IDENTICAL integer
     # recurrence runs in numpy instead of paying (epochs+1) x 2 serial
@@ -425,7 +425,7 @@ def train_linear_classifier(
         # the pairs⋈weights groupBy 3× inside the one job. One extra
         # materialization job per epoch buys each reference a cached
         # scan — measured 9.9 s → 8.0 s (sf0.01, 12 epochs), weights
-        # bit-identical (r7).
+        # bit-identical.
         margins = _margins(w).localCheckpoint(eager=True)
         mis = margins.filter(F.col("y") * F.col("m") <= 0)
         # ONE distributed pass per epoch: the pocket error count, the
@@ -875,7 +875,7 @@ def dsir_pipeline(
     corpus hashed ONCE: the (doc_id, bigram-bucket array) frame
     localCheckpoints and feeds BOTH the weight histogram and the
     scoring plan — the two-pass form runs the md5 fold over every
-    bigram twice (no cross-branch CSE; the r7 structural rule). Same
+    bigram twice (Catalyst does not share a subtree between branches). Same
     bits out as the two primitives; measured ~1.7× at sf0.1. The
     checkpoint is corpus-grain but narrow (ids + one long per bigram —
     the ``hashed_tfidf`` ``values`` precedent)."""

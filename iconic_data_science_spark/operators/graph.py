@@ -128,8 +128,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 
     The canonical edge set feeds THREE join sides; materialize it once
     (no cross-branch CSE — the upstream edge derivation, e.g. the
-    coauthor pairing self-join, would otherwise execute three times;
-    the r10 plan audit found the whole subtree triplicated with no
+    coauthor pairing self-join, would otherwise execute three times: a
+    plan dump showed the whole subtree triplicated with no
     ReusedExchange because each side re-partitions on a different key).
     """
     canon = (
@@ -164,8 +164,8 @@ def pagerank(
     rather than oracle-hashed; at 100 TB each iteration is one shuffle
     on dst plus a broadcast of two scalars.
 
-    Loop-invariant inputs materialize ONCE before the loop (the round-5
-    rule, see label_propagation): the edge list hash-partitioned by
+    Loop-invariant inputs materialize ONCE before the loop (as in
+    label_propagation): the edge list hash-partitioned by
     ``src`` (the per-iteration join key) and the outdeg dim derived
     from it — otherwise K iterations re-execute the upstream edge plan
     2K times (once for the join, once for outdeg) and re-shuffle it
@@ -274,22 +274,20 @@ def pagerank_int(
     beyond that, shard the sum or lower SCALE.
 
     Same scale shape as `pagerank`: one shuffle per iteration (contribs
-    keyed on dst); ranks localCheckpoint every round (the lineage
-    lesson); loop-invariant inputs materialize ONCE before the loop —
-    since optimization round 10 the out-degree is FOLDED INTO the edge
-    table up front (8 bytes/row buys back one join per round at every
-    scale), and while the node count stays within the broadcast budget
-    (known exactly from one pre-loop count, the bfs/dedup_clusters
-    three-tier discipline) the rank table
-    broadcasts into both per-round joins, so the edge table is never
-    shuffled inside the loop and the only per-round exchange is the
-    contribution groupBy. Above the threshold the loop falls back to
-    shuffle joins unchanged. Measured 6.9 → 3.1-3.9 s (bench medians) on
-    the sf0.1 web graph (10 rounds), hash-identical.
+    keyed on dst); ranks localCheckpoint every round, so the lineage
+    stays one round deep; loop-invariant inputs materialize ONCE before
+    the loop — the out-degree is FOLDED INTO the edge table up front
+    (8 bytes/row buys back one join per round at every scale), and
+    while the node count stays within the broadcast budget (known
+    exactly from one pre-loop count, as in bfs and dedup_clusters) the
+    rank table broadcasts into both per-round joins, so the edge table
+    is never shuffled inside the loop and the only per-round exchange
+    is the contribution groupBy. Above the threshold the loop falls
+    back to shuffle joins unchanged. Measured 6.9 → 3.1-3.9 s (median
+    wall) on the sf0.1 web graph (10 rounds), hash-identical.
 
-    Three-tier (optimization round 10): edge tables within the local
-    budget solve on the driver via the exact int64 recurrence
-    (:func:`_pagerank_int_local`).
+    Three-tier: edge tables within the local budget solve on the
+    driver via the exact int64 recurrence (:func:`_pagerank_int_local`).
     """
     pdf, edges = tiers.gather(edges.select("src", "dst"))
     if pdf is not None:
@@ -481,33 +479,6 @@ def hierarchy_roots_sql(parent_child: DataFrame, children_unique: bool = False) 
     )
 
 
-def bfs_sql(edges: DataFrame, sources: DataFrame, max_depth: int = 6) -> DataFrame:
-    """G4 k-hop BFS as a Spark 4 recursive CTE — declarative twin of
-    :func:`bfs`, same (author, depth = min hops) contract.
-
-    The CTE expands all paths up to ``max_depth`` and takes min(depth)
-    per author; the loop form instead anti-joins the visited set per
-    round, which prunes revisits *during* traversal — on cyclic graphs
-    the CTE's path count can blow up combinatorially, so the loop stays
-    the scale path (this is SQL-surface parity, depth-capped).
-    """
-    spark = edges.sparkSession
-    edges.select("src", "dst").createOrReplaceTempView("_bfs_edges")
-    sources.select("author").createOrReplaceTempView("_bfs_sources")
-    return spark.sql(
-        f"""
-        WITH RECURSIVE walk(author, depth) AS (
-            SELECT author, CAST(0 AS BIGINT) AS depth FROM _bfs_sources
-            UNION ALL
-            SELECT e.dst AS author, w.depth + 1 AS depth
-            FROM walk w JOIN _bfs_edges e ON w.author = e.src
-            WHERE w.depth < {int(max_depth)}
-        )
-        SELECT author, MIN(depth) AS depth FROM walk GROUP BY author
-        """
-    )
-
-
 def _local_kcore(pdf, k: int):
     """Driver-side peeling for small edge tables: adjacency dict +
     worklist (each edge processed O(1) times — the textbook linear
@@ -657,7 +628,7 @@ def sssp(
     (count, sum) signature means a fixpoint — and extra rounds past the
     fixpoint are no-ops, keeping parity with the fixed-round oracle.
     """
-    # three-tier (optimization round 10): the per-round signature collect
+    # three-tier: the per-round signature collect
     # + checkpoint are 2 fixed-overhead jobs; a sub-2M-edge graph solves
     # on the driver with the identical int64 relaxation (empty tables
     # keep the distributed path — its null-source degenerate semantics
@@ -772,11 +743,11 @@ def label_propagation(
     (the per-round join key), before the loop: without this the lazy
     ``edges`` plan — often an expensive join pipeline like the coauthor
     build — re-executes every round, and each round's join re-shuffles
-    it (measured at sf0.1, round 5: 8.1 s → 3.0 s unbucketed). At
+    it (measured at sf0.1: 8.1 s → 3.0 s unbucketed). At
     100 TB this is the difference between reading the upstream tables
     once or K times.
     """
-    # three-tier (optimization round 10): K rounds × 2 fixed-overhead
+    # three-tier: K rounds × 2 fixed-overhead
     # distributed jobs on a sub-2M-edge table is pure scheduling latency
     # — solve on the driver with the identical integer vote/argmax
     pdf, edges = tiers.gather(edges.select("src", "dst"))
@@ -883,9 +854,9 @@ def hits_int(
         # final join with an AttributeError instead of a clear error,
         # and "HITS with no iterations" has no defined fixpoint value.
         raise ValueError("hits_int requires iterations >= 1")
-    # three-tier (optimization round 10): the 5-round loop runs 3 eager
-    # checkpoint jobs per round; a sub-2M-edge graph solves on the driver
-    # with the identical int64 recurrence (bench web_hits 3.4 → 0.9 s)
+    # three-tier: the 5-round loop runs 3 eager checkpoint jobs per
+    # round; a sub-2M-edge graph solves on the driver with the identical
+    # int64 recurrence (web_hits 3.4 → 0.9 s at sf0.1)
     pdf, edges = tiers.gather(edges.select("src", "dst").distinct())
     if pdf is not None:
         return tiers.local_frame(
@@ -900,7 +871,7 @@ def hits_int(
         .distinct()
         .persist()
     )
-    # NOTE (optimization round 10): per-round F.broadcast of the score
+    # NOTE: per-round F.broadcast of the score
     # frames was tried here (the pagerank_int move) and MEASURED SLOWER
     # (3.25 → 3.95 s at sf0.1, 7-iter median): unlike pagerank's
     # checkpointed ranks, `a` is a derived frame (raw ⋈ 1-row

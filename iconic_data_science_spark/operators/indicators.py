@@ -98,8 +98,8 @@ def ego_indicators(
     # built-in) — one pass over the pair fan-out instead of a second
     # full scan + shuffle for a separate countDistinct(year) agg.
     #
-    # Round-7 measurements (sf0.1 bucketed, median of 5, row-identical
-    # all four ways — SCALE.md):
+    # Measurements (sf0.1 bucketed, median of 5, row-identical all four
+    # ways — SCALE.md):
     # * n_alter_countries as size(array_distinct(collect_list)) instead
     #   of countDistinct: the ego-grain agg stops triggering the
     #   two-phase distinct rewrite (an Expand ×2 across the ego
@@ -108,7 +108,8 @@ def ego_indicators(
     #   agg. HashPartitioning(ego) satisfies both groupBys' clustered
     #   distributions, so the pair agg AND the ego rollup run
     #   exchange-free behind the one repartition — 2.75 s → 2.17 s
-    #   (1.55× vs round-6 form overall). The trade is skew exposure: the
+    #   (1.55× overall against the form with neither change). The trade is
+    #   skew exposure: the
     #   two-phase form spreads a mega-ego's pairs by hash(ego, alter)
     #   before the (much smaller) pair-grain ego exchange, while this
     #   form lands the ego's WHOLE raw fan-out in one partition (an

@@ -291,10 +291,10 @@ def zorder_chunk_stats(
 
 def hilbert_value_pandas(x_col: str, y_col: str, bits: int = 16):
     """Vectorized numpy bit-walk for the Hilbert index — the fast path
-    :func:`hilbert_chunk_stats` uses (round 4). The ``F.aggregate``
+    :func:`hilbert_chunk_stats` uses. The ``F.aggregate``
     fold in :func:`hilbert_value` stays semantically identical (pinned
     by tests) but runs in Catalyst's interpreter at ~13× Morton's
-    constant (4.7 s vs 0.37 s at sf0.1, BENCH_r03); the same walk over
+    constant (4.7 s vs 0.37 s at sf0.1); the same walk over
     Arrow-batched int64 numpy arrays is one vectorized pass per level.
     Map-side, linear, no shuffle — exactly the OPTIMIZE-pass constant
     that matters at 100 TB."""
@@ -505,7 +505,7 @@ def compaction_oracle_sql(inventory_sql: str, target: int = COMPACTION_TARGET_RO
     yield (part, file_id, size). The recursive step carries the same
     ``group_fill > 0`` guard as the Python recurrence, so zero-size
     files mid-stream (a zero running fill) assign identical group
-    indices in both engines (ADVICE r3)."""
+    indices in both engines."""
     return f"""
         WITH RECURSIVE inv AS ({inventory_sql}),
         o AS (

@@ -178,7 +178,7 @@ def temperature_sample_against_rates(
 
     # hash over the post-select alias: the keep filter runs after the
     # frame renames id_col -> "doc_id", so referencing id_col would be
-    # unresolved for any non-default caller (ADVICE r7). Same values,
+    # unresolved for any non-default caller. Same values,
     # same hash.
     u = hash_bucket("doc_id", bucket_space).cast("decimal(7,0)")
     doc_tokens = F.size(F.split(F.col(text_col), " ")).cast("long")
@@ -407,7 +407,7 @@ def unimax_sample_against(
     )
     # hash over the post-select alias: the keep filter runs after the
     # frame renames id_col -> "doc_id", so referencing id_col would be
-    # unresolved for any non-default caller (ADVICE r7). Same values,
+    # unresolved for any non-default caller. Same values,
     # same hash.
     u = hash_bucket("doc_id", bucket_space).cast("decimal(7,0)")
     doc_tokens = F.size(F.split(F.col(text_col), " ")).cast("long")

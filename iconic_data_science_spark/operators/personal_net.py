@@ -171,7 +171,7 @@ def personal_net_salted(
     hot_threshold: int = 2048,
 ) -> DataFrame:
     """:func:`personal_net` with a TARGETED-SALT pair build — the
-    mega-ego defense (SURVEY §7 risk register; r5 verdict item 5).
+    mega-ego defense (SURVEY §7 risk register).
 
     The plain J4 self-join hashes every row of an ego to ONE reducer,
     so a 100k-alter ego concentrates its 10¹⁰-pair O(k²) explosion in

@@ -109,7 +109,7 @@ def anonymity_summary(audit: DataFrame, quasi_cols: list[str]) -> DataFrame:
     # SUM over an empty audit is NULL; the release decision for an
     # empty dataset is 0 records / 0 at risk (min_k stays NULL — there
     # is no group whose size could be quoted). Same NULL-on-empty
-    # class as judge_agreement's pe_num (see NOTES_r9).
+    # class as judge_agreement's pe_num.
     return audit.agg(
         F.count(F.lit(1)).cast("long").alias("n_groups"),
         F.coalesce(F.sum("group_size"), F.lit(0))

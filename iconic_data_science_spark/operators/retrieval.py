@@ -89,8 +89,8 @@ def bm25_topk(
     # tf is hit-grain (≤ matching-docs × |terms| rows) and feeds BOTH
     # the df table and the scoring join; without the checkpoint the
     # corpus tokenization + hit aggregation underneath runs a second
-    # time in the joined plan (no cross-branch CSE — the
-    # trainer-margins lesson r7). The stats pass above keeps its own
+    # time in the joined plan (Catalyst does not share a subtree
+    # between branches). The stats pass above keeps its own
     # scan (it must count non-matching docs too), so the corpus is
     # tokenized exactly twice, never three times.
     tf = (
@@ -186,7 +186,7 @@ def bm25_embed_rerank(
     lexical rank, then doc_id). Candidates without embeddings drop
     out of the rerank while an anchor exists; if NO candidate has an
     embedding row, the lexical stage's output survives as-is with a
-    null cosine (ordered by rank — the ADVICE-r3 passthrough, so the
+    null cosine (ordered by rank — a passthrough, so the
     dense stage degrades to pure BM25 instead of an empty result).
     Everything stays engine-exact: BM25 is all-BIGINT, cosines come
     off the product lattice.
@@ -220,7 +220,7 @@ def bm25_embed_rerank(
     # an empty cross-join and a silently empty result.
     # localCheckpoint: four downstream subtrees (anchor, scored, n_emb,
     # fallback) read this ≤ k_candidates-row frame; without it each one
-    # re-runs the full stage-1 lexical scan+shuffle (ADVICE r4).
+    # re-runs the full stage-1 lexical scan+shuffle.
     joined = cand.join(vecs, "doc_id", "left").localCheckpoint()
     anchor = (
         joined.filter(F.col("v").isNotNull())

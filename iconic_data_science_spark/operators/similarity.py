@@ -182,7 +182,7 @@ def lsh_signature(
     whole signature composes with the scan as a pure map — zero
     exchanges, where the posexplode + plane-join + two-aggregation form
     this replaced paid two shuffles of the exploded element table per
-    call (guide §2.1; values bit-identical, see ``_lsh_bucket_expr``).
+    call (values bit-identical, see ``_lsh_bucket_expr``).
     """
     return _non_empty_vectors(embeddings, vec_col).select(
         F.col(id_col).alias("id"),
@@ -356,8 +356,8 @@ def ivf_assign(
     else:
         # seed BEFORE the sqnorm projection: the fold in _with_sqnorm
         # sits below the TakeOrdered otherwise and runs corpus-wide
-        # just to seed n_cells pseudo-centroids (the pq_codes r10
-        # lesson); one TakeOrderedAndProject over the full row beats
+        # just to seed n_cells pseudo-centroids (as in pq_codes); one
+        # TakeOrderedAndProject over the full row beats
         # the id-restrict + broadcast-semi form's second corpus scan
         seed = embeddings.orderBy(id_col).limit(n_cells)
         centroids = _with_sqnorm(seed, id_col, vec_col).select(
@@ -488,8 +488,8 @@ def lsh_topk(
     # multi-table candidates: ALL T signatures computed in ONE
     # projection per side and posexploded to (id, table, bucket) rows,
     # so the union over tables is a single (table, bucket) equi-join —
-    # the per-table loop re-scanned each side T times (r10 audit:
-    # 3 corpus + 3 query scans → 1 + 1); the exploded rows are narrow
+    # the per-table loop re-scanned each side T times (a plan dump
+    # counted 3 corpus + 3 query scans → 1 + 1); the exploded rows are narrow
     # (id + B-char key) next to the vectors the scans carried
     def _sigs(df: DataFrame) -> DataFrame:
         return _non_empty_vectors(df, vec_col).select(
@@ -657,8 +657,8 @@ def pq_codes(
     subs = _sub_explode(embeddings)
     # ids are the table key (unique by contract), so the n_codes seed
     # rows come from ONE TakeOrderedAndProject carrying the vector —
-    # the r10 audit's semi-join form (restrict ids, broadcast-semi the
-    # raw rows) read the corpus twice for the same 16 rows; the heap
+    # the semi-join form (restrict ids, broadcast-semi the raw rows)
+    # read the corpus twice for the same 16 rows; the heap
     # only ever holds n_codes (id, vec) pairs per partition, so
     # carrying the vector through the ordering is free.
     seed_rows = embeddings.orderBy(id_col).limit(n_codes)
@@ -929,8 +929,8 @@ def semantic_decontaminate(
     vectorized numpy scan inside one mapInPandas pass — measured ~20×
     the interpreted higher-order-function form (7.2 s → 0.4 s at sf0.1:
     Catalyst evaluates per-element lambda trees row-at-a-time, the same
-    constant-factor pathology as the r4 Hilbert fix). The bench side is
-    collected driver-side (bounded by ``max_bench_rows`` — eval suites
+    constant-factor pathology as ``lakehouse.hilbert_value``). The bench
+    side is collected driver-side (bounded by ``max_bench_rows`` — eval suites
     are small by contract; raise the gate consciously or shard+union if
     a protected set ever exceeds it). Rounding is explicitly HALF_UP
     (floor(v+0.5) / ceil(v-0.5)) to match Spark's F.round, not numpy's
@@ -1155,7 +1155,7 @@ def _kmeans_int_update_plan(e: DataFrame, cs, dim: int) -> DataFrame:
     centroid literals computed in the same projection that carries
     ``q``, then a partial-aggregated groupBy(c_id) — ZERO joins, so the
     corpus is scanned once and only the K×(dim+1)-row aggregate moves.
-    (r6 verdict item 2: the previous form recovered ``q`` by re-joining
+    (The previous form recovered ``q`` by re-joining
     the assignment back to the corpus — two full-corpus exchanges + an
     SMJ per iteration, all avoidable because the argmin already reads
     ``q``. test_plans.py pins this plan join-free.)"""
@@ -1185,8 +1185,8 @@ def kmeans_int_centroids(
 ) -> list:
     """(vec_id, c_id, d2) — Lloyd's k-means ON THE INTEGER LATTICE: the
     hash-oracled twin of :func:`kmeans_centroids` (the same
-    float→integer move as graph.pagerank_int vs graph.pagerank; r5
-    verdict item 3). Components quantize once to ``round(x·scale)``
+    float→integer move as graph.pagerank_int vs graph.pagerank).
+    Components quantize once to ``round(x·scale)``
     BIGINTs; every Lloyd round is then exact integer arithmetic both
     engines replay bit-for-bit:
 
@@ -1228,7 +1228,7 @@ def kmeans_int_centroids(
     cents = _kmeans_int_greedy_seed(V, k)
     dim = len(cents[0][1])
 
-    # Local tier (optimization round 10): when the WHOLE corpus sits in
+    # Local tier: when the WHOLE corpus sits in
     # the sample — every test fixture and the driver/bench scales — the
     # Lloyd rounds run on the already-collected int64 matrix: same
     # argmin (np.argmin → first min = smallest c_id on tie), same
@@ -1502,8 +1502,8 @@ def kmeans_cluster_eval(
     # Checkpoint the ≤ K·|labels|-row rollup: tot and top below each
     # reference it, and without the barrier the whole upstream
     # (quantize + argmin assignment over the corpus + label join)
-    # executes TWICE in the one joined plan (no cross-branch CSE — the
-    # trainer-margins lesson, featurize.py r7). The checkpointed frame
+    # executes TWICE in the one joined plan (Catalyst does not share a
+    # subtree between branches). The checkpointed frame
     # is label-dimension-sized, so the barrier is free.
     per = labeled.groupBy("c_id", "label").agg(
         F.count(F.lit(1)).cast("long").alias("ln")
@@ -1544,7 +1544,7 @@ def pq_trained_codes(
     docstring promises ("a production deployment would swap in
     per-subspace k-means"), delivered with the integer-lattice Lloyd
     machinery so the whole thing stays hash-exact (the trained-twin
-    pattern: classifier r6, k-means r6, PQ here).
+    pattern of the classifier and k-means).
 
     Each vector splits into ``m`` contiguous ``dim/m``-wide subvectors;
     subspace ``s`` trains its own ``n_codes``-entry codebook with
@@ -1561,8 +1561,8 @@ def pq_trained_codes(
     each sliced frame — ``_pq_trained_cents``); assignment is a pure
     map computing every subspace's argmin in the SAME projection and
     exploding m (sub, c_id, d2) structs, so the corpus is scanned ONCE
-    (the r10 audit found the per-subspace union form re-scanning it m
-    times) and never shuffled. Codebook metadata totals
+    (the per-subspace union form re-scanned it m times) and never
+    shuffled. Codebook metadata totals
     m·n_codes·(dim/m) integers on the driver."""
     assert dim % m == 0, "dim must split evenly into m subspaces"
     w = dim // m
@@ -1716,8 +1716,8 @@ def pq_trained_topk(
     Scale shape: training pays ONE bounded sample job for all m
     subspaces (``_pq_trained_cents``); corpus codes are ONE map pass
     computing every subspace's argmin in the same projection (the
-    corpus is scanned once, never shuffled, to be CODED — the r10
-    audit found the per-subspace union form re-scanning it m times);
+    corpus is scanned once, never shuffled, to be CODED — the
+    per-subspace union form re-scanned it m times);
     the query distance table is queries × m × n_codes rows — tiny,
     built by ONE query scan exploding the m·n_codes struct lattice —
     and BROADCASTS onto the code matrix, so the only exchange is the
@@ -1963,8 +1963,8 @@ def rp_lsh_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """JL projection composed UNDER a hyperplane candidate generator —
-    the scale form of :func:`random_projection` retrieval (r7 verdict:
-    "JL is a distance-cost reducer, not a candidate reducer"; this op
+    the scale form of :func:`random_projection` retrieval (JL reduces
+    the cost of each distance, not the number of candidates; this op
     adds the candidate reducer so the quadratic
     :func:`brute_force_topk`-over-projected plan — registered as
     ``ann_rp_topk`` — becomes a truth baseline only).

@@ -217,7 +217,7 @@ def kmv_distinct(
     # ≤ k·P rows per group after the bounded partial; ONE exchange:
     # distinct + rank-window + count/max (3 passes over the shuffled
     # rows) collapse into slice(array_sort(collect_set), 1, k) — the
-    # same k smallest distinct hashes, held in-row (r11, guide §2.4)
+    # same k smallest distinct hashes, held in-row
     topk = (
         kmv_partial_minima(hashed, k=k)
         .groupBy("grp")
@@ -291,7 +291,7 @@ def kmv_overlap(
     """
     hashed = kmv_hashes(events, key_col=key_col, group_col=group_col)
     # one exchange builds the per-group sketch as ONE ROW holding its
-    # sorted k-minima array (r11: the distinct + rank-window + per-pair
+    # sorted k-minima array (the distinct + rank-window + per-pair
     # re-join-by-h + second window all collapse — the union sketch of a
     # pair is an IN-ROW merge of two arrays, which is the mergeability
     # rule itself). ≤ |groups| rows thereafter; checkpointed once.
@@ -418,8 +418,8 @@ def histogram_quantiles(
     bin_col = F.least(F.floor(F.col(value_col)).cast("long"), F.lit(max_bin))
     # bounded (grp × ≤max_bin+1)-row histogram feeds BOTH the cumulative
     # window and the totals; checkpoint it or the raw-event aggregation
-    # underneath runs twice in the joined plan (no cross-branch CSE —
-    # the trainer-margins lesson, featurize.py r7)
+    # underneath runs twice in the joined plan (Catalyst does not share
+    # a subtree between branches)
     hist = (
         events.select(F.col(group_col).alias("grp"), bin_col.alias("bin"))
         .groupBy("grp", "bin")
@@ -478,7 +478,7 @@ def kmv_sliding_distinct(
         ).cast("long").__mod__(MERSENNE31).alias("h"),
     )
     # bounded map-side partial, then ONE exchange builds each pane's
-    # sketch as ONE ROW holding its sorted k-minima array (r11: the
+    # sketch as ONE ROW holding its sorted k-minima array (the
     # distinct + rank-window pair collapsed into
     # slice(array_sort(collect_set), 1, k), same k smallest distinct
     # hashes). The pane table — one row per pane — is pinned: the
@@ -503,7 +503,7 @@ def kmv_sliding_distinct(
     )
     observed = panes.select("event_type", F.col("pane_hour").alias("win_end_hour"))
     merged = fanned.join(observed, ["event_type", "win_end_hour"], "left_semi")
-    # ONE aggregate per window (r11: was distinct + window + two
+    # ONE aggregate per window (it was distinct + window + two
     # aggregations + a final join): the window's k-minima are the k
     # smallest distinct values across its panes' arrays — an in-row
     # merge — and n_panes is the row count (one row per pane by

@@ -289,8 +289,8 @@ def top_terms(
     """
     # tf feeds BOTH the document-frequency dimension and the weighted
     # join — checkpoint it or the corpus (doc, term) shuffle runs twice
-    # in the one plan (no cross-branch CSE, the trainer-margins lesson
-    # r7)
+    # in the one plan (Catalyst does not share a subtree between
+    # branches)
     tf = (
         documents.select(
             F.col(id_col).alias("doc_id"),
@@ -1130,8 +1130,8 @@ def quality_deciles(
     base = quality_score_milli(documents, id_col=id_col, text_col=text_col)
     # The ≤1001-row histogram feeds BOTH the total and the cumulative
     # cutoffs; without the checkpoint the corpus aggregation underneath
-    # executes twice in the one plan (no cross-branch CSE — the
-    # trainer-margins lesson, featurize.py r7). Bounded rows → free.
+    # executes twice in the one plan (Catalyst does not share a subtree
+    # between branches). Bounded rows → free.
     hist = (
         base.groupBy("score_milli")
         .agg(F.count(F.lit(1)).cast("long").alias("_c"))
@@ -1715,8 +1715,8 @@ def surprisal_buckets(
     )
     # the scored table feeds BOTH the histogram and the final bucket
     # assignment — materialize it once or the whole bigram-LM scoring
-    # pass (tokenize + in-row surprisal fold) executes twice (the
-    # multi-consumer rule; r10 plan audit: 16 parquet scans → 8)
+    # pass (tokenize + in-row surprisal fold) executes twice (a plan
+    # dump counted 16 parquet scans without the checkpoint, 8 with it)
     sl = (
         scored.join(langs, "doc_id")
         .select("doc_id", "lang", "surprisal_milli")

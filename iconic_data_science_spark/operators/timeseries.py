@@ -64,8 +64,8 @@ def anomaly_hours(
     """
     # hourly feeds BOTH the stats row and the flagged output — without
     # the checkpoint the event aggregation underneath runs twice in the
-    # one crossJoined plan (no cross-branch CSE, the trainer-margins
-    # lesson r7); hours-grain rows → the barrier is free
+    # one crossJoined plan (Catalyst does not share a subtree between
+    # branches); hours-grain rows → the barrier is free
     hourly = (
         events.groupBy(
             F.unix_micros(F.date_trunc("hour", F.col(ts_col))).alias("window_start_us")

@@ -326,12 +326,12 @@ def unigram_train(
     unrolled MATERIALIZED CTEs in the DuckDB oracle (the text_bpe_vocab
     discipline)."""
     wf = word_counts(documents, max_word=max_word, text_col=text_col)
-    # local tier (optimization round 10, the kmeans_int discipline): the
+    # local tier (as in kmeans_int): the
     # entire training state is the distinct-word table; when it fits in
     # ``local_train_words`` (+1 probe row), collect it once and run the
     # identical seed/EM/prune sequentially — the distributed path runs
     # 5 serial jobs over a table that is tiny whenever the corpus is
-    # Zipf-shaped (31 distinct words at bench sf0.1). ``None`` skips the
+    # Zipf-shaped (31 distinct words at sf0.1). ``None`` skips the
     # probe for corpora known to be word-diverse.
     if local_train_words is not None:
         probe = wf.limit(int(local_train_words) + 1).collect()

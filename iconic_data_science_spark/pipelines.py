@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .operators import profiles
 from .operators.coauthor import coauthor_edges
-from .operators.graph import bfs, hierarchy_roots
+from .operators.graph import bfs
 from .operators.indicators import author_stats, coauthor_year_triples, ego_alter_rollups, ego_indicators
 from .operators.joins import fk_closure_sample
 from .operators.personal_net import personal_net
@@ -116,11 +116,6 @@ def static_net_pipeline(
         )
         gexf.write_gexf_single_file(doc, gexf_out)
     return verts, net_edges
-
-
-def fos_roots_pipeline(tables: dict[str, DataFrame]) -> DataFrame:
-    """G5: field-of-study → root field (App.scala's rollup, as data)."""
-    return hierarchy_roots(tables["fc"])
 
 
 def dwarf_pipeline(

@@ -97,34 +97,6 @@ def geocode(
     return affiliations.select(id_col, address_col).mapInPandas(run, GEOCODE_SCHEMA)
 
 
-def with_retries(
-    lookup_fn: Callable[[str], tuple[str | None, str | None]],
-    max_attempts: int = 3,
-    backoff_s: float = 0.5,
-    sleep_fn: Callable[[float], None] | None = None,
-) -> Callable[[str], tuple[str | None, str | None]]:
-    """Production transport policy for ``geocode``: bounded retries with
-    exponential backoff around a flaky lookup. After ``max_attempts``
-    failures the address resolves to ``(None, None)`` — an enrichment
-    miss, not a pipeline abort (the batch keeps flowing; misses are
-    retryable later because they stay out of the cache). ``sleep_fn`` is
-    injectable so tests run without wall-clock sleeps."""
-    import time as _time
-
-    do_sleep = sleep_fn if sleep_fn is not None else _time.sleep
-
-    def wrapped(address: str) -> tuple[str | None, str | None]:
-        for attempt in range(max_attempts):
-            try:
-                return lookup_fn(address)
-            except Exception:
-                if attempt + 1 < max_attempts:
-                    do_sleep(backoff_s * (2**attempt))
-        return (None, None)
-
-    return wrapped
-
-
 def geocode_cached(
     affiliations: DataFrame,
     cache: DataFrame | None,

@@ -63,17 +63,6 @@ def read_jsonl(spark, path: str, schema=None) -> DataFrame:
     return reader.json(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (Spark built-in columnar alternative to parquet; same
-    predicate-pushdown / column-pruning behavior via the vectorized ORC
-    reader)."""
-    df.write.mode(mode).orc(path)
-
-
-def read_orc(spark, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
 def write_single_text(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S8: one text file (small exports only — serializes the write)."""
     df.coalesce(1).write.mode(mode).text(path)
@@ -104,106 +93,3 @@ def write_curated_parquet(
     if sort_cols:
         df = df.repartition(*[df[c] for c in partition_cols]).sortWithinPartitions(*sort_cols)
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def morton_code(col_a, col_b, bits: int = 16):
-    """Interleave the low ``bits`` bits of two non-negative integer
-    columns into a Morton (Z-order) code — JVM-side bit arithmetic, no
-    UDF. Sorting by the code clusters rows so that ranges of EITHER
-    column map to few contiguous runs, which is what makes parquet
-    row-group min/max stats selective on both columns at once (the
-    technique behind Delta's OPTIMIZE ZORDER; plain sort keys only skip
-    on the leading column)."""
-    from pyspark.sql import functions as F
-
-    a = F.col(col_a) if isinstance(col_a, str) else col_a
-    b = F.col(col_b) if isinstance(col_b, str) else col_b
-    code = F.lit(0).cast("long")
-    for i in range(bits):
-        code = (
-            code
-            + F.shiftleft(F.shiftright(a.cast("long"), i).bitwiseAND(1), 2 * i)
-            + F.shiftleft(F.shiftright(b.cast("long"), i).bitwiseAND(1), 2 * i + 1)
-        )
-    return code
-
-
-def write_zordered_parquet(
-    df: DataFrame,
-    path: str,
-    zorder_cols: tuple[str, str],
-    bits: int = 16,
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Curated layout with two-column Z-order clustering: range-partition
-    by the Morton code (so files tile the Z-curve) and sort within
-    partitions by it (so row groups inside each file tile it too). A
-    predicate on either z-column then skips most files AND most row
-    groups via parquet min/max stats — the multi-column data-skipping
-    counterpart to ``write_curated_parquet``'s single-key sort.
-
-    ``num_files`` pins the output file count (size files to
-    ~row-group multiples at scale); left None, AQE picks — and on small
-    data will coalesce to one file, which defeats file-level skipping."""
-    z = morton_code(*zorder_cols, bits=bits)
-    zdf = df.withColumn("_z", z)
-    zdf = (
-        zdf.repartitionByRange(num_files, "_z")
-        if num_files is not None
-        else zdf.repartitionByRange("_z")
-    )
-    zdf.sortWithinPartitions("_z").drop("_z").write.mode(mode).parquet(path)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 1,
-) -> dict:
-    """Small-files compaction (the VACUUM/OPTIMIZE maintenance pass):
-    rewrite a parquet directory into ⌈bytes / target_file_bytes⌉ files.
-
-    Streaming sinks and incremental loads leave thousands of KB-sized
-    files; at 100 TB the scan-planning and open() overhead of a
-    small-files table dominates the read. Compaction is a single
-    repartition-and-rewrite: file count from the directory's actual
-    bytes (driver-side listing — metadata, not data), written to a temp
-    sibling then swapped in with two renames — the exposure window is
-    those metadata moves, not the rewrite itself. (True atomic swap
-    needs a table format's metadata pointer — Delta/Iceberg commit —
-    which is exactly what those formats add over raw parquet; this is
-    the raw-directory form.)
-
-    Returns {"files_before", "files_after", "bytes"}. Row content is
-    preserved exactly (round-trip asserted in tests); file-internal
-    order is not (parquet readers must not rely on it).
-    """
-    import os
-    import shutil
-
-    def _stats(p: str) -> tuple[int, int]:
-        n = b = 0
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += 1
-                    b += os.path.getsize(os.path.join(root, f))
-        return n, b
-
-    files_before, total_bytes = _stats(path)
-    n_files = max(min_files, -(-total_bytes // target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    df.repartition(int(n_files)).write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + "._compact_old"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
-    files_after, _ = _stats(path)
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "bytes": total_bytes,
-    }

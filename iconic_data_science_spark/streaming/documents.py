@@ -61,9 +61,9 @@ def stream_dedup_against_index(
     ``dedup.minhash_index_upsert`` maintains (landing via
     ``lakehouse.write_snapshot``). The ``index`` form is the production
     steady state — the crawl loop pays the signature build once per
-    index generation, not once per stream restart (r6 verdict item 4:
-    the bench now measures probe throughput against a standing index,
-    not index-build jitter). The stream side is entirely map-side until
+    index generation, not once per stream restart, so a benchmark of
+    the probe measures throughput against a standing index, not
+    index-build time. The stream side is entirely map-side until
     the stream-static candidate join; the verify touches only candidate
     rows and is a per-row array expression, so state is bounded to the
     candidate-pair ``dropDuplicates`` set (no watermark needed for a
@@ -111,7 +111,7 @@ def stream_dedup_against_index(
             F.col("doc_id").alias("corpus_id"),
             F.col("shingles").alias("corpus_shingles"),
         ).localCheckpoint()
-    # Size-gated IN-ROW index probe (r5 verdict item 6): the
+    # Size-gated IN-ROW index probe: the
     # join+dropDuplicates form pays a streaming STATE STORE for the
     # cross-band candidate dedup — measured as ~2/3 of each micro-batch
     # (3.3 s vs 1.2 s stateless at sf0.1) even though a new_id's

@@ -288,60 +288,6 @@ def purchase_signup_interval_join(
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Same running per-user totals as :func:`running_user_totals`, on the
-    Spark 4 ``transformWithStateInPandas`` API (StatefulProcessor +
-    typed value state) — the modernized stateful surface: explicit state
-    lifecycle (init/close), per-state TTL support, and the RocksDB state
-    store backend. Kept alongside the ``applyInPandasWithState`` form so
-    both stateful APIs stay covered.
-
-    Requires the RocksDB state store provider (see
-    ``tests/test_streaming_tws.py`` for the conf) and ``google.protobuf``
-    for the streaming Python runner; raises at stream start when either
-    is missing (the test skips in that case rather than xfailing).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType(), False),
-            T.StructField("n_events", T.LongType(), False),
-            T.StructField("total_value", T.DoubleType(), False),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n BIGINT, total DOUBLE")
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            existing = self._totals.get() if self._totals.exists() else (0, 0.0)
-            n, total = existing
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def dedup_within_watermark(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """Stateful exact dedup on event_id with bounded state (streaming) /
     plain dropDuplicates (batch) — the two are semantically equal when

@@ -1,4 +1,4 @@
-"""ANN recall on CLUSTERED vectors (NOTES_r1 weak spot #1).
+"""ANN recall on CLUSTERED vectors.
 
 The driver's `embeddings` table is uniform random (max cosine ~0.5), so
 oracle parity proves the LSH/IVF *machinery* but says nothing about
@@ -461,8 +461,8 @@ def test_maxsim_auto_planes_policy():
 
 
 def test_maxsim_rerank_recall_at_ten_planes(spark):
-    """Recall@k at the sf1 policy choice (10 planes, VERDICT r8 item
-    4): on the clustered corpus — the serving scenario, where true
+    """Recall@k at the sf1 policy choice (10 planes): on the clustered
+    corpus — the serving scenario, where true
     neighbors are genuinely close — the sparser 10-plane buckets must
     still recover the truth baseline's neighbor set. (On random-noise
     corpora 10-plane recall is meaningless: 'neighbors' there are
@@ -610,7 +610,7 @@ def test_sq8_frozen_equals_trained_inside_range_and_clamps_outside(spark, corpor
 
 
 def test_sq8_frozen_flags_constant_dim_drift(spark):
-    """ADVICE r9 regression: a dimension whose trained range is a POINT
+    """Regression: a dimension whose trained range is a POINT
     (rng == 0) codes every value to 0, so drift there used to bypass
     n_clamped/max_overshoot entirely — the retrain signal was blind.
     Deviation from the trained lo on a constant dim must count as

@@ -32,7 +32,7 @@ def test_asof_join_golden(spark):
 
 
 def test_asof_same_source_equals_general_form(spark, sf_dir):
-    """The fused same-source as-of (one scan, one shuffle — the round-5
+    """The fused same-source as-of (one scan, one shuffle — the
     asof_signup_value plan) must return row-identical results to the
     general union+window asof_join on the events table, including the
     dedup rule (max value at the latest right time), ties, null right

@@ -266,8 +266,7 @@ def test_wordpiece_encode_matches_python_mirror(spark):
     """WordPiece vocab build + encode over random corpora equals the
     sequential python mirror exactly (vocab set, piece stream
     fingerprint, counts) — the second witness behind
-    text_wordpiece_encode's unrolled double-fold oracle (VERDICT r9
-    item 2)."""
+    text_wordpiece_encode's unrolled double-fold oracle."""
     import hashlib
 
     from hypothesis import given, settings, strategies as st

@@ -1,14 +1,16 @@
-"""Engine-surface tests: catalog overrides (P10), pandas-UDAF h-index
-(X2), view registration (S11), cache opt-in (S12)."""
+"""Engine-surface tests: catalog overrides (P10), the h-index expression
+(A9/X2), view registration (S11), cache opt-in (S12)."""
 
 from __future__ import annotations
+
+import re
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from iconic_data_science_spark import fixtures
 from iconic_data_science_spark.catalog import Catalog
 from iconic_data_science_spark.functions import h_index_from_counts
-from iconic_data_science_spark.functions.hindex import h_index_pandas_udaf
 
 
 def test_catalog_overrides_debug_toggle(spark, sf_dir):
@@ -24,12 +26,9 @@ def test_catalog_overrides_debug_toggle(spark, sf_dir):
 
 
 def test_pandas_udaf_h_index_matches_expression(spark):
+    """The built-in h-index expression against hand-computed values."""
     data = [(1, 5), (1, 4), (1, 3), (1, 2), (1, 1), (2, 10), (2, 10), (3, 0)]
     df = spark.createDataFrame(data, "author long, cit long")
-    udaf = h_index_pandas_udaf()
-    via_udaf = {
-        r.author: r.h for r in df.groupBy("author").agg(udaf("cit").alias("h")).collect()
-    }
     via_expr = {
         r.author: r.h
         for r in df.groupBy("author")
@@ -37,7 +36,7 @@ def test_pandas_udaf_h_index_matches_expression(spark):
         .select("author", h_index_from_counts("v", alias="h"))
         .collect()
     }
-    assert via_udaf == via_expr == {1: 3, 2: 2, 3: 0}
+    assert via_expr == {1: 3, 2: 2, 3: 0}
 
 
 def test_view_registration_and_sql(spark, sf_dir):
@@ -68,20 +67,19 @@ def test_driver_contract_integrity():
 
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     assert set(os_) <= set(qs), "orphan oracle entries"
-    # round 7 retired the float rows-only twins ann_ivf_kmeans and
-    # g_pagerank from the registry (exact integer twins carry the hash
-    # gate; the float operators stay, tested directly)
-    # round 8 closed the text_bpe_vocab rows-only debt: the fixed
-    # num_merges lets the oracle unroll all ten training rounds
+    # the float k-means IVF and pagerank are not registered (their
+    # exact integer twins carry the hash gate; the float operators stay,
+    # tested directly), and text_bpe_vocab's fixed num_merges lets its
+    # oracle unroll all ten training rounds
     assert set(qs) - set(os_) == {
         "a2_approx_distinct",   # HLL sketch — not exact-hashable (exact twin grain in g7_ego_indicators)
-        "mm_decode_stats",      # JPEG/GIF rows are quantized codec outputs, not replayable arithmetic (lossless twin mm_lossless_decode_stats is oracled; mm_frame_sample gained an arithmetic-replay oracle in round 5)
+        "mm_decode_stats",      # JPEG/GIF rows are quantized codec outputs, not replayable arithmetic (lossless twin mm_lossless_decode_stats is oracled; mm_frame_sample has an arithmetic-replay oracle)
     }
     for name, fn in qs.items():
         assert fn.__doc__, f"{name} has no docstring"
     # every rows-only entry must point at its exact twin / golden in its
-    # docstring (r6 verdict item 6: the registry is 100% oracled OR
-    # carries a one-line pointer to exact evidence)
+    # docstring: the registry is 100% oracled OR carries a one-line
+    # pointer to exact evidence
     twin_pointer = {
         "a2_approx_distinct": "countDistinct",
         "mm_decode_stats": "mm_lossless_decode_stats",
@@ -97,9 +95,8 @@ def test_driver_contract_integrity():
 # oracle passes the gate (the eval_judge_agreement kappa lesson,
 # 38f4f04). Every entry therefore names its SECOND WITNESS: an
 # independent pure-python model test (module, test function) that
-# exists and re-derives the same numbers from scratch. VERDICT r9
-# item 2 made this a registry-level contract like the rows-only
-# twin-pointer above.
+# exists and re-derives the same numbers from scratch, a registry-level
+# contract like the rows-only twin-pointer above.
 UNROLLED_ORACLE_MIRRORS = {
     "text_bpe_vocab": ("tests.test_bpe", "test_bpe_train_matches_reference"),
     "text_bpe_encode": ("tests.test_bpe", "test_bpe_encode_matches_reference"),
@@ -128,9 +125,8 @@ UNROLLED_ORACLE_MIRRORS = {
     "eval_judge_agreement": ("tests.test_properties", "test_judge_agreement_matches_counter_model"),
     "pii_t_closeness": ("tests.test_properties", "test_t_closeness_matches_fraction_model"),
     "pii_release_report": ("tests.test_properties", "test_t_closeness_matches_fraction_model"),
-    # beyond the VERDICT-named set: further replay-style oracles whose
-    # independent witnesses already existed (mapped here so the
-    # contract covers them) or were added in round 10 (KMV)
+    # further replay-style oracles whose independent witnesses live
+    # beside other tests (mapped here so the contract covers them)
     "ev_kmv_distinct": ("tests.test_properties", "test_kmv_distinct_matches_python_model"),
     "ev_kmv_overlap": ("tests.test_properties", "test_kmv_distinct_matches_python_model"),
     "ev_kmv_sliding": ("tests.test_properties", "test_kmv_distinct_matches_python_model"),
@@ -210,8 +206,8 @@ def test_catalog_validate(spark, sf_dir, tmp_path):
 
 
 def test_session3_queries_partition_invariant(spark, sf_dir):
-    """Every session-3 query must hash identically under a different
-    shuffle-partition count (7 vs the session's 32) — results may never
+    """Each of these retrieval, sampling and rollup queries must hash
+    identically under a different shuffle-partition count (7 vs the session's 32) — results may never
     depend on physical partitioning (the determinism playbook check)."""
     import __spark_entry__ as entrymod
 
@@ -292,3 +288,35 @@ def test_ensure_engine_conf_fails_loudly_on_correctness_keys():
     aqe_locked = types.SimpleNamespace(conf=_StubConf({"spark.sql.adaptive.enabled"}))
     ensure_engine_conf(aqe_locked)
     assert aqe_locked.conf.values["spark.sql.session.timeZone"] == "UTC"
+
+
+# Records of the retired round driver. They are gone from the tree (git
+# history keeps them), so a comment naming one points nowhere; this
+# module is skipped because it spells the patterns out.
+_RECORD_NAME = re.compile(
+    r"\b(?:VERDICT|ADVICE)\b"
+    r"|\b(?:NOTES|BENCH|CORRECTNESS|PERF|VERIFY|OPTIMIZATION)_r\w*"
+    r"|\bparity_(?:timing|hostile)_r\w*"
+    r"|\bplans/r\w*"
+)
+
+
+def test_no_dangling_record_references():
+    """No tracked .py file, README.md or the verify skill names a record
+    file that does not exist."""
+    import subprocess
+
+    root = Path(__file__).resolve().parent.parent
+    tracked = subprocess.run(
+        ["git", "ls-files", "*.py", "README.md", ".claude/skills/verify/SKILL.md"],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    dangling = [
+        f"{rel}:{n}: {m.group(0)}"
+        for rel in tracked
+        if root / rel != Path(__file__).resolve()
+        for n, line in enumerate((root / rel).read_text().splitlines(), 1)
+        for m in _RECORD_NAME.finditer(line)
+        if not any(root.glob(m.group(0) + "*"))
+    ]
+    assert not dangling, dangling

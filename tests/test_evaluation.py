@@ -55,7 +55,7 @@ def test_pass_at_k_matches_comb_mirror(spark):
 
 
 def test_pass_at_k_envelope_guard(spark):
-    """ADVICE r9 regression: HumanEval-scale (n, k) pushes perm(n, k)
+    """Regression: HumanEval-scale (n, k) pushes perm(n, k)
     past int64 and Spark's long multiply wraps SILENTLY — the operator
     must raise on rows outside the exact envelope (k·log2(n) > 52), not
     return a wrapped pass_milli. Inside the envelope at the same n it

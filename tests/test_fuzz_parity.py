@@ -6,9 +6,9 @@ docs, repeated separators, all-duplicate corpora, adversarial token
 collisions); here the corpus itself is the fuzz input. Any mismatch is
 a real cross-engine semantics bug, not a flaky fixture.
 
-Long gate: skipped unless SPARK_GRAFT_FULL_GATES=1 (VERDICT r10 item 2 —
-the hypothesis soak pushed the default ``pytest tests/`` run past the
-verify window; the builder's round-close sets the flag).
+Long gate: skipped unless SPARK_GRAFT_FULL_GATES=1, because the
+hypothesis soak pushes the default ``pytest tests/`` run past the verify
+window.
 """
 
 from __future__ import annotations
@@ -32,8 +32,8 @@ from .oracle_utils import run_parity
 SF_SRC = "/root/testdata/sf0.001"
 
 # Soak multiplier: SPARK_GRAFT_FUZZ_MULT=4 runs every fuzz gate at 4x
-# the default example count (used for round-close deep soaks; default
-# keeps the suite fast).
+# the default example count, for deep soaks; the default keeps the
+# suite fast.
 _MULT = max(1, int(os.environ.get("SPARK_GRAFT_FUZZ_MULT", "1")))
 
 
@@ -52,14 +52,14 @@ DOC_QUERIES = [
     "text_inverted_index",
     "select_token_budget",
     "corpus_datacard",
-    # round-5 additions: boilerplate line dedup (src0/src1 pools make the
+    # boilerplate line dedup (src0/src1 pools make the
     # per-source boilerplate cross min_docs on larger draws) and the
     # cluster-granular split (fuzzed corpora are dup-heavy by design)
     "text_line_dedup",
     "text_leakage_safe_split",
     # exact substring spans (fuzzed corpora are dup-heavy: tiny vocab)
     "dedup_dup_spans",
-    # round-5 continuation: weighted sampling (exact DECIMAL rule under
+    # weighted sampling (exact DECIMAL rule under
     # tiny/degenerate weight sums), corpus-rare bigram gate, the
     # synth→extract HTML fixpoint, the prefix-filtered exact similarity
     # join (dup-heavy fuzz corpora stress the candidate bound), and the
@@ -95,13 +95,13 @@ DOC_QUERIES = [
     # containment join: dup-heavy fuzz corpora produce real contained
     # pairs and exercise the contained-side-only prefix rule
     "dedup_containment",
-    # round-6 audits: the threshold sweep under tiny/degenerate logit
+    # the threshold sweep under tiny/degenerate logit
     # distributions (all-positive, all-negative, empty-text docs), and
     # the banding audit where dup-heavy corpora make true pairs and the
     # tiny vocab forces real signature collisions
     "text_classifier_eval",
     "dedup_minhash_eval",
-    # round-7 continuation: the C4 rule set under degenerate pages
+    # the C4 rule set under degenerate pages
     # (docs shorter than one line, every decoration branch), DSIR under
     # tiny/no-target corpora (empty bigram arrays, all-one-language
     # draws, n_keep > corpus), the cluster argmax under no-pair and
@@ -118,7 +118,7 @@ DOC_QUERIES = [
     # span corruption under degenerate docs (empty, shorter than one
     # block, offsets past the block end)
     "text_span_corruption",
-    # round-8: bigram surprisal under tiny/dup-heavy vocab (repeated
+    # bigram surprisal under tiny/dup-heavy vocab (repeated
     # bigrams drive ilog2 gaps to 0; single-token docs take the
     # degenerate union branch), the pruned-LM gate (top-k tie-break on
     # tiny distinct-bigram tables, unseen-default fold), the BPE
@@ -129,7 +129,7 @@ DOC_QUERIES = [
     "text_surprisal_gate",
     "text_bpe_vocab",
     "curation_pipeline_v9",
-    # round-8 continuation: CCNet terciles under degenerate language
+    # CCNet terciles under degenerate language
     # groups (one-doc languages, all-tie score tables where the three
     # value cuts collapse onto one score), and the URL round trip
     # (synth -> regex parse -> eTLD+1 -> gate/rollup) under fuzzed
@@ -177,7 +177,7 @@ DOC_QUERIES = [
     # the batch twin shares the map form's oracle — the fuzz gate pins
     # the distinct-word + ordered-join-back plan to the same hash
     "text_unigram_batch",
-    # round-10: the Unigram fertility rollup — fuzzed corpora give
+    # the Unigram fertility rollup — fuzzed corpora give
     # one-doc languages and dup-heavy vocabularies; every doc has >= 1
     # word so no lang group divides by zero on either engine
     "text_unigram_fertility",
@@ -188,7 +188,7 @@ DOC_QUERIES = [
     # transcripts (n_tokens counts only the system header), exact
     # turn boundaries, and shard windows over tiny corpora
     "sft_pack",
-    # round-9: the eval/RL family — pass@k's factorial folds under
+    # the eval/RL family — pass@k's factorial folds under
     # every (n, c) regime the md5 draws produce; EM/F1 under empty and
     # shorter-than-span docs (the SQuAD empty conventions on both
     # engines) and dup-heavy windows (multiset overlap != set
@@ -262,12 +262,12 @@ EMB_QUERIES = [
     "semdedup_prune",
     "dedup_embedding_cosine",
     "ann_pq_topk",
-    # round-3 additions: the full oracled ANN family
+    # the full oracled ANN family
     "ann_brute_topk",
     "ann_lsh_topk",
     "ann_lsh_multitable",
     "ann_ivf_topk",
-    # round-7 continuation: trained-PQ training + serving — fuzzed
+    # trained-PQ training + serving — fuzzed
     # corpora are smaller than the seed sample and tie-heavy (near-dup
     # and sign-flipped vectors), exactly where seeding/argmin/trunc-div
     # drift between engines would hide
@@ -278,13 +278,13 @@ EMB_QUERIES = [
     # engines must agree on the resulting cosine NULL/omit behavior)
     "ann_embedding_audit",
     "ann_rp_topk",
-    # round-8 continuation: late interaction — fuzzed corpora give
+    # late interaction — fuzzed corpora give
     # ragged last docs (n not divisible by m), near-dup token bags
     # (maxsim ties broken on neighbor id), and single-query candidate
     # sets that can be empty (both engines must hash empty)
     "ann_maxsim_topk",
     "ann_maxsim_rerank",
-    # round-9: quantized-embedding serving — fuzzed corpora hit the
+    # quantized-embedding serving — fuzzed corpora hit the
     # rng=0 constant-dimension path (code 0, exact recon), tie-heavy
     # Hamming pre-ranks (near-dup sign patterns), and single-query
     # candidate sets that can be empty (both engines must hash empty)
@@ -545,7 +545,7 @@ EV_QUERIES = [
     "ev_cms_heavy_hitters",
     "ev_value_quantiles",
     "ev_attribution",
-    # round-3 additions: temporal join, the four streaming batch-twins,
+    # temporal join, the four streaming batch-twins,
     # sessionization, funnel/retention, multi-grain, incremental rollup —
     # all read only the events table
     "asof_signup_value",
@@ -560,11 +560,11 @@ EV_QUERIES = [
     "inc_rollup_daily",
     "ev_kmv_distinct",
     "ev_kmv_overlap",
-    # round-5 additions: grid-decomposed interval-overlap join, quota
+    # grid-decomposed interval-overlap join, quota
     # admission (duplicate timestamps exercise the event_id tie-break)
     "j_interval_overlap",
     "ev_quota_sample",
-    # round-8 continuation: gap-fill — fuzzed sparse timestamps make
+    # gap-fill — fuzzed sparse timestamps make
     # single-observation types (locf==observed everywhere, interp has
     # no interior), adjacent-hour observations (zero-length gaps), and
     # duplicate hours (the sum rollup); the weighted-average interp

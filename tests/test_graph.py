@@ -190,19 +190,6 @@ def test_hierarchy_roots_sql_equals_operator(spark):
     assert loop == sql
 
 
-def test_bfs_sql_equals_operator(spark):
-    from iconic_data_science_spark.operators.graph import bfs_sql
-
-    edges = (
-        coauthor_edges(fixtures.paa_df(spark), fixtures.paper_years_df(spark))
-        .select(F.col("ego").alias("src"), F.col("alter_id").alias("dst"))
-    )
-    sources = spark.createDataFrame([(1,)], "author long")
-    loop = {(r.author, r.depth) for r in bfs(edges, sources, max_depth=6).collect()}
-    sql = {(r.author, r.depth) for r in bfs_sql(edges, sources, max_depth=6).collect()}
-    assert loop == sql
-
-
 @pytest.mark.usefixtures("arrow_strict")
 def test_bfs_local_equals_distributed(spark, monkeypatch):
     edges = (
@@ -447,7 +434,7 @@ def test_hits_int_hand_structure(spark):
 def test_hits_int_zero_iterations_rejected(spark):
     """iterations=0 has no defined fixpoint value (a is only bound in
     the loop); must raise a clear ValueError, not an AttributeError at
-    the final join (ADVICE r8)."""
+    the final join."""
     import pytest
 
     from iconic_data_science_spark.operators.graph import hits_int
@@ -469,7 +456,7 @@ def test_hits_int_matches_python_model(spark, edges):
     """Integer HITS over arbitrary small graphs equals the sequential
     python recurrence (dedup, mutual updates, greatest(Σ,1) normalizer,
     floor div, absent-side zeros) — the second witness behind
-    web_hits's unrolled-CTE oracle (VERDICT r9 item 2)."""
+    web_hits's unrolled-CTE oracle."""
     from iconic_data_science_spark.operators.graph import (
         HITS_INT_SCALE,
         hits_int,
@@ -502,7 +489,7 @@ def test_hits_int_matches_python_model(spark, edges):
 
 @pytest.mark.usefixtures("arrow_strict")
 def test_local_tier_matches_distributed_loops(spark, monkeypatch):
-    """The r10 driver-local tiers (pagerank_int / hits_int /
+    """The driver-local tiers (pagerank_int / hits_int /
     label_propagation / sssp) must be row-identical to the distributed
     loops (tiers.LOCAL_ROWS=0) on a fixture with multi-edges, a
     dangling node, asymmetric direction, and an unreachable component —
@@ -592,6 +579,17 @@ def _bfs_from_1(d):
     # job and the budget below stays the edge table's alone
     seeds = d.sparkSession.createDataFrame(pd.DataFrame({"author": [1]}))
     return graph.bfs(d, seeds, max_depth=3)
+
+
+def test_g4_bfs_seed_collects_without_a_job(spark, sf_dir, jobs_launched, monkeypatch):
+    """q_g4_bfs builds its seed frame through Arrow, so the local tier's
+    seed collect launches no job in any mag pass."""
+    import __spark_entry__ as entrymod
+
+    seeds = []
+    monkeypatch.setattr(graph, "bfs", lambda edges, sources, **kw: seeds.append(sources))
+    entrymod.queries()["g4_bfs"](spark, sf_dir)
+    assert jobs_launched(lambda: seeds[0].select("author").collect()) == 0
 
 
 # name → (local solve, input rows, input schema, distinct before gather?)

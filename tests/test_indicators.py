@@ -37,7 +37,7 @@ def test_years_collaborated_golden(spark):
 
 
 def test_ego_indicators_regimes_row_identical(spark, sf_dir):
-    """single_exchange=True (repartition(ego), the r7 default) and the
+    """single_exchange=True (repartition(ego), the default) and the
     two-phase skew-spreading form must agree row for row — the regime
     switch is a pure physical-plan choice."""
     import pandas as pd

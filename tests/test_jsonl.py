@@ -46,7 +46,7 @@ def test_jsonl_malformed_lines_quarantine(spark, tmp_path):
 
 def test_jsonl_malformed_lines_dropped_by_default(spark, tmp_path):
     """keep_corrupt=False (the default) must DROP malformed lines, not
-    surface them as all-null ghost rows (ADVICE r7)."""
+    surface them as all-null ghost rows."""
     p = tmp_path / "mixed2.jsonl"
     p.write_text(
         '{"doc_id": 1, "text": "good line"}\n'

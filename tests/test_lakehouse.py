@@ -282,7 +282,7 @@ def test_hilbert_value_matches_reference_walk(spark):
 
 
 def test_hilbert_pandas_twin_matches_expr_fold(spark):
-    """The vectorized numpy bit-walk (round 4, the fast path) must
+    """The vectorized numpy bit-walk (the fast path) must
     produce the identical integer walk as the F.aggregate expression
     fold AND the Python reference, over a random-ish grid sweep."""
     from iconic_data_science_spark.operators.lakehouse import (
@@ -304,7 +304,7 @@ def test_hilbert_pandas_twin_matches_expr_fold(spark):
 
 
 def test_hilbert_pandas_null_safe(spark):
-    """Null x or y → null index on BOTH forms (ADVICE r4: the numpy
+    """Null x or y → null index on BOTH forms (the numpy
     twin used to crash the task on to_numpy(dtype='int64') with NaN,
     turning a previously-null result into a query failure — and it is
     hilbert_chunk_stats' default path)."""
@@ -401,8 +401,8 @@ def test_compaction_plan_nextfit_rules(spark):
 def test_compaction_plan_zero_size_files_match_oracle(spark, tmp_path):
     """Zero-size files mid-stream leave the running fill at 0; the
     recurrence's ``fill > 0`` guard must not close the group there, and
-    the recursive-CTE oracle must walk the identical rule (ADVICE r3:
-    the oracle used to check the overflow unconditionally)."""
+    the recursive-CTE oracle must walk the identical rule (the oracle
+    used to check the overflow unconditionally)."""
     import duckdb
 
     from iconic_data_science_spark.operators.lakehouse import (

@@ -932,7 +932,7 @@ def test_bloom_decontaminate_superset_of_exact(spark, sf_dir):
 
 
 def test_bm25_rerank_anchor_fallbacks(spark):
-    """The hybrid rerank's two degradation rungs (ADVICE r2 + r3):
+    """The hybrid rerank's two degradation rungs:
     (a) a missing-embedding lexical winner anchors on the next
     candidate WITH an embedding; (b) when NO candidate has an
     embedding, the lexical result passes through with null cosine in
@@ -969,7 +969,7 @@ def test_bm25_rerank_anchor_fallbacks(spark):
 
 
 def test_kmv_partial_equals_unbounded_and_bounds_shuffle(spark):
-    """The map-side bounded partial (round 4) must (a) emit ≤ k·P rows
+    """The map-side bounded partial must (a) emit ≤ k·P rows
     for a hot group — the shuffle-volume bound the sketch exists for —
     and (b) leave the estimate bit-identical to the unbounded
     distinct→rank form (k-minima of per-partition k-minima == global
@@ -1013,7 +1013,7 @@ def test_kmv_partial_equals_unbounded_and_bounds_shuffle(spark):
 
 def test_kmv_large_key_parity_with_oracle(spark, tmp_path):
     """Keys beyond ~8.4e9 used to overflow Spark's BIGINT product
-    silently while DuckDB raised (ADVICE r3); the mod-before-multiply
+    silently while DuckDB raised; the mod-before-multiply
     LCG must now hash-match the oracle across the full BIGINT range."""
     import duckdb
 
@@ -1051,7 +1051,7 @@ def test_kmv_large_key_parity_with_oracle(spark, tmp_path):
 
 def test_kmv_null_keys_and_null_groups(spark, tmp_path):
     """Null keys contribute no hash on BOTH engines (the oracle's
-    WHERE key IS NOT NULL — ADVICE r4: DuckDB's DISTINCT used to keep a
+    WHERE key IS NOT NULL — DuckDB's DISTINCT used to keep a
     NULL-h row that inflated n_seen for groups below k), and a numeric
     group column with nulls must survive the pandas partial as ONE
     null group instead of crashing the Arrow cast (int64 + nulls reach
@@ -1268,7 +1268,7 @@ def test_html_extract_entities_and_empty(spark):
 
 
 # ---------------------------------------------------------------------------
-# semantic decontamination (round 5)
+# semantic decontamination
 
 
 def test_semantic_decontaminate_flags_known_neighbors(spark):
@@ -1448,7 +1448,7 @@ def test_hard_negatives_exclude_same_label_and_self(spark, sf_dir):
 
 
 def test_quota_two_phase_null_ts_matches_jvm_nulls_first(spark):
-    """ADVICE r5 pin: a NULL ts reaches the two-phase partial as pandas
+    """Pin: a NULL ts reaches the two-phase partial as pandas
     NaT (unordered comparisons) — the partial's sort key must mirror the
     JVM single-phase NULLS FIRST order so the pinned row-identical
     contract holds even with null timestamps."""
@@ -1726,8 +1726,8 @@ def test_span_corruption_hand_rules(spark):
     assert rebuilt == toks
     # masked fraction in the T5 ballpark on full blocks (1..3 of 20)
     assert r.n_masked == sum(len(v) for v in spans.values())
-    # degenerate docs: nothing masked, input == original (ADVICE r7:
-    # the old `A and B or True` form was vacuous — pin exact values)
+    # degenerate docs: nothing masked, input == original (the old
+    # `A and B or True` form was vacuous — pin exact values)
     assert out[2].n_spans == 0 and out[2].n_masked == 0
     assert out[2].input_text == "a b" and out[2].targets_text == ""
     assert out[3].n_tokens == 0 and out[3].n_spans == 0 and out[3].input_text == ""

@@ -559,7 +559,7 @@ def test_mad_anomaly_hand_series(spark):
     assert r0["mad"] == 1
 
 
-# --- ADVICE r5 regression pins ---------------------------------------------
+# --- regression pins -------------------------------------------------------
 
 
 def test_temperature_sample_large_budget_not_empty(spark):
@@ -614,7 +614,7 @@ def test_kmv_sliding_delimiter_in_event_type(spark, sf_dir):
     assert piped == {(f"{t}|x", w): v for (t, w), v in plain.items()}
 
 
-# --- distributed classifier training (round 6) ------------------------------
+# --- distributed classifier training -----------------------------------------
 
 
 def test_trainer_learns_separable_rule(spark):
@@ -924,7 +924,7 @@ def test_unimax_sample_matches_expected_rates(spark, sf_dir):
 
 
 def test_unimax_and_temperature_nondefault_id_col(spark, sf_dir):
-    """Regression (ADVICE r7): a non-default id_col used to raise an
+    """Regression: a non-default id_col used to raise an
     unresolved-column AnalysisException because the keep filter hashed
     id_col after the frame had renamed it to doc_id. Renamed inputs
     must produce the exact same kept set (the hash is over the values,
@@ -962,7 +962,7 @@ def test_unimax_and_temperature_nondefault_id_col(spark, sf_dir):
 
 
 def test_trainer_local_tier_matches_distributed(spark):
-    """The r10 driver-local trainer tier must be row-identical to the
+    """The driver-local trainer tier must be row-identical to the
     distributed epochs (local_train_pairs=None) on corpora exercising
     the replica's hard cases: duplicate doc ids (dup labels share the
     merged doc's margin and multiply the gradient), NULL labels (never

@@ -6,13 +6,14 @@ The eight queries the perfbench workloads run form an always-on smoke
 subset. The queries whose operators choose a tier (``operators/tiers.py``)
 also run, always, under each forced distributed tier: the broadcast loop
 (``LOCAL_ROWS=0``) and the shuffle loop (``LOCAL_ROWS=0,
-BROADCAST_ROWS=0``), so every tier is hash-gated on the same data. AQE
-may still broadcast on its own; the gate checks results, not plans.
-The full sweep is a long gate: skipped unless
-SPARK_GRAFT_FULL_GATES=1 (VERDICT r10 item 2 — the 254-query sweep
-pushed the default ``pytest tests/`` run past the verify window; the
-full-catalog evidence also lands in the committed parity_timing_r*.json
-/ parity_hostile_r*.json sweeps).
+BROADCAST_ROWS=0``), so every tier is hash-gated on the same data. The
+shuffle case also turns off the planner's own broadcasts (both
+auto-broadcast thresholds at -1), since the loops persist their frames
+with exact sizes under the engine's 64 MB threshold and would otherwise
+still be planned as broadcast-hash joins.
+The full 254-query sweep is a long gate: skipped unless
+SPARK_GRAFT_FULL_GATES=1, because it pushes the default
+``pytest tests/`` run past the verify window.
 """
 
 from __future__ import annotations
@@ -57,9 +58,16 @@ TIERED = [
     "ann_ivfpq_topk",
 ]
 
+# tier → (budgets patched in operators/tiers.py, session conf)
 FORCED_TIERS = {
-    "broadcast": {"LOCAL_ROWS": 0},
-    "shuffle": {"LOCAL_ROWS": 0, "BROADCAST_ROWS": 0},
+    "broadcast": ({"LOCAL_ROWS": 0}, {}),
+    "shuffle": (
+        {"LOCAL_ROWS": 0, "BROADCAST_ROWS": 0},
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        },
+    ),
 }
 
 full_gate = pytest.mark.skipif(
@@ -77,9 +85,20 @@ def test_smoke_query_matches_oracle(spark, sf_dir, name):
 @pytest.mark.parametrize("tier", sorted(FORCED_TIERS))
 @pytest.mark.parametrize("name", TIERED)
 def test_forced_tier_matches_oracle(spark, sf_dir, monkeypatch, name, tier):
-    for budget, rows in FORCED_TIERS[tier].items():
+    budgets, conf = FORCED_TIERS[tier]
+    for budget, rows in budgets.items():
         monkeypatch.setattr(tiers, budget, rows)
-    problems = run_parity(spark, sf_dir, entrymod.queries()[name], entrymod.oracle_sql()[name])
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        problems = run_parity(spark, sf_dir, entrymod.queries()[name], entrymod.oracle_sql()[name])
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     assert not problems, f"{name} [{tier}]: " + "; ".join(problems)
 
 

@@ -178,7 +178,7 @@ def test_corpus_shuffle_no_global_window(spark, sf01):
 
 
 def test_kmeans_int_update_round_is_join_free(spark, sf01):
-    """r6 verdict item 2: the Lloyd centroid update must NOT re-join the
+    """The Lloyd centroid update must NOT re-join the
     corpus to itself to recover the quantized vectors — the argmin
     expression already reads ``q``, so one scan feeds the groupBy(c_id)
     directly. Pin: zero joins of any kind in the update round's plan,
@@ -215,11 +215,11 @@ EXCHANGE_BUDGET = {
     "g3_personal_net": 6,
     "g1_coauthor_edges": 5,
     "q1_pricing_summary": 1,
-    # r7: single-exchange regime (repartition(ego) feeds both aggs) +
+    # single-exchange regime (repartition(ego) feeds both aggs) +
     # collect_list-distinct for n_alter_countries (no Expand): pair
     # self-join's 2 + the one ego repartition
     "g7_ego_indicators": 3,
-    # r10: array-native verify (candidate pair joins its two shingle
+    # array-native verify (candidate pair joins its two shingle
     # arrays, |A∩B| in-row) replaced the exploded posting self-join +
     # three aggregate/join steps: measured 1 shuffle (the candidate
     # distinct; everything else broadcasts at test scale); budget 8
@@ -228,14 +228,14 @@ EXCHANGE_BUDGET = {
     "dedup_minhash_lsh": 8,
     "dedup_ngram_jaccard": 3,
     "dedup_clusters": 0,
-    # r10: posexplode -> groupBy(doc,word) -> groupBy(doc) (2 shuffles of
+    # posexplode -> groupBy(doc,word) -> groupBy(doc) (2 shuffles of
     # the posting table) rewritten as one in-row run-grouping pass over
     # the sorted (word,pos) pairs — doc_id is the input row grain, so the
     # regroup only reassembled rows. 2 Exchange -> 0.
     "text_inverted_index": 0,
     "decontaminate_ngram": 2,
     "text_bm25_topk": 5,
-    # r10: signature computed in-row (_lsh_bucket_expr) — the
+    # signature computed in-row (_lsh_bucket_expr) — the
     # posexplode+plane-join+two-aggregation subtree (2 exchanges per
     # call, triplicated by the three consumers of e) is gone; what
     # remains is the pair join + the pruned-id distinct + the final
@@ -243,28 +243,28 @@ EXCHANGE_BUDGET = {
     # all-SMJ scale shape)
     "semdedup_prune": 4,
     "ann_pq_topk": 3,
-    # r10: array-native cross-side verify (measured 1; 8 admits the
+    # array-native cross-side verify (measured 1; 8 admits the
     # all-SMJ scale shape — see dedup_minhash_lsh)
     "dedup_incremental": 8,
     "profile_conversion": 5,
     "g4_bfs": 0,
     "q9_product_profit": 1,
-    # r10: EXISTS/NOT EXISTS as order-level window counts over ONE
+    # EXISTS/NOT EXISTS as order-level window counts over ONE
     # pair-grain pass — 6 exchanges + 2 SMJs + 3 lineitem scans became
     # the repartition(l_orderkey) + the final per-supplier groupBy
     "q21_waiting_suppliers": 2,
-    # round-3 additions: KMV = (group,hash) distinct + per-group rank;
+    # KMV = (group,hash) distinct + per-group rank;
     # z-order = map-side arithmetic + ONE per-chunk partial agg;
     # CDC = in-row HOF chunking + ONE chunk_md5 window for n_docs_sharing
-    # (r10: the groupBy+join-back form re-evaluated the per-position
+    # (the groupBy+join-back form re-evaluated the per-position
     # Horner-hash Generate subtree twice — 2 Exchange + BroadcastExchange
-    # -> 1 Exchange, sf0.1 bench 3.9 -> 1.9 s)
+    # -> 1 Exchange, 3.9 -> 1.9 s at sf0.1)
     "ev_kmv_distinct": 2,
     "lh_zorder_stats": 1,
     "lh_hilbert_stats": 1,
     "lh_compaction_plan": 2,  # inventory agg + applyInPandas group
     "text_cdc_chunks": 1,
-    # round-4 additions (budgeted in round 5): IVFPQ = centroid assign
+    # IVFPQ = centroid assign
     # + PQ-code agg + cell-pruned candidate join + topk; curation v3 is
     # the full exact→gates→fuzzy composition (deliberately the most
     # shuffle-heavy pipeline in the catalog); bloom decontamination is
@@ -276,7 +276,7 @@ EXCHANGE_BUDGET = {
     "decontaminate_bloom": 4,
     "ev_kmv_overlap": 4,
     "text_bm25_rerank": 1,
-    # round-5 additions: interval grid join = one (key,cell) equi-join
+    # interval grid join = one (key,cell) equi-join
     # (0 at sf0.01 where AQE broadcasts the small side; 2 allows the
     # sort-merge plan at scale); line dedup = freq agg + reassembly +
     # n_lines join (strike is broadcast); leakage split = pair build is
@@ -290,7 +290,7 @@ EXCHANGE_BUDGET = {
     "dedup_dup_spans": 2,
     "mm_phash_neardup": 1,
     "asof_signup_value": 1,
-    # round-5 continuation: weighted sample = the ONE 1-row W_total
+    # weighted sample = the ONE 1-row W_total
     # aggregate (the keep filter itself is map-side); rare bigram =
     # corpus bigram count + per-doc regroup (dictionary probe is a
     # broadcast); html extract is pure per-row expressions — zero.
@@ -303,7 +303,7 @@ EXCHANGE_BUDGET = {
     "ann_hard_negatives": 2,
     "decontaminate_bloom_inrow": 3,
     "sample_group_k": 1,
-    # round-5 continuation, second wave: mix rates = ONE language-grain
+    # mix rates = ONE language-grain
     # aggregate (the stats table is checkpointed, so derived frames add
     # nothing); the sampler's 3 are the tiny rate-table aggregates — the
     # corpus itself filters map-side behind a broadcast; hashed tf-idf =
@@ -357,7 +357,6 @@ EXCHANGE_BUDGET = {
     # MAD anomaly: hourly counts checkpointed; the rank windows share
     # one (type)-grain exchange at dimension size
     "ts_anomaly_mad": 1,
-    # round-6 additions.
     # trainer/kmeans twins: per-epoch/per-round exchanges already ran
     # behind driver-literal state (the k-means tier discipline); the
     # returned frame is a literal / a map-side argmin over checkpoints
@@ -421,7 +420,7 @@ EXCHANGE_BUDGET = {
     # the gate semi-join (training's per-epoch exchanges already ran
     # behind the literal weights)
     "curation_pipeline_v7": 5,
-    # round-7 addition. curriculum: decile cutoffs ride the checkpointed
+    # curriculum: decile cutoffs ride the checkpointed
     # ≤1001-row histogram (its own window/total exchanges are
     # histogram-grain), the enumeration is the seeded_shuffle recipe —
     # one corpus range-repartition + the partitions-sized counts/offsets
@@ -429,7 +428,7 @@ EXCHANGE_BUDGET = {
     # bounded rows (histogram or one-row-per-partition counts), never
     # the corpus
     "corpus_curriculum": 9,
-    # round-7 continuation. C4 cleaning is pure in-row expressions over
+    # C4 cleaning is pure in-row expressions over
     # the synthesized page (split/filter/rejoin + page-flag scans): the
     # 100 TB posture is one map pass fused with the scan — zero
     # exchanges, like text_gopher_flags/text_normalize
@@ -470,7 +469,6 @@ EXCHANGE_BUDGET = {
     "mix_unimax_sample": 0,
     # span corruption: pure in-row block arithmetic — one map pass
     "text_span_corruption": 0,
-    # round-8 additions.
     # JL-under-LSH: projection + in-row bucket bits compose with the
     # scan; visible exchanges are the bucket equi-join (broadcast at
     # sf0.01 -> 1; budget 3 admits the sort-merge shape at scale:
@@ -546,7 +544,6 @@ EXCHANGE_BUDGET = {
     # the shard window (per-shard prefix sum — shards scale out
     # independently)
     "sft_pack": 1,
-    # round-9 additions.
     # SQ8 coding: bounds collected eagerly as plan literals; the
     # RETURNED plan is a pure in-row code+recon+err2 map — zero
     # exchanges (the 4x-smaller artifact composes with the scan)
@@ -590,7 +587,6 @@ EXCHANGE_BUDGET = {
     "pii_k_anonymity": 2,
     # release summary: the audit's 2 + the one-row rollup
     "pii_anonymity_summary": 3,
-    # round-10 additions.
     # t-closeness: record-grain cell aggregate, then the three window
     # marginals + final rollup ride the DOMAIN-BOUNDED cell table
     # (measured 2 at sf0.01 — Spark chains compatible windows); budget
@@ -608,9 +604,9 @@ EXCHANGE_BUDGET = {
 }
 
 
-# Parquet-scan budgets (r10 optimization round): every scan is a full
-# input pass at scale, so the single-pass shapes adopted this round are
-# pinned like the exchange budgets. The trained-PQ queries fuse all m
+# Parquet-scan budgets: every scan is a full input pass at scale, so the
+# single-pass shapes are pinned like the exchange budgets. The trained-PQ
+# queries fuse all m
 # subspace assignments into one corpus scan; the PQ/IVF seed tables and
 # the g8 edge set are localCheckpointed once (their consumers read the
 # materialized table, not the parquet input); multitable LSH computes
@@ -648,8 +644,8 @@ def test_exchange_count_within_budget(spark, sf01, name):
 
 
 def test_rp_lsh_is_equi_join_not_nested_loop(spark, sf01):
-    """The point of composing JL under the hyperplane generator (r7
-    verdict item 2): the candidate join must be a hash/merge EQUI-join
+    """The point of composing JL under the hyperplane generator: the
+    candidate join must be a hash/merge EQUI-join
     on the bucket key — never a nested-loop over query x corpus (that
     is `ann_rp_topk`, kept only as the truth baseline)."""
     df = entrymod.queries()["ann_rp_lsh_topk"](spark, sf01)

@@ -88,7 +88,7 @@ def test_audit_is_exact_and_partition_invariant(spark, sf_dir):
 
 
 def test_null_and_sentinel_string_stay_distinct(spark):
-    """Regression (ADVICE r9): a genuine string sensitive value ' null'
+    """Regression: a genuine string sensitive value ' null'
     must NOT merge with a NULL sensitive value — the old string-sentinel
     coalesce undercounted n_sensitive to 1 here; the (distinct + null
     indicator) arithmetic counts 2."""

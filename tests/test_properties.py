@@ -649,10 +649,11 @@ def test_sq8_codes_match_python_model(spark, vecs):
         assert list(r.codes) == codes and r.err2 == err2
 
 
-# --- second-witness mirrors for unrolled-oracle queries (VERDICT r9
-# item 2: wherever the DuckDB oracle REPLAYS the engine's arithmetic,
-# the hash gate proves cross-engine agreement, not correctness — the
-# kappa lesson. Each mirror below is an independent pure-python model
+# --- second-witness mirrors for unrolled-oracle queries (wherever the
+# DuckDB oracle REPLAYS the engine's arithmetic, the hash gate proves
+# cross-engine agreement, not correctness — the eval_judge_agreement
+# kappa bug of 38f4f04 passed it. Each mirror below is an independent
+# pure-python model
 # of the same algorithm; the registry-level inventory lives in
 # tests/test_engine_surface.py::test_unrolled_oracle_queries_have_python_mirrors.)
 

@@ -128,83 +128,6 @@ def test_jsonl_roundtrip(spark, tmp_path):
         (1, "alpha", (1, 2)), (2, "beta", ())}
 
 
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    df = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "id bigint, v string")
-    p = str(tmp_path / "t_orc")
-    sinks.write_orc(df, p)
-    back = sinks.read_orc(spark, p).filter("id = 7")
-    assert [r.v for r in back.collect()] == ["v7"]
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "EqualTo(id,7" in plan
-
-
-def test_morton_code_matches_model(spark):
-    def model(a, b, bits=16):
-        out = 0
-        for i in range(bits):
-            out |= ((a >> i) & 1) << (2 * i)
-            out |= ((b >> i) & 1) << (2 * i + 1)
-        return out
-
-    rows = [(a, b) for a in (0, 1, 5, 255, 40000) for b in (0, 3, 17, 65535)]
-    df = spark.createDataFrame(rows, "a long, b long")
-    got = df.select("a", "b", sinks.morton_code("a", "b").alias("z")).collect()
-    for r in got:
-        assert r.z == model(r.a, r.b), (r.a, r.b)
-
-
-def test_zordered_write_clusters_both_columns(spark, tmp_path):
-    import itertools
-
-    rows = [(x, y) for x, y in itertools.product(range(64), range(64))]
-    df = spark.createDataFrame(rows, "x long, y long").repartition(8)
-    p = str(tmp_path / "zorder")
-    sinks.write_zordered_parquet(df, p, ("x", "y"), bits=6, num_files=16)
-    back = spark.read.parquet(p)
-    assert back.count() == 64 * 64
-    # per-file min/max spans must be narrow on BOTH columns: with a
-    # z-curve layout each file covers a tile, not a full-range stripe
-    import os
-    from collections import defaultdict
-
-    spans = []
-    for f in os.listdir(p):
-        if not f.endswith(".parquet"):
-            continue
-        pdf = spark.read.parquet(os.path.join(p, f)).toPandas()
-        if len(pdf) == 0:
-            continue
-        spans.append(((pdf.x.max() - pdf.x.min()), (pdf.y.max() - pdf.y.min())))
-    assert len(spans) >= 4
-    # every file must span less than the full 0..63 range on x AND on y
-    # (a single-column sort would give full-range spans on the trailing
-    # column in every file)
-    assert all(sx < 63 or sy < 63 for sx, sy in spans)
-    avg_x = sum(s[0] for s in spans) / len(spans)
-    avg_y = sum(s[1] for s in spans) / len(spans)
-    assert avg_x < 48 and avg_y < 48
-
-
-def test_geocode_retry_policy():
-    from iconic_data_science_spark.sources.enrich import with_retries
-
-    calls = {"n": 0}
-    sleeps: list[float] = []
-
-    def flaky(addr):
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise ConnectionError("transient")
-        return ("ro", "bucharest")
-
-    fn = with_retries(flaky, max_attempts=3, backoff_s=0.5, sleep_fn=sleeps.append)
-    assert fn("str. x") == ("ro", "bucharest")
-    assert sleeps == [0.5, 1.0]  # exponential backoff, injectable sleep
-    # permanent failure -> enrichment miss, not an abort
-    always = with_retries(lambda a: 1 / 0, max_attempts=2, sleep_fn=sleeps.append)
-    assert always("y") == (None, None)
-
-
 def test_geocode_cached_only_calls_transport_for_misses(spark):
     from iconic_data_science_spark.sources.enrich import geocode_cached
 
@@ -251,33 +174,6 @@ def test_jdbc_roundtrip_embedded_derby(spark):
     )
     assert part.rdd.getNumPartitions() == 4
     assert part.count() == 100
-
-
-def test_compact_parquet_roundtrip(spark, tmp_path):
-    from iconic_data_science_spark.sources.sinks import compact_parquet
-
-    p = str(tmp_path / "frag")
-    # fragment: 64 tiny files
-    spark.range(10_000).selectExpr("id", "id % 7 AS k").repartition(64).write.parquet(p)
-    before = spark.read.parquet(p)
-    rows_before = sorted(r["id"] for r in before.collect())
-    stats = compact_parquet(spark, p, target_file_bytes=10**9)
-    assert stats["files_before"] == 64
-    assert stats["files_after"] == 1
-    after = spark.read.parquet(p)
-    assert sorted(r["id"] for r in after.collect()) == rows_before
-    assert dict(after.dtypes) == dict(before.dtypes)
-
-
-def test_compact_parquet_target_sizing(spark, tmp_path):
-    from iconic_data_science_spark.sources.sinks import compact_parquet
-
-    p = str(tmp_path / "frag2")
-    spark.range(50_000).write.mode("overwrite").parquet(p)
-    # tiny target -> multiple output files, ceil(bytes/target)
-    stats = compact_parquet(spark, p, target_file_bytes=50_000)
-    import math
-    assert stats["files_after"] == max(1, math.ceil(stats["bytes"] / 50_000))
 
 
 def test_catalog_memo_invalidates_on_rewrite(spark, tmp_path):

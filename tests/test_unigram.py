@@ -216,7 +216,7 @@ def test_unigram_train_matches_python_em_mirror(spark):
     """Distributed Viterbi-EM training over random corpora equals the
     sequential python mirror exactly — seed, both EM rounds, prune,
     default costs (the second witness behind text_unigram_vocab's
-    unrolled-CTE oracle; VERDICT r9 item 2)."""
+    unrolled-CTE oracle)."""
     from hypothesis import given, settings, strategies as st
 
     @settings(max_examples=8, deadline=None)
@@ -243,7 +243,7 @@ def test_unigram_train_matches_python_em_mirror(spark):
 
 
 def test_local_training_tier_matches_distributed(spark):
-    """The r10 driver-local training tier must equal the distributed
+    """The driver-local training tier must equal the distributed
     EM rounds (local_train_words=None) — seed ties, viterbi ties,
     prune, default costs — on corpora exercising all of them."""
     corpora = [

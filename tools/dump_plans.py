@@ -1,5 +1,5 @@
 """Dump .explain("formatted") for a comma-separated list of queries()
-names to plans/<round>/<query>_<tag>.txt.  Usage:
+names to plans/<query>_<tag>.txt at the repo root (git-ignored).  Usage:
 
     python tools/dump_plans.py <tag> <name,name,...>
 
@@ -32,7 +32,7 @@ def main() -> None:
     if unknown:
         sys.exit(f"not in queries(): {unknown}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join("/root/repo", "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r11"))
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name=f"ids-plan-dump-{tag}")
 

@@ -1,4 +1,4 @@
-"""G3 mega-EGO skew probe: plain vs salted pair build (r5 verdict #5).
+"""G3 mega-EGO skew probe: plain vs salted pair build.
 
 The mega-PAPER probe (g3_skew_probe.py) covers the fan-out the
 weight threshold kills; this one builds the case that SURVIVES into the

@@ -4,13 +4,13 @@ given SF and record per-query wall time + pass/fail.  Usage:
     python tools/parity_timing.py [sf_dir] [out_json] [only_csv]
 
 ``only_csv`` (optional) restricts the run to a comma-separated subset of
-query names — subset probes MUST write to their own out_json, never over
-a full-catalog artifact (r6 lesson: the end-of-round snapshot clobbered
-the 206/206 artifact with a 28-query partial).
+query names — subset probes MUST write to their own out_json, so a
+partial run never overwrites a full-catalog result.
 
-This is a builder-side diagnostic (the real gate is the driver's
-CORRECTNESS_r{N}.json); it exists to (a) pre-validate all queries at the
-driver's sf0.01 before the round closes and (b) measure per-query cost.
+A diagnostic beside the oracle gates in ``tests/test_oracle_parity.py``:
+it (a) pre-validates every query against its oracle at the driver's
+sf0.01 in one process and (b) measures per-query cost. Its JSON output
+is git-ignored.
 End-to-end performance is measured by ``python3 perfbench/run.py
 --workload ... --seed N --seconds 10 --trace {0,1}``, not here.
 """
@@ -37,9 +37,8 @@ def main() -> int:
     # hostile session (local[7], 13 shuffle partitions, non-UTC session
     # TZ — none matching the dev conf) to prove every hash invariant to
     # parallelism, partition count, and timezone: the property the
-    # driver's unknown conf actually tests. Output goes to
-    # parity_hostile_r{N}.json as a committed artifact (r6 lesson:
-    # sweeps recorded as NOTES prose aren't evidence).
+    # driver's unknown conf actually tests. Pass a separate out_json
+    # (e.g. parity_hostile.json) so the two sweeps stay side by side.
     if os.environ.get("SPARK_GRAFT_HOSTILE") == "1":
         spark = get_spark(
             app_name="parity-timing-hostile",
