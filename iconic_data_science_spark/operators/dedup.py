@@ -122,6 +122,19 @@ def shingle_table(
 SHINGLE_W = 1_000_003  # Horner weight for composing token hashes
 
 
+# The token, shingle and MinHash expressions below are built as SQL
+# text, one ``F.expr`` (or one ``selectExpr``) each: a Python-lambda
+# higher-order function costs about 91 py4j round trips, so the
+# 16-permutation signature array built through the Column API took
+# 1 342 round trips (190-500 ms) per call, against 3 as one SQL string.
+# Same expressions, same analyzed types.
+
+
+def _q(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def hashed_shingle_arrays(
     documents: DataFrame,
     n: int = 3,
@@ -140,21 +153,31 @@ def hashed_shingle_arrays(
     composing element_at over an inline ``transform`` re-evaluates the
     lambda per access — measured 20x SLOWER than string shingles.
     """
-    base = _token_hash_base(documents, id_col, text_col)
-    sh = F.when(
-        F.col("_nt") >= n, _horner_shingles(n)
-    ).otherwise(F.array().cast("array<long>"))
-    return base.select("doc_id", F.array_distinct(sh).alias("shingles"))
+    return _token_hash_base(documents, id_col, text_col).selectExpr(
+        "doc_id",
+        f"array_distinct(CASE WHEN _nt >= {n} THEN {_horner_sql(n)} "
+        "ELSE CAST(array() AS ARRAY<BIGINT>) END) AS shingles",
+    )
 
 
 def _token_hash_base(documents: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, _th array<long>, _nt) — per-row token-hash array, named
+    """(doc_id, _th array<long>, _nt) — per-row token-hash array (each
+    :func:`words` token's :func:`token_hash48` mod 2^31-1), named
     columns so downstream element_at hits a materialized array."""
-    toks = words(text_col)
-    th = F.transform(toks, lambda t: token_hash48(t) % MERSENNE31)
-    return documents.select(
-        F.col(id_col).alias("doc_id"), th.alias("_th"), F.size(toks).alias("_nt")
+    toks = f"split(lower({_q(text_col)}), ' ')"
+    return documents.selectExpr(
+        f"{_q(id_col)} AS doc_id",
+        f"transform({toks}, t -> "
+        f"CAST(conv(substring(md5(t), 1, 12), 16, 10) AS BIGINT) % {MERSENNE31}) AS _th",
+        f"size({toks}) AS _nt",
     )
+
+
+def _horner_sql(n: int) -> str:
+    acc = "element_at(_th, i)"
+    for k in range(1, n):
+        acc = f"({acc} * {SHINGLE_W} + element_at(_th, i + {k})) % {MERSENNE31}"
+    return f"transform(sequence(1, _nt - {n - 1}), i -> {acc})"
 
 
 def _horner_shingles(n: int) -> Column:
@@ -164,14 +187,13 @@ def _horner_shingles(n: int) -> Column:
     a generator input defeats GenerateExec's evaluate-once path and
     re-evaluates the array per emitted element, measured 80s vs 0.9s at
     sf0.1) or by a WHEN wrapper for the array-column form."""
+    return F.expr(_horner_sql(n))
 
-    def combine(i):
-        acc = F.element_at(F.col("_th"), i)
-        for k in range(1, n):
-            acc = (acc * SHINGLE_W + F.element_at(F.col("_th"), i + k)) % MERSENNE31
-        return acc
 
-    return F.transform(F.sequence(F.lit(1), F.col("_nt") - (n - 1)), combine)
+def _perm_min_sql(a: int, b: int) -> str:
+    """SQL text of one MinHash permutation minimum over the ``shingles``
+    array: ``min((a·x + b) mod p)``, null for an empty array."""
+    return f"array_min(transform(shingles, x -> ({a} * x + {b}) % {MERSENNE31}))"
 
 
 def hashed_shingle_table(
@@ -474,21 +496,11 @@ def minhash_band_sigs_from_arrays(
     measured 23–59 s vs 0.5 s at sf0.1 for the same result. A predicate
     on the generator's own output cannot be pushed below the Generate,
     so the cheap string test is also a structural pushdown barrier."""
-    perms = _lcg_params(num_perm)
-
-    def perm_min(a: int, b: int):
-        # factory closure: transform's lambda must be unary (PySpark
-        # infers HOF arity from the python signature — default args
-        # would make it look ternary)
-        return F.array_min(
-            F.transform("shingles", lambda x: (F.lit(a) * x + F.lit(b)) % MERSENNE31)
-        )
-
     carry = ["shingles"] if keep_shingles else []
-    mins = arrays.select(
+    mins = arrays.selectExpr(
         "doc_id",
         *carry,
-        *[perm_min(a, b).alias(f"_m{i}") for i, a, b in perms],
+        *[f"{_perm_min_sql(a, b)} AS _m{i}" for i, a, b in _lcg_params(num_perm)],
     )
     n_bands = num_perm // rows_per_band
     band_cols = []
@@ -499,8 +511,8 @@ def minhash_band_sigs_from_arrays(
         band_cols.append(f"{b}, concat_ws('-', {parts})")
     stack_expr = f"stack({n_bands}, {', '.join(band_cols)}) as (band, band_sig)"
     return (
-        mins.select("doc_id", *carry, F.expr(stack_expr))
-        .filter(F.col("band_sig") != "")
+        mins.selectExpr("doc_id", *carry, stack_expr)
+        .filter("band_sig != ''")
     )
 
 
@@ -1420,27 +1432,12 @@ def minhash_band_sig_array(num_perm: int = 16, rows_per_band: int = 4):
     streaming state (streaming/documents.py). Empty-shingle documents
     yield '' signatures, which match nothing (the row form filters
     band_sig != '' out of the index)."""
-    perms = _lcg_params(num_perm)
-
-    def perm_min(a: int, b: int):
-        return F.array_min(
-            F.transform("shingles", lambda x: (F.lit(a) * x + F.lit(b)) % MERSENNE31)
-        )
-
-    mins = [perm_min(a, b) for _, a, b in perms]
-    n_bands = num_perm // rows_per_band
-    return F.array(
-        *[
-            F.concat_ws(
-                "-",
-                *[
-                    mins[i].cast("string")
-                    for i in range(band * rows_per_band, (band + 1) * rows_per_band)
-                ],
-            )
-            for band in range(n_bands)
-        ]
+    mins = [f"CAST({_perm_min_sql(a, b)} AS STRING)" for _, a, b in _lcg_params(num_perm)]
+    bands = (
+        f"concat_ws('-', {', '.join(mins[band * rows_per_band:(band + 1) * rows_per_band])})"
+        for band in range(num_perm // rows_per_band)
     )
+    return F.expr(f"array({', '.join(bands)})")
 
 
 def minhash_recall_eval(

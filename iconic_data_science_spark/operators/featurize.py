@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.lits import lit_longs
+from . import tiers
 
 
 def _fold(col) -> "F.Column":
@@ -318,7 +319,6 @@ def train_linear_classifier(
     lr_milli: int = 1000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    local_train_pairs: int | None = 2_000_000,
 ) -> DataFrame:
     """(feature, weight_micro) — a DISTRIBUTED pocket-perceptron trainer
     for :func:`linear_classifier_gate`, closing the train half of the
@@ -367,10 +367,17 @@ def train_linear_classifier(
     """
     spark = documents.sparkSession
     d, ep = int(dim), int(epochs)
-    pairs = (
+    # Driver-local tier (as in kmeans_int, unigram and the graph
+    # loops): the whole training state is the checkpointed
+    # (doc, feature, x) table; when it fits the driver-local budget
+    # (tiers.gather counts it on its checkpoint job), the IDENTICAL
+    # integer recurrence runs in numpy instead of paying (epochs+1) x 2
+    # serial Spark jobs.  The replica covers the full distributed
+    # semantics (duplicate doc ids, NULL labels, int64 envelope) or
+    # falls back — see _train_linear_local.
+    pairs_pdf, pairs = tiers.gather(
         hashed_features(documents, dim=d, id_col=id_col, text_col=text_col)
         .repartition("doc_id")
-        .localCheckpoint(eager=True)
     )
     labels = (
         documents.select(
@@ -379,17 +386,9 @@ def train_linear_classifier(
         .repartition("doc_id")
         .localCheckpoint(eager=True)
     )
-    # Driver-local tier (as in kmeans_int, unigram and the graph
-    # loops): the whole training state is the checkpointed
-    # (doc, feature, x) table; when it fits under ``local_train_pairs``
-    # (one cheap count on the materialized blocks), the IDENTICAL integer
-    # recurrence runs in numpy instead of paying (epochs+1) x 2 serial
-    # Spark jobs.  ``None`` skips the gate.  The replica covers the full
-    # distributed semantics (duplicate doc ids, NULL labels, int64
-    # envelope) or falls back — see _train_linear_local.
-    if local_train_pairs is not None and pairs.count() <= int(local_train_pairs):
+    if pairs_pdf is not None:
         local = _train_linear_local(
-            spark, pairs.toPandas(), labels.toPandas(), d, ep, int(lr_milli)
+            spark, pairs_pdf, labels.toPandas(), d, ep, int(lr_milli)
         )
         if local is not None:
             return local

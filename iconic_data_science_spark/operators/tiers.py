@@ -46,11 +46,18 @@ def gather(df: DataFrame) -> tuple[pd.DataFrame | None, DataFrame]:
     CollectLimit runs serial partition rounds when the limit is never
     hit, and the distributed tier would then recompute the upstream.
     """
-    rows = Observation()
-    df = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    if solve_locally(rows.get["n"]):
+    df, n = counted_checkpoint(df)
+    if solve_locally(n):
         return df.toPandas(), df
     return None, df
+
+
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` checkpointed, and its row count, observed on the
+    checkpoint's own job."""
+    rows = Observation()
+    df = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return df, rows.get["n"]
 
 
 def local_frame(spark: SparkSession, pdf: pd.DataFrame, schema: StructType | str) -> DataFrame:

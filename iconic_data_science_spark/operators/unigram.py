@@ -44,6 +44,11 @@ from pyspark.sql import functions as F
 UNIGRAM_UNK = "[UNK]"
 UNIGRAM_MAX_PIECE = 6
 UNIGRAM_MAX_WORD = 24
+# Most distinct training words the sequential local EM takes. The bound
+# caps the CPU time of its pure-Python Viterbi passes, not driver
+# memory, so it is not a tier budget of operators/tiers.py; above it the
+# seed and every EM round run as Spark jobs.
+LOCAL_TRAIN_WORDS = 5_000
 
 _STATE = "struct<c:bigint,np:bigint,key:string>"
 
@@ -304,7 +309,6 @@ def unigram_train(
     max_piece: int = UNIGRAM_MAX_PIECE,
     max_word: int = UNIGRAM_MAX_WORD,
     text_col: str = "text",
-    local_train_words: int | None = 5_000,
 ) -> list[tuple[str, int, int]]:
     """Train the unigram vocabulary; returns the sorted list of
     (piece, cost, usage).
@@ -328,21 +332,19 @@ def unigram_train(
     wf = word_counts(documents, max_word=max_word, text_col=text_col)
     # local tier (as in kmeans_int): the
     # entire training state is the distinct-word table; when it fits in
-    # ``local_train_words`` (+1 probe row), collect it once and run the
+    # LOCAL_TRAIN_WORDS (+1 probe row), collect it once and run the
     # identical seed/EM/prune sequentially — the distributed path runs
     # 5 serial jobs over a table that is tiny whenever the corpus is
-    # Zipf-shaped (31 distinct words at sf0.1). ``None`` skips the
-    # probe for corpora known to be word-diverse.
-    if local_train_words is not None:
-        probe = wf.limit(int(local_train_words) + 1).collect()
-        if len(probe) <= int(local_train_words):
-            return _unigram_train_local(
-                [(r["word"], r["cnt"]) for r in probe],
-                vocab_size,
-                seed_size,
-                em_rounds,
-                max_piece,
-            )
+    # Zipf-shaped (31 distinct words at sf0.1).
+    probe = wf.limit(LOCAL_TRAIN_WORDS + 1).collect()
+    if len(probe) <= LOCAL_TRAIN_WORDS:
+        return _unigram_train_local(
+            [(r["word"], r["cnt"]) for r in probe],
+            vocab_size,
+            seed_size,
+            em_rounds,
+            max_piece,
+        )
     wf = wf.localCheckpoint()  # consumed by the seed AND every EM round
     seed = seed_frequencies(wf, max_piece=max_piece)
     singles_rows = seed.filter(F.length("piece") == 1).collect()

@@ -22,12 +22,18 @@ explode-join intersection count on distinct sets).
 from __future__ import annotations
 
 import os
+import weakref
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import tiers
-from ..operators.dedup import hashed_shingle_arrays, minhash_band_sigs_from_arrays
+from ..operators.dedup import (
+    hashed_shingle_arrays,
+    minhash_band_sig_array,
+    minhash_band_sigs_from_arrays,
+)
 
 
 def read_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,6 +46,50 @@ def read_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "documents.parquet")
         .load(sf_dir)
     )
+
+
+@dataclass
+class _ProbeIndex:
+    """The corpus side of the probe: band rows (corpus_id, band,
+    band_sig) and doc-grain shingle arrays (corpus_id, corpus_shingles),
+    both materialized, the band-row count, and the in-row tier's
+    'band:sig' → corpus-ids bucket frame (built on first use)."""
+
+    csigs: DataFrame
+    carr: DataFrame
+    n_sigs: int
+    bucket: DataFrame | None = None
+
+    def buckets(self) -> DataFrame:
+        if self.bucket is None:
+            self.bucket = (
+                self.csigs.select(
+                    F.concat(
+                        F.col("band").cast("string"), F.lit(":"), F.col("band_sig")
+                    ).alias("_bk"),
+                    "corpus_id",
+                )
+                .groupBy("_bk")
+                .agg(F.collect_list("corpus_id").alias("_bids"))
+                .localCheckpoint()
+            )
+        return self.bucket
+
+
+def _probe_index(csigs: DataFrame, carr: DataFrame) -> _ProbeIndex:
+    """Checkpoint both corpus-side frames: every micro-batch re-executes
+    the static side's lazy plan otherwise. The band rows are counted on
+    their own checkpoint job, so counting launches no job."""
+    csigs, n_sigs = tiers.counted_checkpoint(csigs)
+    return _ProbeIndex(csigs, carr.localCheckpoint(), n_sigs)
+
+
+# The probe side derived from each standing index, keyed on the index
+# frame. A frame object is one index generation (minhash_index_build and
+# minhash_index_upsert each return a new one), so an entry lives exactly
+# as long as its generation and needs no eviction, and a later start on
+# the same index launches no job.
+_PROBE_INDEX: weakref.WeakKeyDictionary[DataFrame, _ProbeIndex] = weakref.WeakKeyDictionary()
 
 
 def stream_dedup_against_index(
@@ -61,7 +111,8 @@ def stream_dedup_against_index(
     ``dedup.minhash_index_upsert`` maintains (landing via
     ``lakehouse.write_snapshot``). The ``index`` form is the production
     steady state — the crawl loop pays the signature build once per
-    index generation, not once per stream restart, so a benchmark of
+    index generation, and the probe side derived from an index frame
+    once per frame, not once per stream restart, so a benchmark of
     the probe measures throughput against a standing index, not
     index-build time. The stream side is entirely map-side until
     the stream-static candidate join; the verify touches only candidate
@@ -73,26 +124,20 @@ def stream_dedup_against_index(
     if (corpus is None) == (index is None):
         raise ValueError("pass exactly one of corpus= or index=")
     if index is not None:
-        # Persisted-index layout: band rows repeat the shingle array, so
-        # the doc-grain array table is a doc_id-dedup away. Both frames
-        # checkpoint — every micro-batch re-executes the static side's
-        # lazy plan otherwise.
-        csigs = (
-            index.select(F.col("doc_id").alias("corpus_id"), "band", "band_sig")
-            .localCheckpoint()
-        )
-        carr = (
-            index.select(
-                F.col("doc_id").alias("corpus_id"),
-                F.col("shingles").alias("corpus_shingles"),
+        probe = _PROBE_INDEX.get(index)
+        if probe is None:
+            # Persisted-index layout: band rows repeat the shingle
+            # array, so the doc-grain array table is a doc_id-dedup away.
+            probe = _PROBE_INDEX[index] = _probe_index(
+                index.select(F.col("doc_id").alias("corpus_id"), "band", "band_sig"),
+                index.select(
+                    F.col("doc_id").alias("corpus_id"),
+                    F.col("shingles").alias("corpus_shingles"),
+                ).dropDuplicates(["corpus_id"]),
             )
-            .dropDuplicates(["corpus_id"])
-            .localCheckpoint()
-        )
     else:
         # The WHOLE corpus index materializes at build time — band sigs
-        # and shingle arrays, not just the intermediate ca: every
-        # micro-batch re-executes the static side's lazy plan, so an
+        # and shingle arrays, not just the intermediate ca: an
         # un-checkpointed csigs recomputes all num_perm corpus
         # permutations per batch (measured: ~1.5 s of the ~2.2 s batch
         # at sf0.1 was corpus-side recompute; with the index
@@ -100,17 +145,15 @@ def stream_dedup_against_index(
         # only). In production these two frames ARE the persisted index
         # table that write_snapshot maintains.
         ca = hashed_shingle_arrays(corpus, n=n).localCheckpoint()
-        csigs = (
+        probe = _probe_index(
             minhash_band_sigs_from_arrays(
                 ca, num_perm=num_perm, rows_per_band=rows_per_band
-            )
-            .select(F.col("doc_id").alias("corpus_id"), "band", "band_sig")
-            .localCheckpoint()
+            ).select(F.col("doc_id").alias("corpus_id"), "band", "band_sig"),
+            ca.select(
+                F.col("doc_id").alias("corpus_id"),
+                F.col("shingles").alias("corpus_shingles"),
+            ),
         )
-        carr = ca.select(
-            F.col("doc_id").alias("corpus_id"),
-            F.col("shingles").alias("corpus_shingles"),
-        ).localCheckpoint()
     # Size-gated IN-ROW index probe: the
     # join+dropDuplicates form pays a streaming STATE STORE for the
     # cross-band candidate dedup — measured as ~2/3 of each micro-batch
@@ -122,16 +165,13 @@ def stream_dedup_against_index(
     # and array_distinct's its candidates entirely IN-ROW — zero
     # shuffles, zero state, pure append. The whole index then sits in
     # one driver-built row, so the gate is the driver-local budget
-    # (tiers.solve_locally); above it, or for an empty index, the
-    # pipeline falls back to the shuffled join + stateful dedup
-    # unchanged. csigs is counted, not guessed: it is already
-    # checkpointed, so the count is a cached-partition scan, paid once
-    # at pipeline build.
+    # (tiers.solve_locally), read at every start; above it, or for an
+    # empty index, the pipeline falls back to the shuffled join +
+    # stateful dedup unchanged. The gate reads the band-row count that
+    # the csigs checkpoint observed when the probe side was derived.
     inter = F.size(F.array_intersect("shingles", "corpus_shingles"))
     union = F.size("shingles") + F.size("corpus_shingles") - inter
-    if tiers.solve_locally(csigs.count()):
-        from ..operators.dedup import minhash_band_sig_array
-
+    if tiers.solve_locally(probe.n_sigs):
         n_bands = num_perm // rows_per_band
         na = hashed_shingle_arrays(new_docs_stream, n=n).withColumn(
             # NAMED column: the 16-permutation signature expression must
@@ -148,17 +188,7 @@ def stream_dedup_against_index(
         # to dedup, hence no streaming state. All four joins probe the
         # SAME 'band:sig'-keyed bucket frame, so Catalyst reuses one
         # broadcast exchange per micro-batch instead of building four.
-        bucket = (
-            csigs.select(
-                F.concat(
-                    F.col("band").cast("string"), F.lit(":"), F.col("band_sig")
-                ).alias("_bk"),
-                "corpus_id",
-            )
-            .groupBy("_bk")
-            .agg(F.collect_list("corpus_id").alias("_bids"))
-            .localCheckpoint()
-        )
+        bucket = probe.buckets()
         for band in range(n_bands):
             b_ren = bucket.withColumnRenamed("_bk", f"_k{band}").withColumnRenamed(
                 "_bids", f"_ids{band}"
@@ -169,21 +199,15 @@ def stream_dedup_against_index(
                     F.lit(str(band)), F.lit(":"), F.element_at("_sigs", band + 1)
                 ),
             ).join(F.broadcast(b_ren), f"_k{band}", "left")
-        cands = F.array_distinct(
-            F.flatten(
-                F.filter(
-                    F.array(*[F.col(f"_ids{b}") for b in range(n_bands)]),
-                    lambda ids: ids.isNotNull(),
-                )
-            )
-        )
+        ids = ", ".join(f"_ids{b}" for b in range(n_bands))
+        cands = F.expr(f"array_distinct(flatten(filter(array({ids}), ids -> ids IS NOT NULL)))")
         probed = na.select(
             F.col("doc_id").alias("new_id"),
             "shingles",
             F.explode(cands).alias("corpus_id"),
         )
         return (
-            probed.join(F.broadcast(carr), "corpus_id")
+            probed.join(F.broadcast(probe.carr), "corpus_id")
             .select("corpus_id", "new_id", (inter / union).alias("jaccard"))
             .filter(F.col("jaccard") >= threshold)
         )
@@ -192,12 +216,12 @@ def stream_dedup_against_index(
         na, num_perm=num_perm, rows_per_band=rows_per_band, keep_shingles=True
     ).select(F.col("doc_id").alias("new_id"), "shingles", "band", "band_sig")
     cand = (
-        nsigs.join(csigs, ["band", "band_sig"])
+        nsigs.join(probe.csigs, ["band", "band_sig"])
         .select("corpus_id", "new_id", "shingles")
         .dropDuplicates(["corpus_id", "new_id"])
     )
     return (
-        cand.join(carr, "corpus_id")
+        cand.join(probe.carr, "corpus_id")
         .select("corpus_id", "new_id", (inter / union).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )

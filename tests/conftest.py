@@ -64,3 +64,28 @@ def jobs_launched(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def py4j_calls(spark):
+    """``py4j_calls(fn)`` runs ``fn`` and returns how many py4j round
+    trips (commands sent to the JVM) it made."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def run(fn) -> int:
+        calls = 0
+        send = client.send_command
+
+        def counting(*args, **kwargs):
+            nonlocal calls
+            calls += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            fn()
+        finally:
+            del client.send_command
+        return calls
+
+    return run

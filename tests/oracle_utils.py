@@ -9,8 +9,48 @@ before the driver sees them.
 
 from __future__ import annotations
 
+import contextlib
+
 import duckdb
 import pandas as pd
+
+from iconic_data_science_spark.operators import tiers
+
+# tier → (budgets patched in operators/tiers.py, session conf). The
+# shuffle case also turns off the planner's own broadcasts: the loops
+# persist their frames with exact sizes under the engine's 64 MB
+# threshold and would otherwise still be planned as broadcast-hash joins.
+FORCED_TIERS = {
+    "broadcast": ({"LOCAL_ROWS": 0}, {}),
+    "shuffle": (
+        {"LOCAL_ROWS": 0, "BROADCAST_ROWS": 0},
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        },
+    ),
+}
+
+
+@contextlib.contextmanager
+def forced_tier(spark, monkeypatch, tier: str):
+    """Run the block under one of the forced distributed ``FORCED_TIERS``;
+    the budgets stay patched until the test ends, the conf is restored
+    on exit."""
+    budgets, conf = FORCED_TIERS[tier]
+    for budget, rows in budgets.items():
+        monkeypatch.setattr(tiers, budget, rows)
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 TABLES = (
     "region",

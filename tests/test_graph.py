@@ -14,6 +14,8 @@ from iconic_data_science_spark.sources import gexf
 
 from pyspark.sql import functions as F
 
+from .oracle_utils import FORCED_TIERS, forced_tier
+
 
 def test_hierarchy_roots_fixture(spark):
     """FIXTURES.md §4 cases: chains, self-parent termination, multi-parent
@@ -201,6 +203,40 @@ def test_bfs_local_equals_distributed(spark, monkeypatch):
     monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
     dist = {(r.author, r.depth) for r in bfs(edges, sources, max_depth=6).collect()}
     assert local == dist
+
+
+# Seeds {1, 2}; every depth up to 3 holds at least two authors, with
+# converging paths, back edges into visited authors and one unreachable
+# pair, so each distributed round joins a multi-row frontier.
+_BFS_LAYERS = [
+    (1, 10), (1, 11), (2, 11), (2, 12),
+    (10, 20), (11, 20), (11, 21), (12, 22), (12, 23), (10, 1),
+    (20, 30), (21, 31), (22, 31), (23, 32), (21, 10),
+    (31, 40), (32, 41), (32, 23),
+    (50, 51),
+]
+
+
+@pytest.fixture
+def bfs_layers(spark):
+    """(edges, sources) of a BFS that runs four productive rounds."""
+    edges = spark.createDataFrame(_BFS_LAYERS, "src long, dst long")
+    return edges, spark.createDataFrame([(1,), (2,)], "author long")
+
+
+@pytest.mark.usefixtures("arrow_strict")
+@pytest.mark.parametrize("tier", sorted(FORCED_TIERS))
+def test_bfs_multi_round_tiers_match_local(spark, monkeypatch, bfs_layers, tier):
+    """Both distributed tiers reach the local tier's depths on a graph
+    whose frontiers hold several authors at every depth (a fault that
+    keeps one frontier row passes a one-author-frontier fixture)."""
+    edges, sources = bfs_layers
+    local = {(r.author, r.depth) for r in bfs(edges, sources, max_depth=6).collect()}
+    per_depth = pd.Series([d for _, d in local]).value_counts()
+    assert per_depth.index.max() >= 3 and (per_depth.loc[[0, 1, 2, 3]] >= 2).all()
+    with forced_tier(spark, monkeypatch, tier):
+        dist = {(r.author, r.depth) for r in bfs(edges, sources, max_depth=6).collect()}
+    assert dist == local
 
 
 @pytest.mark.usefixtures("arrow_strict")

@@ -961,13 +961,14 @@ def test_unimax_and_temperature_nondefault_id_col(spark, sf_dir):
     assert t_base == t_ren and t_base
 
 
-def test_trainer_local_tier_matches_distributed(spark):
+def test_trainer_local_tier_matches_distributed(spark, monkeypatch):
     """The driver-local trainer tier must be row-identical to the
-    distributed epochs (local_train_pairs=None) on corpora exercising
+    distributed epochs (tiers.LOCAL_ROWS=0) on corpora exercising
     the replica's hard cases: duplicate doc ids (dup labels share the
     merged doc's margin and multiply the gradient), NULL labels (never
     misclassified, never an error), a doc with no tokens (margin = bias
     only), and non-±1 label values."""
+    from iconic_data_science_spark.operators import tiers
     from iconic_data_science_spark.operators.featurize import train_linear_classifier
 
     rows = []
@@ -991,10 +992,9 @@ def test_trainer_local_tier_matches_distributed(spark):
             tuple(r)
             for r in train_linear_classifier(df, lbl, dim=32, epochs=6).collect()
         )
-        b = sorted(
-            tuple(r)
-            for r in train_linear_classifier(
-                df, lbl, dim=32, epochs=6, local_train_pairs=None
-            ).collect()
-        )
+        with monkeypatch.context() as m:
+            m.setattr(tiers, "LOCAL_ROWS", 0)
+            b = sorted(
+                tuple(r) for r in train_linear_classifier(df, lbl, dim=32, epochs=6).collect()
+            )
         assert a == b

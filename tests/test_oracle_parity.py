@@ -23,8 +23,7 @@ import os
 import pytest
 
 import __spark_entry__ as entrymod
-from iconic_data_science_spark.operators import tiers
-from .oracle_utils import run_parity
+from .oracle_utils import FORCED_TIERS, forced_tier, run_parity
 
 NAMES = sorted(entrymod.queries().keys())
 
@@ -58,18 +57,6 @@ TIERED = [
     "ann_ivfpq_topk",
 ]
 
-# tier → (budgets patched in operators/tiers.py, session conf)
-FORCED_TIERS = {
-    "broadcast": ({"LOCAL_ROWS": 0}, {}),
-    "shuffle": (
-        {"LOCAL_ROWS": 0, "BROADCAST_ROWS": 0},
-        {
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-        },
-    ),
-}
-
 full_gate = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_FULL_GATES"),
     reason="long gate suite; set SPARK_GRAFT_FULL_GATES=1 to run",
@@ -85,20 +72,8 @@ def test_smoke_query_matches_oracle(spark, sf_dir, name):
 @pytest.mark.parametrize("tier", sorted(FORCED_TIERS))
 @pytest.mark.parametrize("name", TIERED)
 def test_forced_tier_matches_oracle(spark, sf_dir, monkeypatch, name, tier):
-    budgets, conf = FORCED_TIERS[tier]
-    for budget, rows in budgets.items():
-        monkeypatch.setattr(tiers, budget, rows)
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
+    with forced_tier(spark, monkeypatch, tier):
         problems = run_parity(spark, sf_dir, entrymod.queries()[name], entrymod.oracle_sql()[name])
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert not problems, f"{name} [{tier}]: " + "; ".join(problems)
 
 

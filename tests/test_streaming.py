@@ -337,6 +337,83 @@ def test_streaming_quality_gate_equals_batch(spark, sf_dir):
     pd.testing.assert_frame_equal(_sorted_pdf(got), _sorted_pdf(batch))
 
 
+def _odd_doc_stream(spark, sf_dir):
+    from iconic_data_science_spark.streaming import documents as sd
+
+    return sd.read_document_stream(spark, sf_dir).filter(F.col("doc_id") % 2 == 1)
+
+
+def _index_probe(stream_new, index):
+    from iconic_data_science_spark.streaming import documents as sd
+
+    return sd.stream_dedup_against_index(
+        stream_new, index=index, n=3, num_perm=16, rows_per_band=4, threshold=0.5
+    )
+
+
+def test_stream_dedup_index_derived_once_per_frame(spark, sf_dir, jobs_launched, monkeypatch):
+    """A restart on the same index frame reuses its derived probe side:
+    it launches no Spark job, under either tier."""
+    from iconic_data_science_spark.operators import tiers
+    from iconic_data_science_spark.operators.dedup import minhash_index_build
+
+    docs = Catalog(spark, sf_dir).documents
+    idx = minhash_index_build(docs.filter(F.col("doc_id") % 2 == 0))
+    stream_new = _odd_doc_stream(spark, sf_dir)
+    assert jobs_launched(lambda: _index_probe(stream_new, idx)) > 0
+    assert jobs_launched(lambda: _index_probe(stream_new, idx)) == 0
+    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
+    assert jobs_launched(lambda: _index_probe(stream_new, idx)) == 0
+
+
+def test_stream_dedup_upserted_index_is_rederived(spark, sf_dir):
+    """An upsert returns a new index generation: its probe side is
+    derived afresh, and a document the upsert admitted is found."""
+    from iconic_data_science_spark.operators.dedup import (
+        minhash_index_build,
+        minhash_index_upsert,
+    )
+    from iconic_data_science_spark.streaming import documents as sd
+
+    docs = Catalog(spark, sf_dir).documents
+    gen1 = minhash_index_build(docs.filter(F.col("doc_id") % 2 == 0))
+
+    def probed(index, name):
+        got = _run_stream(spark, _index_probe(_odd_doc_stream(spark, sf_dir), index), name)
+        return {tuple(r) for r in got.collect()}
+
+    before = probed(gen1, "t_gen1")
+    # a copy, under a fresh id, of a streamed document that has shingles
+    probe_id = (
+        docs.filter((F.col("doc_id") % 2 == 1) & (F.size(F.split("text", " ")) >= 5))
+        .agg(F.min("doc_id"))
+        .first()[0]
+    )
+    copy = docs.filter(F.col("doc_id") == probe_id).withColumn("doc_id", F.lit(10**9).cast("long"))
+    gen2 = minhash_index_upsert(gen1, copy, drop_near_dups=False)
+    after = probed(gen2, "t_gen2")
+    assert sd._PROBE_INDEX[gen2] is not sd._PROBE_INDEX[gen1]
+    assert sd._PROBE_INDEX[gen2].n_sigs == sd._PROBE_INDEX[gen1].n_sigs + 4
+    assert after - before == {(10**9, probe_id, 1.0)}
+
+
+def test_stream_dedup_probe_memo_follows_index_lifetime(spark, sf_dir):
+    """The derived probe side lives exactly as long as its index frame."""
+    import gc
+
+    from iconic_data_science_spark.operators.dedup import minhash_index_build
+    from iconic_data_science_spark.streaming import documents as sd
+
+    gc.collect()
+    before = len(sd._PROBE_INDEX)
+    idx = minhash_index_build(Catalog(spark, sf_dir).documents.filter(F.col("doc_id") % 2 == 0))
+    _index_probe(_odd_doc_stream(spark, sf_dir), idx)
+    assert len(sd._PROBE_INDEX) == before + 1
+    del idx
+    gc.collect()
+    assert len(sd._PROBE_INDEX) == before
+
+
 def test_stream_dedup_fallback_path_equals_gated(spark, sf_dir, monkeypatch):
     """Above the driver-local budget the pipeline falls back to
     the shuffled join + stateful dedup; both paths must produce the

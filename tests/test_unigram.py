@@ -242,10 +242,12 @@ def test_unigram_train_matches_python_em_mirror(spark):
     check()
 
 
-def test_local_training_tier_matches_distributed(spark):
+def test_local_training_tier_matches_distributed(spark, monkeypatch):
     """The driver-local training tier must equal the distributed
-    EM rounds (local_train_words=None) — seed ties, viterbi ties,
+    EM rounds (LOCAL_TRAIN_WORDS=0) — seed ties, viterbi ties,
     prune, default costs — on corpora exercising all of them."""
+    from iconic_data_science_spark.operators import unigram
+
     corpora = [
         ["ab ab ba abc", "ca bb ab a b", "abc abc ca"],
         ["aaaa aaab aab", "ba ab aaaa"],
@@ -254,8 +256,8 @@ def test_local_training_tier_matches_distributed(spark):
     for texts in corpora:
         df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
         local = unigram_train(df, vocab_size=8, seed_size=12, em_rounds=2)
-        dist = unigram_train(
-            df, vocab_size=8, seed_size=12, em_rounds=2, local_train_words=None
-        )
+        with monkeypatch.context() as m:
+            m.setattr(unigram, "LOCAL_TRAIN_WORDS", 0)
+            dist = unigram_train(df, vocab_size=8, seed_size=12, em_rounds=2)
         assert local == dist
         assert local == _ref_unigram_train(texts, 8, 12, 2)
