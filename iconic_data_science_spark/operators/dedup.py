@@ -24,10 +24,10 @@ and summed on an exact decimal lattice.
 
 Scale posture: all shuffles key on shingle/band/bucket — high
 cardinality, well-spread. The classic hot key is a stop-shingle shared
-by everything: ``max_shingle_freq`` drops postings above a document-
-frequency cap (standard practice; also what AQE skew-join would
-otherwise fight). Signatures are fixed-width (K minhashes) regardless
-of document length.
+by everything: ``ngram_jaccard_pairs``' ``max_shingle_freq`` drops
+shingles above a document-frequency cap (standard practice; also what
+AQE skew-join would otherwise fight). Signatures are fixed-width (K
+minhashes) regardless of document length.
 """
 
 from __future__ import annotations
@@ -44,6 +44,29 @@ MERSENNE31 = 2_147_483_647  # 2^31 - 1
 # so both engines produce identical cosines. 64 dims × |x·y|≲10 →
 # ≤6.4e14, far inside int64.
 DOT_SCALE = 1_000_000_000_000.0
+
+
+def _lattice_prod_sql(x: str, y: str) -> str:
+    return f"CAST(round(CAST({x} AS double) * CAST({y} AS double) * {DOT_SCALE!r}D) AS bigint)"
+
+
+def _dot_expr(a: str, b: str) -> Column:
+    """Lattice dot product of two array columns, given as SQL text: one
+    parsed ``F.expr`` (3 py4j round trips, against 162 for the same
+    fold through Python lambdas)."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {_lattice_prod_sql('x', 'y')}), "
+        "0L, (acc, p) -> acc + p)"
+    )
+
+
+def _sqnorm_expr(v: str) -> Column:
+    """Lattice squared norm of an array column given as SQL text (the
+    :func:`_dot_expr` of ``v`` with itself)."""
+    return F.expr(
+        f"aggregate(transform({v}, x -> {_lattice_prod_sql('x', 'x')}), 0L, (acc, p) -> acc + p)"
+    )
+
 
 # Fixed universal-hash parameters (a, b) per permutation — literal so the
 # SQL oracle can embed the same table. Generated once from a seeded LCG.
@@ -84,7 +107,6 @@ def shingle_table(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """(doc_id, shingle) — distinct word n-gram shingles per document."""
     # short docs (fewer than n tokens) are FILTERED before the explode
@@ -103,20 +125,7 @@ def shingle_table(
     # dedup inside the array (map-side, per doc) instead of a global
     # .distinct(): rows (doc_id, shingle) are then unique by
     # construction, saving a full shuffle of the shingle table
-    out = base.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
-    if max_shingle_freq is not None:
-        # materialize the postings once: the df-count pass and the
-        # semi-join probe would otherwise each recompute the tokenize+
-        # explode lineage (measured ~1.6x on the sf0.1 bench)
-        out = out.localCheckpoint()
-        rare = (
-            out.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= max_shingle_freq)
-            .select("shingle")
-        )
-        out = out.join(rare, "shingle", "left_semi")
-    return out
+    return base.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
 
 
 SHINGLE_W = 1_000_003  # Horner weight for composing token hashes
@@ -201,7 +210,6 @@ def hashed_shingle_table(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """(doc_id, shingle) with 31-bit integer shingles — the default for
     the similarity-join family (the exploded posting-list form of
@@ -220,22 +228,9 @@ def hashed_shingle_table(
     # hashed_shingle_arrays: its WHEN-guarded array is re-evaluated per
     # element by GenerateExec (see _horner_shingles)
     base = _token_hash_base(documents, id_col, text_col).filter(F.col("_nt") >= n)
-    out = base.select(
+    return base.select(
         "doc_id", F.explode(F.array_distinct(_horner_shingles(n))).alias("shingle")
     )
-    if max_shingle_freq is not None:
-        # materialize the postings once: the df-count pass and the
-        # semi-join probe would otherwise each recompute the tokenize+
-        # explode lineage (measured ~1.6x on the sf0.1 bench)
-        out = out.localCheckpoint()
-        rare = (
-            out.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= max_shingle_freq)
-            .select("shingle")
-        )
-        out = out.join(rare, "shingle", "left_semi")
-    return out
 
 
 def exact_dedup(documents: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -306,21 +301,8 @@ def _pair_jaccard_arrays(witharr: DataFrame, threshold: float | None = None) -> 
     )
 
 
-def _pair_jaccard(shingles: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
-    """(id1, id2, jaccard) for id1<id2 pairs sharing ≥1 shingle (optionally
-    restricted to a candidate ``pairs`` frame)."""
-    if pairs is not None:
-        # restrict the shingle table to candidate docs BEFORE the
-        # self-join — otherwise the verify step enumerates every
-        # co-shingle pair in the corpus (Σ df²) and the LSH candidate
-        # generation saved nothing. A candidate doc keeps its full
-        # shingle set, so sizes (the union denominator) are unchanged.
-        cand_docs = (
-            pairs.select(F.col("id1").alias("doc_id"))
-            .unionByName(pairs.select(F.col("id2").alias("doc_id")))
-            .distinct()
-        )
-        shingles = shingles.join(cand_docs, "doc_id", "left_semi")
+def _pair_jaccard(shingles: DataFrame) -> DataFrame:
+    """(id1, id2, jaccard) for id1<id2 pairs sharing ≥1 shingle."""
     sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("sz"))
     s1 = shingles.select(F.col("doc_id").alias("id1"), "shingle")
     s2 = shingles.select(F.col("doc_id").alias("id2"), "shingle")
@@ -330,8 +312,6 @@ def _pair_jaccard(shingles: DataFrame, pairs: DataFrame | None = None) -> DataFr
         .groupBy("id1", "id2")
         .agg(F.count("*").alias("inter"))
     )
-    if pairs is not None:
-        inter = inter.join(pairs, ["id1", "id2"], "left_semi")
     z1 = sizes.select(F.col("doc_id").alias("id1"), F.col("sz").alias("sz1"))
     z2 = sizes.select(F.col("doc_id").alias("id2"), F.col("sz").alias("sz2"))
     return (
@@ -442,36 +422,6 @@ def ngram_jaccard_pairs(
     return _pair_jaccard_arrays(arr, threshold).filter(F.col("jaccard") >= threshold)
 
 
-def minhash_signatures(shingles: DataFrame, num_perm: int = 16) -> DataFrame:
-    """(doc_id, i, minhash) — K universal-hash minima per document.
-
-    One wide aggregation: K ``min((a_i·h+b_i) mod p)`` expressions in a
-    single groupBy pass (map-side combined), then an unpivot — instead of
-    cross-joining a K-row permutation table (which multiplies the shuffle
-    by K). Same results, 1/K the shuffled rows.
-    """
-    perms = _lcg_params(num_perm)
-    # hashed shingle tables already carry 31-bit integer shingles;
-    # string shingles hash here (same md5-fold discipline either way)
-    dt = dict(shingles.dtypes).get("shingle", "string")
-    h = (
-        F.col("shingle")
-        if dt in ("bigint", "int", "long")
-        else token_hash48(F.col("shingle")) % MERSENNE31
-    )
-    hashed = shingles.select("doc_id", h.alias("h"))
-    wide = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE31).alias(f"_m{i}")
-            for i, a, b in perms
-        ]
-    )
-    stack_expr = "stack({n}, {args}) as (i, minhash)".format(
-        n=num_perm, args=", ".join(f"{i}, _m{i}" for i, _, _ in perms)
-    )
-    return wide.select("doc_id", F.expr(stack_expr))
-
-
 def minhash_band_sigs_from_arrays(
     arrays: DataFrame, num_perm: int = 16, rows_per_band: int = 4,
     keep_shingles: bool = False,
@@ -481,11 +431,10 @@ def minhash_band_sigs_from_arrays(
 
     Each permutation minimum is ``array_min(transform(shingles, x →
     (a·x+b) mod p))`` and each band signature is the '-'-joined minima
-    in permutation order (identical strings to the posting-list path,
-    which the equivalence test pins). At scale this removes the entire
-    postings shuffle from signature generation: the first exchange in
-    the whole MinHash pipeline becomes the (band, band_sig) bucket join
-    itself.
+    in permutation order (pinned against a pure-Python MinHash in
+    tests/test_minhash_exprs.py). No postings shuffle feeds signature
+    generation: the first exchange in the whole MinHash pipeline is the
+    (band, band_sig) bucket join itself.
 
     Empty-shingle documents (fewer than n tokens) are dropped AFTER the
     stack, by ``band_sig != ''`` (their minima are all null, so
@@ -516,37 +465,12 @@ def minhash_band_sigs_from_arrays(
     )
 
 
-def lsh_candidate_pairs(signatures: DataFrame, rows_per_band: int = 4) -> DataFrame:
-    """Band the signature and bucket-join: (id1, id2) candidate pairs."""
-    banded = signatures.withColumn("band", (F.col("i") / rows_per_band).cast("int"))
-    band_sigs = (
-        banded.groupBy("doc_id", "band")
-        .agg(F.collect_list(F.struct("i", "minhash")).alias("_parts"))
-        .select(
-            "doc_id",
-            "band",
-            F.array_join(
-                F.transform(F.array_sort("_parts"), lambda x: x["minhash"].cast("string")), "-"
-            ).alias("band_sig"),
-        )
-    )
-    b1 = band_sigs.select(F.col("doc_id").alias("id1"), "band", "band_sig")
-    b2 = band_sigs.select(F.col("doc_id").alias("id2"), "band", "band_sig")
-    return (
-        b1.join(b2, ["band", "band_sig"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .distinct()
-    )
-
-
 def minhash_lsh_pairs(
     documents: DataFrame,
     n: int = 3,
     num_perm: int = 16,
     rows_per_band: int = 4,
     threshold: float = 0.5,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup join: LSH candidates, exact-Jaccard verified.
 
@@ -554,53 +478,41 @@ def minhash_lsh_pairs(
     guarantee (pairs the LSH misses are absent — the scale/accuracy
     trade every production dedup makes).
     """
-    if max_shingle_freq is None:
-        # Array-native fast path: hash every token once into the
-        # per-doc shingle array (checkpointed — the md5 work happens
-        # exactly once), compute band signatures map-side with no
-        # explode/groupBy. First exchange in the pipeline = the bucket
-        # join. The verify is array-native too:
-        # the candidate pair joins its two DISTINCT shingle arrays and
-        # computes |A∩B| in-row — same Jaccard as the exploded
-        # self-join + three aggregate/join steps it replaces (the
-        # posting-list verify re-shuffled the exploded table per
-        # candidate side; this joins only |candidates| rows).
-        arrays = hashed_shingle_arrays(documents, n=n).localCheckpoint()
-        band_sigs = minhash_band_sigs_from_arrays(
-            arrays, num_perm=num_perm, rows_per_band=rows_per_band
+    # Hash every token once into the per-doc shingle array
+    # (checkpointed — the md5 work happens exactly once) and compute
+    # band signatures map-side with no explode/groupBy: the first
+    # exchange in the pipeline is the bucket join. The verify joins
+    # each candidate pair's two DISTINCT shingle arrays and computes
+    # |A∩B| in-row, so it moves only |candidates| rows.
+    arrays = hashed_shingle_arrays(documents, n=n).localCheckpoint()
+    band_sigs = minhash_band_sigs_from_arrays(
+        arrays, num_perm=num_perm, rows_per_band=rows_per_band
+    )
+    b1 = band_sigs.select(F.col("doc_id").alias("id1"), "band", "band_sig")
+    b2 = band_sigs.select(F.col("doc_id").alias("id2"), "band", "band_sig")
+    cands = (
+        b1.join(b2, ["band", "band_sig"])
+        .filter(F.col("id1") < F.col("id2"))
+        .select("id1", "id2")
+        .distinct()
+    )
+    a1 = arrays.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("_sh1"))
+    a2 = arrays.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("_sh2"))
+    inter = (
+        cands.join(a1, "id1")
+        .join(a2, "id2")
+        .withColumn("_i", F.size(F.array_intersect("_sh1", "_sh2")))
+    )
+    return (
+        inter.select(
+            "id1",
+            "id2",
+            (
+                F.col("_i") / (F.size("_sh1") + F.size("_sh2") - F.col("_i"))
+            ).alias("jaccard"),
         )
-        b1 = band_sigs.select(F.col("doc_id").alias("id1"), "band", "band_sig")
-        b2 = band_sigs.select(F.col("doc_id").alias("id2"), "band", "band_sig")
-        cands = (
-            b1.join(b2, ["band", "band_sig"])
-            .filter(F.col("id1") < F.col("id2"))
-            .select("id1", "id2")
-            .distinct()
-        )
-        a1 = arrays.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("_sh1"))
-        a2 = arrays.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("_sh2"))
-        inter = (
-            cands.join(a1, "id1")
-            .join(a2, "id2")
-            .withColumn("_i", F.size(F.array_intersect("_sh1", "_sh2")))
-        )
-        return (
-            inter.select(
-                "id1",
-                "id2",
-                (
-                    F.col("_i") / (F.size("_sh1") + F.size("_sh2") - F.col("_i"))
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-    # df-capped path: the cap is a global document-frequency filter, so
-    # it runs over the posting lists (the exploded table feeds both the
-    # signature aggregation and the verify)
-    sh = hashed_shingle_table(documents, n=n, max_shingle_freq=max_shingle_freq).localCheckpoint()
-    sigs = minhash_signatures(sh, num_perm=num_perm)
-    cands = lsh_candidate_pairs(sigs, rows_per_band=rows_per_band)
-    return _pair_jaccard(sh, pairs=cands).filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def _union_find_rows(pdf):
@@ -710,17 +622,16 @@ def dedup_clusters(
             hop = F.broadcast(hop)
         # localCheckpoint (not persist): the loop references the previous
         # state 3x per round; persist keeps lineage and the logical plan
-        # grows exponentially (plan *formatting* alone OOMs ~20 rounds in)
-        new_labels = (
-            merged.join(hop, merged["mid"] == hop["h_node"], "left")
-            .select(
+        # grows exponentially (plan *formatting* alone OOMs ~20 rounds in).
+        # The changed-label count rides the checkpoint's own job.
+        new_labels, changed = tiers.counted_checkpoint(
+            merged.join(hop, merged["mid"] == hop["h_node"], "left").select(
                 "node",
                 "old",
                 F.least(F.col("mid"), F.coalesce(F.col("h_label"), F.col("mid"))).alias("label"),
-            )
-            .localCheckpoint()
+            ),
+            F.col("label") != F.col("old"),
         )
-        changed = new_labels.filter(F.col("label") != F.col("old")).count()
         labels = new_labels.select("node", "label")
         if changed == 0:
             break
@@ -787,7 +698,6 @@ def decontaminate(
     n: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents that share at
     least one word ``n``-gram with any benchmark/eval document → (doc_id,
@@ -798,18 +708,14 @@ def decontaminate(
     n=5 by default). Relational form: hashed shingle tables on both
     sides, equi-join on the 31-bit shingle key, per-train-doc distinct
     counts. The benchmark side is an eval suite — tiny next to a 100 TB
-    corpus — so it broadcasts by default and the train corpus is never
-    shuffled; pass ``broadcast_benchmark=False`` if the benchmark side
-    is itself corpus-sized.
+    corpus — so it broadcasts and the train corpus is never shuffled.
     """
     sh_t = hashed_shingle_table(train, n=n, id_col=id_col, text_col=text_col)
     sh_b = hashed_shingle_table(benchmark, n=n, id_col=id_col, text_col=text_col).select(
         F.col("doc_id").alias("bench_id"), "shingle"
     )
-    if broadcast_benchmark:
-        sh_b = F.broadcast(sh_b)
     return (
-        sh_t.join(sh_b, "shingle")
+        sh_t.join(F.broadcast(sh_b), "shingle")
         .groupBy("doc_id")
         .agg(
             F.countDistinct("shingle").cast("long").alias("n_shared_ngrams"),
@@ -1024,26 +930,16 @@ def embedding_cosine_pairs(
     cosine, bit for bit. Brute force is the correctness baseline — the
     scale path is the LSH-bucketed variant in operators/similarity.py.
     """
-    def _scaled(x: Column, y: Column) -> Column:
-        return F.round(x.cast("double") * y.cast("double") * F.lit(DOT_SCALE)).cast("long")
-
-    sq = F.aggregate(
-        F.transform(F.col(vec_col), lambda x: _scaled(x, x)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    e = embeddings.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), _sqnorm_expr(_q(vec_col)).alias("sq")
     )
-    e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sq.alias("sq"))
     # The triangular pair join is a nested-loop; a single-file parquet
     # table arrives as ONE partition, which would serialize the whole
     # O(n²) fan-out onto one core. Spread the streamed side explicitly.
     par = embeddings.sparkSession.sparkContext.defaultParallelism
     e1 = e.select(F.col("id").alias("id1"), F.col("v").alias("v1"), F.col("sq").alias("sq1")).repartition(par)
     e2 = e.select(F.col("id").alias("id2"), F.col("v").alias("v2"), F.col("sq").alias("sq2"))
-    dot = F.aggregate(
-        F.zip_with("v1", "v2", _scaled),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot_expr("v1", "v2")
     pairs = e1.join(e2, F.col("id1") < F.col("id2")).select(
         "id1",
         "id2",
@@ -1193,7 +1089,7 @@ def jaccard_prefix_pairs(
     """
     t_dec = F.lit(threshold).cast("decimal(10,6)")
     sh = hashed_shingle_table(
-        documents, n=n, id_col=id_col, text_col=text_col, max_shingle_freq=None
+        documents, n=n, id_col=id_col, text_col=text_col
     ).localCheckpoint()
     freq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
     w = W.partitionBy("doc_id").orderBy("_df", "shingle")
@@ -1671,7 +1567,6 @@ def keep_best_per_cluster(
     scored: DataFrame,
     clusters: DataFrame,
     score_col: str = "score_milli",
-    broadcast_clusters: bool = True,
 ) -> DataFrame:
     """(doc_id, cluster_id, <score_col>, keep) — quality-aware
     canonical selection: inside every near-dup cluster keep exactly the
@@ -1689,12 +1584,10 @@ def keep_best_per_cluster(
     ``clusters`` broadcasts (map-side inner join), the one per-cluster
     window exchanges slice rows only, and the verdicts broadcast back
     onto the corpus-grain ``scored`` frame: the corpus itself is never
-    reshuffled. ``broadcast_clusters=False`` falls back to shuffle
-    joins if a pathological corpus makes the dup slice huge."""
+    reshuffled."""
     from pyspark.sql import Window as W
 
-    cl = F.broadcast(clusters) if broadcast_clusters else clusters
-    clustered = scored.join(cl, "doc_id")
+    clustered = scored.join(F.broadcast(clusters), "doc_id")
     w = W.partitionBy("cluster_id").orderBy(
         F.desc(score_col), F.asc("doc_id")
     )
@@ -1706,9 +1599,7 @@ def keep_best_per_cluster(
             (F.col("_rk") == 1).cast("long").alias("keep"),
         )
     )
-    if broadcast_clusters:
-        verdicts = F.broadcast(verdicts)
-    return scored.join(verdicts, "doc_id", "left").select(
+    return scored.join(F.broadcast(verdicts), "doc_id", "left").select(
         "doc_id",
         F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
         score_col,

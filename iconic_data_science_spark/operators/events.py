@@ -110,7 +110,6 @@ def quota_sample(
     events: DataFrame,
     key_col: str = "event_type",
     quota: int = 50,
-    two_phase: bool = False,
 ) -> DataFrame:
     """(key, event_id, seq) — per-key ingestion quota: the first
     ``quota`` rows per key in deterministic (ts, event_id) order are
@@ -124,70 +123,19 @@ def quota_sample(
 
     Scale shape: one shuffle on the key; the window ranks only within
     keys and the filter drops everything past the quota before any
-    downstream work. ``two_phase=True`` bounds that shuffle the way
-    kmv_partial_minima bounds the sketch build: an Arrow-batched
-    map-side partial keeps only each key's ``quota`` smallest
-    (ts, event_id) rows PER INPUT PARTITION, so the exchange carries
-    ≤ quota·P rows per key instead of the key's full row count — the
-    difference between ranking 50 rows and sorting a hot source's
-    billions. min-quota of a union == min-quota of per-partition
-    min-quotas, so the result is row-identical (pinned by test);
-    the price is Python workers in a previously pure-JVM plan —
-    measured SLOWER at bench scales (0.38→0.54 s sf0.1, 0.47→1.10 s
-    sf1: the JVM sorts a million rows faster than Arrow round-trips
-    them), so it stays opt-in for the regime it exists for: per-key
-    volumes that dwarf the quota AND an exchange too big to sort.
+    downstream work. A null ``ts`` sorts first (the window's NULLS
+    FIRST default). A map-side partial that keeps each key's ``quota``
+    smallest rows per input partition before the exchange measured
+    slower at every tested scale (0.38→0.54 s sf0.1, 0.47→1.10 s sf1:
+    the JVM sorts a million rows faster than Arrow round-trips them).
     """
     from pyspark.sql import Window as W
 
-    if two_phase:
-        events = _quota_partial(events, key_col=key_col, quota=quota)
     w = W.partitionBy(key_col).orderBy("ts", "event_id")
     return (
         events.withColumn("seq", F.row_number().over(w).cast("long"))
         .filter(F.col("seq") <= quota)
         .select(F.col(key_col).alias("key"), "event_id", "seq")
-    )
-
-
-def _quota_partial(events: DataFrame, key_col: str, quota: int) -> DataFrame:
-    """Map-side bounded partial for :func:`quota_sample`: ≤ ``quota``
-    smallest (ts, event_id) rows per key per input partition, held as
-    per-partition state in ``mapInPandas`` (no shuffle here — the
-    exchange after this carries ≤ quota·P rows per key)."""
-
-    def partial(batches):
-        import pandas as pd
-
-        # Sort key mirrors the JVM single-phase orderBy("ts","event_id")
-        # EXACTLY, including its NULLS FIRST default: a null ts arrives
-        # here as pandas NaT, whose comparisons are unordered — raw
-        # tuple sort would diverge from (and crash against) the pinned
-        # row-identical contract. (is-not-null, ts-or-sentinel, id):
-        # null-ts rows sort first among themselves by event_id.
-        def _jvm_order(pair):
-            ts, eid = pair
-            isna = pd.isna(ts)
-            return (not isna, 0 if isna else ts, eid)
-
-        state: dict = {}
-        for pdf in batches:
-            for k, g in pdf.groupby(key_col, sort=False, dropna=False):
-                key = None if (k is None or (isinstance(k, float) and k != k)) else k
-                cand = state.setdefault(key, [])
-                cand.extend(zip(g["ts"], g["event_id"]))
-                cand.sort(key=_jvm_order)
-                del cand[quota:]
-        rows = [
-            {key_col: k, "ts": ts, "event_id": int(eid)}
-            for k, pairs in state.items()
-            for ts, eid in pairs
-        ]
-        yield pd.DataFrame(rows, columns=[key_col, "ts", "event_id"])
-
-    kt = events.schema[key_col].dataType.simpleString()
-    return events.select(key_col, "ts", "event_id").mapInPandas(
-        partial, f"{key_col} {kt}, ts timestamp, event_id long"
     )
 
 

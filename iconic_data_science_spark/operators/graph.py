@@ -90,28 +90,29 @@ def hierarchy_roots(
     if not children_unique:
         edges = edges.groupBy("child").agg(F.min("parent").alias("parent"))
     # m: child → current known ancestor. One localCheckpoint per round:
-    # it materializes the state (the count answers convergence for free)
-    # AND cuts lineage — the loop references m twice per round, so a
-    # persist-only loop doubles the logical plan every round and dies on
-    # deep hierarchies before any data is touched.
-    pdf, m = tiers.gather(edges.select("child", F.col("parent").alias("anc")))
-    if pdf is not None:
-        out = tiers.local_frame(m.sparkSession, _local_root_closure(pdf), m.schema)
+    # it materializes the state (its job also counts the rows, which
+    # picks the tier and answers convergence) AND cuts lineage — the
+    # loop references m twice per round, so a persist-only loop doubles
+    # the logical plan every round and dies on deep hierarchies before
+    # any data is touched. (``tiers.gather``, inlined: the distributed
+    # loop reuses its count.)
+    m, n = tiers.counted_checkpoint(edges.select("child", F.col("parent").alias("anc")))
+    if tiers.solve_locally(n):
+        out = tiers.local_frame(m.sparkSession, _local_root_closure(m.toPandas()), m.schema)
         return out.select("child", F.col("anc").alias("root"))
-    small = tiers.broadcastable(m.count())
+    small = tiers.broadcastable(n)
     for _ in range(max_iters):
         hop = m.select(F.col("child").alias("h_child"), F.col("anc").alias("h_anc"))
         if small:
             hop = F.broadcast(hop)
-        m2 = (
-            m.join(hop, m["anc"] == hop["h_child"], "left")
-            .select(
+        m2, hopped = tiers.counted_checkpoint(
+            m.join(hop, m["anc"] == hop["h_child"], "left").select(
                 "child",
                 F.coalesce("h_anc", "anc").alias("anc"),
                 F.col("h_anc").isNotNull().alias("_hopped"),
-            )
-        ).localCheckpoint()
-        hopped = m2.filter(F.col("_hopped")).count()
+            ),
+            F.col("_hopped"),
+        )
         m = m2.select("child", "anc")
         if hopped == 0:
             break
@@ -279,7 +280,7 @@ def pagerank_int(
     the loop — the out-degree is FOLDED INTO the edge table up front
     (8 bytes/row buys back one join per round at every scale), and
     while the node count stays within the broadcast budget (known
-    exactly from one pre-loop count, as in bfs and dedup_clusters) the
+    exactly, observed on the node table's checkpoint job) the
     rank table broadcasts into both per-round joins, so the edge table
     is never shuffled inside the loop and the only per-round exchange
     is the contribution groupBy. Above the threshold the loop falls
@@ -299,13 +300,12 @@ def pagerank_int(
     ed = edges.repartition("src")
     deg = ed.groupBy("src").agg(F.count("*").alias("deg"))
     edges_deg = ed.join(deg, "src").localCheckpoint()
-    nodes = (
+    nodes, n_nodes = tiers.counted_checkpoint(
         edges_deg.select(F.col("src").alias("node"))
         .unionByName(edges_deg.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-    small = tiers.broadcastable(nodes.count())
+    small = tiers.broadcastable(n_nodes)
     base = (100 - damping_pct) * PAGERANK_INT_SCALE // 100
     ranks = nodes.withColumn("rank_i", F.lit(PAGERANK_INT_SCALE).cast("long")).localCheckpoint()
     for _ in range(iterations):
@@ -757,12 +757,12 @@ def label_propagation(
             edges.sparkSession, _label_propagation_local(pdf, rounds), f"node {t}, label {t}"
         )
     edges = edges.repartition("dst").localCheckpoint()
-    nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
+    nodes, n_nodes = tiers.counted_checkpoint(edges.select(F.col("src").alias("node")).distinct())
     # broadcast the node-grain label frame into the per-round joins
-    # while the node count (one pre-loop job on the checkpointed set)
-    # stays bounded — the pagerank_int/bfs three-tier discipline; the
-    # edge table is then never shuffled inside the loop
-    small = tiers.broadcastable(nodes.count())
+    # while the node count (observed on the checkpoint's job) stays
+    # bounded — the pagerank_int/bfs three-tier discipline; the edge
+    # table is then never shuffled inside the loop
+    small = tiers.broadcastable(n_nodes)
     labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
     for _ in range(rounds):
         lb = labels.withColumnRenamed("node", "dst")

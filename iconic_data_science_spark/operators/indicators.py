@@ -74,7 +74,6 @@ def author_stats(paa: DataFrame, citation_edges: DataFrame) -> DataFrame:
 def ego_indicators(
     triples: DataFrame,
     author_country: DataFrame,
-    single_exchange: bool = True,
 ) -> DataFrame:
     """A2 countDistinct family + domestic split per ego.
 
@@ -98,30 +97,23 @@ def ego_indicators(
     # built-in) — one pass over the pair fan-out instead of a second
     # full scan + shuffle for a separate countDistinct(year) agg.
     #
-    # Measurements (sf0.1 bucketed, median of 5, row-identical all four
-    # ways — SCALE.md):
+    # Measurements (sf0.1 bucketed, median of 5, row-identical — SCALE.md):
     # * n_alter_countries as size(array_distinct(collect_list)) instead
     #   of countDistinct: the ego-grain agg stops triggering the
     #   two-phase distinct rewrite (an Expand ×2 across the ego
-    #   exchange) — 3.35 s → 2.75 s, 9 → 8 exchanges, in BOTH regimes.
-    # * single_exchange=True: repartition("ego") BEFORE the alter-grain
-    #   agg. HashPartitioning(ego) satisfies both groupBys' clustered
+    #   exchange) — 3.35 s → 2.75 s, 9 → 8 exchanges.
+    # * repartition("ego") BEFORE the alter-grain agg:
+    #   HashPartitioning(ego) satisfies both groupBys' clustered
     #   distributions, so the pair agg AND the ego rollup run
     #   exchange-free behind the one repartition — 2.75 s → 2.17 s
-    #   (1.55× overall against the form with neither change). The trade is
-    #   skew exposure: the
-    #   two-phase form spreads a mega-ego's pairs by hash(ego, alter)
-    #   before the (much smaller) pair-grain ego exchange, while this
-    #   form lands the ego's WHOLE raw fan-out in one partition (an
-    #   aggregation exchange — AQE cannot split it). Bounded-k corpora
-    #   (author collaboration: k ≤ ~10³ alters × decades of years) stay
-    #   far from the cliff; for celebrity-graph inputs pass
-    #   single_exchange=False (the g3 targeted-salt regime lesson:
-    #   choose by hot-key mass, not by default).
-    if single_exchange:
-        triples = triples.repartition("ego")
+    #   (1.55× overall against the form with neither change). The trade
+    #   is skew exposure: one ego's WHOLE raw fan-out lands in one
+    #   partition (an aggregation exchange — AQE cannot split it).
+    #   Bounded-k corpora (author collaboration: k ≤ ~10³ alters ×
+    #   decades of years) stay far from that cliff.
     alter_level = (
-        triples.groupBy("ego", "alter_id")
+        triples.repartition("ego")
+        .groupBy("ego", "alter_id")
         .agg(F.collect_set("year").alias("yrs"))
         .join(F.broadcast(ego_c), "ego", "left")
         .join(F.broadcast(alter_c), "alter_id", "left")

@@ -289,24 +289,29 @@ def zorder_chunk_stats(
     )
 
 
-def hilbert_value_pandas(x_col: str, y_col: str, bits: int = 16):
-    """Vectorized numpy bit-walk for the Hilbert index — the fast path
-    :func:`hilbert_chunk_stats` uses. The ``F.aggregate``
-    fold in :func:`hilbert_value` stays semantically identical (pinned
-    by tests) but runs in Catalyst's interpreter at ~13× Morton's
-    constant (4.7 s vs 0.37 s at sf0.1); the same walk over
-    Arrow-batched int64 numpy arrays is one vectorized pass per level.
-    Map-side, linear, no shuffle — exactly the OPTIMIZE-pass constant
-    that matters at 100 TB."""
+def hilbert_value(x_col: str, y_col: str, bits: int = 16):
+    """Hilbert-curve index of a 2-D point (the classic xy→d bit walk,
+    public domain — Hilbert 1891; the iterative rotate/reflect form is
+    the standard public formulation). Better chunk locality than Morton:
+    consecutive d values are always grid-adjacent, so per-chunk dim
+    spans are tighter (measured in SCALE.md).
+
+    A vectorized numpy walk over Arrow-batched int64 arrays, one pass
+    per bit level: written as one ``F.aggregate`` fold, the same walk
+    ran in Catalyst's interpreter at ~13× Morton's constant (4.7 s vs
+    0.37 s at sf0.1). Map-side, linear, no shuffle — exactly the OPTIMIZE-pass
+    constant that matters at 100 TB. A null coordinate yields a null
+    index. The SQL oracle replays the identical integer walk
+    (:func:`hilbert_oracle_levels`)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def _hilbert(xs: pd.Series, ys: pd.Series) -> pd.Series:
         import numpy as np
 
-        # Null-safe like the F.aggregate form: null x or y → null d.
-        # (Nullable input reaches pandas as float64 + NaN; a bare
-        # to_numpy(dtype='int64') would raise and kill the task.)
+        # Null x or y → null d. (Nullable input reaches pandas as
+        # float64 + NaN; a bare to_numpy(dtype='int64') would raise and
+        # kill the task.)
         valid = (xs.notna() & ys.notna()).to_numpy()
         xv = xs.fillna(0).to_numpy(dtype="int64", copy=True)
         yv = ys.fillna(0).to_numpy(dtype="int64", copy=True)
@@ -328,78 +333,19 @@ def hilbert_value_pandas(x_col: str, y_col: str, bits: int = 16):
     return _hilbert(F.col(x_col).cast("long"), F.col(y_col).cast("long"))
 
 
-def hilbert_value(x_col: str, y_col: str, bits: int = 16):
-    """Hilbert-curve index of a 2-D point (the classic xy→d bit walk,
-    public domain — Hilbert 1891; the iterative rotate/reflect form is
-    the standard public formulation). Better chunk locality than Morton:
-    consecutive d values are always grid-adjacent, so per-chunk dim
-    spans are tighter (measured in SCALE.md).
-
-    Implemented as ONE ``F.aggregate`` fold over the bit levels with a
-    (x, y, d) struct accumulator — the fold evaluates sequentially at
-    runtime, sidestepping the exponential expression-tree blow-up a
-    16-level unrolled column expression would hit (each level references
-    x and y twice). Pure integer arithmetic; the SQL oracle replays the
-    identical walk as 16 generated nested CTE levels. This is the
-    pure-expression form (no Python workers anywhere in the plan);
-    :func:`hilbert_value_pandas` is the ~10×-faster vectorized twin.
-    """
-    levels = F.sequence(F.lit(bits - 1), F.lit(0), F.lit(-1))
-    acc0 = F.struct(
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
-        F.lit(0).cast("long").alias("d"),
-    )
-
-    def step(acc, i):
-        # 2^i with a Column exponent (shiftleft needs a literal count);
-        # double pow is exact for i <= 52
-        s = F.pow(F.lit(2.0), i.cast("double")).cast("long")
-        rx = (acc["x"].bitwiseAND(s) > 0).cast("long")
-        ry = (acc["y"].bitwiseAND(s) > 0).cast("long")
-        # (3*rx) XOR ry spelled as a CASE so Spark and ANSI SQL agree
-        quad = (
-            F.when((rx == 1) & (ry == 1), F.lit(2))
-            .when(rx == 1, F.lit(3))
-            .when(ry == 1, F.lit(1))
-            .otherwise(F.lit(0))
-        ).cast("long")
-        nx = F.when(
-            ry == 0, F.when(rx == 1, s - 1 - acc["y"]).otherwise(acc["y"])
-        ).otherwise(acc["x"])
-        ny = F.when(
-            ry == 0, F.when(rx == 1, s - 1 - acc["x"]).otherwise(acc["x"])
-        ).otherwise(acc["y"])
-        return F.struct(nx.alias("x"), ny.alias("y"), (acc["d"] + s * s * quad).alias("d"))
-
-    # Null semantics (pinned by tests, matching the numpy twin): a null
-    # coordinate yields a null index. Without the guard the CASE
-    # branches silently treat a null rx/ry as 0, producing a
-    # wrong-looking but non-null walk.
-    return F.when(
-        F.col(x_col).isNull() | F.col(y_col).isNull(), F.lit(None).cast("long")
-    ).otherwise(F.aggregate(levels, acc0, step)["d"])
-
-
 def hilbert_chunk_stats(
     df: DataFrame,
     x_col: str,
     y_col: str,
     bits: int = 16,
     chunk_shift: int = 18,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Hilbert twin of :func:`zorder_chunk_stats`: same fixed-range
     chunking and per-chunk min/max skipping stats, over the Hilbert
-    index instead of the Morton one. Same scale shape: map-side curve
-    arithmetic, one per-chunk partial aggregation. ``impl='pandas'``
-    (default) computes the index with the vectorized numpy bit-walk —
-    ~10× the interpreted ``F.aggregate`` fold (``impl='expr'``), which
-    stays available for Python-worker-free plans; both produce the
-    identical integer walk (equivalence-pinned in tests)."""
-    h = (hilbert_value_pandas if impl == "pandas" else hilbert_value)(
-        x_col, y_col, bits=bits
-    )
+    index (:func:`hilbert_value`) instead of the Morton one. Same scale
+    shape: map-side curve arithmetic, one per-chunk partial
+    aggregation."""
+    h = hilbert_value(x_col, y_col, bits=bits)
     return (
         df.select(
             F.col(x_col).cast("long").alias("x"),

@@ -55,7 +55,6 @@ def temperature_mix_rates(
     text_col: str = "text",
     sqrt_steps: int = 1,
     budget_tokens: int = 1_000_000,
-    materialize_stats: bool = True,
 ) -> DataFrame:
     """Per-language mixing plan: (lang, n_docs, n_tokens, weight,
     rate_ppm, alloc_tokens) where weight = n_tokens smoothed by
@@ -72,12 +71,11 @@ def temperature_mix_rates(
         )
         .withColumn("weight", _nested_floor_sqrt(F.col("n_tokens"), sqrt_steps))
     )
-    if materialize_stats:
-        # The language-stats table is ≲10³ rows but every frame derived
-        # from it (global weight sum here; the sampler's keep rule)
-        # would otherwise re-run the corpus-wide token count — one full
-        # 100 TB scan per derivation.  Pin it once.
-        per_lang = per_lang.localCheckpoint(eager=True)
+    # The language-stats table is ≲10³ rows but every frame derived
+    # from it (global weight sum here; the sampler's keep rule) would
+    # otherwise re-run the corpus-wide token count — one full 100 TB
+    # scan per derivation.  Pin it once.
+    per_lang = per_lang.localCheckpoint(eager=True)
     total = per_lang.agg(F.sum("weight").cast("long").alias("_w_sum"))
     # Integer division via SQL `div` (DuckDB `//`): bigint-exact on both
     # engines — a double `/` + floor could land one off at a quotient

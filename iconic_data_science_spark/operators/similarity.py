@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from . import tiers
-from .dedup import DOT_SCALE
+from .dedup import DOT_SCALE, _dot_expr, _lattice_prod_sql, _q, _sqnorm_expr
 from ..functions.lits import (
     d2_fold_longs,
     dot_fold_doubles,
@@ -65,22 +65,8 @@ def plane_table_sql(n_planes: int = N_PLANES, dim: int = _DIM, table: int = 0) -
     return f"(VALUES {rows}) AS pl(plane, i, coeff)"
 
 
-def _scaled_prod(x: Column, y: Column) -> Column:
-    return F.round(x.cast("double") * y.cast("double") * F.lit(DOT_SCALE)).cast("long")
-
-
-def _sqnorm_expr(col_sql: str) -> Column:
-    # _scaled_prod(x, x) summed from 0L, one parsed expression (the
-    # lits.py discipline) — identical tree to the lambda form
-    return F.expr(
-        f"aggregate(transform({col_sql}, x -> "
-        f"CAST(round(CAST(x AS double) * CAST(x AS double) * {DOT_SCALE!r}D) "
-        "AS bigint)), 0L, (acc, x) -> acc + x)"
-    )
-
-
 def _with_sqnorm(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    sq = _sqnorm_expr(f"`{vec_col}`")
+    sq = _sqnorm_expr(_q(vec_col))
     return embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sq.alias("sq"))
 
 
@@ -114,11 +100,7 @@ def brute_force_topk(
     par = embeddings.sparkSession.sparkContext.defaultParallelism
     corpus = _with_sqnorm(embeddings, id_col, vec_col).repartition(par).alias("c")
     qs = _with_sqnorm(queries, id_col, vec_col).alias("q")
-    dot = F.aggregate(
-        F.zip_with(F.col("q.v"), F.col("c.v"), _scaled_prod),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot_expr("q.v", "c.v")
     pairs = (
         qs.join(corpus, F.col("q.id") != F.col("c.id"))
         .select(
@@ -137,7 +119,7 @@ def _lsh_bucket_expr(
 
     Value-identical to the historical posexplode → join(planes) →
     groupBy-SUM → collect form: each per-element product rounds to the
-    int64 lattice exactly as ``_scaled_prod`` does, and int64 addition is
+    int64 lattice exactly as ``dedup._dot_expr`` does, and int64 addition is
     order-independent, so the per-plane dot — and every sign bit — is
     bit-for-bit the same.  SUM's skip-NULLs semantics are replayed by
     ``coalesce(x, 0L)`` in the fold (a zip_with pad past either array's
@@ -154,8 +136,7 @@ def _lsh_bucket_expr(
     bits = ",".join(
         f"CASE WHEN aggregate(zip_with({v}, array("
         + ",".join(str(int(c)) for c in rows[p])
-        + "), (x, c) -> CAST(round(CAST(x AS double) * CAST(c AS double) * "
-        + f"{DOT_SCALE!r}D) AS bigint)), 0L, (acc, x) -> acc + coalesce(x, 0L)) >= 0"
+        + f"), (x, c) -> {_lattice_prod_sql('x', 'c')}), 0L, (acc, x) -> acc + coalesce(x, 0L)) >= 0"
         " THEN '1' ELSE '0' END"
         for p in range(int(n_planes))
     )
@@ -345,11 +326,7 @@ def ivf_assign(
     """
     e = _with_sqnorm(embeddings, id_col, vec_col)
     if centroids is not None:
-        csq = F.aggregate(
-            F.transform(F.col("c_v"), lambda x: _scaled_prod(x, x)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
+        csq = _sqnorm_expr("c_v")
         centroids = centroids.select(
             F.col("c_id"), F.col("c_v").cast("array<float>").alias("c_v"), csq.alias("c_sq")
         )
@@ -363,11 +340,7 @@ def ivf_assign(
         centroids = _with_sqnorm(seed, id_col, vec_col).select(
             F.col("id").alias("c_id"), F.col("v").alias("c_v"), F.col("sq").alias("c_sq")
         )
-    dot = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c_v"), _scaled_prod),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot_expr("v", "c_v")
     sim = dot / F.sqrt(F.col("sq").cast("double") * F.col("c_sq").cast("double"))
     scored = e.crossJoin(F.broadcast(centroids)).select("id", F.col("c_id"), sim.alias("sim"))
     w = W.partitionBy("id").orderBy(F.col("sim").desc(), F.col("c_id"))
@@ -423,11 +396,7 @@ def ivf_topk(
         )
         .alias("q")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("q.v"), F.col("c.v"), _scaled_prod),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot_expr("q.v", "c.v")
     pairs = (
         qs.join(corpus, (F.col("q.cell") == F.col("c.cell")) & (F.col("q.id") != F.col("c.id")))
         .select(
@@ -456,8 +425,6 @@ def lsh_topk(
     re-rolls the planes). Candidate generation stays id-pairs-only —
     vectors are re-joined once for the exact-cosine verify, which is the
     scale-correct shape (tiny candidate shuffle, one verify join)."""
-    corpus = _with_sqnorm(embeddings, id_col, vec_col)
-    qs0 = _with_sqnorm(queries, id_col, vec_col)
     if n_tables == 1:
         # bucket attached IN the sqnorm projection (one map over the
         # scan) — the join-the-signature-back-on-id form re-read each
@@ -468,11 +435,7 @@ def lsh_topk(
         qs = _with_sqnorm(
             _non_empty_vectors(queries, vec_col), id_col, vec_col
         ).withColumn("bucket", _lsh_bucket_expr("v")).alias("q")
-        dot = F.aggregate(
-            F.zip_with(F.col("q.v"), F.col("c.v"), _scaled_prod),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
+        dot = _dot_expr("q.v", "c.v")
         pairs = (
             qs.join(
                 corpus_b,
@@ -513,13 +476,13 @@ def lsh_topk(
         .select(F.col("qs.id").alias("query_id"), F.col("cs.id").alias("neighbor_id"))
         .distinct()
     )
-    qv = qs0.select(F.col("id").alias("query_id"), F.col("v").alias("q_v"), F.col("sq").alias("q_sq"))
-    cv = corpus.select(F.col("id").alias("neighbor_id"), F.col("v").alias("c_v"), F.col("sq").alias("c_sq"))
-    dot = F.aggregate(
-        F.zip_with(F.col("q_v"), F.col("c_v"), _scaled_prod),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    qv = _with_sqnorm(queries, id_col, vec_col).select(
+        F.col("id").alias("query_id"), F.col("v").alias("q_v"), F.col("sq").alias("q_sq")
     )
+    cv = _with_sqnorm(embeddings, id_col, vec_col).select(
+        F.col("id").alias("neighbor_id"), F.col("v").alias("c_v"), F.col("sq").alias("c_sq")
+    )
+    dot = _dot_expr("q_v", "c_v")
     cos = dot / F.sqrt(F.col("q_sq").cast("double") * F.col("c_sq").cast("double"))
     pairs = (
         cand.join(qv, "query_id")
@@ -576,9 +539,7 @@ def semdedup_prune(
         F.col("id").alias("id2"), F.col("v").alias("v2"),
         F.col("sq").alias("sq2"), F.col("bucket"),
     )
-    dot = F.aggregate(
-        F.zip_with("v1", "v2", _scaled_prod), F.lit(0).cast("long"), lambda a, x: a + x
-    )
+    dot = _dot_expr("v1", "v2")
     cos = dot / F.sqrt(F.col("sq1").cast("double") * F.col("sq2").cast("double"))
     pruned = (
         lo.join(hi, "bucket")
@@ -647,11 +608,7 @@ def pq_codes(
             ).alias("sub", "sv"),
         ).withColumn(
             "sv_sq",
-            F.aggregate(
-                F.transform("sv", lambda x: _scaled_prod(x, x)),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ),
+            _sqnorm_expr("sv"),
         )
 
     subs = _sub_explode(embeddings)
@@ -677,9 +634,7 @@ def pq_codes(
         )
         .localCheckpoint()
     )
-    dot = F.aggregate(
-        F.zip_with("sv", "c_v", _scaled_prod), F.lit(0).cast("long"), lambda a, x: a + x
-    )
+    dot = _dot_expr("sv", "c_v")
     scored = (
         subs.join(F.broadcast(codebook), "sub")
         .select(
@@ -779,15 +734,9 @@ def ivfpq_topk(
         ).alias("sub", "qv"),
     ).withColumn(
         "qv_sq",
-        F.aggregate(
-            F.transform("qv", lambda x: _scaled_prod(x, x)),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        ),
+        _sqnorm_expr("qv"),
     )
-    qdot = F.aggregate(
-        F.zip_with("qv", "c_v", _scaled_prod), F.lit(0).cast("long"), lambda a, x: a + x
-    )
+    qdot = _dot_expr("qv", "c_v")
     dtable = qsubs.join(F.broadcast(codebook), "sub").select(
         "query_id", "sub", "c_id",
         (F.col("qv_sq") - 2 * qdot + F.col("c_sq")).alias("d"),
@@ -855,15 +804,9 @@ def pq_topk(
         ).alias("sub", "qv"),
     ).withColumn(
         "qv_sq",
-        F.aggregate(
-            F.transform("qv", lambda x: _scaled_prod(x, x)),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        ),
+        _sqnorm_expr("qv"),
     )
-    qdot = F.aggregate(
-        F.zip_with("qv", "c_v", _scaled_prod), F.lit(0).cast("long"), lambda a, x: a + x
-    )
+    qdot = _dot_expr("qv", "c_v")
     dtable = qsubs.join(F.broadcast(codebook), "sub").select(
         "query_id", "sub", "c_id",
         (F.col("qv_sq") - 2 * qdot + F.col("c_sq")).alias("d"),
@@ -896,7 +839,6 @@ def semantic_decontaminate(
     threshold: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "pandas",
     max_bench_rows: int = 1_000_000,
 ) -> DataFrame:
     """(vec_id, n_bench_hits, max_bench_cosine) — embedding-space
@@ -909,83 +851,24 @@ def semantic_decontaminate(
     protected set).
 
     Plan shape — built for a tiny eval set against a 100 TB corpus: the
-    benchmark side collapses to ONE row holding an array of (id, vec,
-    sqnorm) structs, broadcast to every task; each corpus vector scans
-    that array with in-row higher-order functions (filter/transform/
-    array_max). ZERO shuffles, no join fan-out, no regroup — the flag
-    pass is embarrassingly parallel and the corpus is read exactly once.
-    Contrast the join+groupBy form: a bench×corpus nested-loop whose
-    per-hit rows must be re-aggregated per corpus id through an
-    exchange. Eval suites are O(10⁴–10⁵) vectors — at 64–1024 dims the
-    broadcast is a few hundred MB worst-case; shard the bench side and
-    union flags if it ever outgrows the executor budget.
+    benchmark side is collected on the driver (bounded by
+    ``max_bench_rows`` — eval suites are small by contract; raise the
+    gate consciously or shard+union if a protected set ever exceeds it)
+    and shipped to every task; each Arrow batch of corpus vectors scans
+    it with one vectorized numpy pass inside ``mapInPandas``. ZERO
+    shuffles, no join fan-out, no regroup — the flag pass is
+    embarrassingly parallel and the corpus is read exactly once. The
+    numpy scan measured ~20× an in-row higher-order-function scan over
+    a broadcast bench array (7.2 s → 0.4 s at sf0.1: Catalyst evaluates
+    per-element lambda trees row-at-a-time).
 
     Cosines come off the integer product lattice (round(x·y·DOT_SCALE)
     summed as BIGINT, see operators/dedup.embedding_cosine_pairs) so
     both engines agree bit-for-bit; max over identical doubles is
-    engine-portable.
-
-    ``impl='pandas'`` (default) runs the same lattice arithmetic as a
-    vectorized numpy scan inside one mapInPandas pass — measured ~20×
-    the interpreted higher-order-function form (7.2 s → 0.4 s at sf0.1:
-    Catalyst evaluates per-element lambda trees row-at-a-time, the same
-    constant-factor pathology as ``lakehouse.hilbert_value``). The bench
-    side is collected driver-side (bounded by ``max_bench_rows`` — eval suites
-    are small by contract; raise the gate consciously or shard+union if
-    a protected set ever exceeds it). Rounding is explicitly HALF_UP
-    (floor(v+0.5) / ceil(v-0.5)) to match Spark's F.round, not numpy's
-    banker's rounding — equivalence with ``impl='expr'`` is pinned
-    row-for-row in tests.
+    engine-portable. Rounding is explicitly HALF_UP (floor(v+0.5) /
+    ceil(v-0.5)) to match Spark's F.round, not numpy's banker's
+    rounding.
     """
-    if impl == "pandas":
-        return _semantic_decontaminate_pandas(
-            corpus, bench, threshold, id_col, vec_col, max_bench_rows
-        )
-    sq = F.aggregate(
-        F.transform(F.col(vec_col), lambda x: _scaled_prod(x, x)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    bench_pack = bench.agg(
-        F.collect_list(
-            F.struct(
-                F.col(id_col).alias("bid"), F.col(vec_col).alias("bv"), sq.alias("bsq")
-            )
-        ).alias("_bench")
-    )
-    dot_b = lambda b: F.aggregate(  # noqa: E731
-        F.zip_with(F.col(vec_col), b["bv"], _scaled_prod),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    cos_b = lambda b: dot_b(b) / F.sqrt(  # noqa: E731
-        F.col("_sq").cast("double") * b["bsq"].cast("double")
-    )
-    cosines = F.transform(F.col("_bench"), cos_b)
-    hits = F.filter(cosines, lambda c: c >= F.lit(float(threshold)))
-    return (
-        corpus.withColumn("_sq", sq)
-        .crossJoin(F.broadcast(bench_pack))
-        .withColumn("_hits", hits)
-        .filter(F.size("_hits") >= 1)
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.size("_hits").cast("long").alias("n_bench_hits"),
-            F.array_max("_hits").alias("max_bench_cosine"),
-        )
-    )
-
-
-def _semantic_decontaminate_pandas(
-    corpus: DataFrame,
-    bench: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    max_bench_rows: int,
-) -> DataFrame:
-    """Vectorized twin of the expression form — identical lattice, numpy
-    inner loop. See :func:`semantic_decontaminate` for the contract."""
     from pyspark.sql import types as T
 
     bench_rows = (
@@ -1092,11 +975,7 @@ def hard_negative_topk(
     the LSH/IVF-pruned candidate set and mine negatives within buckets.
     """
     par = embeddings.sparkSession.sparkContext.defaultParallelism
-    sq = F.aggregate(
-        F.transform(F.col(vec_col), lambda x: _scaled_prod(x, x)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    sq = _sqnorm_expr(_q(vec_col))
     mk = lambda df: df.select(  # noqa: E731
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -1105,11 +984,7 @@ def hard_negative_topk(
     )
     corpus = mk(embeddings).repartition(par).alias("c")
     qs = mk(queries).alias("q")
-    dot = F.aggregate(
-        F.zip_with(F.col("q.v"), F.col("c.v"), _scaled_prod),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot_expr("q.v", "c.v")
     pairs = qs.join(corpus, F.col("q.lbl") != F.col("c.lbl")).select(
         F.col("q.id").alias("query_id"),
         F.col("c.id").alias("neighbor_id"),
@@ -2016,11 +1891,7 @@ def rp_lsh_topk(
 
     corpus = prep(embeddings).alias("c")
     qs = prep(queries).alias("q")
-    dot = F.aggregate(
-        F.zip_with(F.col("q.v"), F.col("c.v"), _scaled_prod),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot_expr("q.v", "c.v")
     pairs = qs.join(
         corpus,
         (F.col("q.bucket") == F.col("c.bucket")) & (F.col("q.id") != F.col("c.id")),
@@ -2062,7 +1933,7 @@ def multivector_docs(
     inside each doc is an in-row ``array_sort`` over ≤ m structs, keyed
     on the unique token slot, so the array order (and every downstream
     MaxSim fold) is deterministic."""
-    sq = _sqnorm_expr(f"`{vec_col}`")
+    sq = _sqnorm_expr(_q(vec_col))
     toks = embeddings.select(
         F.expr(f"{id_col} div {int(m)}").alias("tdoc"),
         (F.col(id_col) % int(m)).alias("tok"),
@@ -2129,9 +2000,8 @@ def maxsim_topk(
     maxsim = F.expr(
         "aggregate(zip_with(q_vecs, q_sqs, (qv, qsq) -> "
         "array_max(zip_with(c_vecs, c_sqs, (cv, csq) -> "
-        "CAST(aggregate(zip_with(qv, cv, (x, y) -> "
-        f"CAST(round(CAST(x AS double) * CAST(y AS double) * {DOT_SCALE!r}D) "
-        "AS bigint)), 0L, (acc, x) -> acc + x) AS double) "
+        f"CAST(aggregate(zip_with(qv, cv, (x, y) -> {_lattice_prod_sql('x', 'y')}), "
+        "0L, (acc, x) -> acc + x) AS double) "
         "/ sqrt(CAST(qsq AS double) * CAST(csq AS double))))), "
         "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
     )
@@ -2227,12 +2097,11 @@ def maxsim_lsh_candidates(
     for p, _i, c in coeffs:
         rows.setdefault(p, []).append(c)
     # the WHOLE bucket signature as one parsed expression (lits.py
-    # discipline, batched); the fold body is _scaled_prod rendered as SQL
+    # discipline, batched)
     bits = ",".join(
         "CASE WHEN aggregate(zip_with(`" + vec_col + "`, array("
         + ",".join(f"{int(c)}L" for c in rows[p])
-        + "), (x, y) -> CAST(round(CAST(x AS double) * CAST(y AS double) * "
-        + f"{DOT_SCALE!r}D) AS bigint)), 0L, (acc, x) -> acc + x) >= 0"
+        + f"), (x, y) -> {_lattice_prod_sql('x', 'y')}), 0L, (acc, x) -> acc + x) >= 0"
         " THEN '1' ELSE '0' END"
         for p in range(int(n_planes))
     )
@@ -2604,11 +2473,7 @@ def bq_topk(
     kept = ham.withColumn("_pr", F.row_number().over(pre)).filter(
         F.col("_pr") <= int(oversample) * int(k)
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("_qv"), F.col("_cv"), _scaled_prod),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot_expr("_qv", "_cv")
     cos = dot / F.sqrt(F.col("_qsq").cast("double") * F.col("_csq").cast("double"))
     scored = kept.select(
         "query_id", "neighbor_id", "hamming", cos.alias("cosine")

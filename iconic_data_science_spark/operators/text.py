@@ -460,7 +460,6 @@ def line_dedup(
     sep: str = "\n",
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_frequent: bool = True,
 ) -> DataFrame:
     """(doc_id, n_lines, n_kept, clean_text) — corpus-level line
     deduplication, the boilerplate-removal stage every web-scale
@@ -477,10 +476,8 @@ def line_dedup(
     md5 of the line travels through the exchange, never the line body;
     the frequent set is tiny by nature (boilerplate is the head of the
     distribution), so the strike is a BROADCAST anti-join against it —
-    the line table itself never shuffles for the membership test
-    (``broadcast_frequent=False`` falls back to a shuffle anti-join if
-    a pathological corpus makes the frequent set huge). The only other
-    shuffle is the per-document reassembly aggregation.
+    the line table itself never shuffles for the membership test. The
+    only other shuffle is the per-document reassembly aggregation.
     """
     lines = documents.select(
         F.col(id_col).alias("doc_id"),
@@ -492,9 +489,7 @@ def line_dedup(
         .filter(F.col("nd") >= min_docs)
         .select("lh")
     )
-    if broadcast_frequent:
-        freq = F.broadcast(freq)
-    kept = lines.join(freq, "lh", "left_anti")
+    kept = lines.join(F.broadcast(freq), "lh", "left_anti")
     n_lines = documents.select(
         F.col(id_col).alias("doc_id"),
         F.size(F.split(F.col(text_col), sep)).cast("long").alias("n_lines"),
@@ -789,7 +784,6 @@ def cdc_oracle_sql(
 def rare_bigram_ratio(
     documents: DataFrame,
     min_count: int = 5,
-    broadcast_dict: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -806,9 +800,8 @@ def rare_bigram_ratio(
     frequent-bigram dictionary (count ≥ min_count — the HEAD of the
     Zipf curve, small by construction) broadcasts back and each doc's
     bigrams probe it MAP-SIDE; one final exchange re-groups per doc.
-    At 100 TB the dictionary is min_count-bounded: raise min_count (or
-    set ``broadcast_dict=False`` to fall back to a shuffle join) if the
-    frequent head outgrows the broadcast budget. Documents with fewer
+    At 100 TB the dictionary is min_count-bounded: raise min_count if
+    the frequent head outgrows the broadcast budget. Documents with fewer
     than two tokens have no bigrams and are not emitted (documented;
     the oracle filters identically).
     """
@@ -831,8 +824,7 @@ def rare_bigram_ratio(
         .filter(F.col("_n") >= min_count)
         .select("bigram", F.lit(1).alias("_freq"))
     )
-    dict_side = F.broadcast(freq) if broadcast_dict else freq
-    probed = exploded.join(dict_side, "bigram", "left")
+    probed = exploded.join(F.broadcast(freq), "bigram", "left")
     return (
         probed.groupBy("doc_id")
         .agg(
@@ -1611,7 +1603,6 @@ def bigram_surprisal_gate(
     lm: list[tuple[str, str, int]],
     default_s: int = 10,
     cutoff_milli: int = 5000,
-    keep_below: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -1621,9 +1612,9 @@ def bigram_surprisal_gate(
     literal table baked into the plan as a map literal, the score is a
     pure in-row fold (unseen bigrams take ``default_s``), so
     ``documents`` may be an APPEND STREAM (the temperature-gate
-    pattern; stream == batch pinned in test_streaming). keep_below
-    keeps the head (low perplexity under a reference LM); flip it to
-    keep rare-transition docs instead. Zero exchanges."""
+    pattern; stream == batch pinned in test_streaming). It keeps the
+    head: documents scoring at most ``cutoff_milli`` (low perplexity
+    under a reference LM). Zero exchanges."""
     t = F.filter(
         F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " "),
         lambda x: x != "",
@@ -1674,12 +1665,7 @@ def bigram_surprisal_gate(
             .alias("surprisal_milli"),
         )
     )
-    cond = (
-        F.col("surprisal_milli") <= int(cutoff_milli)
-        if keep_below
-        else F.col("surprisal_milli") >= int(cutoff_milli)
-    )
-    return scored.filter(cond)
+    return scored.filter(F.col("surprisal_milli") <= int(cutoff_milli))
 
 
 def surprisal_buckets(

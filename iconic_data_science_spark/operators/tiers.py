@@ -17,7 +17,7 @@ solver's pandas result back into a DataFrame through Arrow.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -52,11 +52,12 @@ def gather(df: DataFrame) -> tuple[pd.DataFrame | None, DataFrame]:
     return None, df
 
 
-def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
-    """``df`` checkpointed, and its row count, observed on the
-    checkpoint's own job."""
+def counted_checkpoint(df: DataFrame, where: Column | None = None) -> tuple[DataFrame, int]:
+    """``df`` checkpointed, and the count of its rows (of those where
+    ``where`` holds, if given), observed on the checkpoint's own job."""
     rows = Observation()
-    df = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    counted = F.lit(1) if where is None else F.when(where, 1)
+    df = df.observe(rows, F.count(counted).alias("n")).localCheckpoint()
     return df, rows.get["n"]
 
 

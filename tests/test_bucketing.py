@@ -9,9 +9,10 @@ import contextlib
 import pytest
 
 from iconic_data_science_spark.catalog import Catalog
-from iconic_data_science_spark.operators import tiers
 from iconic_data_science_spark.operators.skew import write_bucketed
 from iconic_data_science_spark.plans import inspect
+
+from .oracle_utils import FORCED_TIERS, forced_tier
 
 
 def test_bucketed_join_eliminates_shuffle(spark, sf_dir, tmp_path):
@@ -73,10 +74,11 @@ def test_ngram_jaccard_hashed_equals_string_shingles(spark):
 
 
 @pytest.mark.usefixtures("arrow_strict")
-def test_dedup_clusters_local_equals_distributed(spark, monkeypatch):
-    """Union-find fast path vs min-label fixpoint (tiers.LOCAL_ROWS=0
-    forces the distributed loop): identical labels, including on a
-    star, a long chain, and merged components."""
+@pytest.mark.parametrize("tier", sorted(FORCED_TIERS))
+def test_dedup_clusters_local_equals_distributed(spark, monkeypatch, tier):
+    """Union-find fast path vs the min-label fixpoint under each forced
+    distributed tier: identical labels, including on a star, a long
+    chain (several productive rounds), and merged components."""
     from iconic_data_science_spark.operators.dedup import dedup_clusters
 
     edges = (
@@ -87,8 +89,8 @@ def test_dedup_clusters_local_equals_distributed(spark, monkeypatch):
     )
     pairs = spark.createDataFrame(edges, "id1 long, id2 long")
     local = {(r.doc_id, r.cluster_id) for r in dedup_clusters(pairs).collect()}
-    monkeypatch.setattr(tiers, "LOCAL_ROWS", 0)
-    dist = {(r.doc_id, r.cluster_id) for r in dedup_clusters(pairs).collect()}
+    with forced_tier(spark, monkeypatch, tier):
+        dist = {(r.doc_id, r.cluster_id) for r in dedup_clusters(pairs).collect()}
     assert local == dist
 
 
@@ -220,43 +222,3 @@ def test_bucketed_table_propagates_catalog_errors(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_BUCKETED", "1")
     with pytest.raises(RuntimeError, match="metastore unavailable"):
         magmap._bucketed_table(cat, magmap.BUCKETED_PAA)
-
-
-def test_minhash_band_sigs_array_native_equals_postings_path(spark):
-    """The map-side band-signature fast path must emit exactly the same
-    (doc_id, band, band_sig) rows as the posting-list groupBy path."""
-    from iconic_data_science_spark.operators.dedup import (
-        hashed_shingle_arrays,
-        hashed_shingle_table,
-        minhash_band_sigs_from_arrays,
-        minhash_signatures,
-    )
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "a completely different sentence with no overlap at all"),
-            (4, "short doc"),  # < n tokens -> no shingles -> no signature
-        ],
-        "doc_id long, text string",
-    )
-    fast = {
-        (r.doc_id, r.band, r.band_sig)
-        for r in minhash_band_sigs_from_arrays(hashed_shingle_arrays(docs)).collect()
-    }
-    sigs = minhash_signatures(hashed_shingle_table(docs))
-    banded = sigs.withColumn("band", (F.col("i") / 4).cast("int"))
-    slow = {
-        (r.doc_id, r.band, r.band_sig)
-        for r in banded.groupBy("doc_id", "band")
-        .agg(F.collect_list(F.struct("i", "minhash")).alias("_p"))
-        .select(
-            "doc_id", "band",
-            F.array_join(F.transform(F.array_sort("_p"), lambda x: x["minhash"].cast("string")), "-").alias("band_sig"),
-        )
-        .collect()
-    }
-    assert fast == slow
-    assert not any(d == 4 for d, _, _ in fast)  # shingle-less doc excluded

@@ -140,7 +140,7 @@ UNROLLED_ORACLE_MIRRORS = {
     "g_sssp": ("tests.test_graph", "test_sssp_matches_dijkstra_model"),
     "pack_sequences": ("tests.test_properties", "test_pack_sequences_matches_model"),
     "dedup_passage": ("tests.test_properties", "test_passage_dedup_matches_model"),
-    "g7_ego_indicators": ("tests.test_properties", "test_ego_indicators_matches_model_both_regimes"),
+    "g7_ego_indicators": ("tests.test_properties", "test_ego_indicators_matches_model"),
 }
 
 

@@ -35,12 +35,16 @@ def test_hierarchy_roots_fixture(spark):
     assert roots[30] == 3 and roots[31] == 2
 
 
-def test_hierarchy_roots_deep_chain(spark):
-    """Pointer jumping must resolve chains deeper than one doubling round."""
+@pytest.mark.parametrize("tier", sorted(FORCED_TIERS))
+def test_hierarchy_roots_deep_chain(spark, monkeypatch, tier):
+    """Pointer jumping must resolve chains deeper than one doubling
+    round under each forced distributed tier (the 39-edge chain takes
+    several productive rounds)."""
     n = 40
     fc = spark.createDataFrame([(i, i - 1) for i in range(1, n)], "child long, parent long")
-    roots = {r.child: r.root for r in hierarchy_roots(fc).collect()}
-    assert all(roots[i] == 0 for i in range(1, n))
+    with forced_tier(spark, monkeypatch, tier):
+        roots = {r.child: r.root for r in hierarchy_roots(fc).collect()}
+    assert roots == {i: 0 for i in range(1, n)}
 
 
 @pytest.mark.usefixtures("arrow_strict")

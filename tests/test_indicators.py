@@ -36,32 +36,6 @@ def test_years_collaborated_golden(spark):
     assert got == {5: 2, 1: 1, 3: 2, 2: 2}  # PySparkles.ipynb:2210-2213
 
 
-def test_ego_indicators_regimes_row_identical(spark, sf_dir):
-    """single_exchange=True (repartition(ego), the default) and the
-    two-phase skew-spreading form must agree row for row — the regime
-    switch is a pure physical-plan choice."""
-    import pandas as pd
-
-    from iconic_data_science_spark import magmap
-    from iconic_data_science_spark.catalog import Catalog
-
-    cat = Catalog(spark, sf_dir)
-    triples = coauthor_year_triples(
-        magmap.paa(cat), magmap.paper_years(cat), distinct=False
-    )
-    ac = magmap.author_country(cat)
-
-    def pdf(single):
-        return (
-            ego_indicators(triples, ac, single_exchange=single)
-            .toPandas()
-            .sort_values("ego")
-            .reset_index(drop=True)
-        )
-
-    pd.testing.assert_frame_equal(pdf(True), pdf(False))
-
-
 def test_alter_rollups_golden(spark):
     _, _, _, triples, stats = _setup(spark)
     rows = {r.ego: r for r in ego_alter_rollups(triples, stats).collect()}

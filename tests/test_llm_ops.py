@@ -682,24 +682,6 @@ def test_decode_media_covers_all_three_image_codecs(spark):
             assert r.n_pixels == r.width * r.height
 
 
-def test_quota_two_phase_equals_single_and_bounds_shuffle(spark, sf_dir):
-    """The map-side bounded partial must (a) reproduce the single-phase
-    quota row-for-row and (b) emit at most quota·P rows per key into
-    the exchange (the kmv_partial_minima contract applied to quota
-    admission)."""
-    from iconic_data_science_spark.catalog import Catalog
-    from iconic_data_science_spark.operators.events import _quota_partial, quota_sample
-
-    ev = Catalog(spark, sf_dir).events
-    a = sorted((r.key, r.event_id, r.seq) for r in quota_sample(ev).collect())
-    b = sorted((r.key, r.event_id, r.seq) for r in quota_sample(ev, two_phase=True).collect())
-    assert a == b
-    p = ev.rdd.getNumPartitions()
-    partial_rows = _quota_partial(ev, "event_type", 50).groupBy("event_type").count().collect()
-    for r in partial_rows:
-        assert r["count"] <= 50 * p, (r["event_type"], r["count"], p)
-
-
 def test_duplicate_spans_semantics(spark):
     """A paragraph shared by two docs becomes ONE maximal span in each
     (overlapping duplicated grams merge); fresh text around it is not
@@ -1216,17 +1198,6 @@ def test_rare_bigram_known_counts(spark):
     assert got == {1: (2, 500), 2: (3, 333), 5: (1, 1000)}
 
 
-def test_rare_bigram_broadcast_off_identical(spark, sf_dir):
-    """The shuffle-join fallback (dictionary too big to broadcast) must
-    produce exactly the broadcast plan's rows."""
-    from iconic_data_science_spark.operators.text import rare_bigram_ratio
-
-    docs = Catalog(spark, sf_dir).documents
-    a = sorted(map(tuple, rare_bigram_ratio(docs, 5, broadcast_dict=True).collect()))
-    b = sorted(map(tuple, rare_bigram_ratio(docs, 5, broadcast_dict=False).collect()))
-    assert a == b
-
-
 def test_html_extract_roundtrip(spark, sf_dir):
     """Extraction of a synthesized page reproduces the whitespace-
     normalized document text and drops every piece of boilerplate
@@ -1313,8 +1284,9 @@ def test_semantic_decontaminate_empty_bench_flags_nothing(spark):
 
 
 def test_semantic_decontaminate_corpus_side_shuffle_free(spark, sf_dir):
-    """The corpus never shuffles: the only exchange in the whole plan is
-    the 1-row bench pack aggregate (plus its broadcast)."""
+    """The corpus never shuffles: the bench side is collected on the
+    driver while the frame is built, so the flag pass is one map over
+    the corpus scan and the plan holds no exchange."""
     from iconic_data_science_spark.catalog import Catalog
     from iconic_data_science_spark.operators.similarity import semantic_decontaminate
     from iconic_data_science_spark.plans import inspect
@@ -1326,7 +1298,7 @@ def test_semantic_decontaminate_corpus_side_shuffle_free(spark, sf_dir):
         emb.filter(F.col("vec_id") % 25 == 0),
         threshold=0.35,
     )
-    assert inspect.shuffle_count(out) <= 1
+    assert inspect.shuffle_count(out) == 0
 
 
 def test_resize_identity_at_native_dims_bmp(spark):
@@ -1364,27 +1336,6 @@ def test_resize_then_decode_matches_subsampled_generator(spark):
         j, i, c = np.meshgrid(np.arange(16), np.arange(16), np.arange(3), indexing="ij")
         expected = ((mid * 31 + ((j * h // 16) * w + (i * w // 16)) * 7 + c * 13) % 256).sum()
         assert out[mid] == expected
-
-
-def test_semantic_decontaminate_pandas_expr_equivalent(spark, sf_dir):
-    """The vectorized numpy path reproduces the expression form
-    row-for-row — including the HALF_UP product rounding."""
-    from iconic_data_science_spark.catalog import Catalog
-    from iconic_data_science_spark.operators.similarity import semantic_decontaminate
-
-    cat = Catalog(spark, sf_dir)
-    emb = cat.embeddings
-    bench = emb.filter(F.col("vec_id") % 25 == 0)
-    corpus = emb.filter(F.col("vec_id") % 25 != 0)
-    a = {
-        r.vec_id: (r.n_bench_hits, r.max_bench_cosine)
-        for r in semantic_decontaminate(corpus, bench, 0.35, impl="expr").collect()
-    }
-    b = {
-        r.vec_id: (r.n_bench_hits, r.max_bench_cosine)
-        for r in semantic_decontaminate(corpus, bench, 0.35, impl="pandas").collect()
-    }
-    assert a == b and len(a) > 0
 
 
 def test_semantic_decontaminate_bench_gate(spark):
@@ -1447,11 +1398,10 @@ def test_hard_negatives_exclude_same_label_and_self(spark, sf_dir):
         assert 1 <= r.rank <= 5
 
 
-def test_quota_two_phase_null_ts_matches_jvm_nulls_first(spark):
-    """Pin: a NULL ts reaches the two-phase partial as pandas
-    NaT (unordered comparisons) — the partial's sort key must mirror the
-    JVM single-phase NULLS FIRST order so the pinned row-identical
-    contract holds even with null timestamps."""
+def test_quota_null_ts_admitted_first(spark):
+    """A NULL ts sorts first (the window's NULLS FIRST default): null-ts
+    rows are admitted before every timed row of their key, in event_id
+    order."""
     import datetime as dt
 
     from iconic_data_science_spark.operators.events import quota_sample
@@ -1465,20 +1415,14 @@ def test_quota_two_phase_null_ts_matches_jvm_nulls_first(spark):
             rows.append((eid, ts, k))
             eid += 1
     ev = spark.createDataFrame(rows, "event_id long, ts timestamp, event_type string")
-    single = sorted((r.key, r.event_id, r.seq) for r in quota_sample(ev, quota=5).collect())
-    double = sorted(
-        (r.key, r.event_id, r.seq)
-        for r in quota_sample(ev, quota=5, two_phase=True).collect()
-    )
-    assert single == double
-    # null-ts rows are admitted FIRST (JVM nulls-first), ordered by id
     by_key = {}
-    for key, eid_, seq in single:
-        by_key.setdefault(key, []).append((seq, eid_))
+    for r in quota_sample(ev, quota=5).collect():
+        by_key.setdefault(r.key, []).append((r.seq, r.event_id))
     for key, admitted in by_key.items():
         ids = [e for _, e in sorted(admitted)]
         null_ids = [e for e in ids if e % 10 % 3 == 0]
         assert ids[: len(null_ids)] == sorted(null_ids), (key, ids)
+        assert len(null_ids) == 4 and len(ids) == 5, (key, ids)
 
 
 def test_minhash_recall_eval_consistency(spark, sf_dir):
@@ -1685,14 +1629,6 @@ def test_keep_best_per_cluster_hand_rules(spark):
     # exactly one keeper per cluster
     keepers = [r for r in out.values() if r.keep == 1]
     assert {r.cluster_id for r in keepers} == {1, 4, 6}
-    # shuffle-join fallback is row-identical
-    other = {
-        r.doc_id: (r.cluster_id, r.keep)
-        for r in keep_best_per_cluster(
-            scored, clusters, broadcast_clusters=False
-        ).collect()
-    }
-    assert other == {k: (v.cluster_id, v.keep) for k, v in out.items()}
 
 
 def test_span_corruption_hand_rules(spark):

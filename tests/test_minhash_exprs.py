@@ -1,10 +1,12 @@
-"""The MinHash and shingle hash expressions against a pure-Python
-reference (md5 token hashes, Horner shingles, LCG permutations), and
-the py4j cost of building them: each is one SQL-text expression, where
-a Python-lambda higher-order function costs about 91 round trips."""
+"""The MinHash and shingle hash expressions and the lattice dot
+product against a pure-Python reference (md5 token hashes, Horner
+shingles, LCG permutations, HALF_UP-rounded products), and the py4j
+cost of building them: each is one SQL-text expression, where a
+Python-lambda higher-order function costs about 91 round trips."""
 
 from __future__ import annotations
 
+import decimal
 import hashlib
 
 from iconic_data_science_spark.operators import dedup
@@ -116,3 +118,38 @@ def test_hash_expression_builders_cost_few_py4j_calls(spark, py4j_calls):
     arrays = dedup.hashed_shingle_arrays(docs, n=N)
     sigs = py4j_calls(lambda: dedup.minhash_band_sigs_from_arrays(arrays, keep_shingles=True))
     assert sigs <= 40
+
+
+def _lattice_dot(a: list[float], b: list[float]) -> int:
+    # the same double products, in the same order, rounded HALF_UP as
+    # Spark's round does
+    return sum(
+        int(decimal.Decimal(x * y * dedup.DOT_SCALE).quantize(0, decimal.ROUND_HALF_UP))
+        for x, y in zip(a, b)
+    )
+
+
+def test_lattice_dot_matches_python_reference(spark, py4j_calls):
+    """``dedup._dot_expr`` / ``_sqnorm_expr``: the sum of HALF_UP-rounded
+    products on the DOT_SCALE lattice, null for a null vector, each
+    built in a few round trips (the Column-API fold took 162)."""
+    vecs = {
+        1: ([0.5, -0.25, 1.0], [0.125, 0.75, -2.0]),
+        2: ([1e-12, 2.5e-12, -1.5e-12], [0.5, 1.0, 1.0]),  # products land on .5
+        3: (None, [1.0, 2.0, 3.0]),
+    }
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in vecs.items()], "id long, a array<double>, b array<double>"
+    )
+    got = {
+        r.id: (r.dot, r.sq)
+        for r in df.select(
+            "id", dedup._dot_expr("a", "b").alias("dot"), dedup._sqnorm_expr("b").alias("sq")
+        ).collect()
+    }
+    assert got == {
+        i: (None if a is None else _lattice_dot(a, b), _lattice_dot(b, b))
+        for i, (a, b) in vecs.items()
+    }
+    assert py4j_calls(lambda: dedup._dot_expr("q.v", "c.v")) <= 5
+    assert py4j_calls(lambda: dedup._sqnorm_expr("v")) <= 5

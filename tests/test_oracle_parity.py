@@ -2,8 +2,10 @@
 t2 gate, replicated strictly). Runs at sf0.001 by default for speed;
 set SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 for the full-size check.
 
-The eight queries the perfbench workloads run form an always-on smoke
-subset. The queries whose operators choose a tier (``operators/tiers.py``)
+The eight queries the perfbench workloads run, plus
+``decontaminate_semantic`` (the only gate on the HALF_UP rounding of
+``similarity.semantic_decontaminate``'s numpy lattice), form an
+always-on smoke subset. The queries whose operators choose a tier (``operators/tiers.py``)
 also run, always, under each forced distributed tier: the broadcast loop
 (``LOCAL_ROWS=0``) and the shuffle loop (``LOCAL_ROWS=0,
 BROADCAST_ROWS=0``), so every tier is hash-gated on the same data. The
@@ -36,6 +38,7 @@ SMOKE = [
     "text_quality_score",
     "text_bpe_encode",
     "ann_lsh_topk",
+    "decontaminate_semantic",
 ]
 
 TIERED = [

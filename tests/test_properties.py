@@ -334,11 +334,11 @@ def _ego_ref(triples, country):
         max_size=6,
     ),
 )
-def test_ego_indicators_matches_model_both_regimes(spark, triples, country):
+def test_ego_indicators_matches_model(spark, triples, country):
     """ego_indicators == an independent python model of the PySparkles
     semantics (distinct alters, distinct years over any coauthor,
     distinct non-null alter countries, domestic split needing both
-    countries known), in BOTH physical regimes."""
+    countries known)."""
     from iconic_data_science_spark.operators.indicators import ego_indicators
 
     triples = [(e, y, a) for (e, y, a) in triples if e != a]
@@ -348,19 +348,18 @@ def test_ego_indicators_matches_model_both_regimes(spark, triples, country):
     cdf = spark.createDataFrame(
         list(country.items()) or [(0, "XX")], "author long, country string"
     )
+    got = {
+        r.ego: (
+            r.n_coauthors,
+            r.years_collaborated,
+            r.n_alter_countries,
+            r.n_domestic,
+            r.n_foreign,
+        )
+        for r in ego_indicators(tdf, cdf).collect()
+    }
     want = _ego_ref(triples, country)
-    for single in (True, False):
-        got = {
-            r.ego: (
-                r.n_coauthors,
-                r.years_collaborated,
-                r.n_alter_countries,
-                r.n_domestic,
-                r.n_foreign,
-            )
-            for r in ego_indicators(tdf, cdf, single_exchange=single).collect()
-        }
-        assert got == want, (single, got, want)
+    assert got == want, (got, want)
 
 
 @settings(max_examples=15, deadline=None)
